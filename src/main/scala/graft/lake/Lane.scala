@@ -13,8 +13,10 @@ import org.apache.spark.sql.SparkSession
   * `Pipeline.llmLane` sequence of per-table commits could not offer.
   *
   * Protocol (single lane maintainer, like the MV layer):
-  *  1. drain a batch exactly as before — base commit, then each
-  *     maintainer's incremental fold; every step is atomic and
+  *  1. drain a batch exactly as before — base commit, then every
+  *     maintainer's incremental fold (the folds run concurrently and
+  *     all of them finish before step 2; one failing still waits for
+  *     the rest and skips step 2); every step is atomic and
   *     replay-idempotent already;
   *  2. [[publish]] reads each member's RESULTING latest version and
   *     commits lane vN+1 with those pins.

@@ -590,7 +590,15 @@ object MaterializedAgg {
       else deltaAll.filter(deltaNames
         .map(n => coalesce(col(n) =!= lit(0), lit(false)))
         .reduce(_ || _))
-    if (!trackAux && delta.isEmpty) {
+    // the affected view buckets (<= nBuckets values). Without sidecar
+    // columns their collect doubles as the no-op probe — one action
+    // fewer than a separate emptiness check; with them it runs after
+    // the sidecar thread starts (step 4), so it overlaps that commit
+    def bucketsOf(d: DataFrame): Seq[String] =
+      d.select(col(BucketCol)).distinct()
+        .collect().map(_.getLong(0).toString).toSeq
+    val plainBuckets = if (trackAux) None else Some(bucketsOf(delta))
+    if (plainBuckets.exists(_.isEmpty)) {
       // row-preserving rewrites only (OPTIMIZE, re-clustering): the
       // view already equals base@latest — re-anchor without minting a
       // content-identical version
@@ -680,8 +688,7 @@ object MaterializedAgg {
     }
 
     // 4. merge into the view: only buckets holding affected keys
-    val buckets = delta.select(col(BucketCol)).distinct()
-      .collect().map(_.getLong(0).toString).toSeq // <= nBuckets values
+    val buckets = plainBuckets.getOrElse(bucketsOf(delta))
     val current =
       if (buckets.isEmpty)
         SnapshotTable.read(spark, mvRoot, m).limit(0)

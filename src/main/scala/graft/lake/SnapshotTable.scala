@@ -95,8 +95,9 @@ object SnapshotTable {
   /** Test seam: invoked after a mutation's data directories are staged
     * and moved, immediately before its commit loop — a spec injects a
     * COMPETING committer here to exercise the optimistic-concurrency
-    * paths deterministically. */
-  private[lake] var onBeforeCommit: () => Unit = () => ()
+    * paths deterministically. Volatile: one CDC drain commits from
+    * several threads (concurrent derived-table refreshes). */
+  @volatile private[lake] var onBeforeCommit: () => Unit = () => ()
 
   /** Whether `root` holds a SnapshotTable (key<TAB>dir manifests) as
     * opposed to a flat [[Snapshots]] root (bare directory lines) —
@@ -226,6 +227,56 @@ object SnapshotTable {
   private[lake] final case class FileStat(
       relPath: String, column: String,
       min: Option[String], max: Option[String])
+
+  /** Types whose parquet footer min/max equal Spark's min/max in
+    * order AND in `cast("string")` rendering: UTF8_BINARY strings
+    * (unsigned byte order both sides) and the signed integers. Doubles
+    * (NaN ordering, -0.0), decimals and timestamps are left to the
+    * aggregate pass. */
+  private def footerStatOrdered(dt: DataType): Boolean = dt match {
+    case s: org.apache.spark.sql.types.StringType =>
+      s.collationId == org.apache.spark.sql.catalyst.util.CollationFactory
+        .UTF8_BINARY_COLLATION_ID
+    case org.apache.spark.sql.types.ByteType |
+         org.apache.spark.sql.types.ShortType |
+         org.apache.spark.sql.types.IntegerType |
+         org.apache.spark.sql.types.LongType => true
+    case _ => false
+  }
+
+  /** One fresh file's [[FileStat]] for `column`, off its footer's
+    * row-group statistics. All-NULL only when EVERY row group's null
+    * count equals its value count; None (no line: never skipped) when
+    * any row group lacks statistics, or holds values without a min/max
+    * — parquet drops min/max above 4 KB, and reading that as "all
+    * NULL" would skip rows a bound can match. */
+  private def footerStat(
+      relPath: String,
+      blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData],
+      column: String): Option[FileStat] = {
+    import scala.jdk.CollectionConverters._
+    val chunks = blocks.map(_.getColumns.asScala
+      .find(_.getPath.toArray.sameElements(Array(column))))
+    if (chunks.isEmpty || chunks.exists(_.isEmpty)) return None
+    val stats = chunks.flatten.map(ch => (ch.getValueCount, ch.getStatistics))
+    if (stats.exists { case (_, st) => st == null || !st.isNumNullsSet })
+      None
+    else if (stats.forall { case (n, st) => st.getNumNulls == n })
+      Some(FileStat(relPath, column, None, None))
+    else if (stats.exists { case (n, st) =>
+        st.getNumNulls < n && !st.hasNonNullValue }) None
+    else {
+      val valued = stats.map(_._2).filter(_.hasNonNullValue)
+      val acc = valued.head.copy()
+      valued.tail.foreach(acc.mergeStatistics)
+      def render(v: Any): String = v match {
+        case b: org.apache.parquet.io.api.Binary => b.toStringUsingUTF8
+        case x => x.toString // Integer (byte/short/int) or Long
+      }
+      Some(FileStat(relPath, column,
+        Some(render(acc.genericGetMin)), Some(render(acc.genericGetMax))))
+    }
+  }
 
   private def encStat(v: Option[String]): String =
     v.fold("-")(x => "v" + java.net.URLEncoder.encode(x, "UTF-8"))
@@ -2889,26 +2940,46 @@ object SnapshotTable {
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(st => (s"$dir/${st.getPath.getName}", st.getLen))
     } }
+    // fresh files carry PHYSICAL names; #f and #b lines key by them
+    // too, so a later rename never invalidates recorded stats. Columns
+    // absent from this batch (pre-evolution vintages) simply get no
+    // lines and are never skipped.
+    val statsPresent = statsCols.map(c => colMapping.getOrElse(c, c))
+      .filter(physRows.columns.contains)
+    val lookupPresent = lookupCols.map(c => colMapping.getOrElse(c, c))
+      .filter(physRows.columns.contains)
+    // stat columns whose per-file min/max the parquet footer already
+    // holds in Spark's own order and cast-to-string rendering
+    val (footerStatCols, aggStatCols) = statsPresent.partition(c =>
+      footerStatOrdered(physRows.schema(c).dataType))
     // Per-file ROW COUNTS of the just-written files (round 15, `#n`
-    // manifest lines): driver-side FOOTER reads of only the fresh
-    // files — one seek each, no data pages, same cost class as the
-    // byte census above — so the count is exact parquet metadata, not
-    // a second data pass. This is what [[MetadataAggregate]] answers
-    // COUNT(*) / per-partition counts from with zero file opens at
-    // query time. A file whose footer read fails gets no line (the
-    // metadata-aggregate path requires full coverage and falls back to
-    // the data scan), never a wrong count.
-    val newRowCounts: Seq[(String, Long)] = profT("footers") {
+    // manifest lines) and the footer-served min/max stats: driver-side
+    // FOOTER reads of only the fresh files — one seek each, no data
+    // pages, same cost class as the byte census above — so both are
+    // exact parquet metadata, not a second data pass (Delta Lake's
+    // stats-while-writing). The counts are what [[MetadataAggregate]]
+    // answers COUNT(*) / per-partition counts from with zero file opens
+    // at query time. A file whose footer read fails gets no `#n` line
+    // (the metadata-aggregate path requires full coverage and falls
+    // back to the data scan) and no footer `#f` lines (never skipped),
+    // never a wrong count or bound.
+    val footers: Seq[(String, Long, Seq[FileStat])] = profT("footers") {
       val conf = spark.sessionState.newHadoopConf()
       newSizes.flatMap { case (rel, _) =>
         try {
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
               new Path(root, rel), conf))
-          try Some((rel, r.getRecordCount)) finally r.close()
+          try {
+            import scala.jdk.CollectionConverters._
+            val blocks = r.getFooter.getBlocks.asScala.toSeq
+            Some((rel, r.getRecordCount,
+              footerStatCols.flatMap(footerStat(rel, blocks, _))))
+          } finally r.close()
         } catch { case scala.util.control.NonFatal(_) => None }
       }
     }
+    val newRowCounts = footers.map { case (rel, n, _) => (rel, n) }
     // relPath derivation for census rows: match each file's PARENT
     // against the just-moved directories as Paths (not via a URI
     // percent-encoding round-trip that can disagree with escaped names
@@ -2917,12 +2988,6 @@ object SnapshotTable {
     val dirByParent: Map[String, String] = moved.map { case (_, d) =>
       f.makeQualified(new Path(root, d)).toString -> d
     }.toMap
-    // Per-file min/max for the declared stat columns, over ONLY the
-    // just-written directories (one pass over fresh data, still warm):
-    // min/max on the NATIVE type, cast to string after the aggregate —
-    // a string-first min would be lexicographic and wrong for numbers.
-    // Columns absent from this batch (pre-evolution vintages) simply
-    // get no lines and are never skipped.
     def relOf(file: String): String = {
       val p0 = new Path(file)
       val parent = f.makeQualified(p0.getParent).toString
@@ -2931,70 +2996,69 @@ object SnapshotTable {
         .getOrElse(throw new IllegalStateException(
           s"census file $file is not under any just-written directory"))
     }
-    val (newStats: Seq[FileStat],
+    // The rest — stat columns of other types (double/NaN, decimal,
+    // timestamp: footer order or rendering differs from Spark's) and
+    // the lookup sketches — take one aggregate pass over ONLY the
+    // just-written directories (fresh data, still warm): min/max on the
+    // NATIVE type, cast to string after the aggregate — a string-first
+    // min would be lexicographic and wrong for numbers. With neither,
+    // the commit runs no Spark job after its staging write.
+    val (aggStats: Seq[FileStat],
          newSketches: Seq[(String, String, String)]) = profT("stats") {
-      if ((statsCols.isEmpty && lookupCols.isEmpty) || moved.isEmpty)
+      if ((aggStatCols.isEmpty && lookupPresent.isEmpty) || moved.isEmpty)
         (Nil, Nil)
       else {
         val df = spark.read.option("mergeSchema", "true").parquet(
           moved.map(m => new Path(root, m._2).toString): _*)
-        // fresh files carry PHYSICAL names; #f and #b lines key by
-        // them too, so a later rename never invalidates recorded stats
-        val present = statsCols.map(c => colMapping.getOrElse(c, c))
-          .filter(df.columns.contains)
-        val lookupPresent = lookupCols.map(c => colMapping.getOrElse(c, c))
-          .filter(df.columns.contains)
-        if (present.isEmpty && lookupPresent.isEmpty) (Nil, Nil)
-        else {
-          val statAggs = present.flatMap(c => Seq(
-            min(col(c)).cast("string").as(s"_graft_min_$c"),
-            max(col(c)).cast("string").as(s"_graft_max_$c")))
-          // per-file membership sketch: a Bloom filter over xxhash64 of
-          // the value — Spark's own BloomFilterAggregate (the runtime-
-          // filter machinery), so write-side insert and read-side probe
-          // share one hash and one serialization
-          val sketchAggs = lookupPresent.map { c =>
-            org.apache.spark.sql.graft.Bridge.column(
-              new org.apache.spark.sql.catalyst.expressions.aggregate
-                .BloomFilterAggregate(
-                  new org.apache.spark.sql.catalyst.expressions.XxHash64(
-                    Seq(org.apache.spark.sql.graft.Bridge
-                      .expression(col(c))), 42L),
-                  org.apache.spark.sql.catalyst.expressions
-                    .Literal(SketchItems),
-                  org.apache.spark.sql.catalyst.expressions
-                    .Literal(SketchBits))
-                .toAggregateExpression()).as(s"_graft_bloom_$c")
-          }
-          val aggs = statAggs ++ sketchAggs
-          val rows = df.groupBy(input_file_name().as("_graft_file"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect().toSeq
-          val stats = rows.flatMap { r =>
-            val rel = relOf(r.getString(0))
-            present.indices.map { i =>
-              FileStat(rel, present(i),
-                Option(r.getString(1 + 2 * i)),
-                Option(r.getString(2 + 2 * i)))
-            }
-          }
-          val sketches = rows.flatMap { r =>
-            val rel = relOf(r.getString(0))
-            lookupPresent.indices.flatMap { j =>
-              val idx = 1 + 2 * present.size + j
-              // an all-NULL file aggregates to NULL: it gets no sketch
-              // line and is conservatively kept (an equality can never
-              // match its rows anyway)
-              if (r.isNullAt(idx)) None
-              else Some((rel, lookupPresent(j),
-                java.util.Base64.getEncoder
-                  .encodeToString(r.getAs[Array[Byte]](idx))))
-            }
-          }
-          (stats, sketches)
+        val statAggs = aggStatCols.flatMap(c => Seq(
+          min(col(c)).cast("string").as(s"_graft_min_$c"),
+          max(col(c)).cast("string").as(s"_graft_max_$c")))
+        // per-file membership sketch: a Bloom filter over xxhash64 of
+        // the value — Spark's own BloomFilterAggregate (the runtime-
+        // filter machinery), so write-side insert and read-side probe
+        // share one hash and one serialization
+        val sketchAggs = lookupPresent.map { c =>
+          org.apache.spark.sql.graft.Bridge.column(
+            new org.apache.spark.sql.catalyst.expressions.aggregate
+              .BloomFilterAggregate(
+                new org.apache.spark.sql.catalyst.expressions.XxHash64(
+                  Seq(org.apache.spark.sql.graft.Bridge
+                    .expression(col(c))), 42L),
+                org.apache.spark.sql.catalyst.expressions
+                  .Literal(SketchItems),
+                org.apache.spark.sql.catalyst.expressions
+                  .Literal(SketchBits))
+              .toAggregateExpression()).as(s"_graft_bloom_$c")
         }
+        val aggs = statAggs ++ sketchAggs
+        val rows = df.groupBy(input_file_name().as("_graft_file"))
+          .agg(aggs.head, aggs.tail: _*)
+          .collect().toSeq
+        val stats = rows.flatMap { r =>
+          val rel = relOf(r.getString(0))
+          aggStatCols.indices.map { i =>
+            FileStat(rel, aggStatCols(i),
+              Option(r.getString(1 + 2 * i)),
+              Option(r.getString(2 + 2 * i)))
+          }
+        }
+        val sketches = rows.flatMap { r =>
+          val rel = relOf(r.getString(0))
+          lookupPresent.indices.flatMap { j =>
+            val idx = 1 + 2 * aggStatCols.size + j
+            // an all-NULL file aggregates to NULL: it gets no sketch
+            // line and is conservatively kept (an equality can never
+            // match its rows anyway)
+            if (r.isNullAt(idx)) None
+            else Some((rel, lookupPresent(j),
+              java.util.Base64.getEncoder
+                .encodeToString(r.getAs[Array[Byte]](idx))))
+          }
+        }
+        (stats, sketches)
       }
     }
+    val newStats = footers.flatMap(_._3) ++ aggStats
     // caller's publication gate (see [[applyChanges]]): every Spark
     // job of this attempt is done; only the manifest rename follows
     publishGate()

@@ -47,6 +47,14 @@ object CdcStream {
     * 5-minute CDC cadence mints ~100k versions/year; without the
     * vacuum leg the maintenance story is incomplete at exactly the
     * scale it exists for.
+    * The view and tokenized refreshes are independent of each other
+    * (each reads only the base), so after the optimize step they run
+    * CONCURRENTLY — one named daemon thread per refresh, inline when
+    * there is just one — and all of them join before the lane publish
+    * and the vacuum leg. A failed refresh still waits for the others,
+    * then the batch publishes no lane version, skips the vacuum, and
+    * rethrows the first failure's own exception: the lane stays at the
+    * last completed cut, and the replay re-converges every member.
     * Every step is an idempotent no-op on replay — a refresh against
     * an already-reflected base version, an optimize of an already-
     * compact table, and a vacuum with nothing to drop all return
@@ -83,12 +91,15 @@ object CdcStream {
           batchId % optimizeEveryBatches == optimizeEveryBatches - 1)
         SnapshotTable.optimize(spark, root, partitionBy,
           optimizeTargetBytes)
-      views.foreach { b =>
-        MaterializedAgg.refresh(spark, root, b.mvRoot, b.spec, b.nBuckets)
-      }
-      tokenizedRoots.foreach { t =>
-        TokenizedCorpus.refresh(spark, root, t, partitionBy)
-      }
+      runJoined(
+        views.zipWithIndex.map { case (b, i) => s"mv$i" -> (() => {
+          MaterializedAgg.refresh(spark, root, b.mvRoot, b.spec, b.nBuckets)
+          ()
+        }) } ++
+        tokenizedRoots.zipWithIndex.map { case (t, i) => s"tok$i" -> (() => {
+          TokenizedCorpus.refresh(spark, root, t, partitionBy)
+          ()
+        }) })
       laneRoot.foreach { lr =>
         graft.lake.Lane.publish(spark, lr,
           ("base" -> root) +:
@@ -119,6 +130,31 @@ object CdcStream {
       }
     }
   }
+
+  /** Runs every named task — concurrently when there are several, each
+    * as a `FutureTask` on daemon thread `graft-maint-<name>` (the MV
+    * sidecar commit's idiom) — and returns only once ALL have finished
+    * and their threads are gone. Rethrows the first failed task's
+    * original exception, never an `ExecutionException` wrapper. */
+  private def runJoined(tasks: Seq[(String, () => Unit)]): Unit =
+    if (tasks.size == 1) tasks.head._2()
+    else {
+      val started = tasks.map { case (name, body) =>
+        val task = new java.util.concurrent.FutureTask[Unit](() => body())
+        val th = new Thread(task, s"graft-maint-$name")
+        th.setDaemon(true)
+        th.start()
+        (th, task)
+      }
+      val failures = started.flatMap { case (th, task) =>
+        th.join()
+        try { task.get(); None }
+        catch {
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+        }
+      }
+      failures.headOption.foreach(e => throw e)
+    }
 
   /** `versionCol`: the change-order column (a CDC sequence number /
     * commit timestamp). A micro-batch can carry SEVERAL changes for

@@ -36,6 +36,20 @@ class StreamingMvSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSet
 
+  private val txtSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("val", LongType),
+    StructField("text", StringType), StructField("source", StringType),
+    StructField("op", StringType)))
+
+  /** (doc_id, tok, tf) of a full re-tokenization of `docs`. */
+  private def tokenized(docs: org.apache.spark.sql.DataFrame)
+      : Set[(Long, String, Long)] =
+    docs.withColumn("toks", expr(graft.queries.Text.toksExpr))
+      .where(size($"toks") > 0)
+      .select($"doc_id", explode($"toks").as("tok"))
+      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+
   private def fileCount(root: String, key: String): Int = {
     val v = SnapshotTable.versions(spark, root).last
     // entriesFor folds the delta log — the latest manifest FILE is a
@@ -88,10 +102,6 @@ class StreamingMvSpec extends SparkSpec {
   test("tokenized corpus + retention vacuum ride the maintenance loop") {
     val root = tmpDir("smv-base"); val mvRoot = tmpDir("smv-view")
     val tokRoot = tmpDir("smv-tok"); val in = tmpDir("smv-in")
-    val txtSchema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("val", LongType),
-      StructField("text", StringType), StructField("source", StringType),
-      StructField("op", StringType)))
     SnapshotTable.write(spark, root,
       Seq((1L, 10L, "spark window", "a"), (2L, 20L, "filter spark", "a"),
         (3L, 5L, "plain prose", "b"))
@@ -125,13 +135,7 @@ class StreamingMvSpec extends SparkSpec {
     val gotToks = graft.operators.TokenizedCorpus.postings(spark, tokRoot)
       .select($"doc_id", $"tok", $"tf").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val wantToks = SnapshotTable.read(spark, root)
-      .withColumn("toks", expr(graft.queries.Text.toksExpr))
-      .where(size($"toks") > 0)
-      .select($"doc_id", explode($"toks").as("tok"))
-      .groupBy($"doc_id", $"tok").agg(count(lit(1)).as("tf"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(gotToks == wantToks,
+    assert(gotToks == tokenized(SnapshotTable.read(spark, root)),
       "tokenized table diverged from a full re-tokenization")
     // retention ran: the base keeps at most keep + protected anchors
     // (each maintainer is current, so the anchor IS the latest)
@@ -167,6 +171,79 @@ class StreamingMvSpec extends SparkSpec {
     graft.operators.TokenizedCorpus.refresh(spark, root, tokRoot,
       Seq("source"))
     assert(viewRows(mvRoot) == fullAgg(root))
+  }
+
+  test("a failing refresh publishes no lane cut; the replay publishes one") {
+    import graft.lake.Lane
+    import graft.operators.TokenizedCorpus
+    val root = tmpDir("smv-base"); val mvRoot = tmpDir("smv-view")
+    val badMv = tmpDir("smv-bad"); val tokRoot = tmpDir("smv-tok")
+    val laneRoot = tmpDir("smv-lane"); val in = tmpDir("smv-in")
+    SnapshotTable.write(spark, root,
+      Seq((1L, 10L, "spark window", "a"), (2L, 20L, "filter spark", "a"),
+        (3L, 5L, "plain prose", "b"))
+        .toDF("doc_id", "val", "text", "source"),
+      Seq("source"))
+    MaterializedAgg.init(spark, root, mvRoot, mvSpec, nBuckets = 4)
+    MaterializedAgg.init(spark, root, badMv, mvSpec, nBuckets = 4)
+    TokenizedCorpus.refresh(spark, root, tokRoot, Seq("source"))
+    val good = CdcStream.TableMaintenance(
+      views = Seq(CdcStream.MvBinding(mvRoot, mvSpec, nBuckets = 4)),
+      tokenizedRoots = Seq(tokRoot),
+      laneRoot = Some(laneRoot))
+    good.run(spark, root, Seq("source"), batchId = 0L)
+    assert(Lane.versions(spark, laneRoot) == Seq(1))
+
+    Seq((1L, 100L, "spark spark rewritten", "a", "u"),
+      (4L, 7L, "window words", "c", "u"), (3L, 0L, "", "b", "d"))
+      .toDF("doc_id", "val", "text", "source", "op")
+      .coalesce(1).write.parquet(s"$in/w0")
+    def drain(m: CdcStream.TableMaintenance) = {
+      val q = CdcStream.maintainChangesAtomic(
+        spark.readStream.schema(txtSchema).parquet(s"$in/w*"),
+        root, "doc_id", Seq("source"), opCol = "op", maintenance = m)
+      try q.awaitTermination() finally q.stop()
+    }
+    // the second view's root was initialized under another spec, so its
+    // refresh throws while the other two refreshes run beside it
+    val drifted = mvSpec.copy(countName = "rows")
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      drain(good.copy(views =
+        good.views :+ CdcStream.MvBinding(badMv, drifted, nBuckets = 4))))
+    val chain = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(chain.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains(s"spec drift under $badMv")), chain)
+    assert(!chain.exists(
+      _.isInstanceOf[java.util.concurrent.ExecutionException]), chain)
+    import scala.jdk.CollectionConverters._
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith("graft-maint-") && t.isAlive)
+    assert(alive.isEmpty, s"refresh threads outlived the drain: $alive")
+    assert(Lane.versions(spark, laneRoot) == Seq(1),
+      "a failed drain must not publish a lane version")
+
+    // replay the batch without the bad binding: exactly one new cut,
+    // every member equal to a recompute from the pinned base
+    drain(good)
+    assert(Lane.versions(spark, laneRoot) == Seq(1, 2))
+    val (bR, bV) = Lane.member(spark, laneRoot, "base", 2)
+    val (mR, mV) = Lane.member(spark, laneRoot, s"mv:$mvRoot", 2)
+    val (tR, tV) = Lane.member(spark, laneRoot, s"tok:$tokRoot", 2)
+    val base = SnapshotTable.read(spark, bR, bV)
+    assert(base.where($"doc_id" === 4L).count() == 1,
+      "the pinned base must hold the replayed batch")
+    val wantView = base.groupBy($"source")
+      .agg(sum($"val").as("t"), count(lit(1)).as("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    val gotView = MaterializedAgg.read(spark, mR, mV)
+      .select($"source", $"total_val", $"n_rows")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(gotView == wantView)
+    val gotToks = SnapshotTable.read(spark, tR, tV)
+      .where($"doc_id".isNotNull).select($"doc_id", $"tok", $"tf").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+    assert(gotToks == tokenized(base))
   }
 
   test("replayed maintenance is a no-op: versions do not advance") {
