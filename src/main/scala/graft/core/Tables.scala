@@ -53,18 +53,19 @@ object Tables {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
     // Snapshot binding (round-8 verdict stretch 8): conf
-    // `spark.graft.snapshot.<table> = <snapshotRoot>@v<N>` (or `@latest`)
-    // resolves the table through [[graft.lake.Snapshots]] instead of the
-    // sfDir parquet, so "train on corpus v12" is a CONFIG, not a code
-    // change — every lane query then reads that immutable version and
-    // stays byte-stable while the live table moves on (pinned in
+    // `spark.graft.snapshot.<table> = <root>@v<N>` (or `@latest`)
+    // resolves the table through [[graft.lake.SnapshotTable]] instead of
+    // the sfDir parquet, so "train on corpus v12" is a CONFIG, not a
+    // code change — every lane query then reads that immutable version
+    // and stays byte-stable while the live table moves on (pinned in
     // `SnapshotReadSpec`). The cache key carries the RESOLVED version:
     // an @latest binding resolves the current latest version number
-    // first (a cheap directory listing, done on every lookup), so a
-    // commit later in the same session is picked up by the next lookup
-    // instead of being masked by a memo entry that resolved `latest`
-    // eagerly at first use (round-9 advice item 1). Pinning,
-    // re-pinning, or unpinning therefore never serves a stale relation.
+    // first (the table's latest-version hint plus a forward probe, done
+    // on every lookup), so a commit later in the same session is picked
+    // up by the next lookup instead of being masked by a memo entry
+    // that resolved `latest` eagerly at first use (round-9 advice item
+    // 1). Pinning, re-pinning, or unpinning therefore never serves a
+    // stale relation.
     val spec = spark.conf.getOption(s"spark.graft.snapshot.$name")
     val df = spec match {
       case Some(s) =>
@@ -73,20 +74,12 @@ object Tables {
         val (root, v) = (s.substring(0, at), s.substring(at + 1))
         val version =
           if (v == "latest") {
-            val vs = graft.lake.Snapshots.versions(spark, root)
-            require(vs.nonEmpty, s"no snapshot committed under $root")
-            vs.last
+            val latest = graft.lake.SnapshotTable.latest(spark, root)
+            require(latest.isDefined, s"no snapshot committed under $root")
+            latest.get
           } else v.stripPrefix("v").toInt
         cache.getOrElseUpdate(spark, (s"snapshot:$root@v$version", name)) {
-          // the binding serves BOTH snapshot layers: a SnapshotTable
-          // root (key<TAB>dir manifests — the CDC-maintained curated
-          // zone) reads through SnapshotTable, a flat Snapshots root
-          // through Snapshots; format-probed so "train on
-          // curated_table v12" is the same config either way
-          val raw =
-            if (graft.lake.SnapshotTable.isTableRoot(spark, root))
-              graft.lake.SnapshotTable.read(spark, root, version)
-            else graft.lake.Snapshots.read(spark, root, version)
+          val raw = graft.lake.SnapshotTable.read(spark, root, version)
           if (name == "events") normalizeTs(raw) else raw
         }
       case None =>

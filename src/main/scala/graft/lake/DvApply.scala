@@ -60,10 +60,8 @@ object DvApply extends Rule[LogicalPlan] {
   private def rewrite(
       rel: DataSourceV2Relation, lt: LakeTable): Option[LogicalPlan] =
     try {
-      // flat-Snapshots roots serve through the same catalog with NO
-      // keyedDirs (their manifests are not SnapshotTable manifests and
-      // carry no dvs); an EMPTY snapshot table has no live dirs and so
-      // no live dv either — both skip without touching the manifest
+      // an EMPTY snapshot table has no live dirs and so no live dv
+      // either — skip without touching the manifest
       if (lt.keyedDirs.isEmpty) return None
       val m = lt.manifest
       if (m.fileDvs.isEmpty) return None

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -225,238 +225,6 @@ object Lake {
       .sortWithinPartitions(col(zName))
       .drop(zName)
       .write.mode("overwrite").parquet(root)
-  }
-
-  // ---- partition-pruned upsert / delete -----------------------------
-  //
-  // Plain parquet has no MERGE INTO: the naive upsert rewrites the
-  // whole dataset. At 100 TB that is the difference between a CDC batch
-  // finishing in minutes and in a day — an upsert batch touches a
-  // handful of partitions, so only THOSE directories should be read or
-  // written. Same for GDPR-style deletes: the predicate names a
-  // partition-pruned subset; everything else must not even be opened.
-  //
-  // Atomicity unit is the PARTITION DIRECTORY (the honest limit of a
-  // log-less format: Delta/Iceberg buy multi-partition atomicity with a
-  // commit log). Each touched directory goes through the compact()
-  // swap — new data fully written to a temp root, live dir renamed
-  // aside, temp renamed in, aside deleted — so a crash leaves every
-  // partition either old, new, or recoverable via [[recoverUpsert]];
-  // never half-written, never lost.
-
-  /** Upsert `updates` into a dataset partitioned by `partitionBy`:
-    * rows whose `key` exists are replaced, new keys are inserted. Only
-    * partitions present IN THE UPDATE BATCH are read or rewritten —
-    * the driver-side collect is the touched-partition value list,
-    * bounded by the batch's partition spread, never the dataset's.
-    * Updates must carry the dataset's full schema, and each key's
-    * partition value must be stable across updates (the standard
-    * partition-pruned-MERGE constraint: a key that MOVES partitions
-    * leaves its old row in an untouched directory — to move a key,
-    * include its old partition in the batch, e.g. via a tombstone row,
-    * or run [[deleteWhere]] first). Returns the touched partition
-    * count. */
-  def upsert(
-      spark: SparkSession,
-      root: String,
-      updates: DataFrame,
-      key: String,
-      partitionBy: String,
-      crashAfterSwapOut: Boolean = false,
-      filesPerPartition: Int = 1): Long = {
-    // A batch with two rows for one key has no defined winner — the
-    // anti-join+union would keep BOTH forever — and a NULL key can
-    // never be replaced (the anti-join's equality never matches NULL).
-    // Fail loudly on both, with the accurate message for each; reduce
-    // duplicates upstream (CdcStream does, with a documented version
-    // order). count(key) vs count(*) separates the two causes —
-    // countDistinct alone ignores NULLs and would misreport a null-key
-    // row as a duplicate.
-    validateUpdateBatch(updates, key)
-    // BEFORE the dataset read: spark.read.parquet captures the file
-    // listing eagerly, so recovery after the read would still compute
-    // the merge from a root missing the crashed-swap partition
-    ensureRecovered(spark, root)
-    val touched = touchedPartitions(updates, partitionBy)
-    val live = spark.read.parquet(root)
-      .filter(touchedPredicate(col(partitionBy), touched.map(_._1)))
-    val merged = live
-      .join(updates.select(col(key).as("_graft_k")),
-        col(key) === col("_graft_k"), "left_anti")
-      .unionByName(updates.select(live.columns.map(col): _*))
-    rewriteTouched(spark, root, merged, partitionBy, touched,
-      crashAfterSwapOut, filesPerPartition)
-  }
-
-  /** Restore any crashed-swap state and refuse to continue if a
-    * partition could not be put back — a NON-EMPTY aside dir means some
-    * partition may exist ONLY there, and proceeding would overwrite or
-    * delete its sole copy. Idempotent and cheap when there is nothing
-    * to recover. */
-  private def ensureRecovered(spark: SparkSession, root: String): Unit = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val aside = new Path(root.stripSuffix("/") + ".upsert_old")
-    if (fs.exists(aside)) {
-      recoverUpsert(spark, root, partitionBy = "")
-      if (fs.exists(aside))
-        throw new java.io.IOException(
-          s"unrecovered crashed-swap partitions remain under $aside; " +
-            "refusing to overwrite the only surviving copy")
-    }
-  }
-
-  /** Shared by [[upsert]] and [[SnapshotTable.upsert]] — one copy of the
-    * NULL-key / duplicate-key batch contract. */
-  private[lake] def validateUpdateBatch(updates: DataFrame, key: String): Unit = {
-    val (nRows, nNonNullKeys, nKeys) = {
-      val a = updates.agg(count(lit(1)), count(col(key)),
-        countDistinct(col(key))).collect()(0)
-      (a.getLong(0), a.getLong(1), a.getLong(2))
-    }
-    require(nRows == nNonNullKeys,
-      s"upsert batch carries ${nRows - nNonNullKeys} NULL-key rows; " +
-        "a null key cannot be matched for replacement")
-    require(nNonNullKeys == nKeys,
-      s"upsert batch carries ${nNonNullKeys - nKeys} duplicate-key rows; " +
-        "reduce to one change per key first")
-  }
-
-  /** Touched partition values as (native value, Spark-rendered string):
-    * the NATIVE value drives the membership predicate (so partition
-    * pruning stays type-exact), while the STRING — produced by Spark's
-    * own cast-to-string with the session timezone, the exact rendering
-    * the partition-path writer uses — drives directory names. A JVM
-    * toString would diverge for timestamp/date/decimal partition values
-    * ('2026-01-01 00:00:00.0' vs the written '2026-01-01 00:00:00') and
-    * the swap loop would miss or destroy those directories. */
-  private[lake] def touchedPartitions(
-      df: DataFrame, partitionBy: String): Seq[(Any, String)] =
-    df.select(col(partitionBy), col(partitionBy).cast("string"))
-      .distinct().collect()
-      .map(r => (r.get(0), if (r.isNullAt(1)) null else r.getString(1)))
-      .toSeq
-
-  /** Membership predicate over the touched partition values. `isin`
-    * alone silently never matches NULL (SQL three-valued logic), so a
-    * null partition value gets its own IS NULL disjunct. */
-  private def touchedPredicate(c: Column, touched: Seq[Any]): Column = {
-    val nonNull = touched.filter(_ != null)
-    val base =
-      if (nonNull.isEmpty) lit(false) else c.isin(nonNull: _*)
-    if (touched.exists(_ == null)) base || c.isNull else base
-  }
-
-  /** Delete rows matching `predicate`. Partitions with no matching row
-    * are not read beyond the pruning scan and never rewritten. */
-  def deleteWhere(
-      spark: SparkSession,
-      root: String,
-      predicate: Column,
-      partitionBy: String,
-      filesPerPartition: Int = 1): Long = {
-    ensureRecovered(spark, root) // see upsert: recover BEFORE the read
-    val all = spark.read.parquet(root)
-    val touched = touchedPartitions(all.filter(predicate), partitionBy)
-    if (touched.isEmpty) return 0L
-    val kept = all
-      .filter(touchedPredicate(col(partitionBy), touched.map(_._1)))
-      // keep every row where the predicate is NOT TRUE: a bare
-      // !predicate drops NULL-valued rows too (three-valued logic),
-      // silently deleting rows the predicate never matched
-      .filter(coalesce(!predicate, lit(true)))
-    rewriteTouched(spark, root, kept, partitionBy, touched,
-      crashAfterSwapOut = false, filesPerPartition)
-  }
-
-  /** Restore any partition whose swap crashed between rename-aside and
-    * rename-in: the live dir is missing but the aside copy exists.
-    * Returns the number of partitions recovered. */
-  def recoverUpsert(
-      spark: SparkSession, root: String, partitionBy: String): Long = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val aside = new Path(root.stripSuffix("/") + ".upsert_old")
-    if (!fs.exists(aside)) return 0L
-    var n = 0L
-    fs.listStatus(aside).foreach { st =>
-      val live = new Path(root, st.getPath.getName)
-      if (fs.exists(live))
-        fs.delete(st.getPath, true) // stale duplicate: live copy exists
-      else if (fs.rename(st.getPath, live)) n += 1
-      // rename failed: LEAVE the aside entry — it is the only copy of
-      // that partition; deleting the whole aside dir here would turn a
-      // transient FS error into permanent data loss
-    }
-    if (fs.exists(aside) && fs.listStatus(aside).isEmpty)
-      fs.delete(aside, true)
-    n
-  }
-
-  private def rewriteTouched(
-      spark: SparkSession,
-      root: String,
-      newData: DataFrame,
-      partitionBy: String,
-      touched: Seq[(Any, String)],
-      crashAfterSwapOut: Boolean,
-      filesPerPartition: Int = 1): Long = {
-    val fs = new Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = root.stripSuffix("/") + ".upserting"
-    val asideRoot = root.stripSuffix("/") + ".upsert_old"
-    fs.delete(new Path(tmpRoot), true)
-    // Callers ran ensureRecovered BEFORE reading the dataset; by here
-    // the aside dir must be gone — if it reappeared (concurrent
-    // writer), refuse rather than delete the only copy of a partition.
-    ensureRecovered(spark, root)
-    // filesPerPartition > 1 threads writePartitioned's row-hash salt
-    // through the rewrite: without it a CDC batch touching ONE hot
-    // partition (the common skew case) rewrites that whole directory
-    // through a single task and emits one file — at 100 TB the rewrite
-    // serializes on one core (round-8 verdict #3). The salt keeps the
-    // directory layout identical (partitionBy drives the directories;
-    // the salt only spreads rows across up to `filesPerPartition`
-    // writer tasks per directory).
-    repartitionForLayout(newData, Seq(partitionBy), filesPerPartition,
-      touched.size.max(1) * filesPerPartition.max(1))
-      .write.mode("overwrite").partitionBy(partitionBy).parquet(tmpRoot)
-    fs.mkdirs(new Path(asideRoot))
-    // swap each touched directory; an update batch can contain a
-    // partition value with zero surviving rows (all deleted) — then the
-    // tmp dir is absent and the live dir is simply retired. Directory
-    // names use Spark's OWN Hive escaping (source=a:b is written as
-    // source=a%3Ab; null as __HIVE_DEFAULT_PARTITION__) — a raw
-    // "$col=$v" would miss those directories entirely and silently
-    // discard the merged data for them.
-    touched.foreach { case (_, rendered) =>
-      val dir = partitionDirName(partitionBy, rendered)
-      val live = new Path(root, dir)
-      val tmp = new Path(tmpRoot, dir)
-      val old = new Path(asideRoot, dir)
-      if (fs.exists(live) && !fs.rename(live, old))
-        throw new java.io.IOException(s"upsert: cannot move $live aside")
-      if (crashAfterSwapOut) // test seam: crash inside the swap window
-        throw new java.io.IOException("simulated crash between swap phases")
-      if (fs.exists(tmp) && !fs.rename(tmp, live)) {
-        fs.rename(old, live) // roll back this partition
-        throw new java.io.IOException(s"upsert: cannot move $tmp into place")
-      }
-    }
-    fs.delete(new Path(asideRoot), true)
-    fs.delete(new Path(tmpRoot), true)
-    touched.size.toLong
-  }
-
-  /** The directory name Spark itself writes for a partition value —
-    * `rendered` must come from [[touchedPartitions]]' cast-to-string
-    * (Spark's own rendering), never JVM toString. */
-  private def partitionDirName(colName: String, rendered: String): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val value =
-      if (rendered == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      else ExternalCatalogUtils.escapePathName(rendered)
-    s"${ExternalCatalogUtils.escapePathName(colName)}=$value"
   }
 
   def countDataFiles(spark: SparkSession, root: String): Long = {

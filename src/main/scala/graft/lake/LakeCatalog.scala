@@ -24,8 +24,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     entire query plane is catalog SQL over governed tables
   *     (`README.md:44-100`: Athena over Glue-cataloged tables;
   *     `stack.py:196-207` pins workgroups to them) — where before this
-  *     the [[SnapshotTable]] / [[Snapshots]] layers were API-only
-  *     Scala objects;
+  *     the [[SnapshotTable]] layer was an API-only Scala object;
   *   - `SELECT … FROM lake.snap_docs VERSION AS OF 3` (and
   *     `TIMESTAMP AS OF '…'` — resolved against manifest commit
   *     mtimes, [[SnapshotTable.versionAtTimestamp]]) time-travels
@@ -62,9 +61,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * create-exclusive manifest publish, time travel keeps reading the
   * pre-DML versions. Nothing writes data files behind the manifest's
   * back. A version-pinned resolution (`VERSION AS OF`, an `@vN`
-  * binding) and the flat [[Snapshots]] layer stay read-only — a
-  * historical version is immutable by contract, and the flat layer
-  * has no recorded layout to mutate by name.
+  * binding) stays read-only — a historical version is immutable by
+  * contract.
   *
   * DDL (round 16): `CREATE TABLE … PARTITIONED BY` / CTAS mint an
   * empty governed root and self-register the binding
@@ -73,13 +71,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * evolves the recorded schema. [[LakeCatalog.register]] remains the
   * way to adopt an EXISTING root by name.
   *
-  * Both snapshot layers are served, format-probed per lookup like
-  * [[graft.core.Tables]]: a [[SnapshotTable]] root reads its manifest
-  * state (dirs + pinned schema); a flat [[Snapshots]] root lists its
-  * version's directories (schema inferred from footers, as its `read`
-  * does). Version resolution honors the binding's own pin: a
-  * `<root>@v7` binding serves v7 as "latest" (the session contract),
-  * while `VERSION AS OF` overrides it for explicit time travel.
+  * A lookup reads the version's manifest state (dirs + pinned schema),
+  * resolving "latest" through the table's latest-version hint, the
+  * same probe [[graft.core.Tables]] makes; a root with no committed
+  * version is no table. Version resolution honors the binding's own
+  * pin: a `<root>@v7` binding serves v7 as "latest" (the session
+  * contract), while `VERSION AS OF` overrides it for explicit time
+  * travel.
   */
 class LakeCatalog extends TableCatalog with SupportsNamespaces {
   import LakeCatalog._
@@ -135,9 +133,8 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
   /** `TIMESTAMP AS OF <ts>` — DSv2 passes the instant in MICROseconds.
     * Resolution is [[SnapshotTable.versionAtTimestamp]]: a version's
     * commit time is its manifest file's mtime (the create-exclusive
-    * publish IS the commit), so no extra metadata is written and both
-    * snapshot layers resolve identically. A timestamp before the
-    * earliest retained commit fails loudly there. */
+    * publish IS the commit), so no extra metadata is written. A
+    * timestamp before the earliest retained commit fails loudly there. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     checkNamespace(ident.namespace())
     val s = spark
@@ -155,61 +152,55 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
       .getOrElse(throw new NoSuchTableException(ident))
     val (root, pinned) = parseBinding(binding)
     val display = s"$catalogName.${ident.name()}"
-    if (SnapshotTable.isTableRoot(s, root)) {
-      // lane bindings (round 18): when a `spark.graft.lane.<name>`
-      // binding's lane pins this root, the table resolves at the
-      // lane-pinned version — every member of the lane then reads ONE
-      // consistent cut in the same SQL statement. Mixing an explicit
-      // pin (VERSION AS OF, or an @vN binding) with a lane pin is
-      // ambiguous and refuses loudly rather than silently preferring
-      // either.
-      val lanePin = LakeCatalog.lanePinFor(s, root)
-      if (lanePin.isDefined && (versionOverride.isDefined || pinned.isDefined))
-        throw new IllegalArgumentException(
-          s"$display resolves through a spark.graft.lane.* binding " +
-            s"(pinned at v${lanePin.get}) AND an explicit version pin " +
-            s"(${versionOverride.map(v => s"VERSION AS OF $v")
-              .getOrElse(s"binding @v${pinned.get}")}) — mixing the " +
-            "two is ambiguous; unset one")
-      val version = versionOverride.orElse(pinned).orElse(lanePin)
-        .getOrElse(SnapshotTable.latest(s, root).getOrElse(
-          throw new NoSuchTableException(ident)))
-      if (!SnapshotTable.hasVersion(s, root, version))
-        throw new IllegalArgumentException(
-          s"unknown version v$version of $display (root $root)")
-      val (dirs, schema) = SnapshotTable.scanInputs(s, root, version)
-      // (escaped partition key -> absolute dir) pairs power the scan's
-      // manifest-dir pruning on partition filters
-      val keyed = SnapshotTable.entriesFor(s, root, version).map {
-        case (k, rel) =>
-          k -> new org.apache.hadoop.fs.Path(root, rel).toString
-      }
-      // DML only against the live table: a VERSION AS OF load, an
-      // @vN-pinned binding, or a LANE pin all name an immutable
-      // historical state — a lane session reading a consistent cut
-      // must not mutate a latest it is not even reading
-      LakeTable(s"$display@v$version", root, version, dirs, schema,
-        writable = versionOverride.isEmpty && pinned.isEmpty &&
-          lanePin.isEmpty,
-        partitionCols = SnapshotTable.partitionColumns(s, root, version),
-        keyedDirs = keyed)
-    } else {
-      val vs = Snapshots.versions(s, root)
-      if (vs.isEmpty) throw new NoSuchTableException(ident)
-      val version = versionOverride.orElse(pinned).getOrElse(vs.last)
-      if (!vs.contains(version))
-        throw new IllegalArgumentException(
-          s"unknown version v$version of $display (root $root)")
-      LakeTable(s"$display@v$version", root, version,
-        Snapshots.dirsFor(s, root, version), None)
+    // lane bindings (round 18): when a `spark.graft.lane.<name>`
+    // binding's lane pins this root, the table resolves at the
+    // lane-pinned version — every member of the lane then reads ONE
+    // consistent cut in the same SQL statement. Mixing an explicit
+    // pin (VERSION AS OF, or an @vN binding) with a lane pin is
+    // ambiguous and refuses loudly rather than silently preferring
+    // either.
+    val lanePin = LakeCatalog.lanePinFor(s, root)
+    if (lanePin.isDefined && (versionOverride.isDefined || pinned.isDefined))
+      throw new IllegalArgumentException(
+        s"$display resolves through a spark.graft.lane.* binding " +
+          s"(pinned at v${lanePin.get}) AND an explicit version pin " +
+          s"(${versionOverride.map(v => s"VERSION AS OF $v")
+            .getOrElse(s"binding @v${pinned.get}")}) — mixing the " +
+          "two is ambiguous; unset one")
+    // a root with no committed version is no table at all, whatever
+    // version the statement or the binding names
+    val version = versionOverride.orElse(pinned).orElse(lanePin)
+      .getOrElse(SnapshotTable.latest(s, root).getOrElse(
+        throw new NoSuchTableException(ident)))
+    if (!SnapshotTable.hasVersion(s, root, version)) {
+      if (SnapshotTable.latest(s, root).isEmpty)
+        throw new NoSuchTableException(ident)
+      throw new IllegalArgumentException(
+        s"unknown version v$version of $display (root $root)")
     }
+    val (dirs, schema) = SnapshotTable.scanInputs(s, root, version)
+    // (escaped partition key -> absolute dir) pairs power the scan's
+    // manifest-dir pruning on partition filters
+    val keyed = SnapshotTable.entriesFor(s, root, version).map {
+      case (k, rel) =>
+        k -> new org.apache.hadoop.fs.Path(root, rel).toString
+    }
+    // DML only against the live table: a VERSION AS OF load, an
+    // @vN-pinned binding, or a LANE pin all name an immutable
+    // historical state — a lane session reading a consistent cut
+    // must not mutate a latest it is not even reading
+    LakeTable(s"$display@v$version", root, version, dirs, schema,
+      writable = versionOverride.isEmpty && pinned.isEmpty &&
+        lanePin.isEmpty,
+      partitionCols = SnapshotTable.partitionColumns(s, root, version),
+      keyedDirs = keyed)
   }
 
   private def readOnly: Nothing =
     throw new UnsupportedOperationException(
       s"catalog '$catalogName' is read-only for this operation: " +
-        "snapshot versions commit through the SnapshotTable/Snapshots " +
-        "API (OCC manifest protocol)")
+        "snapshot versions commit through the SnapshotTable API (OCC " +
+        "manifest protocol)")
 
   /** `CREATE TABLE lake.t (…) PARTITIONED BY (…)` and CTAS (round-15
     * verdict item 1) — the SQL front door: mints an empty
@@ -352,8 +343,8 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
         "rebind at latest to evolve the schema")
     if (!SnapshotTable.isTableRoot(s, root))
       throw new UnsupportedOperationException(
-        s"ALTER TABLE $catalogName.${ident.name()}: a flat-layer " +
-          "snapshot root has no recorded schema to evolve")
+        s"ALTER TABLE $catalogName.${ident.name()}: $root holds no " +
+          "committed snapshot-table version to evolve")
     changes match {
       // RENAME COLUMN / DROP COLUMN (round 16): metadata-only schema
       // evolution through column mapping — physical names in the data
@@ -700,12 +691,13 @@ object LakeCatalog {
 /** One immutable snapshot version as a read-only DSv2 table: the scan
   * delegates to Spark's parquet [[FileTable]] over exactly this
   * version's data directories with the manifest-recorded schema pinned
-  * (None for the flat [[Snapshots]] layer → footer inference, with
-  * mergeSchema mirroring [[SnapshotTable.read]]'s no-recorded-schema
-  * path). A case class so two loads of the same (name, root, version)
-  * are EQUAL — DataSourceV2Relation canonicalization compares the
-  * table, and [[graft.security.Rbac]]'s sanctioned-subtree check needs
-  * role-view loads to canonicalize identically across analyses. */
+  * (None only for a manifest written before the schema line existed →
+  * footer inference with mergeSchema, like [[SnapshotTable.read]]'s
+  * no-recorded-schema path). A case class so two loads of the same
+  * (name, root, version) are EQUAL — DataSourceV2Relation
+  * canonicalization compares the table, and [[graft.security.Rbac]]'s
+  * sanctioned-subtree check needs role-view loads to canonicalize
+  * identically across analyses. */
 final case class LakeTable(
     tableName: String, root: String, snapshotVersion: Int,
     paths: Seq[String], recordedSchema: Option[StructType],
@@ -742,8 +734,8 @@ final case class LakeTable(
 
   /** The manifest-recorded partition columns as identity transforms —
     * what lets a static `INSERT OVERWRITE … PARTITION (k=v)` spec
-    * validate and land as an overwrite-by-filter. Empty for the flat
-    * layer and pre-recording manifests (no declared layout to name). */
+    * validate and land as an overwrite-by-filter. Empty for
+    * pre-recording manifests (no declared layout to name). */
   override def partitioning(): Array[Transform] =
     partitionCols.map(c =>
       org.apache.spark.sql.connector.expressions.Expressions.identity(c))
@@ -972,9 +964,9 @@ final case class LakeTable(
 
   private def requireWritable(op: String): Unit =
     if (!writable) throw new UnsupportedOperationException(
-      s"$op on $tableName: historical versions and flat-layer tables " +
-        "are immutable — DML runs against a SnapshotTable resolved at " +
-        "latest (no VERSION AS OF, no @vN binding pin)")
+      s"$op on $tableName: historical versions are immutable — DML " +
+        "runs against a SnapshotTable resolved at latest (no VERSION " +
+        "AS OF, no @vN binding pin)")
 
   /** `INSERT INTO` (append) / `INSERT OVERWRITE` (full replace) /
     * `INSERT OVERWRITE … PARTITION (k=v)` (partition-scoped replace,

@@ -77,9 +77,9 @@ object LakeDml extends Rule[LogicalPlan] {
 
   private def requireWritable(t: LakeTable, op: String): Unit =
     if (!t.writable) deny(
-      s"$op on ${t.tableName}: historical versions and flat-layer " +
-        "tables are immutable — DML runs against a table resolved at " +
-        "latest (no VERSION AS OF, no @vN binding pin)")
+      s"$op on ${t.tableName}: historical versions are immutable — " +
+        "DML runs against a table resolved at latest (no VERSION AS " +
+        "OF, no @vN binding pin)")
 
   private def noSubquery(es: Seq[Expression], stmt: String): Unit =
     es.foreach { e =>

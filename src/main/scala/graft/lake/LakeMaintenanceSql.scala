@@ -61,7 +61,7 @@ final case class VacuumLakeTableCommand(table: String, keepVersions: Int)
   * vacuumed, and the change feed surfaces the restore as ordinary
   * delete/insert rows. Refusals: a `@vN`-pinned binding already names
   * an immutable historical state (rebind at latest to mutate), and a
-  * flat snapshot layer has no folded manifest state to restate. */
+  * root with no committed version has nothing to restore. */
 final case class RestoreLakeTableCommand(table: String, toVersion: Int)
   extends LeafRunnableCommand {
 
@@ -78,9 +78,7 @@ final case class RestoreLakeTableCommand(table: String, toVersion: Int)
         "restoring")
     if (!SnapshotTable.isTableRoot(spark, root))
       throw new UnsupportedOperationException(
-        s"RESTORE $table: the binding is a flat snapshot layer (no " +
-          "folded manifest state to restate); RESTORE applies to " +
-          "SnapshotTable roots")
+        s"RESTORE $table: $root holds no committed version to restore")
     Seq(Row(toVersion, SnapshotTable.restore(spark, root, toVersion)))
   }
 }
@@ -105,9 +103,7 @@ final case class DescribeHistoryCommand(table: String)
     val (root, _) = LakeCatalog.resolveBinding(spark, table)
     if (!SnapshotTable.isTableRoot(spark, root))
       throw new UnsupportedOperationException(
-        s"DESCRIBE HISTORY $table: the binding is a flat snapshot " +
-          "layer (no manifest log); history applies to SnapshotTable " +
-          "roots")
+        s"DESCRIBE HISTORY $table: $root holds no committed version")
     SnapshotTable.history(spark, root).sortBy(-_._1).map {
       case (v, ms, kind, added, removed) =>
         Row(v, new java.sql.Timestamp(ms), kind, added, removed)
@@ -140,8 +136,7 @@ final case class ShowCreateLakeTableCommand(table: String)
     val (root, pin) = LakeCatalog.resolveBinding(spark, table)
     if (!SnapshotTable.isTableRoot(spark, root))
       throw new UnsupportedOperationException(
-        s"SHOW CREATE TABLE $table: the binding is a flat snapshot " +
-          "layer (no recorded table contract)")
+        s"SHOW CREATE TABLE $table: $root holds no committed version")
     val v = pin.getOrElse(-1)
     val schema = SnapshotTable.schemaOf(spark, root, v).getOrElse(
       throw new UnsupportedOperationException(
@@ -215,8 +210,7 @@ final case class DescribeDetailCommand(table: String)
     val (root, pin) = LakeCatalog.resolveBinding(spark, table)
     if (!SnapshotTable.isTableRoot(spark, root))
       throw new UnsupportedOperationException(
-        s"DESCRIBE DETAIL $table: the binding is a flat snapshot " +
-          "layer (no manifest log)")
+        s"DESCRIBE DETAIL $table: $root holds no committed version")
     Seq(SnapshotTable.detailRow(spark, root, table, pin))
   }
 }
@@ -246,8 +240,7 @@ final case class AlterConstraintCommand(
         "historical states are immutable; rebind to latest to alter")
     if (!SnapshotTable.isTableRoot(spark, root))
       throw new UnsupportedOperationException(
-        s"ALTER TABLE $table: the binding is a flat snapshot layer " +
-          "(no table contract to alter)")
+        s"ALTER TABLE $table: $root holds no committed version to alter")
     val v = action match {
       case AddCheck(name, sql) =>
         SnapshotTable.addCheckConstraint(spark, root, name, sql)

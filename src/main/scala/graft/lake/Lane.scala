@@ -147,7 +147,7 @@ object Lane {
         s".v$v.${java.util.UUID.randomUUID()}.tmp")
       val out = f.create(tmp, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (Snapshots.publishExclusive(f, tmp, manifestPath(laneRoot, v))) {
+      if (SnapshotTable.publishExclusive(f, tmp, manifestPath(laneRoot, v))) {
         return v
       }
       f.delete(tmp, false)

@@ -370,7 +370,7 @@ object MaterializedAgg {
       s".$name.${java.util.UUID.randomUUID()}.tmp")
     val out = f.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (!Snapshots.publishExclusive(f, tmp, fin))
+    if (!SnapshotTable.publishExclusive(f, tmp, fin))
       throw new java.io.IOException(
         s"materialized-view metadata publish lost a race: $fin " +
           "(concurrent maintainer? the contract is single-maintainer)")

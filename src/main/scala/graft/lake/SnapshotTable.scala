@@ -5,19 +5,17 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
-/** Partitioned table with MULTI-PARTITION ATOMIC upsert/delete —
-  * [[Lake.upsert]]'s merge semantics composed with [[Snapshots]]'
-  * manifest-commit machinery (round-8 verdict item 3).
+/** The lake's versioned table format: a partitioned parquet table
+  * whose every mutation — upsert, delete, change batch, compaction,
+  * schema change — commits as ONE manifest, so a batch touching many
+  * partitions is MULTI-PARTITION ATOMIC and every committed version
+  * stays readable until vacuumed ("model X trained on corpus v12").
   *
-  * [[Lake.upsert]] is honest that its atomicity unit is the partition
-  * DIRECTORY: a crashed multi-partition batch is recoverable (every
-  * partition is old, new, or restorable), but not atomic — a reader can
-  * observe some partitions updated and others not. This table closes
-  * that gap the way Delta/Iceberg do, with machinery already in the
-  * repo: data directories are IMMUTABLE (one directory per partition
-  * tuple per rewrite, never mutated), and a version = one manifest
-  * mapping partition tuple -> live directory, renamed into place
-  * atomically. A batch that touches 50 partitions writes 50 new
+  * The manifest log is the only source of truth (the Delta Lake
+  * design): data directories are IMMUTABLE (one directory per
+  * partition tuple per rewrite, never mutated), and a version = one
+  * manifest mapping partition tuple -> live directory, published
+  * create-exclusive. A batch that touches 50 partitions writes 50 new
   * directories and then commits ONE manifest: readers see all 50 or
   * none. A crash before the commit leaves invisible garbage directories
   * ([[vacuum]] collects them) — never a half-applied batch.
@@ -58,7 +56,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * scratch (bounded attempts), so the final state equals sequential
   * application. Abandoned staged directories are invisible garbage
   * ([[vacuum]] collects them). The commit publish is create-exclusive
-  * on every filesystem ([[Snapshots.publishExclusive]]): no-overwrite
+  * on every filesystem ([[publishExclusive]]): no-overwrite
   * rename on HDFS/object stores, atomic link(2) on local FS — a lost
   * race always surfaces, never silently replaces a commit.
   *
@@ -67,8 +65,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * not even listed), the rewrite job salts across
   * `filesPerPartition` writer tasks per partition ([[Lake]]'s hot-
   * partition fan-out), and the commit is manifest-sized metadata.
-  * Old versions stay readable until vacuumed ([[Snapshots]]' time-travel
-  * contract), so "train on v12" composes with CDC-maintained tables.
+  * Old versions stay readable until vacuumed, and a session's
+  * `spark.graft.snapshot.<table>` binding pins one ([[boundVersions]]),
+  * so "train on v12" composes with CDC-maintained tables.
   */
 object SnapshotTable {
   private def fs(spark: SparkSession, root: String) =
@@ -99,23 +98,12 @@ object SnapshotTable {
     * several threads (concurrent derived-table refreshes). */
   @volatile private[lake] var onBeforeCommit: () => Unit = () => ()
 
-  /** Whether `root` holds a SnapshotTable (key<TAB>dir manifests) as
-    * opposed to a flat [[Snapshots]] root (bare directory lines) —
-    * the format probe that lets one `spark.graft.snapshot.<table>`
-    * binding serve BOTH layers ([[graft.core.Tables]] routes through
-    * this): a SnapshotTable manifest always contains a TAB (the
-    * #schema line and every entry), a Snapshots manifest never does
-    * (its lines are bare relative paths). */
-  def isTableRoot(spark: SparkSession, root: String): Boolean = {
-    val vs = versions(spark, root)
-    vs.nonEmpty && {
-      val p = new Path(manifestDir(root), f"v${vs.last}%08d.manifest")
-      val in = fs(spark, root).open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().exists(_.contains('\t'))
-      finally in.close()
-    }
-  }
+  /** Whether `root` holds at least one committed version — the guard
+    * the SQL maintenance commands run before touching a binding's
+    * root. Resolved through [[latest]]'s hint probe: no `_versions`
+    * listing, no manifest open. */
+  def isTableRoot(spark: SparkSession, root: String): Boolean =
+    latest(spark, root).isDefined
 
   /** Committed version numbers, ascending (empty if none). */
   def versions(spark: SparkSession, root: String): Seq[Int] = {
@@ -353,9 +341,8 @@ object SnapshotTable {
     * manifest file's modification time: the create-exclusive publish
     * is the commit, so the filesystem already records exactly the
     * instant each version became visible — nothing extra is written.
-    * Works for both snapshot layers (flat [[Snapshots]] shares the
-    * `_versions/v%08d.manifest` layout). One `_versions` listing per
-    * call — time travel is an interactive path, not a hot one.
+    * One `_versions` listing per call — time travel is an interactive
+    * path, not a hot one.
     *
     * Loud failures, mirroring Delta's: a timestamp BEFORE the earliest
     * retained commit (earlier history vacuumed, or the table did not
@@ -609,13 +596,45 @@ object SnapshotTable {
       .mkString("", "\n", "\n")
   }
 
+  /** Publish `tmp` as `fin` with CREATE-EXCLUSIVE semantics; returns
+    * false when another committer won the race (tmp is cleaned up
+    * either way). On HDFS/object stores, `rename` already refuses an
+    * existing destination — the historical protocol. On the local
+    * filesystem Hadoop's rename OVERWRITES, so exists-check-then-rename
+    * left a window where two racers both pass the check and one
+    * silently replaces the other's just-committed manifest; there we
+    * publish via POSIX link(2) instead ([[java.nio.file.Files#createLink]]),
+    * which is atomic and fails with EEXIST — no window at all. Shared
+    * with [[Lane]] and [[MaterializedAgg]]'s applied markers. */
+  private[lake] def publishExclusive(
+      f: org.apache.hadoop.fs.FileSystem, tmp: Path, fin: Path): Boolean = {
+    val won =
+      if (f.exists(fin)) false
+      else if (Option(f.getUri.getScheme).contains("file")) {
+        val lt = java.nio.file.Paths.get(f.makeQualified(tmp).toUri.getPath)
+        val lf = java.nio.file.Paths.get(f.makeQualified(fin).toUri.getPath)
+        try { java.nio.file.Files.createLink(lf, lt); true }
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+          // filesystems without hard links (rare for scheme "file"):
+          // fall back to the rename protocol and its documented window
+          case _: UnsupportedOperationException => f.rename(tmp, fin)
+        }
+      } else f.rename(tmp, fin)
+    // on link-success tmp is a second name for fin; on loss it is
+    // garbage; on rename-success it is already gone (delete no-ops)
+    f.delete(tmp, false)
+    won
+  }
+
   /** THE COMMIT: write the manifest file (full or delta) to a
-    * writer-unique tmp name, rename into place — same protocol and race
-    * posture as [[Snapshots.commit]], except the target version is the
-    * CALLER's expectation (read-latest and rename are no longer one
-    * call, so the version must be pinned at read time — computing it
-    * here would let a commit that landed in between be silently dropped
-    * from the fold). A lost race throws [[CommitRaceException]]. */
+    * writer-unique tmp name (a SHARED tmp path would let a racing
+    * writer's create(overwrite=true) truncate the file this writer is
+    * about to publish), then publish it create-exclusive as exactly
+    * version `v`. The target version is the CALLER's expectation,
+    * pinned when it read the latest manifest — computing it here would
+    * let a commit that landed in between be silently dropped from the
+    * fold. A lost race throws [[CommitRaceException]]. */
   private def commitManifest(
       spark: SparkSession, root: String, v: Int,
       payload: Manifest, deltaBase: Option[Int],
@@ -628,9 +647,9 @@ object SnapshotTable {
     try out.write(
       renderManifest(payload, deltaBase, removed).getBytes("UTF-8"))
     finally out.close()
-    // create-exclusive publish (shared with [[Snapshots]]): atomic
-    // no-overwrite on every filesystem, including local (link(2)).
-    if (!Snapshots.publishExclusive(f, tmp, manifestPath(root, v)))
+    // create-exclusive publish: atomic no-overwrite on every
+    // filesystem, including local (link(2)).
+    if (!publishExclusive(f, tmp, manifestPath(root, v)))
       throw new CommitRaceException(
         s"snapshot commit lost the race: ${manifestPath(root, v)}")
     writeHint(spark, root, v)
@@ -649,7 +668,7 @@ object SnapshotTable {
       val out = f.create(tmp, true)
       try out.write(renderManifest(full, None, Nil).getBytes("UTF-8"))
       finally out.close()
-      Snapshots.publishExclusive(f, tmp, checkpointPath(root, v))
+      publishExclusive(f, tmp, checkpointPath(root, v))
       // a lost publish race means another writer's checkpoint is in
       // place — for every caller that is as good as ours landing
       f.exists(checkpointPath(root, v))
@@ -1849,9 +1868,14 @@ object SnapshotTable {
     * the cast-to-string partition tuple reproduces
     * [[touchedCompositeKeys]]'s rendering exactly (struct fields keep
     * per-column NULLs; the set is touched-partition-sized, the same
-    * driver cardinality the old probe collected). Validation messages
-    * are byte-identical to [[Lake.validateUpdateBatch]] plus the
-    * non-NULL-op contract. */
+    * driver cardinality the old probe collected). Validation: a batch
+    * with two rows for one key has no defined winner (the anti-join +
+    * union would keep both forever) and a NULL key can never be
+    * replaced (the anti-join's equality never matches NULL) — both
+    * fail loudly with their own message (count(key) vs count(*)
+    * separates them; countDistinct alone ignores NULLs and would
+    * misreport a null-key row as a duplicate), plus the non-NULL-op
+    * contract for change batches. */
   private def validateAndProbe(
       changes: DataFrame, key: String, opCol: Option[String],
       partitionBy: Seq[String]): Set[String] = {
@@ -2474,8 +2498,11 @@ object SnapshotTable {
       crashBeforeCommit = false)
   }
 
-  /** Upsert `updates` (same contract as [[Lake.upsert]]: full schema,
-    * unique non-null keys, stable partition per key): rows whose `key`
+  /** Upsert `updates` (full schema, unique non-null keys, stable
+    * partition per key — the anti-join reads only the batch's
+    * partitions, so a key that MOVES partitions keeps its old row
+    * unless the batch also touches the old partition or a
+    * [[deleteWhere]] removes it first): rows whose `key`
     * exists are replaced, new keys inserted. Only partition tuples
     * present in the batch are read or rewritten, and the whole batch
     * becomes visible in ONE manifest commit. Returns the new version.
@@ -2593,8 +2620,8 @@ object SnapshotTable {
     // batches are view-slice- and sidecar-sized by construction)
     // caches BEFORE calling and keeps the lifecycle.
     val changes = changes0
-    val touchedKeys = profT("validate_probe") {
-      validateAndProbe(changes, key, Some(opCol), partitionBy) }
+    val touchedKeys =
+      validateAndProbe(changes, key, Some(opCol), partitionBy)
     withConflictRetry {
       val base = manifestAt(spark, root, -1)
       base.rowKey.headOption.foreach(k0 => require(k0 == key,
@@ -2634,7 +2661,8 @@ object SnapshotTable {
   }
 
   /** Delete rows matching `predicate`; NULL-predicate rows are kept
-    * (same three-valued-logic contract as [[Lake.deleteWhere]]). A
+    * (a bare `!predicate` would drop them too, under three-valued
+    * logic, silently deleting rows the predicate never matched). A
     * partition losing all rows drops out of the manifest; a delete
     * emptying the WHOLE table commits an empty manifest that still
     * records the schema, so the table stays readable (empty frame) and
@@ -2793,17 +2821,6 @@ object SnapshotTable {
     * `untouched` from V's entries (so a disjoint concurrent commit's
     * changes are CARRIED FORWARD, not clobbered), and attempts to
     * commit exactly V+1. A lost rename race just loops. */
-  /** Stage timer for commit-path diagnostics: prints to stderr when
-    * GRAFT_COMMIT_PROF is set, else zero-cost pass-through. */
-  @inline private def profT[T](name: String)(body: => T): T =
-    if (sys.env.contains("GRAFT_COMMIT_PROF")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[commitprof] $name=${(System.nanoTime() - t0) / 1e9}%.3f")
-      r
-    } else body
-
   private def commitRewrite(
       spark: SparkSession, root: String, newRows: DataFrame,
       partitionBy: Seq[String], baseManifest: Option[Manifest],
@@ -2900,9 +2917,9 @@ object SnapshotTable {
           (partitionBy.map(col) ++ clusterBy.map(c =>
             col(colMapping.getOrElse(c, c)))): _*)
       }
-    profT("staging_write") { layout
+    layout
       .write.mode("overwrite").partitionBy(stagingCols: _*)
-      .parquet(staging.toString) }
+      .parquet(staging.toString)
     f.mkdirs(new Path(root, "data"))
     // walk the nested staging layout: level j's directories are
     // `_graft_pJ=<escaped>`; a LEAF (deepest level) holds one tuple's
@@ -2918,14 +2935,14 @@ object SnapshotTable {
             .map { case (k, d) => (s"$frag/$k", d) }
         }
     }
-    val moved = profT("moves") { leaves(staging, 0).zipWithIndex.map { case ((k, src), i) =>
+    val moved = leaves(staging, 0).zipWithIndex.map { case ((k, src), i) =>
       val dir = s"data/p${System.nanoTime()}-$i-" +
         java.util.UUID.randomUUID()
       if (!f.rename(src, new Path(root, dir)))
         throw new java.io.IOException(
           s"cannot move staged partition $src into $dir")
       (k, dir)
-    } }
+    }
     f.delete(staging, true)
     if (crashBeforeCommit)
       throw new java.io.IOException(
@@ -2935,11 +2952,11 @@ object SnapshotTable {
     // the move loop above) — this is what lets [[optimize]] plan
     // candidates from the manifest alone at 100 TB instead of listing
     // every partition per call (round-11 verdict item 8).
-    val newSizes: Seq[(String, Long)] = profT("census") { moved.flatMap { case (_, dir) =>
+    val newSizes: Seq[(String, Long)] = moved.flatMap { case (_, dir) =>
       f.listStatus(new Path(root, dir)).toSeq
         .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         .map(st => (s"$dir/${st.getPath.getName}", st.getLen))
-    } }
+    }
     // fresh files carry PHYSICAL names; #f and #b lines key by them
     // too, so a later rename never invalidates recorded stats. Columns
     // absent from this batch (pre-evolution vintages) simply get no
@@ -2963,7 +2980,7 @@ object SnapshotTable {
     // (the metadata-aggregate path requires full coverage and falls
     // back to the data scan) and no footer `#f` lines (never skipped),
     // never a wrong count or bound.
-    val footers: Seq[(String, Long, Seq[FileStat])] = profT("footers") {
+    val footers: Seq[(String, Long, Seq[FileStat])] = {
       val conf = spark.sessionState.newHadoopConf()
       newSizes.flatMap { case (rel, _) =>
         try {
@@ -3004,7 +3021,7 @@ object SnapshotTable {
     // min would be lexicographic and wrong for numbers. With neither,
     // the commit runs no Spark job after its staging write.
     val (aggStats: Seq[FileStat],
-         newSketches: Seq[(String, String, String)]) = profT("stats") {
+         newSketches: Seq[(String, String, String)]) = {
       if ((aggStatCols.isEmpty && lookupPresent.isEmpty) || moved.isEmpty)
         (Nil, Nil)
       else {
@@ -3068,10 +3085,9 @@ object SnapshotTable {
       .filter(e => touchedKeys(e._1)).toSet
     var raceRetries = 0
     while (true) {
-      val latestV = profT("versions_list") {
-        versions(spark, root).lastOption.getOrElse(0) }
-      val latestM = profT("manifest_read") {
-        if (latestV == 0) None else Some(readManifest(spark, root, latestV)) }
+      val latestV = versions(spark, root).lastOption.getOrElse(0)
+      val latestM =
+        if (latestV == 0) None else Some(readManifest(spark, root, latestV))
       val latest = latestM.map(_.entries).getOrElse(Nil)
       // A partial commit RECORDS THE UNION of the table's schema and
       // the rewrite's: untouched directories may carry a wider vintage
@@ -3141,8 +3157,8 @@ object SnapshotTable {
         latestM.map(_.droppedPhys).getOrElse(Nil), lookupCols,
         newSketches, checks, notNull)
       try {
-        profT("manifest_commit") { commitManifest(spark, root, v, payload,
-          if (asDelta) Some(latestV) else None, removed) }
+        commitManifest(spark, root, v, payload,
+          if (asDelta) Some(latestV) else None, removed)
         if (asDelta && v % CheckpointEvery == 0) {
           // fold in-memory from state already in hand — no re-read
           val untouched = latest.filterNot(e => touchedKeys(e._1))
@@ -3233,7 +3249,7 @@ object SnapshotTable {
       spark: SparkSession, sourceRoot: String, targetRoot: String,
       version: Int = -1): Int = {
     require(isTableRoot(spark, sourceRoot),
-      s"SHALLOW CLONE: $sourceRoot is not a snapshot-table root")
+      s"SHALLOW CLONE: $sourceRoot holds no committed version")
     require(versions(spark, targetRoot).isEmpty,
       s"SHALLOW CLONE: $targetRoot already holds a committed snapshot " +
         "table")
@@ -3522,16 +3538,52 @@ object SnapshotTable {
     }
   }
 
+  /** Fully qualified, slash-normalized rendering of a root path —
+    * `makeQualified` resolves relative paths and adds the scheme, and
+    * `Path` normalization strips trailing slashes, so two spellings of
+    * the same directory ("corpus/", "file:/x/corpus", "./corpus")
+    * compare equal. [[boundVersions]] MUST compare through this: a raw
+    * string prefix match would silently fail to protect a pinned
+    * version whenever the binding and the vacuum call spell the root
+    * differently, and vacuum would collect a version the session is
+    * actively reading. */
+  private def qualifiedRoot(spark: SparkSession, root: String): String =
+    fs(spark, root).makeQualified(new Path(root)).toString
+
+  /** Version numbers of `root` that the session's snapshot bindings
+    * (`spark.graft.snapshot.<table> = <root>@v<N>`) currently pin —
+    * the versions a vacuum of this root must not collect, or every
+    * lane query reading through [[graft.core.Tables]] under that
+    * binding starts failing. `@latest` bindings resolve per lookup and
+    * are protected by the keep horizon itself (keepVersions >= 1). */
+  def boundVersions(spark: SparkSession, root: String): Set[Int] = {
+    // compare QUALIFIED roots, not raw strings: a binding that spells
+    // the root with a trailing slash, a file: scheme, or a relative
+    // path must still protect its pinned version (ADVICE r10 item 1)
+    val wanted = qualifiedRoot(spark, root)
+    spark.conf.getAll.collect {
+      case (k, v) if k.startsWith("spark.graft.snapshot.") &&
+          v.lastIndexOf("@v") > 0 =>
+        val at = v.lastIndexOf("@v")
+        val bound = scala.util.Try(qualifiedRoot(spark, v.substring(0, at)))
+          .getOrElse(v.substring(0, at))
+        if (bound == wanted)
+          scala.util.Try(v.substring(at + 2).toInt).toOption
+        else None
+    }.flatten.toSet
+  }
+
   /** Drop all but the newest `keepVersions` manifests — except versions
-    * in `protect`, which survive regardless of the horizon (the
-    * snapshot-binding contract: a session pinned to
-    * `spark.graft.snapshot.<table>=<root>@vN` must pass N here or that
-    * read breaks loudly) — and delete every data directory no kept
-    * manifest references, including directories written by crashed or
-    * conflict-abandoned batches, plus tmp manifests and staging dirs
-    * from crashed commits. Returns (manifests dropped, data dirs
-    * deleted). Single-writer contract: do not run concurrently with a
-    * committer. */
+    * in `protect` and versions the CURRENT session's snapshot bindings
+    * pin ([[boundVersions]]: "train on v12" keeps v12 readable through
+    * a routine vacuum; for bindings held by OTHER sessions, pass their
+    * versions in `protect` explicitly) — and delete every data
+    * directory no kept manifest references, including directories
+    * written by crashed or conflict-abandoned batches, plus tmp
+    * manifests and staging dirs from crashed commits. A root nothing
+    * was ever written to is a (0, 0) no-op. Returns (manifests
+    * dropped, data dirs deleted). Single-writer contract: do not run
+    * concurrently with a committer. */
   def vacuum(
       spark: SparkSession, root: String, keepVersions: Int,
       protect: Set[Int] = Set.empty): (Int, Int) = {
@@ -3539,12 +3591,11 @@ object SnapshotTable {
     val f = fs(spark, root)
     if (!f.exists(new Path(root))) return (0, 0) // never-written root
     val vs = versions(spark, root)
-    // session-bound versions survive like explicitly protected ones —
-    // the same binding contract as Snapshots.vacuum, since a
-    // spark.graft.snapshot binding can point at either layer — and so
-    // do versions pinned by a registered live lane (round 17): a lane
-    // cut must stay readable as long as the lane retains it
-    val keepSet = protect ++ Snapshots.boundVersions(spark, root) ++
+    // session-bound versions survive like explicitly protected ones
+    // ([[boundVersions]] — the binding contract), and so do versions
+    // pinned by a registered live lane (round 17): a lane cut must
+    // stay readable as long as the lane retains it
+    val keepSet = protect ++ boundVersions(spark, root) ++
       lanePinnedVersions(spark, root)
     val drop = vs.dropRight(keepVersions).filterNot(keepSet)
     val keep = vs.filterNot(drop.contains)

@@ -578,19 +578,10 @@ object InvertedIndex {
       role.rowFilter.map(f => expr(f) && col("source") =!= UntaggedSource)
         .getOrElse(lit(true)), k)
 
-  /** Diagnostics seam (round-20 Bm25BatchProf): [[probeBatch]] with an
-    * explicit doc_id repartition of the pruned postings before
-    * scoring. */
-  private[graft] def probeBatchRepartForProf(
-      spark: SparkSession, root: String, queries: DataFrame,
-      k: Int): DataFrame =
-    probeBatchWhere(spark, root, queries, lit(true), k,
-      repartForProf = true)
-
   private def probeBatchWhere(
       spark: SparkSession, root: String, queries: DataFrame,
       visible: org.apache.spark.sql.Column, k: Int,
-      fast: Boolean = false, repartForProf: Boolean = false): DataFrame = {
+      fast: Boolean = false): DataFrame = {
     val width = pfxWidth(spark, root)
     val q = queries.select(col("query_id"), col("tok")).distinct()
     // the workload's term set folds out of the optimized plan with NO
@@ -605,12 +596,11 @@ object InvertedIndex {
       import spark.implicits._
       workloadTerms.toDF("tok")
     }
-    val tf0 = postingsDf(spark, root)
+    val tf = postingsDf(spark, root)
       .filter(col("pfx").isin(prefixes: _*)) // directory pruning
       .filter(visible)
       .join(broadcast(qterms), "tok")
       .select(col("tok"), col("doc_id"), col("dl"), col("tf"))
-    val tf = if (repartForProf) tf0.repartition(col("doc_id")) else tf0
     // per-TERM df over the (visible) corpus, BEFORE the query join —
     // two queries sharing a term see one df, not one per query — and
     // memoized per (root, role, workload) so repeats pay one scan

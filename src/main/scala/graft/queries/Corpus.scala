@@ -570,12 +570,6 @@ object Corpus {
     * documents corpus, v2 = one applyChanges batch of tombstones +
     * recurations), built once per corpus fingerprint and reused by
     * every gate that needs a real SnapshotTable (t40, t48). */
-  /** Diagnostics-only alias for [[cdcRoot]] (FeedProf lives in
-    * graft.tools). */
-  private[graft] def cdcRootForProf(
-      spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    cdcRoot(spark, dir)
-
   private[queries] def cdcRoot(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     import graft.lake.SnapshotTable

@@ -517,9 +517,10 @@ object Search {
     // sf0.1) is gone, replaced by one postings-sized exchange paid
     // once at cache fill. The cache pins the partitioning (cached
     // plans keep their output partitioning), which also keeps the
-    // post-exchange scoring parallel — see Bm25BatchProf: the same
-    // repartition UNCACHED lets AQE coalesce the small exchange to one
-    // partition and serialize the decimal ladders (the t36 finding).
+    // post-exchange scoring parallel — see OPTIMIZATION_r20.md item 5:
+    // the same repartition UNCACHED lets AQE coalesce the small
+    // exchange to one partition and serialize the decimal ladders (the
+    // t36 finding: 10.3 MB → 1.5 MB shuffled, but 0.73 s → 1.56 s).
     val postings = TokenizedCorpus.postingsForTerms(spark, tokRoot, terms)
       .select(col("doc_id"), col("dl"), col("tok"), col("tf"))
       .repartition(col("doc_id"))
@@ -663,9 +664,9 @@ object Search {
     // satisfies BOTH the postings aggregate's (doc_id, dl, tok)
     // clustering AND the score aggregate's (query_id, doc_id) — the
     // postings-agg exchange and the fanout-sized DECIMAL-partials
-    // score exchange are both gone (Bm25BatchProf: t35 15.0 MB → 3.2
-    // MB shuffled, 1.34 s → 0.91 s; the tokenize stays in the
-    // pre-exchange scan stage, so parallelism is unchanged).
+    // score exchange are both gone (OPTIMIZATION_r20.md item 5: t35
+    // 15.0 MB → 3.2 MB shuffled, 1.34 s → 0.91 s; the tokenize stays in
+    // the pre-exchange scan stage, so parallelism is unchanged).
     val postings = base
       .select(col("doc_id"), col("dl"),
         explode(filter(col("toks"), _.isin(terms: _*))).as("tok"))

@@ -4,20 +4,20 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming CDC apply — the intake face of
-  * [[graft.lake.Lake.upsert]]: change batches arrive as files, each
-  * micro-batch upserts into the partitioned curated dataset, and only
-  * the partitions a batch touches are rewritten. `Trigger.AvailableNow`
-  * gives the cron-batch semantics (drain what exists, stop) while the
-  * identical query runs continuously on a cluster.
+  * [[graft.lake.SnapshotTable]]: change batches arrive as files, each
+  * micro-batch commits into the partitioned curated table as ONE
+  * snapshot version, and only the partitions a batch touches are
+  * rewritten. `Trigger.AvailableNow` gives the cron-batch semantics
+  * (drain what exists, stop) while the identical query runs
+  * continuously on a cluster.
   *
   * Replay contract (foreachBatch is AT-LEAST-ONCE): an upsert is
   * idempotent in its content — re-applying the same change batch
   * replaces the same keys with the same rows — so a crashed-then-
   * retried batch converges instead of double-applying (pinned in
-  * `CdcStreamSpec`). A crash INSIDE the partition swap window leaves
-  * the dataset recoverable via [[graft.lake.Lake.recoverUpsert]]; run
-  * it before restarting the stream (the checkpoint will then replay
-  * the interrupted batch to completion).
+  * `CdcStreamSpec`). A crash mid-batch leaves readers on the previous
+  * version (its staged directories are invisible garbage that vacuum
+  * collects), and the checkpoint replays the batch to a clean commit.
   *
   * The checkpoint lives under `<root>/_cdc_checkpoint` — the
   * underscore prefix keeps Spark's file index from reading it as data.
@@ -156,37 +156,26 @@ object CdcStream {
       failures.headOption.foreach(e => throw e)
     }
 
-  /** `versionCol`: the change-order column (a CDC sequence number /
+  /** The CDC upsert drain, applied ATOMICALLY per micro-batch via
+    * [[graft.lake.SnapshotTable.upsert]]: every batch commits as one
+    * snapshot version, so a crash mid-batch leaves readers on the
+    * previous version (crashed batches are invisible garbage,
+    * collected by vacuum) and the checkpoint replays the batch to a
+    * clean new commit.
+    *
+    * `versionCol`: the change-order column (a CDC sequence number /
     * commit timestamp). A micro-batch can carry SEVERAL changes for
     * one key (AvailableNow drains every pending file into one batch);
     * the batch reduces to the row with the greatest version per key
-    * before the upsert — without the reduction, Lake.upsert's
-    * anti-join+union would keep every variant as duplicate-key rows.
-    * When the feed has no version column, pass None: the reduction
-    * then orders by ALL non-key columns (deterministic, but an
-    * ARBITRARY winner among genuinely different changes — fine for
-    * replays of identical rows, wrong for conflicting ones; give real
-    * CDC feeds a version). */
-  def maintainUpserts(
-      updates: DataFrame,
-      root: String,
-      key: String,
-      partitionBy: String,
-      versionCol: Option[String] = None): StreamingQuery =
-    maintain(updates, root, key, versionCol) { (batch, reduced, _) =>
-      graft.lake.Lake.upsert(batch.sparkSession, root, reduced,
-        key, partitionBy)
-      ()
-    }
-
-  /** The same CDC drain applied ATOMICALLY per micro-batch via
-    * [[graft.lake.SnapshotTable.upsert]]: every batch commits as one
-    * snapshot version, so a crash mid-batch leaves readers on the
-    * previous version (no partially-swapped partitions to recover —
-    * crashed batches are invisible garbage, collected by vacuum) and
-    * the checkpoint replays the batch to a clean new commit. Replay
-    * convergence is by CONTENT: a re-applied batch produces an extra
-    * version whose rows equal the first application's (pinned in
+    * before the upsert — without the reduction the batch would carry
+    * duplicate keys, which the upsert rejects. When the feed has no
+    * version column, pass None: the reduction then orders by ALL
+    * non-key columns (deterministic, but an ARBITRARY winner among
+    * genuinely different changes — fine for replays of identical
+    * rows, wrong for conflicting ones; give real CDC feeds a version).
+    *
+    * Replay convergence is by CONTENT: a re-applied batch produces an
+    * extra version whose rows equal the first application's (pinned in
     * `CdcStreamSpec`). Pre-create the table with `SnapshotTable.write`
     * to pin its schema; a stream that bootstraps the table itself lets
     * the first batch define the schema, INCLUDING feed-only columns

@@ -1,11 +1,11 @@
 package graft.core
 
 import graft.SparkSpec
-import graft.lake.Snapshots
+import graft.lake.SnapshotTable
 import org.apache.spark.sql.functions._
 
 /** Snapshot-aware table resolution: `spark.graft.snapshot.<table>`
-  * pins a lane table to an immutable [[Snapshots]] version, so the SAME
+  * pins a lane table to an immutable [[SnapshotTable]] version, so the SAME
   * query is byte-stable across later commits — "train on v12" as
   * config, closing the loop between the snapshot layer and the query
   * pack. */
@@ -18,7 +18,7 @@ class SnapshotReadSpec extends SparkSpec {
   test("a pinned lane query is byte-stable across later commits") {
     val root = tmpDir("snap-read")
     val docs = Tables(spark, sfDir, "documents")
-    val v1 = Snapshots.overwrite(spark, root, docs)
+    val v1 = SnapshotTable.write(spark, root, docs, Seq("source"))
     assert(v1 == 1)
     try {
       spark.conf.set("spark.graft.snapshot.documents", s"$root@v1")
@@ -34,7 +34,8 @@ class SnapshotReadSpec extends SparkSpec {
       assert(pinned == live, "v1 == the live table at commit time")
       // the corpus moves on: v2 halves the corpus — the pinned query
       // must NOT see it
-      Snapshots.overwrite(spark, root, docs.filter(col("doc_id") % 2 === 0))
+      SnapshotTable.write(spark, root,
+        docs.filter(col("doc_id") % 2 === 0), Seq("source"))
       assert(graft.queries.Text.t12_source_mix.run(spark, sfDir)
         .collect().toSeq == pinned,
         "a later commit changed a version-pinned query's result")
@@ -57,13 +58,14 @@ class SnapshotReadSpec extends SparkSpec {
     // memoizes under the resolved number.
     val root = tmpDir("snap-latest")
     val docs = Tables(spark, sfDir, "documents")
-    Snapshots.overwrite(spark, root, docs)
+    SnapshotTable.write(spark, root, docs, Seq("source"))
     try {
       spark.conf.set("spark.graft.snapshot.documents", s"$root@latest")
       val n1 = Tables(spark, sfDir, "documents").count()
       assert(n1 == docs.count())
       // commit v2 in the SAME session, after @latest was already used
-      Snapshots.overwrite(spark, root, docs.filter(col("doc_id") % 2 === 0))
+      SnapshotTable.write(spark, root,
+        docs.filter(col("doc_id") % 2 === 0), Seq("source"))
       val n2 = Tables(spark, sfDir, "documents").count()
       assert(n2 == docs.count() / 2 + docs.count() % 2,
         s"@latest served a stale pre-commit relation: $n2 (want halved)")
@@ -76,21 +78,21 @@ class SnapshotReadSpec extends SparkSpec {
     // collected by the keep horizon as usual.
     val root = tmpDir("snap-vac-bind")
     val docs = Tables(spark, sfDir, "documents").limit(50)
-    Snapshots.overwrite(spark, root, docs) // v1
-    Snapshots.overwrite(spark, root, docs.limit(20)) // v2
-    Snapshots.overwrite(spark, root, docs.limit(10)) // v3
+    SnapshotTable.write(spark, root, docs, Seq("source")) // v1
+    SnapshotTable.write(spark, root, docs.limit(20), Seq("source")) // v2
+    SnapshotTable.write(spark, root, docs.limit(10), Seq("source")) // v3
     try {
       spark.conf.set("spark.graft.snapshot.documents", s"$root@v1")
-      assert(Snapshots.boundVersions(spark, root) == Set(1))
-      val (dropped, _) = Snapshots.vacuum(spark, root, keepVersions = 1)
+      assert(SnapshotTable.boundVersions(spark, root) == Set(1))
+      val (dropped, _) = SnapshotTable.vacuum(spark, root, keepVersions = 1)
       assert(dropped == 1, s"only the unbound v2 should drop, got $dropped")
-      assert(Snapshots.versions(spark, root) == Seq(1, 3))
+      assert(SnapshotTable.versions(spark, root) == Seq(1, 3))
       // the bound version still reads after the vacuum
       assert(Tables(spark, sfDir, "documents").count() == 50)
     } finally unpin()
     // unbound now: the next vacuum collects v1 too
-    val (dropped2, _) = Snapshots.vacuum(spark, root, keepVersions = 1)
-    assert(dropped2 == 1 && Snapshots.versions(spark, root) == Seq(3))
+    val (dropped2, _) = SnapshotTable.vacuum(spark, root, keepVersions = 1)
+    assert(dropped2 == 1 && SnapshotTable.versions(spark, root) == Seq(3))
   }
 
   test("binding protection survives differently-spelled roots") {
@@ -101,26 +103,24 @@ class SnapshotReadSpec extends SparkSpec {
     // skip the protection and collect the pinned version.
     val root = tmpDir("snap-vac-spell")
     val docs = Tables(spark, sfDir, "documents").limit(30)
-    Snapshots.overwrite(spark, root, docs)           // v1
-    Snapshots.overwrite(spark, root, docs.limit(5))  // v2
-    Snapshots.overwrite(spark, root, docs.limit(3))  // v3
+    SnapshotTable.write(spark, root, docs, Seq("source"))          // v1
+    SnapshotTable.write(spark, root, docs.limit(5), Seq("source")) // v2
+    SnapshotTable.write(spark, root, docs.limit(3), Seq("source")) // v3
     try {
       spark.conf.set("spark.graft.snapshot.documents", s"file:$root/@v1")
-      assert(Snapshots.boundVersions(spark, root) == Set(1),
+      assert(SnapshotTable.boundVersions(spark, root) == Set(1),
         "scheme-qualified, slash-suffixed binding must resolve to this root")
-      val (dropped, _) = Snapshots.vacuum(spark, root, keepVersions = 1)
-      assert(dropped == 1 && Snapshots.versions(spark, root) == Seq(1, 3),
+      val (dropped, _) = SnapshotTable.vacuum(spark, root, keepVersions = 1)
+      assert(dropped == 1 && SnapshotTable.versions(spark, root) == Seq(1, 3),
         "vacuum must spare the v1 pinned under the alternate spelling")
     } finally unpin()
   }
 
   test("a binding can pin a SnapshotTable root (the CDC-maintained zone)") {
-    // One binding mechanism, both snapshot layers: pointing
-    // spark.graft.snapshot.documents at a SnapshotTable root (tabbed
-    // manifests, partition-tuple entries) must time-travel exactly
-    // like a flat Snapshots root — "train on curated_table v1" as
-    // config — and its vacuum must spare the session-bound version.
-    import graft.lake.SnapshotTable
+    // A table the CDC path maintains through deletes (not only full
+    // replaces) time-travels through the same binding — "train on
+    // curated_table v1" as config — and its vacuum must spare the
+    // session-bound version.
     val root = tmpDir("snap-table-bind")
     val docs = Tables(spark, sfDir, "documents")
     SnapshotTable.write(spark, root, docs, Seq("source")) // v1

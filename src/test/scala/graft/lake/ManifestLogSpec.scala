@@ -133,6 +133,12 @@ class ManifestLogSpec extends SparkSpec {
       SnapshotTable.upsert(spark, root,
         Seq(("a", i.toLong, i * 10L)).toDF("p", "k", "v"), "k", Seq("p"))
     }
+    // crashed-commit debris: a tmp manifest (died between create and
+    // publish) and a staging dir (died mid-write) — vacuum collects both
+    val tmpManifest = new java.io.File(root, "_versions/.v00000099.dead.tmp")
+    java.nio.file.Files.writeString(tmpManifest.toPath, "never landed\n")
+    val staging = new java.io.File(root, ".staging-crashed")
+    assert(staging.mkdirs())
     // v2..v6 are deltas on the v1 full manifest; no checkpoint yet
     // (CheckpointEvery = 8). Dropping v1-v4 severs v5/v6's chains.
     val (dropped, _) = SnapshotTable.vacuum(spark, root, keepVersions = 2)
@@ -140,6 +146,14 @@ class ManifestLogSpec extends SparkSpec {
     assert(SnapshotTable.versions(spark, root) == Seq(5, 6))
     assert(SnapshotTable.read(spark, root, 5).count() == 5)
     assert(SnapshotTable.read(spark, root, 6).count() == 6)
+    // a dropped version is gone loudly, not served from a neighbor
+    intercept[IllegalArgumentException] { SnapshotTable.read(spark, root, 1) }
+    assert(!tmpManifest.exists(), "crashed-commit tmp manifest not collected")
+    assert(!staging.exists(), "crashed-commit staging dir not collected")
+    // a root nothing was ever committed to (empty, or not even created)
+    // vacuums as a (0, 0) no-op instead of throwing
+    assert(SnapshotTable.vacuum(spark, tmpDir("mlog-never"), 1) == (0, 0))
+    assert(SnapshotTable.vacuum(spark, s"$root-absent", 1) == (0, 0))
   }
 
   test("latest resolves through the hint pointer; stale/corrupt/missing degrade") {
@@ -216,5 +230,16 @@ class ManifestLogSpec extends SparkSpec {
         s"${band.inputFiles.mkString(",")}")
     assert(band.select("p").distinct().as[String].collect().toSeq ==
       Seq("100%=a#b c"))
+    // upserts find escaped partitions too: a replaced key in the
+    // special partition and a new ':' partition (written `a%3Ab`)
+    SnapshotTable.upsert(spark, root,
+      Seq(("100%=a#b c", 1L, 10L), ("a:b", 5L, 5L)).toDF("p", "k", "v"),
+      "k", Seq("p"))
+    assert(SnapshotTable.read(spark, root).select("p", "k", "v")
+      .as[(String, Long, Long)].collect().toSet == Set(
+        ("100%=a#b c", 1L, 10L), ("100%=a#b c", 2L, 2L),
+        ("plain", 3L, 3L), ("plain", 4L, 4L), ("a:b", 5L, 5L)))
+    assert(SnapshotTable.readPartitions(spark, root, Seq(Seq("a:b")))
+      .count() == 1)
   }
 }

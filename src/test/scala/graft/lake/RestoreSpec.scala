@@ -86,7 +86,7 @@ class RestoreSpec extends SparkSpec {
     assert(SnapshotTable.history(spark, root).map(_._1) == Seq(1, 2, 3, 4))
   }
 
-  test("no-op, unknown-version, pinned-binding, and flat-layer refusals") {
+  test("no-op, unknown-version, pinned-binding, and empty-root refusals") {
     val (name, root) = history3()
     // restore to the current latest mints no garbage commit
     assert(SnapshotTable.restore(spark, root, 3) == 3)
@@ -100,14 +100,12 @@ class RestoreSpec extends SparkSpec {
       spark.sql(s"RESTORE TABLE lake.${name}_pin TO VERSION AS OF 1")
     }
     assert(e2.getMessage.contains("pins"), e2.getMessage)
-    // flat Snapshots layer: no folded state to restate
-    val flatRoot = tmpDir("restore-flat")
-    Snapshots.append(spark, flatRoot, Seq((1L, "a")).toDF("k", "v"))
-    LakeCatalog.register(spark, "restore_flat", flatRoot)
+    // a bound root nothing was ever committed to: nothing to restore
+    LakeCatalog.register(spark, "restore_empty", tmpDir("restore-empty"))
     val e3 = intercept[Exception] {
-      spark.sql("RESTORE TABLE lake.restore_flat TO VERSION AS OF 1")
+      spark.sql("RESTORE TABLE lake.restore_empty TO VERSION AS OF 1")
     }
-    assert(e3.getMessage.contains("flat"), e3.getMessage)
+    assert(e3.getMessage.contains("no committed version"), e3.getMessage)
   }
 
   test("a restore after vacuum of the target fails loudly") {

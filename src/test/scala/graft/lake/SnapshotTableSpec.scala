@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Multi-partition ATOMIC upsert: a batch touching many partitions
   * becomes visible in one manifest commit — a crash after the data
   * write but before the commit leaves readers on the old version
-  * exactly (the gap [[Lake.upsert]] honestly documents). */
+  * exactly, never with some partitions updated and others not. */
 class SnapshotTableSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -57,8 +57,7 @@ class SnapshotTableSpec extends SparkSpec {
     // The atomicity claim itself: the batch touches two partitions, all
     // its data directories are fully written, and then the writer dies
     // before the manifest rename. Readers must see the previous version
-    // exactly — not one partition updated and the other not (the
-    // partially-swapped state Lake.upsert can only make recoverable).
+    // exactly — not one partition updated and the other not.
     val root = freshTable()
     val before = rows(SnapshotTable.read(spark, root))
     val updates = spark.createDataFrame(Seq(
@@ -97,6 +96,18 @@ class SnapshotTableSpec extends SparkSpec {
       s"exactly the touched partition should get a new dir: $changed")
     assert((v1Entries.toSet -- v2Entries.toSet).size == 1,
       "untouched partitions must carry their v1 directories forward")
+    // a DATA-column delete rewrites only the partitions holding matches
+    val pred = col("source") === "src5" && col("doc_id") % 3 === 0
+    val n2 = SnapshotTable.read(spark, root).count()
+    val victims = SnapshotTable.read(spark, root).filter(pred).count()
+    assert(victims > 0, "no rows match at smoke scale; weak test")
+    SnapshotTable.deleteWhere(spark, root, pred, Seq("source"))
+    val v3Entries = manifestLines(root, 3)
+    val rewritten = v3Entries.toSet -- v2Entries.toSet
+    assert(rewritten.size == 1 && rewritten.head.startsWith("src5\t"),
+      s"only the partition holding matches should rewrite: $rewritten")
+    val after = SnapshotTable.read(spark, root)
+    assert(after.count() == n2 - victims && after.filter(pred).isEmpty)
   }
 
   test("deleteWhere drops rows and empties partitions atomically") {
@@ -275,6 +286,24 @@ class SnapshotTableSpec extends SparkSpec {
     // manifest-pruned read by the rendered value
     assert(SnapshotTable.readPartitions(spark, root, Seq(Seq("20")))
       .collect().map(_.getLong(0)).toSeq == Seq(3L))
+    // a TIMESTAMP partition: the key must come from Spark's own
+    // cast-to-string rendering ('2026-01-01 00:00:00', escaped on
+    // disk), never java.sql.Timestamp.toString ('... 00:00:00.0')
+    val tsRoot = tmpDir("snaptable-ts")
+    val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val t1 = java.sql.Timestamp.valueOf("2026-01-02 00:00:00")
+    SnapshotTable.write(spark, tsRoot,
+      spark.createDataFrame(Seq((1L, "one", t0), (2L, "two", t1)))
+        .toDF("id", "v", "ts"), Seq("ts"))
+    SnapshotTable.upsert(spark, tsRoot,
+      spark.createDataFrame(Seq((1L, "one v2", t0))).toDF("id", "v", "ts"),
+      "id", Seq("ts"))
+    assert(SnapshotTable.read(spark, tsRoot)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "one v2"), (2L, "two")), "a timestamp partition was lost")
+    assert((manifestLines(tsRoot, 1).toSet &
+      manifestLines(tsRoot, 2).toSet).size == 1,
+      "the untouched timestamp partition must carry its directory")
   }
 
   test("applyChanges: upserts + delete tombstones land in ONE commit") {
@@ -422,6 +451,21 @@ class SnapshotTableSpec extends SparkSpec {
     // the abandoned first-attempt directory is invisible garbage
     val (_, removed) = SnapshotTable.vacuum(spark, root, keepVersions = 3)
     assert(removed >= 1, "the conflicted attempt's staged dir should vacuum")
+    // a racing full REPLACE retries onto the next version number:
+    // last-replace-wins, never a lost race surfacing as an error
+    fired = false
+    SnapshotTable.onBeforeCommit = () => {
+      if (!fired) {
+        fired = true
+        SnapshotTable.upsert(spark, root, bUpd, "doc_id", Seq("source"))
+      }
+    }
+    val replacement = baseDocs.filter(col("doc_id") < 10L)
+    try {
+      val vR = SnapshotTable.write(spark, root, replacement, Seq("source"))
+      assert(vR == 5, s"the replace should land after the racer's v4: v$vR")
+    } finally SnapshotTable.onBeforeCommit = () => ()
+    assert(rows(SnapshotTable.read(spark, root)) == rows(replacement))
   }
 
   test("an emptied table reads as an empty typed frame and stays writable") {
@@ -531,5 +575,96 @@ class SnapshotTableSpec extends SparkSpec {
       .count(_.getName.endsWith(".parquet"))
     assert(nFiles > 1, s"hot partition wrote $nFiles file(s) — serial")
     assert(rows(SnapshotTable.read(spark, root)) == rows(baseDocs))
+    // a CDC upsert into ONE hot partition fans out the same way: the
+    // rewrite is not serialized on a single writer task
+    val updates = spark.createDataFrame(Seq(
+      (3L, "replaced three", "en", 14L, "src3"),
+      (100003L, "brand new", "en", 9L, "src3")))
+      .toDF("doc_id", "text", "lang", "n_chars", "source")
+    SnapshotTable.upsert(spark, root, updates, "doc_id", Seq("source"),
+      filesPerPartition = 4)
+    val newDir = manifestLines(root, 2).find(_.startsWith("src3\t")).get
+      .split('\t')(1)
+    val nNew = new java.io.File(s"$root/$newDir").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(nNew > 1, s"hot-partition upsert wrote $nNew file(s) — serial")
+    assert(rows(SnapshotTable.read(spark, root)
+      .filter(col("doc_id").isin(3L, 100003L))) ==
+      Set((3L, "replaced three", 14L), (100003L, "brand new", 9L)))
+  }
+
+  test("property: random upsert/delete sequences match a map model") {
+    // the randomized check of the merge: seeded, tiny (31 keys over 4
+    // partitions), each step an upsert batch or a deleteWhere over a
+    // random key set, the table compared with a Map after every step
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val rowGen = for {
+      k <- Gen.choose(0L, 30L)
+      v <- Gen.alphaLowerStr.map(_.take(6))
+    } yield (k, v, "en", v.length.toLong, s"src${k % 4}")
+    val batchGen = Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, rowGen))
+    val deleteGen = Gen.choose(1, 4).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(0L, 30L)))
+    def gen[T](g: Gen[T], seed: Long): T =
+      g(Gen.Parameters.default, Seed(seed)).get
+    def frame(rs: Seq[(Long, String, String, Long, String)]) =
+      spark.createDataFrame(rs)
+        .toDF("doc_id", "text", "lang", "n_chars", "source")
+    (0 until 3).foreach { seed =>
+      val root = tmpDir(s"snaptable-prop-$seed")
+      val base = gen(batchGen, seed * 10L).distinctBy(_._1)
+      SnapshotTable.write(spark, root, frame(base), Seq("source"))
+      var model: Map[Long, String] = base.map(r => r._1 -> r._2).toMap
+      (1 to 4).foreach { b =>
+        val s0 = seed * 10L + b
+        if (gen(Gen.prob(0.6), s0 * 7)) {
+          val batch = gen(batchGen, s0).distinctBy(_._1)
+          SnapshotTable.upsert(spark, root, frame(batch), "doc_id",
+            Seq("source"))
+          model = model ++ batch.map(r => r._1 -> r._2)
+        } else {
+          val keys = gen(deleteGen, s0)
+          SnapshotTable.deleteWhere(spark, root,
+            col("doc_id").isin(keys: _*), Seq("source"))
+          model = model -- keys
+        }
+        // a row list, not a Map: a merge that keeps a replaced row
+        // beside its replacement must not collapse into a pass
+        val got = SnapshotTable.read(spark, root)
+          .select(col("doc_id"), col("text")).collect()
+          .map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+        assert(got == model.toSeq.sorted,
+          s"seed=$seed step=$b: table diverged from the model")
+      }
+    }
+  }
+
+  test("a duplicate-key update batch is rejected loudly") {
+    val root = freshTable()
+    val dup = spark.createDataFrame(Seq(
+      (3L, "v1", "en", 2L, "src3"), (3L, "v2", "en", 2L, "src3")))
+      .toDF("doc_id", "text", "lang", "n_chars", "source")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.upsert(spark, root, dup, "doc_id", Seq("source"))
+    }
+    assert(e.getMessage.contains("duplicate-key"), e.getMessage)
+    assert(SnapshotTable.versions(spark, root) == Seq(1),
+      "a rejected batch must not commit a version")
+  }
+
+  test("null-key rows are rejected with the accurate message") {
+    val root = freshTable()
+    val nullKey = spark.createDataFrame(Seq(
+      (Option.empty[Long], "ghost", "en", 5L, "src3"),
+      (Some(4L), "ok", "en", 2L, "src4")))
+      .toDF("doc_id", "text", "lang", "n_chars", "source")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotTable.upsert(spark, root, nullKey, "doc_id", Seq("source"))
+    }
+    assert(e.getMessage.contains("NULL-key"),
+      s"wrong rejection cause: ${e.getMessage}")
+    assert(SnapshotTable.versions(spark, root) == Seq(1),
+      "a rejected batch must not commit a version")
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.core.Tables
-import graft.lake.Lake
+import graft.lake.SnapshotTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,13 +15,13 @@ import org.apache.spark.sql.types._
 class CdcStreamSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def baseDataset(): String = {
+  private def baseTable(): String = {
     val root = tmpDir("cdc-ds")
-    Tables(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
-        col("source"))
-      .repartition(4, col("source"))
-      .write.mode("overwrite").partitionBy("source").parquet(root)
+    SnapshotTable.write(spark, root,
+      Tables(spark, sfDir, "documents")
+        .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
+          col("source")),
+      Seq("source"))
     root
   }
 
@@ -31,7 +31,7 @@ class CdcStreamSpec extends SparkSpec {
     StructField("source", StringType)))
 
   test("drained CDC stream equals batch-applied upserts, pruned writes") {
-    val root = baseDataset()
+    val root = baseTable()
     val changes = tmpDir("cdc-in")
     def wave(rows: Seq[(Long, String, String, Long, String)], name: String) =
       spark.createDataFrame(rows).toDF(
@@ -41,32 +41,34 @@ class CdcStreamSpec extends SparkSpec {
       (100007L, "new seven", "en", 9L, "src7")), "wave=0")
     wave(Seq((3L, "v3 of three", "en", 11L, "src3")), "wave=1")
 
-    val before = spark.read.parquet(root)
-      .filter(!col("source").isin("src3", "src7"))
-      .count()
+    val untouched = SnapshotTable.entriesFor(spark, root, 1)
+      .filterNot { case (k, _) => Set("src3", "src7")(k) }
 
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("basePath", changes)
       .parquet(s"$changes/wave=*")
       .drop("wave")
-    val q = CdcStream.maintainUpserts(stream, root, "doc_id", "source")
+    val q = CdcStream.maintainUpsertsAtomic(stream, root, "doc_id",
+      Seq("source"))
     try q.awaitTermination() finally q.stop()
 
-    val after = spark.read.parquet(root)
+    // one commit per micro-batch (maxFilesPerTrigger=1: two waves)
+    assert(SnapshotTable.versions(spark, root) == Seq(1, 2, 3))
+    val after = SnapshotTable.read(spark, root)
     // LAST change wins: wave 1 ran after wave 0 (maxFilesPerTrigger=1)
     assert(after.filter(col("doc_id") === 3L).select("text")
       .collect()(0).getString(0) == "v3 of three")
     assert(after.filter(col("doc_id") === 100007L).count() == 1)
-    assert(after.filter(!col("source").isin("src3", "src7")).count()
-      == before, "an untouched partition changed row count")
+    val latest = SnapshotTable.entriesFor(spark, root, 3).toSet
+    assert(untouched.forall(latest), "an untouched partition was rewritten")
   }
 
   test("multiple changes for one key in ONE batch: greatest version wins") {
     // AvailableNow with no maxFilesPerTrigger drains every pending file
     // into a single micro-batch — the per-key reduction must pick the
-    // highest-version change, not hand Lake.upsert duplicate keys
-    val root = baseDataset()
+    // highest-version change, not hand the upsert duplicate keys
+    val root = baseTable()
     val changes = tmpDir("cdc-onebatch")
     spark.createDataFrame(Seq(
       (3L, "v1 of three", "en", 11L, "src3", 1L),
@@ -76,10 +78,10 @@ class CdcStreamSpec extends SparkSpec {
     val vschema = StructType(schema.fields :+ StructField("version", LongType))
     val stream = spark.readStream.schema(vschema)
       .parquet(s"$changes/all")
-    val q = CdcStream.maintainUpserts(stream, root, "doc_id", "source",
-      versionCol = Some("version"))
+    val q = CdcStream.maintainUpsertsAtomic(stream, root, "doc_id",
+      Seq("source"), versionCol = Some("version"))
     try q.awaitTermination() finally q.stop()
-    val rows = spark.read.parquet(root).filter(col("doc_id") === 3L)
+    val rows = SnapshotTable.read(spark, root).filter(col("doc_id") === 3L)
       .select("text").collect().map(_.getString(0)).toSeq
     assert(rows == Seq("v2 of three"),
       s"expected exactly the latest change to land, got $rows")
@@ -91,7 +93,6 @@ class CdcStreamSpec extends SparkSpec {
     // readers can never observe a half-applied batch; a replayed batch
     // commits an extra version whose CONTENT equals the first
     // application's.
-    import graft.lake.SnapshotTable
     val root = tmpDir("cdc-atomic")
     SnapshotTable.write(spark,
       root,
@@ -127,7 +128,6 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("tombstone CDC: latest event per key wins, deletes land atomically") {
-    import graft.lake.SnapshotTable
     val root = tmpDir("cdc-tombstone")
     SnapshotTable.write(spark,
       root,
@@ -171,7 +171,7 @@ class CdcStreamSpec extends SparkSpec {
     // round-14 verdict item 8: the intake pipeline carries no storage
     // coordinates — root, partition layout and row key all resolve
     // from the binding + manifest declarations
-    import graft.lake.{LakeCatalog, SnapshotTable}
+    import graft.lake.LakeCatalog
     val root = tmpDir("cdc-byname")
     // bootstrap via upsert so the ROW KEY is recorded in the manifest
     SnapshotTable.upsert(spark, root,
@@ -221,15 +221,16 @@ class CdcStreamSpec extends SparkSpec {
   }
 
   test("re-applying a change batch converges (at-least-once contract)") {
-    val root = baseDataset()
+    val root = baseTable()
     val updates = spark.createDataFrame(Seq(
       (3L, "same change", "en", 11L, "src3")))
       .toDF("doc_id", "text", "lang", "n_chars", "source")
-    Lake.upsert(spark, root, updates, "doc_id", "source")
-    val once = spark.read.parquet(root).orderBy("doc_id")
+    SnapshotTable.upsert(spark, root, updates, "doc_id", Seq("source"))
+    val once = SnapshotTable.read(spark, root).orderBy("doc_id")
       .collect().toSeq
-    Lake.upsert(spark, root, updates, "doc_id", "source") // crash-retry
-    val twice = spark.read.parquet(root).orderBy("doc_id")
+    // crash-retry
+    SnapshotTable.upsert(spark, root, updates, "doc_id", Seq("source"))
+    val twice = SnapshotTable.read(spark, root).orderBy("doc_id")
       .collect().toSeq
     assert(once == twice, "replaying an upsert batch changed the dataset")
   }
