@@ -305,9 +305,8 @@ object MaterializedAgg {
     * current view full-outer-joined with the signed delta (ring columns
     * added groupwise, group columns picked from whichever side has the
     * key), sidecar-maintained columns overwritten from the rollup for
-    * affected groups, and the `_mv_op` tombstone derivation. ONE copy —
-    * [[refresh]] commits it and [[MvProf]] replays it stage-timed, so
-    * the profile can never drift from the real plan. */
+    * affected groups, and the `_mv_op` tombstone derivation — the batch
+    * [[refresh]] commits through `applyChanges`. */
   private[lake] def mergedViewChanges(
       current: DataFrame, delta: DataFrame, roll: Option[DataFrame],
       spec: MvSpec, types: Seq[DataType]): DataFrame = {
@@ -412,8 +411,7 @@ object MaterializedAgg {
     * refresh can still read its retraction side. */
   def appliedBaseVersion(
       spark: SparkSession, mvRoot: String): Option[Int] =
-    SnapshotTable.versions(spark, mvRoot).lastOption
-      .flatMap(appliedAt(spark, mvRoot, _))
+    SnapshotTable.latest(spark, mvRoot).flatMap(appliedAt(spark, mvRoot, _))
 
   // ---- lifecycle ---------------------------------------------------
 
@@ -425,9 +423,8 @@ object MaterializedAgg {
       spark: SparkSession, baseRoot: String, mvRoot: String,
       spec: MvSpec, nBuckets: Int = 16): Int = {
     require(nBuckets > 0, "nBuckets must be positive")
-    val have = SnapshotTable.versions(spark, mvRoot)
-    if (have.nonEmpty && appliedAt(spark, mvRoot, have.last).isDefined)
-      return have.last
+    val have = SnapshotTable.latest(spark, mvRoot)
+    if (have.exists(appliedAt(spark, mvRoot, _).isDefined)) return have.get
     require(have.isEmpty,
       s"$mvRoot has committed versions but no applied marker — not a " +
         "MaterializedAgg root (or its _mv sidecar was deleted); " +
@@ -444,7 +441,9 @@ object MaterializedAgg {
   def fullRefresh(
       spark: SparkSession, baseRoot: String, mvRoot: String,
       spec: MvSpec, nBuckets: Int): Int = {
-    val baseV = SnapshotTable.versions(spark, baseRoot).last
+    val baseV = SnapshotTable.latest(spark, baseRoot).getOrElse(
+      throw new IllegalArgumentException(
+        s"no snapshot-table version committed under $baseRoot"))
     val base = SnapshotTable.read(spark, baseRoot, baseV)
     val (types, mmTypes) = pinTypes(base, spec)
     val sumAggs = spec.effSums.zip(types).map { case ((n, e), t) =>
@@ -482,8 +481,7 @@ object MaterializedAgg {
     if (spec.auxNames.nonEmpty)
       SnapshotTable.write(spark, auxRoot(mvRoot),
         partialsFrame(base, spec, mmTypes, nBuckets), Seq(ABucketCol))
-    val target = SnapshotTable.versions(spark, mvRoot).lastOption
-      .getOrElse(0) + 1
+    val target = SnapshotTable.latest(spark, mvRoot).getOrElse(0) + 1
     writeSideFile(spark, mvRoot, f"applied-v$target%08d",
       baseV.toString, overwrite = true)
     val v = SnapshotTable.write(spark, mvRoot, full, Seq(BucketCol))
@@ -508,11 +506,13 @@ object MaterializedAgg {
       s"spec drift under $mvRoot: the view was initialized with a " +
         "different aggregate/bucketing — rebuild under a fresh root " +
         s"(stored:\n${stored.get}\npassed:\n${specToText(spec, nBuckets)})")
-    val mvVs = SnapshotTable.versions(spark, mvRoot)
-    if (mvVs.isEmpty) return init(spark, baseRoot, mvRoot, spec, nBuckets)
-    val m = mvVs.last
-    val baseVs = SnapshotTable.versions(spark, baseRoot)
-    val latestB = baseVs.last
+    val m = SnapshotTable.latest(spark, mvRoot) match {
+      case Some(v) => v
+      case None => return init(spark, baseRoot, mvRoot, spec, nBuckets)
+    }
+    val latestB = SnapshotTable.latest(spark, baseRoot).getOrElse(
+      throw new IllegalArgumentException(
+        s"no snapshot-table version committed under $baseRoot"))
     val applied = appliedAt(spark, mvRoot, m).getOrElse(
       throw new IllegalStateException(
         s"view $mvRoot@v$m has no applied marker — the _mv sidecar " +
@@ -522,7 +522,7 @@ object MaterializedAgg {
     // crashed after publishing its marker, before its commit — discard
     fs(spark, mvRoot).delete(
       new Path(mvMeta(mvRoot), f"applied-v${m + 1}%08d"), false)
-    if (!baseVs.contains(applied))
+    if (!SnapshotTable.hasVersion(spark, baseRoot, applied))
       return fullRefresh(spark, baseRoot, mvRoot, spec, nBuckets)
     // any sidecar-maintained column (min/max OR kmv) needs the
     // zero-delta multiset rule and the rollup overwrite below
@@ -664,7 +664,7 @@ object MaterializedAgg {
       // thread never needs its answer, and running it here would be
       // one more serial action before any overlap starts
       val task = new java.util.concurrent.FutureTask[Int](() =>
-        if (auxChanges.isEmpty) SnapshotTable.versions(spark, aRoot).last
+        if (auxChanges.isEmpty) SnapshotTable.latest(spark, aRoot).getOrElse(0)
         else SnapshotTable.applyChanges(spark, aRoot, auxChanges,
           key = AKeyCol, partitionBy = Seq(ABucketCol),
           opCol = "_mv_op"))
@@ -752,7 +752,7 @@ object MaterializedAgg {
     val (d1, f1) = SnapshotTable.vacuum(spark, mvRoot, keepVersions)
     val aRoot = auxRoot(mvRoot)
     val (d2, f2) =
-      if (SnapshotTable.versions(spark, aRoot).nonEmpty)
+      if (SnapshotTable.isTableRoot(spark, aRoot))
         SnapshotTable.vacuum(spark, aRoot, keepVersions)
       else (0, 0)
     (d1 + d2, f1 + f2)

@@ -63,8 +63,11 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * Scale shape: an upsert reads and rewrites ONLY the touched
   * partitions' directories (manifest-pruned — untouched directories are
   * not even listed), the rewrite job salts across
-  * `filesPerPartition` writer tasks per partition ([[Lake]]'s hot-
-  * partition fan-out), and the commit is manifest-sized metadata.
+  * `filesPerPartition` writer tasks per partition (the hot-partition
+  * fan-out of `repartitionForLayout`), and the commit is
+  * manifest-sized metadata: every version is minted by one commit loop
+  * that resolves "latest" through the `_latest.hint` pointer, so no
+  * write path lists `_versions`.
   * Old versions stay readable until vacuumed, and a session's
   * `spark.graft.snapshot.<table>` binding pins one ([[boundVersions]]),
   * so "train on v12" composes with CDC-maintained tables.
@@ -91,11 +94,13 @@ object SnapshotTable {
   /** Full re-merge attempts per mutation on touched-set conflicts. */
   val MaxMergeRetries = 3
 
-  /** Test seam: invoked after a mutation's data directories are staged
-    * and moved, immediately before its commit loop — a spec injects a
-    * COMPETING committer here to exercise the optimistic-concurrency
-    * paths deterministically. Volatile: one CDC drain commits from
-    * several threads (concurrent derived-table refreshes). */
+  /** The one race and crash seam of every commit: invoked right before
+    * each manifest publish (every commit-loop attempt, and the v1
+    * publishes of [[create]]/[[shallowClone]]), after the data is
+    * staged. A spec injects a COMPETING committer here to exercise the
+    * optimistic-concurrency paths deterministically, or throws to
+    * simulate a crash between data write and commit. Volatile: one CDC
+    * drain commits from several threads. */
   @volatile private[lake] var onBeforeCommit: () => Unit = () => ()
 
   /** Whether `root` holds at least one committed version — the guard
@@ -302,9 +307,10 @@ object SnapshotTable {
     * every commit overwrites `_versions/_latest.hint`, and
     * [[latestVersion]] resolves "latest" as hint + forward probe —
     * O(1 + commits-since-hint) existence checks instead of listing the
-    * whole `_versions` directory per read (O(retained versions); at a
-    * 5-minute CDC cadence that listing is 100k entries/year on object
-    * stores that price LIST by the page). The hint is ADVISORY: a
+    * whole `_versions` directory (O(retained versions); at a 5-minute
+    * CDC cadence that listing is 100k entries/year on object stores
+    * that price LIST by the page). Every committer, not only readers,
+    * resolves its base version through it. The hint is ADVISORY: a
     * torn write, a stale value, or deleting the file entirely only
     * costs the listing fallback, never a wrong answer — EXCEPT after a
     * [[vacuum]] that opens a gap below the latest version, which is why
@@ -323,10 +329,14 @@ object SnapshotTable {
 
   /** Latest committed version: hint + forward probe, listing fallback.
     * A concurrent commit between the probe and the read is the same
-    * race a listing has — the OCC layer owns that, not this. Public so
-    * derived-table maintainers ([[graft.operators.TokenizedCorpus]])
-    * resolve "base latest" through the same O(1) path instead of
-    * re-listing `_versions` per refresh (round-12 advice item 2). */
+    * race a listing has — the OCC layer owns that, not this: a base
+    * resolved too low only loses the create-exclusive publish and
+    * retries. The one resolution of "latest" for readers AND writers —
+    * the commit loop, bootstrap checks and no-op returns all come
+    * here; public so derived-table maintainers ([[MaterializedAgg]],
+    * [[graft.operators.TokenizedCorpus]]) resolve "base latest"
+    * through the same O(1) path instead of re-listing `_versions` per
+    * refresh (round-12 advice item 2). */
   def latest(spark: SparkSession, root: String): Option[Int] =
     latestVersion(spark, root)
 
@@ -407,15 +417,15 @@ object SnapshotTable {
 
   private def latestVersion(spark: SparkSession, root: String): Option[Int] = {
     val f = fs(spark, root)
+    // no exists() before the open: a missing hint throws
+    // FileNotFoundException into the same listing fallback, one status
+    // call cheaper on every resolution
     val hinted: Option[Int] =
       try {
-        if (!f.exists(hintPath(root))) None
-        else {
-          val in = f.open(hintPath(root))
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim finally in.close()
-          Some(s.toInt).filter(v => f.exists(manifestPath(root, v)))
-        }
+        val in = f.open(hintPath(root))
+        val s = try scala.io.Source.fromInputStream(in, "UTF-8")
+          .mkString.trim finally in.close()
+        Some(s.toInt).filter(v => f.exists(manifestPath(root, v)))
       } catch { case scala.util.control.NonFatal(_) => None }
     hinted match {
       case Some(v0) =>
@@ -634,11 +644,13 @@ object SnapshotTable {
     * version `v`. The target version is the CALLER's expectation,
     * pinned when it read the latest manifest — computing it here would
     * let a commit that landed in between be silently dropped from the
-    * fold. A lost race throws [[CommitRaceException]]. */
+    * fold. A lost race throws [[CommitRaceException]]. Fires
+    * [[onBeforeCommit]] first: every version passes through here. */
   private def commitManifest(
       spark: SparkSession, root: String, v: Int,
       payload: Manifest, deltaBase: Option[Int],
       removed: Seq[String]): Int = {
+    onBeforeCommit()
     val f = fs(spark, root)
     f.mkdirs(manifestDir(root))
     val tmp = new Path(manifestDir(root),
@@ -654,6 +666,52 @@ object SnapshotTable {
         s"snapshot commit lost the race: ${manifestPath(root, v)}")
     writeHint(spark, root, v)
     v
+  }
+
+  /** What one commit attempt publishes as the next version: the
+    * manifest file's payload, whether it is a delta on the attempt's
+    * base (else a full manifest), the partition keys a delta retires,
+    * and the folded full state — evaluated only when the version is a
+    * checkpoint turn. */
+  private final case class Publish(
+      payload: Manifest, asDelta: Boolean, removed: Seq[String],
+      fullState: () => Manifest)
+
+  /** THE optimistic commit loop, which mints every version after a
+    * table's v1. Each attempt resolves the base V through
+    * [[latestVersion]] (hint + forward probe, no listing; V = 0 on a
+    * never-committed root), runs `attempt` over (V, V's folded state)
+    * and publishes its result create-exclusive as exactly V+1, or
+    * returns V when it declares a no-op (None). A lost rename race
+    * re-runs the attempt, at most 8 times (then surfaces rather than
+    * spins); stale staged work is the attempt's to refuse with
+    * [[ConcurrentWriteException]]. Every `CheckpointEvery`-th delta
+    * also writes the full-state checkpoint. */
+  private def commitLoop(spark: SparkSession, root: String)(
+      attempt: (Int, Option[Manifest]) => Option[Publish]): Int = {
+    var raceRetries = 0
+    while (true) {
+      val latestV = latestVersion(spark, root).getOrElse(0)
+      val latestM =
+        if (latestV == 0) None else Some(readManifest(spark, root, latestV))
+      attempt(latestV, latestM) match {
+        case None => return latestV
+        case Some(p) =>
+          val v = latestV + 1
+          try {
+            commitManifest(spark, root, v, p.payload,
+              if (p.asDelta) Some(latestV) else None, p.removed)
+            if (p.asDelta && v % CheckpointEvery == 0)
+              writeCheckpoint(spark, root, v, p.fullState())
+            return v
+          } catch {
+            case e: CommitRaceException =>
+              raceRetries += 1
+              if (raceRetries > 8) throw e
+          }
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Best-effort full-state sidecar: losing the publish race (another
@@ -682,10 +740,6 @@ object SnapshotTable {
       case scala.util.control.NonFatal(_) => false
     }
 
-  private def entriesAt(
-      spark: SparkSession, root: String, version: Int): Seq[(String, String)] =
-    manifestAt(spark, root, version).entries
-
   /** A version's (partition key -> data dir) mapping — public metadata
     * surface: [[MaterializedAgg]] diffs two versions' mappings to find
     * changed partitions without touching data, and tests locate a
@@ -693,25 +747,29 @@ object SnapshotTable {
     * (nearest checkpoint + delta fold), no data access. */
   def entriesFor(
       spark: SparkSession, root: String, version: Int): Seq[(String, String)] =
-    entriesAt(spark, root, version)
+    manifestAt(spark, root, version).entries
 
   private[lake] def manifestAt(
-      spark: SparkSession, root: String, version: Int): Manifest = {
-    // resolve WITHOUT listing the whole _versions dir: latest via the
-    // hint pointer (+ forward probe), explicit versions via one
-    // existence check — the read path stays O(1) metadata RPCs as the
-    // retained version count grows
+      spark: SparkSession, root: String, version: Int): Manifest =
+    versionedManifest(spark, root, version)._2
+
+  /** A version's number and folded state as ONE pair (latest when
+    * `version` < 0), so a mutator's no-op returns the version it
+    * examined. No `_versions` listing: latest via the hint pointer,
+    * explicit versions via one existence check. */
+  private def versionedManifest(
+      spark: SparkSession, root: String, version: Int): (Int, Manifest) = {
     val v =
       if (version < 0)
         latestVersion(spark, root).getOrElse(throw new
           IllegalArgumentException(
             s"no snapshot-table version committed under $root"))
       else {
-        require(fs(spark, root).exists(manifestPath(root, version)),
+        require(hasVersion(spark, root, version),
           s"unknown version v$version under $root")
         version
       }
-    readManifest(spark, root, v)
+    (v, readManifest(spark, root, v))
   }
 
   /** A version's scan inputs — absolute data-directory paths plus the
@@ -1193,8 +1251,8 @@ object SnapshotTable {
   def deleteRowsWhere(
       spark: SparkSession, root: String, predicate: Column,
       maxDeletedRows: Long = 10000000L): Int = withConflictRetry {
-    val base = manifestAt(spark, root, -1)
-    if (base.entries.isEmpty) return versions(spark, root).last
+    val (baseV, base) = versionedManifest(spark, root, -1)
+    if (base.entries.isEmpty) return baseV
     // partition-only predicate: the manifest-only wholesale drop is
     // pure metadata AND removes the bytes — never spend a dv on it
     if (partitionKeysMatching(spark, base, predicate).isDefined &&
@@ -1222,7 +1280,7 @@ object SnapshotTable {
     // dv-deleted are filtered out first so re-matching them cannot
     // inflate the collected set.
     val candidates = dvCandidateFiles(spark, base, predicate, liveFiles)
-    if (candidates.isEmpty) return versions(spark, root).last
+    if (candidates.isEmpty) return baseV
     val files = candidates.map { case (rel, len) =>
       (new Path(root, rel).toString, len) }
     val scan0 = org.apache.spark.sql.graft.ManifestScan.parquet(
@@ -1256,7 +1314,7 @@ object SnapshotTable {
       s"deleteRowsWhere matched more than $maxDeletedRows rows under " +
         s"$root — at this selectivity a copy-on-write deleteWhere " +
         "writes the smaller artifact; use it (or raise maxDeletedRows)")
-    if (matched.isEmpty) return versions(spark, root).last
+    if (matched.isEmpty) return baseV
     val newByRel: Map[String, Array[Long]] = matched
       .groupBy(_.getString(0))
       .map { case (k, rows) =>
@@ -1267,10 +1325,9 @@ object SnapshotTable {
     // positions are computed against IMMUTABLE files, so merging with
     // any later dv state of the same files stays valid; the only
     // conflict is the file's partition being rewritten under us
-    var raceRetries = 0
-    while (true) {
-      val latestV = versions(spark, root).last
-      val latest = readManifest(spark, root, latestV)
+    commitLoop(spark, root) { (_, latestM) =>
+      val latest = latestM.getOrElse(throw new IllegalArgumentException(
+        s"no snapshot-table version committed under $root"))
       val latestLiveDirs = latest.entries.map(_._2).toSet
       val latestLive = latest.fileSizes
         .filter(s => latestLiveDirs(dirOf(s._1))).map(_._1).toSet
@@ -1287,27 +1344,16 @@ object SnapshotTable {
           if (merged.length == prior.length) None
           else Some((rel, merged.length.toLong, encodeDvPositions(merged)))
         }
-      if (changed.isEmpty) return latestV
-      val v = latestV + 1
-      val payload = latest.copy(entries = Nil, fileStats = Nil,
-        fileSizes = Nil, fileRows = Nil, fileSketch = Nil,
-        fileDvs = changed)
-      onBeforeCommit() // test seam, same window as commitRewrite's
-      try {
-        commitManifest(spark, root, v, payload, Some(latestV), Nil)
-        if (v % CheckpointEvery == 0) {
+      if (changed.isEmpty) None
+      else Some(Publish(
+        latest.copy(entries = Nil, fileStats = Nil, fileSizes = Nil,
+          fileRows = Nil, fileSketch = Nil, fileDvs = changed),
+        asDelta = true, Nil, () => {
           val changedRels = changed.map(_._1).toSet
-          writeCheckpoint(spark, root, v, latest.copy(fileDvs =
-            latest.fileDvs.filterNot(d => changedRels(d._1)) ++ changed))
-        }
-        return v
-      } catch {
-        case e: CommitRaceException =>
-          raceRetries += 1
-          if (raceRetries > 8) throw e
-      }
+          latest.copy(fileDvs =
+            latest.fileDvs.filterNot(d => changedRels(d._1)) ++ changed)
+        }))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The live deleted-row count of a version — what metadata COUNTs
@@ -1981,8 +2027,10 @@ object SnapshotTable {
     * longer opens every footer. `clusterBy` range-clusters rows across
     * the `filesPerPartition` files of each partition (instead of the
     * default hash salt), so the per-file ranges are NARROW and the
-    * stats actually skip — the manifest-served analog of the Z-order
-    * locality [[Lake.writeZOrdered]] builds. Both declarations persist
+    * stats actually skip — a one-dimensional, manifest-served analog
+    * of the multi-dimensional locality the standalone
+    * [[Lake.writeZOrdered]] helper builds over plain parquet (not wired
+    * into this format). Both declarations persist
     * in the manifest; upsert/applyChanges/deleteWhere maintain the
     * stats automatically for every directory they rewrite. */
   def write(
@@ -1992,9 +2040,8 @@ object SnapshotTable {
       lookupFor: Seq[String] = Nil): Int =
     commitRewrite(spark, root, df, partitionBy, baseManifest = None,
       touchedKeys = Set.empty, replaceAll = true,
-      filesPerPartition, crashBeforeCommit = false,
-      declaredStats = statsFor, declaredCluster = clusterBy,
-      declaredLookup = lookupFor)
+      filesPerPartition, declaredStats = statsFor,
+      declaredCluster = clusterBy, declaredLookup = lookupFor)
 
   /** The table's recorded partition column NAMES (manifest
     * `#partitionby`, written by every commit since the recording was
@@ -2115,9 +2162,8 @@ object SnapshotTable {
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
       s"constraint name '$name' must be an identifier")
     val parsed = spark.sessionState.sqlParser.parseExpression(conditionSql)
-    val cols = tableColumns(spark, root,
-      manifestAt(spark, root, -1).entries,
-      manifestAt(spark, root, -1).schema)
+    val m0 = manifestAt(spark, root, -1)
+    val cols = tableColumns(spark, root, m0.entries, m0.schema)
     parsed.references.foreach(a => require(
       cols.exists(_.equalsIgnoreCase(a.name)),
       s"CHECK constraint '$name' references unknown column '${a.name}' " +
@@ -2267,7 +2313,7 @@ object SnapshotTable {
     }
     require(checks.map(_._1).distinct.size == checks.size,
       "CREATE TABLE: duplicate CHECK constraint names")
-    require(versions(spark, root).isEmpty,
+    require(latestVersion(spark, root).isEmpty,
       s"CREATE TABLE: $root already holds a committed snapshot table — " +
         "re-creating would silently re-contract existing data; bind it " +
         "by name instead (LakeCatalog.register)")
@@ -2435,34 +2481,20 @@ object SnapshotTable {
     * stats/census lines, so the fold inherits every directory, stat
     * and census line from the base while the (possibly evolved)
     * declarations — schema, stats/cluster columns, partition layout,
-    * row key — restate. Same rename-race posture as [[commitRewrite]]'s
-    * loop; there is no touched-set to conflict on, so a lost race just
-    * re-runs `transform` against the new latest. */
+    * row key — restate. One [[commitLoop]] attempt; there is no
+    * touched-set to conflict on, so a lost race just re-runs
+    * `transform` against the new latest. */
   private def commitMetadata(spark: SparkSession, root: String)(
-      transform: Manifest => Manifest): Int = {
-    var raceRetries = 0
-    while (true) {
-      val latestV = versions(spark, root).lastOption.getOrElse(
+      transform: Manifest => Manifest): Int =
+    commitLoop(spark, root) { (_, latestM) =>
+      val next = transform(latestM.getOrElse(
         throw new IllegalArgumentException(
-          s"no snapshot-table version committed under $root"))
-      val latest = readManifest(spark, root, latestV)
-      val next = transform(latest)
-      val v = latestV + 1
-      try {
-        commitManifest(spark, root, v,
-          next.copy(entries = Nil, fileStats = Nil, fileSizes = Nil,
-            fileRows = Nil, fileSketch = Nil, fileDvs = Nil),
-          Some(latestV), Nil)
-        if (v % CheckpointEvery == 0) writeCheckpoint(spark, root, v, next)
-        return v
-      } catch {
-        case e: CommitRaceException =>
-          raceRetries += 1
-          if (raceRetries > 8) throw e
-      }
+          s"no snapshot-table version committed under $root")))
+      Some(Publish(
+        next.copy(entries = Nil, fileStats = Nil, fileSizes = Nil,
+          fileRows = Nil, fileSketch = Nil, fileDvs = Nil),
+        asDelta = true, Nil, () => next))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Append `rows` — plain INSERT semantics: no key, no dedup, every
     * row lands (SQL `INSERT INTO` through [[LakeCatalog]] routes
@@ -2494,8 +2526,7 @@ object SnapshotTable {
       else readLiveDirs(spark, root, base, liveTouched.map(_._2))
         .unionByName(projected, allowMissingColumns = true)
     commitRewrite(spark, root, merged, partitionBy, Some(base),
-      touchedKeys, replaceAll = false, filesPerPartition,
-      crashBeforeCommit = false)
+      touchedKeys, replaceAll = false, filesPerPartition)
   }
 
   /** Upsert `updates` (full schema, unique non-null keys, stable
@@ -2518,14 +2549,13 @@ object SnapshotTable {
     * schema — the crawler's UPDATE_IN_DATABASE evolution policy
     * (SURVEY §2 I9) applied at the table layer.
     *
-    * `crashBeforeCommit` is the test seam for the atomicity claim: it
-    * aborts after every data directory is fully written, before the
-    * manifest rename — readers must still see the previous version
+    * Atomicity: every data directory is fully written before the one
+    * manifest publish; a crash in between (simulated by throwing from
+    * [[onBeforeCommit]]) leaves readers on the previous version
     * exactly. */
   def upsert(
       spark: SparkSession, root: String, updates0: DataFrame, key: String,
       partitionBy: Seq[String], filesPerPartition: Int = 1,
-      crashBeforeCommit: Boolean = false,
       mergeSchema: Boolean = false): Int = {
     // one-pass validation + touched probe (round 19): two executions
     // of the batch plan total (probe + staging write), down from
@@ -2536,8 +2566,7 @@ object SnapshotTable {
       // bootstrap: an upsert into a never-written table is the initial
       // commit (the CDC-stream shape — the first drained batch creates v1)
       val base =
-        if (versions(spark, root).isEmpty) None
-        else Some(manifestAt(spark, root, -1))
+        latestVersion(spark, root).map(readManifest(spark, root, _))
       base.flatMap(_.rowKey.headOption).foreach(k0 => require(k0 == key,
         s"table $root records row key '$k0'; an upsert keyed by '$key' " +
           "would split the table's identity — one key per table"))
@@ -2569,8 +2598,7 @@ object SnapshotTable {
           }
         }
       commitRewrite(spark, root, merged, partitionBy, base, touchedKeys,
-        replaceAll = false, filesPerPartition, crashBeforeCommit,
-        declaredKey = Some(key))
+        replaceAll = false, filesPerPartition, declaredKey = Some(key))
     }
   }
 
@@ -2655,8 +2683,7 @@ object SnapshotTable {
         }
       commitRewrite(spark, root, merged, partitionBy, Some(base),
         touchedKeys, replaceAll = false, filesPerPartition,
-        crashBeforeCommit = false, declaredKey = Some(key),
-        publishGate = publishGate)
+        declaredKey = Some(key), publishGate = publishGate)
     }
   }
 
@@ -2671,7 +2698,7 @@ object SnapshotTable {
       spark: SparkSession, root: String, predicate: Column,
       partitionBy: Seq[String], filesPerPartition: Int = 1): Int =
     withConflictRetry {
-      val base = manifestAt(spark, root, -1)
+      val (baseV, base) = versionedManifest(spark, root, -1)
       val entries = base.entries
       // partition-column predicates resolve their touched set from the
       // MANIFEST alone (the 100 TB shape for `DELETE WHERE date = …`):
@@ -2685,7 +2712,7 @@ object SnapshotTable {
       val liveTouched = entries.filter(e => touchedKeys(e._1))
       // nothing matched: the current version IS the result — an identical
       // re-commit would only mint garbage for vacuum
-      if (liveTouched.isEmpty) versions(spark, root).last
+      if (liveTouched.isEmpty) baseV
       else (pruned, base.schema) match {
         case (Some(_), Some(schema)) =>
           // whole-partition drop: nothing survives in the touched dirs
@@ -2694,7 +2721,7 @@ object SnapshotTable {
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               schema),
             partitionBy, Some(base), touchedKeys, replaceAll = false,
-            filesPerPartition, crashBeforeCommit = false)
+            filesPerPartition)
         case _ =>
           // mergeSchema like every other touched-partition read: after an
           // evolving upsert the touched directories can span schema
@@ -2705,8 +2732,7 @@ object SnapshotTable {
               liveTouched.map(_._2))
             .filter(coalesce(!predicate, lit(true)))
           commitRewrite(spark, root, kept, partitionBy, Some(base),
-            touchedKeys, replaceAll = false, filesPerPartition,
-            crashBeforeCommit = false)
+            touchedKeys, replaceAll = false, filesPerPartition)
       }
     }
 
@@ -2763,8 +2789,7 @@ object SnapshotTable {
             .select(tableCols.map(col).toSeq: _*)
         }
       commitRewrite(spark, root, merged, partitionBy, Some(base),
-        touchedKeys, replaceAll = false, filesPerPartition,
-        crashBeforeCommit = false)
+        touchedKeys, replaceAll = false, filesPerPartition)
     }
 
   /** Replace whole partition TUPLES in one commit — the derived-table
@@ -2788,44 +2813,74 @@ object SnapshotTable {
       statsFor: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
       knownTouched: Option[Set[String]] = None): Int =
     withConflictRetry {
-      if (versions(spark, root).isEmpty)
-        // bootstrap declares stats/clustering; later overwrites inherit
-        // the table's persisted declarations like every other mutation
-        write(spark, root, rows, partitionBy, filesPerPartition,
-          statsFor, clusterBy)
-      else {
-        val base = manifestAt(spark, root, -1)
-        val touched = knownTouched.getOrElse(
-          touchedCompositeKeys(rows, partitionBy) ++ dropKeys)
-        commitRewrite(spark, root, rows, partitionBy, Some(base), touched,
-          replaceAll = false, filesPerPartition,
-          crashBeforeCommit = false)
+      latestVersion(spark, root) match {
+        case None =>
+          // bootstrap declares stats/clustering; later overwrites inherit
+          // the table's persisted declarations like every other mutation
+          write(spark, root, rows, partitionBy, filesPerPartition,
+            statsFor, clusterBy)
+        case Some(v) =>
+          val touched = knownTouched.getOrElse(
+            touchedCompositeKeys(rows, partitionBy) ++ dropKeys)
+          commitRewrite(spark, root, rows, partitionBy,
+            Some(readManifest(spark, root, v)), touched,
+            replaceAll = false, filesPerPartition)
       }
     }
+
+  /** The staging write's shuffle: rows hash-partitioned on the
+    * partition key (one writer task, so one file, per directory), or —
+    * the hot-partition fan-out when `filesPerPartition > 1` — with a
+    * deterministic row-hash salt joined to the key, so each directory is
+    * written by up to `filesPerPartition` tasks. */
+  private def repartitionForLayout(
+      df: DataFrame, partitionBy: Seq[String], filesPerPartition: Int,
+      numPartitions: Int): DataFrame = {
+    val keyCols = partitionBy.map(col)
+    if (filesPerPartition <= 1)
+      // no explicit partition count: AQE COALESCES the task count to the
+      // batch's actual size (a 300-row maintenance commit stops
+      // scheduling 31 empty reducers). AQE never SPLITS a hash
+      // partition, which keeps one key = one task = one file per
+      // directory; a key carrying more rows than one task should write
+      // takes the salt branch below
+      df.repartition(keyCols: _*)
+    else {
+      // a salt name no real column has: withColumn would silently
+      // overwrite that column and the drop below corrupt the dataset
+      val salt = Iterator.from(0).map {
+        case 0 => "_graft_salt"
+        case i => s"_graft_salt_$i"
+      }.find(n => !df.columns.contains(n)).get
+      df.withColumn(salt,
+          pmod(hash(df.columns.map(col).toSeq: _*), lit(filesPerPartition)))
+        .repartition(numPartitions, (keyCols :+ col(salt)): _*)
+        .drop(salt)
+    }
+  }
 
   /** Write `newRows` as fresh immutable per-partition-tuple directories,
     * then commit `untouched-at-latest ++ new` as one manifest. The
     * staging write duplicates each partition column into a throwaway
     * directory key, so the real columns SURVIVE in the data files while
-    * Spark's own partitioned write (with [[Lake]]'s salt for
-    * per-partition writer fan-out) produces one cleanly separated
+    * Spark's own partitioned write (with [[repartitionForLayout]]'s salt
+    * for per-partition writer fan-out) produces one cleanly separated
     * nested directory per tuple with Spark's own Hive escaping — the
     * manifest key is read off the nested directory names, byte-identical
     * to what a Hive-layout writer would have produced.
     *
-    * The commit loop is the optimistic-concurrency core: each attempt
-    * pins the latest version V it read, verifies every TOUCHED key maps
-    * to the same directory as in `baseEntries` (else the merge in
-    * `newRows` is stale -> [[ConcurrentWriteException]], and the outer
+    * Its [[commitLoop]] attempt is the optimistic-concurrency core: it
+    * verifies every TOUCHED key of the latest version V maps to the
+    * same directory as in the base (else the merge in `newRows` is
+    * stale -> [[ConcurrentWriteException]], and the outer
     * [[withConflictRetry]] re-merges from scratch), recomputes
     * `untouched` from V's entries (so a disjoint concurrent commit's
-    * changes are CARRIED FORWARD, not clobbered), and attempts to
-    * commit exactly V+1. A lost rename race just loops. */
+    * changes are CARRIED FORWARD, not clobbered), and publishes V+1. */
   private def commitRewrite(
       spark: SparkSession, root: String, newRows: DataFrame,
       partitionBy: Seq[String], baseManifest: Option[Manifest],
       touchedKeys: Set[String], replaceAll: Boolean,
-      filesPerPartition: Int, crashBeforeCommit: Boolean,
+      filesPerPartition: Int,
       declaredStats: Seq[String] = Nil,
       declaredCluster: Seq[String] = Nil,
       declaredLookup: Seq[String] = Nil,
@@ -2902,7 +2957,7 @@ object SnapshotTable {
     val layout =
       if (layoutDone) staged // caller pre-partitioned (e.g. [[optimize]])
       else if (clusterBy.isEmpty)
-        Lake.repartitionForLayout(staged, partitionBy, filesPerPartition,
+        repartitionForLayout(staged, partitionBy, filesPerPartition,
           spark.sessionState.conf.numShufflePartitions.min(64) *
             filesPerPartition.max(1))
       else {
@@ -2944,9 +2999,6 @@ object SnapshotTable {
       (k, dir)
     }
     f.delete(staging, true)
-    if (crashBeforeCommit)
-      throw new java.io.IOException(
-        "simulated crash after data write, before manifest commit")
     // Per-file byte census of the just-written directories: one
     // driver-side listing of ONLY the fresh dirs (same cost class as
     // the move loop above) — this is what lets [[optimize]] plan
@@ -3079,15 +3131,10 @@ object SnapshotTable {
     // caller's publication gate (see [[applyChanges]]): every Spark
     // job of this attempt is done; only the manifest rename follows
     publishGate()
-    onBeforeCommit()
     val newSchema = schemaOverride.getOrElse(newRows.schema)
     val baseTouched = baseManifest.map(_.entries).getOrElse(Nil)
       .filter(e => touchedKeys(e._1)).toSet
-    var raceRetries = 0
-    while (true) {
-      val latestV = versions(spark, root).lastOption.getOrElse(0)
-      val latestM =
-        if (latestV == 0) None else Some(readManifest(spark, root, latestV))
+    commitLoop(spark, root) { (latestV, latestM) =>
       val latest = latestM.map(_.entries).getOrElse(Nil)
       // A partial commit RECORDS THE UNION of the table's schema and
       // the rewrite's: untouched directories may carry a wider vintage
@@ -3134,7 +3181,6 @@ object SnapshotTable {
       // commit folds the chain into a best-effort full sidecar so read
       // cost stays bounded. A replace-all (or first-ever) commit IS a
       // full manifest and resets the chain.
-      val v = latestV + 1
       val asDelta = !replaceAll && latestV > 0
       val movedKeys = moved.map(_._1).toSet
       val removed =
@@ -3156,68 +3202,33 @@ object SnapshotTable {
         newStats, newSizes, partitionBy, rowKey, newRowCounts,
         latestM.map(_.droppedPhys).getOrElse(Nil), lookupCols,
         newSketches, checks, notNull)
-      try {
-        commitManifest(spark, root, v, payload,
-          if (asDelta) Some(latestV) else None, removed)
-        if (asDelta && v % CheckpointEvery == 0) {
-          // fold in-memory from state already in hand — no re-read
-          val untouched = latest.filterNot(e => touchedKeys(e._1))
-          val untouchedDirs = untouched.map(_._2).toSet
-          def carried(rel: String): Boolean = {
-            val i = rel.lastIndexOf('/')
-            i > 0 && untouchedDirs.contains(rel.substring(0, i))
-          }
-          writeCheckpoint(spark, root, v, Manifest(
-            untouched ++ moved, Some(schema), statsCols, clusterBy,
-            latestM.map(_.fileStats).getOrElse(Nil)
-              .filter(s => carried(s.relPath)) ++ newStats,
-            latestM.map(_.fileSizes).getOrElse(Nil)
-              .filter(s => carried(s._1)) ++ newSizes, partitionBy, rowKey,
-            latestM.map(_.fileRows).getOrElse(Nil)
-              .filter(s => carried(s._1)) ++ newRowCounts,
-            latestM.map(_.droppedPhys).getOrElse(Nil), lookupCols,
-            latestM.map(_.fileSketch).getOrElse(Nil)
-              .filter(s => carried(s._1)) ++ newSketches, checks, notNull,
-            // dv lines of untouched directories carry; touched dirs'
-            // deletions just got folded into the rewritten bytes
-            latestM.map(_.fileDvs).getOrElse(Nil)
-              .filter(s => carried(s._1))))
+      Some(Publish(payload, asDelta, removed, () => {
+        // fold in-memory from state already in hand — no re-read
+        val untouched = latest.filterNot(e => touchedKeys(e._1))
+        val untouchedDirs = untouched.map(_._2).toSet
+        def carried(rel: String): Boolean = {
+          val i = rel.lastIndexOf('/')
+          i > 0 && untouchedDirs.contains(rel.substring(0, i))
         }
-        return v
-      } catch {
-        case e: CommitRaceException =>
-          raceRetries += 1
-          // something is committing faster than this writer can even
-          // re-attempt a rename — surface rather than spin
-          if (raceRetries > 8) throw e
-      }
+        Manifest(
+          untouched ++ moved, Some(schema), statsCols, clusterBy,
+          latestM.map(_.fileStats).getOrElse(Nil)
+            .filter(s => carried(s.relPath)) ++ newStats,
+          latestM.map(_.fileSizes).getOrElse(Nil)
+            .filter(s => carried(s._1)) ++ newSizes, partitionBy, rowKey,
+          latestM.map(_.fileRows).getOrElse(Nil)
+            .filter(s => carried(s._1)) ++ newRowCounts,
+          latestM.map(_.droppedPhys).getOrElse(Nil), lookupCols,
+          latestM.map(_.fileSketch).getOrElse(Nil)
+            .filter(s => carried(s._1)) ++ newSketches, checks, notNull,
+          // dv lines of untouched directories carry; touched dirs'
+          // deletions just got folded into the rewritten bytes
+          latestM.map(_.fileDvs).getOrElse(Nil)
+            .filter(s => carried(s._1)))
+      }))
     }
-    throw new IllegalStateException("unreachable")
   }
 
-  /** `RESTORE TABLE … TO VERSION AS OF n` (round-15 verdict item 3):
-    * commit a NEW version whose live state equals `toVersion`'s — the
-    * rollback verb a lakehouse operator reaches for after a bad CDC
-    * batch, and the manifest line makes it nearly free: the commit is
-    * a FULL manifest restating v_n's folded state (entries, schema,
-    * declarations, per-file stats/census/rows), so it is pure metadata
-    * — no data file is read, written, or moved. History is PRESERVED:
-    * the bad versions stay readable (time travel, forensics) until
-    * vacuumed, `DESCRIBE HISTORY` shows the restore as one more
-    * commit, and the change feed surfaces it as ordinary delete/insert
-    * rows over the partitions whose live directories changed — a
-    * follower (search index, replica) converges on the restored state
-    * through the same protocol as any other commit.
-    *
-    * Works because data directories are IMMUTABLE and liveness is
-    * manifest-referenced: while v_n's manifest is retained, vacuum
-    * keeps every directory it references, so restating them is safe.
-    * A vacuumed (or never-committed) target fails loudly here.
-    * Restoring TO the current latest is a no-op returning the current
-    * version (no garbage commit). Concurrency: same optimistic rename
-    * loop as every commit — a racer's interleaved commit just moves
-    * the version the restore lands at (the restored STATE is pinned at
-    * read time, so the result is still exactly v_n's rows). */
   // ---- shallow clone (round 17) --------------------------------------
   //
   // A SHALLOW CLONE is one metadata commit: the target's v1 manifest
@@ -3250,7 +3261,7 @@ object SnapshotTable {
       version: Int = -1): Int = {
     require(isTableRoot(spark, sourceRoot),
       s"SHALLOW CLONE: $sourceRoot holds no committed version")
-    require(versions(spark, targetRoot).isEmpty,
+    require(latestVersion(spark, targetRoot).isEmpty,
       s"SHALLOW CLONE: $targetRoot already holds a committed snapshot " +
         "table")
     val m = manifestAt(spark, sourceRoot, version)
@@ -3318,8 +3329,7 @@ object SnapshotTable {
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
           finally in.close()
         val alive =
-          scala.util.Try(versions(spark, cloneRoot).nonEmpty)
-            .getOrElse(false)
+          scala.util.Try(isTableRoot(spark, cloneRoot)).getOrElse(false)
         if (alive) Some(cloneRoot)
         else { f.delete(st.getPath, false); None }
       }
@@ -3410,28 +3420,41 @@ object SnapshotTable {
       }.toSet
   }
 
+  /** `RESTORE TABLE … TO VERSION AS OF n` (round-15 verdict item 3):
+    * commit a NEW version whose live state equals `toVersion`'s — the
+    * rollback verb a lakehouse operator reaches for after a bad CDC
+    * batch, and the manifest line makes it nearly free: the commit is
+    * a FULL manifest restating v_n's folded state (entries, schema,
+    * declarations, per-file stats/census/rows), so it is pure metadata
+    * — no data file is read, written, or moved. History is PRESERVED:
+    * the bad versions stay readable (time travel, forensics) until
+    * vacuumed, `DESCRIBE HISTORY` shows the restore as one more
+    * commit, and the change feed surfaces it as ordinary delete/insert
+    * rows over the partitions whose live directories changed — a
+    * follower (search index, replica) converges on the restored state
+    * through the same protocol as any other commit.
+    *
+    * Works because data directories are IMMUTABLE and liveness is
+    * manifest-referenced: while v_n's manifest is retained, vacuum
+    * keeps every directory it references, so restating them is safe.
+    * A vacuumed (or never-committed) target fails loudly here.
+    * Restoring TO the current latest is a no-op returning the current
+    * version (no garbage commit). Concurrency: one [[commitLoop]]
+    * attempt like every commit — a racer's interleaved commit just
+    * moves the version the restore lands at (the restored STATE is
+    * pinned at read time, so the result is still exactly v_n's rows). */
   def restore(spark: SparkSession, root: String, toVersion: Int): Int = {
-    require(fs(spark, root).exists(manifestPath(root, toVersion)),
+    require(hasVersion(spark, root, toVersion),
       s"RESTORE: version v$toVersion of $root is unknown or vacuumed — " +
         "DESCRIBE HISTORY lists the retained versions")
     val target = readManifest(spark, root, toVersion)
-    var raceRetries = 0
-    while (true) {
-      val latestV = versions(spark, root).lastOption.getOrElse(
+    commitLoop(spark, root) { (latestV, _) =>
+      if (latestV == 0)
         throw new IllegalStateException(
-          s"no snapshot-table version committed under $root"))
-      if (latestV == toVersion) return latestV
-      val v = latestV + 1
-      try {
-        commitManifest(spark, root, v, target, None, Nil)
-        return v
-      } catch {
-        case e: CommitRaceException =>
-          raceRetries += 1
-          if (raceRetries > 8) throw e
-      }
+          s"no snapshot-table version committed under $root")
+      if (latestV == toVersion) None
+      else Some(Publish(target, asDelta = false, Nil, () => target))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Compact over-fragmented partitions: rewrite each partition whose
@@ -3476,7 +3499,7 @@ object SnapshotTable {
       "targetBytes and maxPartitions must be positive")
     val f = fs(spark, root)
     withConflictRetry {
-      val base = manifestAt(spark, root, -1)
+      val (baseV, base) = versionedManifest(spark, root, -1)
       // candidate selection is METADATA-ONLY where the manifest's `#sz`
       // census covers a directory (every commit since the census landed
       // writes one line per file) — at 100 TB the plan costs a manifest
@@ -3511,7 +3534,7 @@ object SnapshotTable {
         // fragmentation at equal excess (they also carry read-side cost)
         (-(n - target), -dvDirs.getOrElse(d, 0L))
       }.take(maxPartitions)
-      if (cands.isEmpty) versions(spark, root).last
+      if (cands.isEmpty) baseV
       else {
         val clusterCols = base.clusterBy
         val frames = cands.map { case (_, d, target, _) =>
@@ -3528,8 +3551,7 @@ object SnapshotTable {
         commitRewrite(spark, root, merged, partitionBy,
           baseManifest = Some(base),
           touchedKeys = cands.map(_._1).toSet, replaceAll = false,
-          filesPerPartition = 1, crashBeforeCommit = false,
-          layoutDone = true,
+          filesPerPartition = 1, layoutDone = true,
           // rows are untouched: the recorded schema must stay the
           // table's (the compacted subset could lack an evolved
           // column that only untouched directories carry)

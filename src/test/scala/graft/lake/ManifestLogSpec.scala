@@ -169,19 +169,87 @@ class ManifestLogSpec extends SparkSpec {
     assert(scala.io.Source.fromFile(hint).mkString.trim == "5")
     def latestCount(): Long = SnapshotTable.read(spark, root).count()
     assert(latestCount() == 5)
+    // commits resolve their base through the same hint: after each
+    // degraded hint the next commit lands at exactly latest + 1 (a base
+    // resolved too low would lose its publish; too high, skip a number)
+    // and republishes the hint
+    def commitLandsNext(k: Long): Unit = {
+      val v = SnapshotTable.upsert(spark, root,
+        Seq(("a", k, k)).toDF("p", "k", "v"), "k", Seq("p"))
+      assert(v == k, s"commit after a degraded hint landed at v$v")
+      assert(scala.io.Source.fromFile(hint).mkString.trim == k.toString)
+      assert(latestCount() == k)
+    }
     // STALE hint (a lagging writer): forward probe must still find v5
     java.nio.file.Files.write(hint.toPath, "2".getBytes("UTF-8"))
     assert(latestCount() == 5)
+    commitLandsNext(6L)
     // CORRUPT hint: listing fallback
     java.nio.file.Files.write(hint.toPath, "garbage".getBytes("UTF-8"))
-    assert(latestCount() == 5)
+    assert(latestCount() == 6)
+    commitLandsNext(7L)
     // MISSING hint: listing fallback
     assert(hint.delete())
-    assert(latestCount() == 5)
-    // and the next commit republishes it
-    SnapshotTable.upsert(spark, root,
-      Seq(("a", 6L, 6L)).toDF("p", "k", "v"), "k", Seq("p"))
-    assert(scala.io.Source.fromFile(hint).mkString.trim == "6")
+    assert(latestCount() == 7)
+    commitLandsNext(8L)
+  }
+
+  test("no write path lists _versions; vacuum and history do") {
+    // every mutation resolves its base version through the hint
+    // (O(1) probes), not an O(retained versions) LIST of _versions:
+    // recorded by a listing-recording local file system, over a table
+    // with 20 retained versions
+    val root = tmpDir("mlog-nolist")
+    val mvRoot = tmpDir("mlog-nolist-mv")
+    val base = (0L until 40L).map(i => (s"p${i % 4}", i, i * 10L))
+      .toDF("p", "k", "v")
+    SnapshotTable.write(spark, root, base, Seq("p"))
+    (2 to 20).foreach(_ => SnapshotTable.declareKey(spark, root, "k"))
+    assert(SnapshotTable.versions(spark, root).size == 20)
+    // a sidecar-maintained MAX makes the refresh commit the partials
+    // sidecar too
+    val spec = MaterializedAgg.MvSpec(groupBy = Seq("p"),
+      sums = Seq("total" -> "v"), countName = "n", maxs = Seq("top" -> "v"))
+    MaterializedAgg.init(spark, root, mvRoot, spec, nBuckets = 2)
+    val versionsDir = new org.apache.hadoop.fs.Path(root, "_versions")
+      .toUri.getPath
+    val ops: Seq[(String, () => Any)] = Seq(
+      "upsert" -> (() => SnapshotTable.upsert(spark, root,
+        Seq(("p0", 0L, 1L)).toDF("p", "k", "v"), "k", Seq("p"))),
+      "applyChanges" -> (() => SnapshotTable.applyChanges(spark, root,
+        Seq(("p1", 1L, 2L, "u"), ("p1", 5L, 0L, "d"))
+          .toDF("p", "k", "v", "op"), "k", Seq("p"), "op")),
+      "append" -> (() => SnapshotTable.append(spark, root,
+        Seq(("p2", 100L, 3L)).toDF("p", "k", "v"))),
+      "no-op deleteWhere" -> (() => SnapshotTable.deleteWhere(spark, root,
+        col("p") === "absent", Seq("p"))),
+      "no-op optimize" -> (() => SnapshotTable.optimize(spark, root,
+        Seq("p"))),
+      "deleteRowsWhere" -> (() => SnapshotTable.deleteRowsWhere(spark,
+        root, col("k") === 9L)),
+      "addColumns" -> (() => SnapshotTable.addColumns(spark, root,
+        Seq(org.apache.spark.sql.types.StructField("note",
+          org.apache.spark.sql.types.StringType)))),
+      "restore" -> (() => SnapshotTable.restore(spark, root, 20)),
+      "overwritePartitions" -> (() => SnapshotTable.overwritePartitions(
+        spark, root, Seq(("p3", 3L, 4L)).toDF("p", "k", "v"), Seq("p"))),
+      "MV refresh" -> (() => MaterializedAgg.refresh(spark, root, mvRoot,
+        spec, nBuckets = 2)))
+    val v0 = SnapshotTable.latest(spark, root).get
+    ops.foreach { case (name, op) =>
+      // the base's, the view's and the view sidecar's logs alike
+      val hit = ListRecordingFs.listed(spark)(op())
+        .filter(_.endsWith("/_versions"))
+      assert(hit.isEmpty, s"$name listed ${hit.mkString(", ")}")
+    }
+    // every base mutation but the two no-ops committed a version
+    assert(SnapshotTable.latest(spark, root) == Some(v0 + 7))
+    assert(MaterializedAgg.read(spark, mvRoot).count() == 4)
+    // the recorder sees listings where every version IS needed
+    assert(ListRecordingFs.listed(spark)(
+      SnapshotTable.history(spark, root)).contains(versionsDir))
+    assert(ListRecordingFs.listed(spark)(
+      SnapshotTable.vacuum(spark, root, 30)).contains(versionsDir))
   }
 
   test("NaN/Infinity stat renderings never skip and never throw") {

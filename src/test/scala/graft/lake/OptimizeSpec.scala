@@ -40,6 +40,10 @@ class OptimizeSpec extends SparkSpec {
     assert(v == 2)
     assert(fileCount(root, "a", 2) == 1)
     assert(fileCount(root, "b", 2) == 1)
+    // the live file count fell from 12 to one per partition
+    def liveFiles(v: Int): Int = SnapshotTable.entriesFor(spark, root, v)
+      .map { case (k, _) => fileCount(root, k, v) }.sum
+    assert(liveFiles(1) == 12 && liveFiles(2) == 2)
     assert(SnapshotTable.read(spark, root)
       .collect().map(_.toSeq).toSet == before)
     // time travel: v1 still reads the fragmented layout, same rows

@@ -64,10 +64,17 @@ class SnapshotTableSpec extends SparkSpec {
       (3L, "replaced three", "en", 14L, "src3"),
       (7L, "replaced seven", "en", 14L, "src7")))
       .toDF("doc_id", "text", "lang", "n_chars", "source")
-    intercept[java.io.IOException] {
-      SnapshotTable.upsert(spark, root, updates, "doc_id", Seq("source"),
-        crashBeforeCommit = true)
+    // the crash: the one pre-publish seam throws, as a writer dying
+    // after its staging write would
+    def crashing(op: => Any): Unit = {
+      SnapshotTable.onBeforeCommit = () =>
+        throw new java.io.IOException(
+          "simulated crash after data write, before manifest commit")
+      try intercept[java.io.IOException](op)
+      finally SnapshotTable.onBeforeCommit = () => ()
     }
+    crashing(SnapshotTable.upsert(spark, root, updates, "doc_id",
+      Seq("source")))
     assert(SnapshotTable.versions(spark, root) == Seq(1),
       "a crashed batch must not commit a version")
     assert(rows(SnapshotTable.read(spark, root)) == before,
@@ -81,6 +88,21 @@ class SnapshotTableSpec extends SparkSpec {
     assert(rows(SnapshotTable.read(spark, root)
       .filter(col("doc_id").isin(3L, 7L))) ==
       Set((3L, "replaced three", 14L), (7L, "replaced seven", 14L)))
+    // the same crash inside a COMPACTION: the over-fanned table's
+    // optimize stages its rewritten directories, dies before the
+    // publish, and loses nothing — the version and every row stand,
+    // and the next optimize lands on the following version
+    val fanned = tmpDir("snaptable-optcrash")
+    SnapshotTable.write(spark, fanned, baseDocs, Seq("source"),
+      filesPerPartition = 4)
+    val fannedRows = rows(SnapshotTable.read(spark, fanned))
+    crashing(SnapshotTable.optimize(spark, fanned, Seq("source")))
+    assert(SnapshotTable.latest(spark, fanned) == Some(1),
+      "a crashed compaction must not commit a version")
+    assert(rows(SnapshotTable.read(spark, fanned)) == fannedRows,
+      "a crashed compaction lost or leaked rows")
+    assert(SnapshotTable.optimize(spark, fanned, Seq("source")) == 2)
+    assert(rows(SnapshotTable.read(spark, fanned)) == fannedRows)
   }
 
   test("only touched partitions are rewritten; untouched dirs are shared") {
@@ -216,6 +238,9 @@ class SnapshotTableSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSet
     val dirs = files.map(f => f.substring(0, f.lastIndexOf('/')))
     assert(dirs.size == 2, s"expected 2 dirs opened, got ${dirs.size}")
+    // and observable: exactly the selected partitions' rows come back
+    val expected = baseDocs.filter(col("source").isin("src3", "src7"))
+    assert(expected.count() > 0 && rows(got) == rows(expected))
   }
 
   test("hierarchical (date, source) partitioning: tuple upserts + prefix reads") {
@@ -574,6 +599,13 @@ class SnapshotTableSpec extends SparkSpec {
     val nFiles = new java.io.File(s"$root/$src3dir").listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(nFiles > 1, s"hot partition wrote $nFiles file(s) — serial")
+    // every partition's directory is written by 2..4 salted writers
+    val perDir = entries.map { e =>
+      new java.io.File(s"$root/${e.split('\t')(1)}").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+    }
+    assert(perDir.nonEmpty && perDir.forall(n => n > 1 && n <= 4),
+      s"expected 2..4 files per dir, got ${perDir.mkString(",")}")
     assert(rows(SnapshotTable.read(spark, root)) == rows(baseDocs))
     // a CDC upsert into ONE hot partition fans out the same way: the
     // rewrite is not serialized on a single writer task
