@@ -404,9 +404,9 @@ object Bench {
     // round-16 serving shave silently made the write side costlier —
     // put the two rows that moved under the same machine-readable
     // contract as the serving rows, so a maintenance regression fails
-    // as loudly as a serving one). Same shapes as graft.tools.MaintBench
-    // at this sf: a 1-partition CDC batch's incremental tokenized-corpus
-    // refresh, and the consumer-side change-feed step over that commit.
+    // as loudly as a serving one). The two shapes, at this sf: a
+    // 1-partition CDC batch's incremental tokenized-corpus refresh, and
+    // the consumer-side change-feed step over that commit.
     // Own "_bench" roots — never the oracle gates' corpora. med/3,
     // fresh batch per run. Skipped on subset runs (SPARK_GRAFT_BENCH_ONLY)
     // so targeted A/Bs stay fast.

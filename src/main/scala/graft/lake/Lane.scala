@@ -37,28 +37,28 @@ import org.apache.spark.sql.SparkSession
   *
   * Reads: [[at]] resolves pins; every member read then passes the
   * pinned version through the existing `version:` parameters — lane
-  * semantics are opt-in, direct-root readers keep today's behavior. */
+  * semantics are opt-in, direct-root readers keep today's behavior.
+  *
+  * Layout: a lane shares the table log's layout — manifests at
+  * `_versions/vNNNNNNNN.manifest` and the advisory `_latest.hint` —
+  * so [[latest]] is [[SnapshotTable.latest]]'s hint + forward probe
+  * and [[publish]] lists nothing; only [[vacuum]] lists the lane's
+  * versions, because it needs all of them. */
 object Lane {
+  import SnapshotTable.{manifestDir, manifestPath}
+
   final case class MemberPin(name: String, root: String, version: Int)
 
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-  private def manifestDir(laneRoot: String) = new Path(laneRoot, "_versions")
-  private def manifestPath(laneRoot: String, v: Int) =
-    new Path(manifestDir(laneRoot), f"v$v%08d.manifest")
 
-  /** Retained lane versions, ascending. */
-  def versions(spark: SparkSession, laneRoot: String): Seq[Int] = {
-    val f = fs(spark, laneRoot)
-    if (!f.exists(manifestDir(laneRoot))) Nil
-    else f.listStatus(manifestDir(laneRoot)).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".manifest"))
-      .map(_.stripPrefix("v").stripSuffix(".manifest").toInt)
-      .sorted
-  }
+  /** Retained lane versions, ascending — one `_versions` listing. */
+  def versions(spark: SparkSession, laneRoot: String): Seq[Int] =
+    SnapshotTable.versions(spark, laneRoot)
 
+  /** Latest lane version through the hint: no listing. */
   def latest(spark: SparkSession, laneRoot: String): Option[Int] =
-    versions(spark, laneRoot).lastOption
+    SnapshotTable.latest(spark, laneRoot)
 
   /** The member pins of lane version `v` (latest when < 0). */
   def at(spark: SparkSession, laneRoot: String,
@@ -148,6 +148,7 @@ object Lane {
       val out = f.create(tmp, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
       if (SnapshotTable.publishExclusive(f, tmp, manifestPath(laneRoot, v))) {
+        SnapshotTable.writeHint(spark, laneRoot, v)
         return v
       }
       f.delete(tmp, false)
@@ -159,7 +160,9 @@ object Lane {
   }
 
   /** Drop all but the newest `keepVersions` lane manifests — this is
-    * what bounds how much member history member vacuums must keep. */
+    * what bounds how much member history member vacuums must keep.
+    * Only a prefix goes, so a retained hint still probes forward to
+    * the latest version and a dropped one falls back to the listing. */
   def vacuum(spark: SparkSession, laneRoot: String,
       keepVersions: Int): Int = {
     require(keepVersions >= 1, "must keep at least the latest version")

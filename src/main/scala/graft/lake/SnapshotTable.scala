@@ -76,7 +76,7 @@ object SnapshotTable {
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifestDir(root: String) = new Path(root, "_versions")
+  private[lake] def manifestDir(root: String) = new Path(root, "_versions")
 
   /** A manifest rename lost the race to a concurrent committer for the
     * SAME version number — retryable against the new latest. */
@@ -296,7 +296,7 @@ object SnapshotTable {
     * stays O(state + bounded chain). */
   private[lake] val CheckpointEvery = 8
 
-  private def manifestPath(root: String, v: Int) =
+  private[lake] def manifestPath(root: String, v: Int) =
     new Path(manifestDir(root), f"v$v%08d.manifest")
   private def checkpointPath(root: String, v: Int) =
     new Path(manifestDir(root), f"v$v%08d.checkpoint")
@@ -310,13 +310,15 @@ object SnapshotTable {
     * whole `_versions` directory (O(retained versions); at a 5-minute
     * CDC cadence that listing is 100k entries/year on object stores
     * that price LIST by the page). Every committer, not only readers,
-    * resolves its base version through it. The hint is ADVISORY: a
-    * torn write, a stale value, or deleting the file entirely only
-    * costs the listing fallback, never a wrong answer — EXCEPT after a
-    * [[vacuum]] that opens a gap below the latest version, which is why
-    * vacuum alone treats a failed re-anchor as loud (see there).
+    * resolves its base version through it, and [[Lane.publish]] keeps
+    * a lane's hint the same way. The hint is ADVISORY: a torn write, a
+    * stale value, or deleting the file entirely only costs the listing
+    * fallback, never a wrong answer — EXCEPT after a [[vacuum]] that
+    * opens a gap below the latest version, which is why vacuum alone
+    * treats a failed re-anchor as loud (see there).
     * Returns whether the hint now holds `v` (rename landed). */
-  private def writeHint(spark: SparkSession, root: String, v: Int): Boolean =
+  private[lake] def writeHint(
+      spark: SparkSession, root: String, v: Int): Boolean =
     try {
       val f = fs(spark, root)
       val tmp = new Path(manifestDir(root),
@@ -1465,7 +1467,14 @@ object SnapshotTable {
     * [[org.apache.spark.sql.graft.ManifestScan]], so PLANNING performs
     * zero filesystem LIST calls (the t47 profile measured ~2 ms per
     * file of eager driver-side listing in `spark.read.parquet`; on
-    * object stores each is a billable round-trip). */
+    * object stores each is a billable round-trip). Mutations read
+    * their merge's live rows through here too, which skips the
+    * per-mutation footer-merge job the old `mergeSchema` read paid
+    * (round 19): the recorded schema IS the union schema
+    * [[commitRewrite]] maintains across evolutions, so the
+    * vintage-union rows are identical. Only legacy pre-recording
+    * manifests (no schema line) take the `mergeSchema` fallback, whose
+    * footer-union behavior is load-bearing there. */
   private def readDirs(
       spark: SparkSession, root: String, m: Manifest,
       relDirs: Seq[String]): DataFrame = {
@@ -1980,21 +1989,6 @@ object SnapshotTable {
     case None => throw new IllegalStateException(
       "table has an empty manifest and no recorded schema")
   }
-
-  /** Live rows of selected directories for a MUTATION's merge —
-    * [[readDirs]] under the manifest contract: schema-recorded tables
-    * (mapped or not) read through the pinned-schema ManifestScan with
-    * deletion vectors applied and logical re-labeling, which skips the
-    * per-mutation footer-merge job AND the directory listing the old
-    * `mergeSchema` read paid (round 19; the recorded schema IS the
-    * union schema commitRewrite maintains across evolutions, so the
-    * vintage-union rows are identical); only legacy pre-recording
-    * manifests (no schema line) still take readDirs' mergeSchema
-    * fallback, whose footer-union behavior is load-bearing there. */
-  private def readLiveDirs(
-      spark: SparkSession, root: String, m: Manifest,
-      relDirs: Seq[String]): DataFrame =
-    readDirs(spark, root, m, relDirs)
 
   /** Retry a whole read-merge-stage-commit attempt when a CONCURRENT
     * commit invalidated its merge (overlapping touched partitions):
@@ -2523,7 +2517,7 @@ object SnapshotTable {
     val liveTouched = entries.filter(e => touchedKeys(e._1))
     val merged =
       if (liveTouched.isEmpty) projected
-      else readLiveDirs(spark, root, base, liveTouched.map(_._2))
+      else readDirs(spark, root, base, liveTouched.map(_._2))
         .unionByName(projected, allowMissingColumns = true)
     commitRewrite(spark, root, merged, partitionBy, Some(base),
       touchedKeys, replaceAll = false, filesPerPartition)
@@ -2589,8 +2583,7 @@ object SnapshotTable {
           if (liveTouched.isEmpty) projected // all-new partitions: insert
           else {
             // liveTouched nonempty => entries nonempty => base defined
-            val live = readLiveDirs(spark, root, base.get,
-              liveTouched.map(_._2))
+            val live = readDirs(spark, root, base.get, liveTouched.map(_._2))
             live
               .join(projected.select(col(key).as("_graft_k")),
                 col(key) === col("_graft_k"), "left_anti")
@@ -2672,8 +2665,7 @@ object SnapshotTable {
       val merged =
         if (liveTouched.isEmpty) projected
         else {
-          val live = readLiveDirs(spark, root, base,
-            liveTouched.map(_._2))
+          val live = readDirs(spark, root, base, liveTouched.map(_._2))
           // ALL change keys leave the live set (a deleted key vanishes, an
           // upserted key is replaced); only upsert rows come back
           live
@@ -2728,8 +2720,7 @@ object SnapshotTable {
           // vintages, and a footer-arbitrary narrow read here would
           // silently drop the evolved column from the rewritten
           // partitions (round-9 advice item 2)
-          val kept = readLiveDirs(spark, root, base,
-              liveTouched.map(_._2))
+          val kept = readDirs(spark, root, base, liveTouched.map(_._2))
             .filter(coalesce(!predicate, lit(true)))
           commitRewrite(spark, root, kept, partitionBy, Some(base),
             touchedKeys, replaceAll = false, filesPerPartition)
@@ -2779,7 +2770,7 @@ object SnapshotTable {
       val merged =
         if (keepDirs.isEmpty) projected
         else {
-          val live = readLiveDirs(spark, root, base, keepDirs.map(_._2))
+          val live = readDirs(spark, root, base, keepDirs.map(_._2))
           // under the fast path none of keepDirs' rows can match (their
           // partition values did not); the residual filter is only for
           // the data-scan fallback
@@ -3540,7 +3531,7 @@ object SnapshotTable {
         val frames = cands.map { case (_, d, target, _) =>
           // mapping-aware per-dir read (logical frame) so the declared
           // cluster columns resolve and the rewrite re-physicalizes
-          val df = readLiveDirs(spark, root, base, Seq(d))
+          val df = readDirs(spark, root, base, Seq(d))
           if (clusterCols.nonEmpty &&
               clusterCols.forall(df.columns.contains))
             df.repartitionByRange(target, clusterCols.map(col): _*)

@@ -10,9 +10,10 @@ import graft.functions.VectorFunctions.vec_dot
 /** Persisted product-quantization index (round 18): the PQ codes and
   * the LSH-learned codebook, built once per corpus and SERVED by the
   * ADC search — the same persisted-index pattern as [[AnnIndex]] (IVF)
-  * and [[InvertedIndex]] (BM25). S09Prof pinned where s09's second
-  * went: re-deriving the codebook per run — a 64-dim explode through
-  * two corpus-sized hash aggregates — cost 0.92 s of a 1.16 s total at
+  * and [[InvertedIndex]] (BM25). The round-18 s09 profile
+  * (BENCH_NOTES.md) pinned where s09's second went: re-deriving the
+  * codebook per run — a 64-dim explode through two corpus-sized hash
+  * aggregates — cost 0.92 s of a 1.16 s total at
   * sf0.1, and an 8-decimal-column reshape of the same aggregate did
   * not move it (the per-element decimal arithmetic, not the row
   * layout, is the cost). A codebook is TRAINED state, not query state:
@@ -56,7 +57,7 @@ object PqIndex {
   /** The 8-subspace cell assignment of an `embedding` column — a pure
     * codegen'd projection (32 literal-plane sign dots), zero shuffles:
     * subspace m's cell id packs 4 sign bits against [[planes]]. */
-  def codesCol: Column = array((0 until 8).map { m =>
+  private def codesCol: Column = array((0 until 8).map { m =>
     planes.filter(_._1 == m).map { case (_, j, ws) =>
       when(vec_dot(array(ws.map(lit): _*),
         expr(s"slice(embedding, ${m * 8 + 1}, 8)")) >= 0,

@@ -84,7 +84,7 @@ object TokenizedCorpus {
 
   /** Files per postings partition: >1 so the tok-range clustering
     * yields narrow per-file [min,max] windows for the skip-read. */
-  val PostingsFiles = 8
+  private val PostingsFiles = 8
 
   /** Reserved token carried by the per-partition corpus-stats row.
     * `#` is outside the `[a-z0-9]+` token alphabet, so no document
@@ -268,10 +268,11 @@ object TokenizedCorpus {
           // guide §1.2): the commit executes its input twice — the
           // tok-range clustering's sampling pass, then the write — and
           // each execution of the UNCACHED union re-ran its two
-          // aggregates and three pf scans (MaintProf: staging_write
-          // 1.3 s of the 2.7 s commit). The sampling pass now doubles
-          // as the cache fill and the write reads memory. Bounded:
-          // changed-partitions-sized, same class as pf itself.
+          // aggregates and three pf scans (OPTIMIZATION_r20.md item 6:
+          // staging_write 1.3 s of the 2.7 s commit). The sampling
+          // pass now doubles as the cache fill and the write reads
+          // memory. Bounded: changed-partitions-sized, same class as pf
+          // itself.
           val rows = allRows(pf, partitionBy).cache()
           try
             // knownTouched: the frame holds exactly the changed

@@ -578,9 +578,9 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       SnapshotTable.write(spark, root, docs, Seq("source"))
-    if (SnapshotTable.versions(spark, root).size < 2) {
+    if (SnapshotTable.latest(spark, root).forall(_ < 2)) {
       val tombstones = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
       val upserts = docs
@@ -736,13 +736,13 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       // upsert (not write) so the bootstrap commit RECORDS the row key
       // the MERGE statement needs — one commit, #rowkey included
       SnapshotTable.upsert(spark, root, docs, "doc_id", Seq("source"))
     LakeCatalog.install(spark)
     LakeCatalog.register(spark, "merge_docs", root)
-    if (SnapshotTable.versions(spark, root).size < 2) {
+    if (SnapshotTable.latest(spark, root).forall(_ < 2)) {
       val insText = concat(lit("inserted:"), col("doc_id").cast("string"))
       val changes = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
@@ -825,12 +825,12 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       SnapshotTable.write(spark, root, docs, Seq("source"),
         statsFor = Seq("doc_id", "n_chars"))
     LakeCatalog.install(spark)
     LakeCatalog.register(spark, "meta_docs", root)
-    if (SnapshotTable.versions(spark, root).size < 2)
+    if (SnapshotTable.latest(spark, root).forall(_ < 2))
       // a data-column predicate: touched partitions rewrite, and the
       // rewrite's fresh files re-record their `#n`/`#f` lines
       SnapshotTable.deleteWhere(spark, root,
@@ -892,7 +892,7 @@ object Corpus {
     val root = graft.core.IndexRoot.of(dir, "documents.parquet",
       "graft_snaptable_sqlddl_v1")
     LakeCatalog.install(spark)
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       spark.sql(s"""
         CREATE TABLE lake.ddl_docs (
           doc_id BIGINT, text STRING, lang STRING, n_chars BIGINT,
@@ -904,13 +904,13 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, root).size < 2) {
+    if (SnapshotTable.latest(spark, root).forall(_ < 2)) {
       docs.createOrReplaceTempView("t54_docs")
       spark.sql("""
         INSERT INTO lake.ddl_docs
         SELECT doc_id, text, lang, n_chars, source FROM t54_docs""")
     }
-    if (SnapshotTable.versions(spark, root).size < 3) {
+    if (SnapshotTable.latest(spark, root).forall(_ < 3)) {
       val insText = concat(lit("inserted:"), col("doc_id").cast("string"))
       val changes = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
@@ -995,7 +995,7 @@ object Corpus {
     val root = graft.core.IndexRoot.of(dir, "documents.parquet",
       "graft_snaptable_sqlcons_v1")
     LakeCatalog.install(spark)
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       spark.sql(s"""
         CREATE TABLE lake.cons_docs (
           doc_id BIGINT NOT NULL, text STRING, lang STRING NOT NULL,
@@ -1005,7 +1005,7 @@ object Corpus {
           'check.chars_nonneg' = 'n_chars >= 0')""")
     else
       LakeCatalog.register(spark, "cons_docs", root)
-    if (SnapshotTable.versions(spark, root).size < 2) {
+    if (SnapshotTable.latest(spark, root).forall(_ < 2)) {
       Tables(spark, dir, "documents")
         .select(col("doc_id"), col("text"),
           when(col("doc_id") % 13 === 0, lit(null))
@@ -1089,12 +1089,12 @@ object Corpus {
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).cast("long").as("total_chars")),
         Seq("source"))
-    if (SnapshotTable.versions(spark, base).isEmpty)
+    if (SnapshotTable.latest(spark, base).isEmpty)
       SnapshotTable.write(spark, base, docs, Seq("source"))
-    if (SnapshotTable.versions(spark, derived).isEmpty) refreshDerived()
-    if (Lane.versions(spark, lane).isEmpty)
+    if (SnapshotTable.latest(spark, derived).isEmpty) refreshDerived()
+    if (Lane.latest(spark, lane).isEmpty)
       Lane.publish(spark, lane, Seq("base" -> base, "derived" -> derived))
-    if (SnapshotTable.versions(spark, base).size < 2) {
+    if (SnapshotTable.latest(spark, base).forall(_ < 2)) {
       val changes = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
         .unionByName(docs
@@ -1104,11 +1104,11 @@ object Corpus {
       SnapshotTable.applyChanges(spark, base, changes, "doc_id",
         Seq("source"), opCol = "op")
     }
-    if (SnapshotTable.versions(spark, derived).size < 2) refreshDerived()
-    if (Lane.versions(spark, lane).size < 2)
+    if (SnapshotTable.latest(spark, derived).forall(_ < 2)) refreshDerived()
+    if (Lane.latest(spark, lane).forall(_ < 2))
       Lane.publish(spark, lane, Seq("base" -> base, "derived" -> derived))
     // the mid-drain batch: base moves on, derived and lane do NOT
-    if (SnapshotTable.versions(spark, base).size < 3)
+    if (SnapshotTable.latest(spark, base).forall(_ < 3))
       SnapshotTable.deleteWhere(spark, base,
         col("doc_id") % 101 === 0, Seq("source"))
     lane
@@ -1171,7 +1171,7 @@ object Corpus {
     val root = graft.core.IndexRoot.of(dir, "documents.parquet",
       "graft_dv_docs_v1")
     LakeCatalog.install(spark)
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       SnapshotTable.write(spark, root,
         Tables(spark, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"),
@@ -1463,7 +1463,7 @@ object Corpus {
     import graft.lake.SnapshotTable
     val root = graft.core.IndexRoot.of(dir, "documents.parquet",
       "graft_snaptable_skip_v1")
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       SnapshotTable.write(spark, root,
         Tables(spark, dir, "documents")
           .select(col("doc_id"), col("lang"), col("n_chars"), col("source")),
@@ -1522,12 +1522,12 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, baseRoot).isEmpty)
+    if (SnapshotTable.latest(spark, baseRoot).isEmpty)
       SnapshotTable.write(spark, baseRoot, docs, Seq("source"))
     val spec = MvSpec(Seq("source", "lang"),
       Seq("total_chars" -> "n_chars"), countName = "n_docs")
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 8)
-    if (SnapshotTable.versions(spark, baseRoot).size < 2) {
+    if (SnapshotTable.latest(spark, baseRoot).forall(_ < 2)) {
       val tombstones = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
       val upserts = docs
@@ -1564,10 +1564,10 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, root).isEmpty)
+    if (SnapshotTable.latest(spark, root).isEmpty)
       SnapshotTable.write(spark, root, docs, Seq("source"),
         filesPerPartition = 6)
-    if (SnapshotTable.versions(spark, root).size < 2) {
+    if (SnapshotTable.latest(spark, root).forall(_ < 2)) {
       val tombstones = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
       val upserts = docs
@@ -1579,12 +1579,11 @@ object Corpus {
         tombstones.unionByName(upserts), "doc_id", Seq("source"),
         opCol = "op", filesPerPartition = 6)
     }
-    if (SnapshotTable.versions(spark, root).size < 3)
+    if (SnapshotTable.latest(spark, root).forall(_ < 3))
       SnapshotTable.optimize(spark, root, Seq("source"))
     // latest = the optimized layout when compaction fired, the CDC
     // version when every partition was already at its target
-    SnapshotTable.read(spark, root,
-      SnapshotTable.versions(spark, root).last)
+    SnapshotTable.read(spark, root, SnapshotTable.latest(spark, root).get)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("total_chars"),
@@ -1655,7 +1654,7 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, baseRoot).isEmpty)
+    if (SnapshotTable.latest(spark, baseRoot).isEmpty)
       SnapshotTable.write(spark, baseRoot, docs, Seq("source"))
     val spec = MvSpec(Seq("source"),
       sums = Seq("total_chars" -> "n_chars"),
@@ -1664,7 +1663,7 @@ object Corpus {
       mins = Seq("min_id" -> "doc_id", "min_chars" -> "n_chars"),
       maxs = Seq("max_id" -> "doc_id", "max_chars" -> "n_chars"))
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 8)
-    if (SnapshotTable.versions(spark, baseRoot).size < 2) {
+    if (SnapshotTable.latest(spark, baseRoot).forall(_ < 2)) {
       val tombstones = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
       val upserts = docs
@@ -1731,7 +1730,7 @@ object Corpus {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, baseRoot).isEmpty)
+    if (SnapshotTable.latest(spark, baseRoot).isEmpty)
       SnapshotTable.write(spark, baseRoot, docs, Seq("source"))
     val spec = MvSpec(Seq("source"),
       sums = Seq("total_chars" -> "n_chars"),
@@ -1739,7 +1738,7 @@ object Corpus {
       kmvs = Seq("approx_docs" -> "doc_id", "n_langs" -> "lang"),
       kmvK = 128)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 8)
-    if (SnapshotTable.versions(spark, baseRoot).size < 2) {
+    if (SnapshotTable.latest(spark, baseRoot).forall(_ < 2)) {
       val tombstones = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
       val upserts = docs

@@ -713,8 +713,8 @@ object Dedup {
     // re-attach join returns un-checkpointed (the round-19 shape
     // materialized a |corpus|-sized frame to executor storage per call
     // — the r19 verdict flagged exactly this join as the local
-    // regression, confirmed by the round-20 GraphProf full-query A/B:
-    // d12 2.47s → 1.60s, jobs 30 → 25).
+    // regression, confirmed by the round-20 full-query A/B in
+    // OPTIMIZATION_r20.md: d12 2.47s → 1.60s, jobs 30 → 25).
     //
     // Monotone fixpoint check (round-10 advice): per-node labels only
     // ever DECREASE (each round takes a min over self + neighbors), so
@@ -984,7 +984,7 @@ object Dedup {
     // is gone (its distinct fuses into each iteration's checkpoint
     // action), and iteration 1's rank join is collapsed to one
     // aggregate (the initial rank is a constant, so contrib_1 is just
-    // sum(1e9 div outdeg) per dst). GraphProf full-query A/B:
+    // sum(1e9 div outdeg) per dst). Full-query A/B (OPTIMIZATION_r20.md):
     // d19 2.16s → 1.61s, jobs 61 → 50.
     val sym0 = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))

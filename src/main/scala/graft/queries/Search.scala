@@ -214,11 +214,12 @@ object Search {
     * scores. When the pipeline was tokenize-dominated that exactness
     * premium read as ~5x (round-10 window); after the round-15 shave
     * moved the term filter inside the explode, scoring is a minority
-    * stage and the premium is ~10-25% (round-15 clean window,
-    * `Bm25FastBench`: batched 1.16 exact vs 1.02 fast, index-served
-    * batch 0.83 vs 0.63, inline single at parity) — kept because
-    * production retrieval needs RANKS and the double path stays fully
-    * inside whole-stage codegen with no wide decimals. Pinned
+    * stage and the premium is ~10-25% (round-15 clean window: batched
+    * 1.16 exact vs 1.02 fast, index-served batch 0.83 vs 0.63, inline
+    * single at parity; the round-16 re-measure is in BENCH_NOTES.md
+    * "Float fast-path BM25") — kept because production retrieval needs
+    * RANKS and the double path stays fully inside whole-stage codegen
+    * with no wide decimals. Pinned
     * RANK-IDENTICAL (top-k set + order) to the gated exact path at
     * all three SFs, inline and index-served (`Bm25FastSpec`) — so its
     * external anchor is transitive through the oracle-gated exact
@@ -453,10 +454,10 @@ object Search {
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
-    if (SnapshotTable.versions(spark, baseRoot).isEmpty)
+    if (SnapshotTable.latest(spark, baseRoot).isEmpty)
       SnapshotTable.write(spark, baseRoot, docs, Seq("source"))
     TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source"))
-    if (SnapshotTable.versions(spark, baseRoot).size < 2) {
+    if (SnapshotTable.latest(spark, baseRoot).forall(_ < 2)) {
       val tombstones = docs.filter(col("doc_id") % 97 === 0)
         .withColumn("op", lit("d"))
       val upserts = docs
@@ -556,7 +557,7 @@ object Search {
       "graft_tokp_base_v1")
     val tokRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
       "graft_tokp_idx_v1")
-    if (SnapshotTable.versions(spark, baseRoot).isEmpty)
+    if (SnapshotTable.latest(spark, baseRoot).isEmpty)
       SnapshotTable.write(spark, baseRoot,
         Tables(spark, dir, "documents")
           .select(col("doc_id"), col("text"), col("source")),
@@ -852,14 +853,15 @@ object Search {
         concat(lit("p"), pmod(col("doc_id"), lit(8L)).cast("string")))
 
   /** Build-once tokenized materialization of the Zipf corpus.
-    * `variant` separates INDEPENDENT copies of the corpus (e.g.
-    * `graft.tools.MaintBench` mutates its own "_maint" copy with CDC
-    * batches) — the GATE's copy must stay the pure derivation or the
-    * oracle cannot re-derive it. Self-heal: the pure build commits
-    * exactly v1, so any other version line means something mutated
-    * this root (round-14 bug: MaintBench upserted synthetic docs into
-    * the shared gate root and t50 hash-mismatched at sf0.1 only) —
-    * rebuild instead of serving an underivable corpus. */
+    * `variant` separates INDEPENDENT copies of the corpus (`Bench`'s
+    * maintenance rows mutate their own "_bench" copy with CDC batches)
+    * — the GATE's copy must stay the pure derivation or the oracle
+    * cannot re-derive it. Self-heal: the pure build commits exactly
+    * v1, so any other version line means something mutated this root
+    * (round-14 bug: a maintenance benchmark upserted synthetic docs
+    * into the shared gate root and t50 hash-mismatched at sf0.1 only;
+    * SCALING.md round 14) — rebuild instead of serving an underivable
+    * corpus. */
   def zipfTokRoot(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       variant: String = ""): String = {
@@ -883,7 +885,7 @@ object Search {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(tokRoot))
     }
-    if (SnapshotTable.versions(spark, baseRoot).isEmpty)
+    if (SnapshotTable.latest(spark, baseRoot).isEmpty)
       SnapshotTable.write(spark, baseRoot,
         zipfCorpus(Tables(spark, dir, "documents")), Seq("src"))
     TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("src"))

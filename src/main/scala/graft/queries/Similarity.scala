@@ -634,12 +634,6 @@ object Similarity {
       WHERE rank <= 10
       ORDER BY q_id, rank"""))
 
-  /** PQ plane constants — moved to [[graft.operators.PqIndex.planes]]
-    * (round 18: the planes belong to the persisted index that encodes
-    * with them); kept as an alias for the profiling tools. */
-  private[graft] def pqPlanes: Seq[(Int, Int, Seq[Double])] =
-    graft.operators.PqIndex.planes
-
   val s09_pq_ann = Q(
     "s09_pq_ann",
     (s, dir) => {
@@ -661,7 +655,7 @@ object Similarity {
       //
       // Codebooks are LSH-learned, not k-means-learned, to keep the
       // whole operator deterministic and oracle-matchable: a subspace's
-      // cell id = 4 sign bits against the fixed md5-derived pqPlanes
+      // cell id = 4 sign bits against the fixed md5-derived PqIndex.planes
       // (so assignment is a pure codegen'd projection, zero shuffles),
       // and the cell's centroid is the exact-decimal mean of its
       // members ([[labelCentroids]]'s ladder: decimal(20,10) sums →
@@ -669,8 +663,8 @@ object Similarity {
       // partitioning. CurationOpsSpec grades recall@10 against the
       // exact s01 baseline; the hash gate pins determinism, not recall.
       //
-      // 100 TB shape (round 18, S09Prof): the codebook and codes are
-      // SERVED from the persisted PQ index ([[graft.operators
+      // 100 TB shape (round 18, BENCH_NOTES.md): the codebook and
+      // codes are SERVED from the persisted PQ index ([[graft.operators
       // .PqIndex]] — built once per corpus, rebuilt cold under the
       // bench contract's `index_build.pq`). The profile pinned the
       // per-run codebook re-derivation — a 64-dim explode through two
@@ -972,13 +966,14 @@ object Similarity {
   val s12_embed_covariance = Q(
     "s12_embed_covariance",
     (s, dir) => {
-      // ROUND-17 shape (profiled, S12Prof at sf0.1: scan 0.22s, the
-      // old nested-transform explode 0.61s, decimal-vs-long agg delta
-      // 0.04s — the cost was EXPLODE ROW VOLUME, not decimal sums or a
-      // codegen fallback): the Gram pass is a partition-local kernel
-      // accumulating all 2080 upper-triangle cells, the 64 per-dim
-      // sums, and n in ONE tight loop over the vectors — the BLAS
-      // shape — in EXACT unscaled micro-units. Each cell contribution
+      // ROUND-17 shape (profiled at sf0.1, BENCH_NOTES.md round 17:
+      // scan 0.22s, the old nested-transform explode 0.61s,
+      // decimal-vs-long agg delta 0.04s — the cost was EXPLODE ROW
+      // VOLUME, not decimal sums or a codegen fallback): the Gram pass
+      // is a partition-local kernel accumulating all 2080
+      // upper-triangle cells, the 64 per-dim sums, and n in ONE tight
+      // loop over the vectors — the BLAS shape — in EXACT unscaled
+      // micro-units. Each cell contribution
       // is BigDecimal(product).setScale(6, HALF_UP), bit-identical to
       // the old `CAST(x_i*x_j AS DECIMAL(18,6))`, so the sums equal
       // the decimal ladder's exactly; within a partition they

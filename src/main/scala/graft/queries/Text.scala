@@ -587,9 +587,9 @@ object Text {
       // the t13 Mitchell exact-integer ladder (monotone in N/df, every
       // step exact 64-bit math), so score_n9 = tf * idf_n9 is a BIGINT
       // and ranking is bit-reproducible on any engine/partitioning.
-      // Physical shape (round 18, T14Prof): the (doc, tok, tf) rows are
-      // READ from the pristine tokenized corpus — the SAME table the
-      // BM25 family serves from — instead of re-tokenizing and
+      // Physical shape (round 18, BENCH_NOTES.md): the (doc, tok, tf)
+      // rows are READ from the pristine tokenized corpus — the SAME
+      // table the BM25 family serves from — instead of re-tokenizing and
       // re-aggregating per run (the profile pinned that head at ~2x the
       // served read: tf 0.51 s vs tf_served 0.25 s, full 1.47 -> 0.75 s
       // at sf0.1). Postings rows ARE the distinct (doc, tok) pairs with

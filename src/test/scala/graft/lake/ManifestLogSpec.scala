@@ -198,9 +198,10 @@ class ManifestLogSpec extends SparkSpec {
     // every mutation resolves its base version through the hint
     // (O(1) probes), not an O(retained versions) LIST of _versions:
     // recorded by a listing-recording local file system, over a table
-    // with 20 retained versions
+    // and a lane with 20 retained versions each
     val root = tmpDir("mlog-nolist")
     val mvRoot = tmpDir("mlog-nolist-mv")
+    val lane = tmpDir("mlog-nolist-lane")
     val base = (0L until 40L).map(i => (s"p${i % 4}", i, i * 10L))
       .toDF("p", "k", "v")
     SnapshotTable.write(spark, root, base, Seq("p"))
@@ -211,8 +212,11 @@ class ManifestLogSpec extends SparkSpec {
     val spec = MaterializedAgg.MvSpec(groupBy = Seq("p"),
       sums = Seq("total" -> "v"), countName = "n", maxs = Seq("top" -> "v"))
     MaterializedAgg.init(spark, root, mvRoot, spec, nBuckets = 2)
-    val versionsDir = new org.apache.hadoop.fs.Path(root, "_versions")
-      .toUri.getPath
+    (1 to 20).foreach(_ => Lane.publish(spark, lane, Seq("base" -> root)))
+    assert(Lane.versions(spark, lane).size == 20)
+    def versionsDirOf(r: String) =
+      new org.apache.hadoop.fs.Path(r, "_versions").toUri.getPath
+    val versionsDir = versionsDirOf(root)
     val ops: Seq[(String, () => Any)] = Seq(
       "upsert" -> (() => SnapshotTable.upsert(spark, root,
         Seq(("p0", 0L, 1L)).toDF("p", "k", "v"), "k", Seq("p"))),
@@ -234,7 +238,10 @@ class ManifestLogSpec extends SparkSpec {
       "overwritePartitions" -> (() => SnapshotTable.overwritePartitions(
         spark, root, Seq(("p3", 3L, 4L)).toDF("p", "k", "v"), Seq("p"))),
       "MV refresh" -> (() => MaterializedAgg.refresh(spark, root, mvRoot,
-        spec, nBuckets = 2)))
+        spec, nBuckets = 2)),
+      "Lane.publish" -> (() => Lane.publish(spark, lane,
+        Seq("base" -> root))),
+      "unpinned Lane.at" -> (() => Lane.at(spark, lane)))
     val v0 = SnapshotTable.latest(spark, root).get
     ops.foreach { case (name, op) =>
       // the base's, the view's and the view sidecar's logs alike
@@ -245,11 +252,17 @@ class ManifestLogSpec extends SparkSpec {
     // every base mutation but the two no-ops committed a version
     assert(SnapshotTable.latest(spark, root) == Some(v0 + 7))
     assert(MaterializedAgg.read(spark, mvRoot).count() == 4)
+    // the lane publish landed at 21, pinning the base's latest
+    assert(Lane.latest(spark, lane) == Some(21))
+    assert(Lane.at(spark, lane) ==
+      Seq(Lane.MemberPin("base", root, v0 + 7)))
     // the recorder sees listings where every version IS needed
     assert(ListRecordingFs.listed(spark)(
       SnapshotTable.history(spark, root)).contains(versionsDir))
     assert(ListRecordingFs.listed(spark)(
       SnapshotTable.vacuum(spark, root, 30)).contains(versionsDir))
+    assert(ListRecordingFs.listed(spark)(
+      Lane.vacuum(spark, lane, 30)).contains(versionsDirOf(lane)))
   }
 
   test("NaN/Infinity stat renderings never skip and never throw") {
