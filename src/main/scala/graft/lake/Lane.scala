@@ -41,11 +41,14 @@ import org.apache.spark.sql.SparkSession
   *
   * Layout: a lane shares the table log's layout — manifests at
   * `_versions/vNNNNNNNN.manifest` and the advisory `_latest.hint` —
-  * so [[latest]] is [[SnapshotTable.latest]]'s hint + forward probe
-  * and [[publish]] lists nothing; only [[vacuum]] lists the lane's
-  * versions, because it needs all of them. */
+  * and its commit: [[publish]] is an attempt of the table's race loop
+  * ([[SnapshotTable.publishLoop]]), so [[latest]] is the hint +
+  * forward probe, a publish lists nothing, and
+  * [[SnapshotTable.onBeforeCommit]] is the lane's crash point too;
+  * only [[vacuum]] lists the lane's versions, because it needs all of
+  * them. */
 object Lane {
-  import SnapshotTable.{manifestDir, manifestPath}
+  import SnapshotTable.manifestPath
 
   final case class MemberPin(name: String, root: String, version: Int)
 
@@ -68,11 +71,14 @@ object Lane {
       else latest(spark, laneRoot).getOrElse(
         throw new IllegalArgumentException(
           s"no lane version committed under $laneRoot"))
-    val f = fs(spark, laneRoot)
-    val p = manifestPath(laneRoot, v)
-    require(f.exists(p),
-      s"lane version v$v of $laneRoot is unknown or vacuumed")
-    val in = f.open(p)
+    // no exists() before the open: a missing manifest throws
+    val in =
+      try fs(spark, laneRoot).open(manifestPath(laneRoot, v))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(
+            s"lane version v$v of $laneRoot is unknown or vacuumed")
+      }
     val text =
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
@@ -98,8 +104,8 @@ object Lane {
     * member's `_lanes/` registry so member vacuums protect the pinned
     * versions. Returns the lane version. Raced publishes retry (the
     * caller is the single lane maintainer; a race only means a replay
-    * landed first — pins are re-read, so the winner is always a
-    * completed cut). */
+    * landed first — pins are re-read by every attempt of the race
+    * loop, so the winner is always a completed cut). */
   def publish(spark: SparkSession, laneRoot: String,
       members: Seq[(String, String)]): Int = {
     require(members.nonEmpty, "lane publish: no members")
@@ -123,13 +129,12 @@ object Lane {
     // GONE, and a registration pointing at a not-yet-created root
     // would be reaped inside this very window.
     val laneFs = fs(spark, laneRoot)
-    laneFs.mkdirs(manifestDir(laneRoot))
+    laneFs.mkdirs(new Path(laneRoot))
     val laneAbs = laneFs.makeQualified(new Path(laneRoot)).toString
     members.foreach { case (_, root) =>
       SnapshotTable.registerLane(spark, root, laneAbs)
     }
-    var attempts = 0
-    while (true) {
+    SnapshotTable.publishLoop(spark, laneRoot) { _ =>
       val pins = members.map { case (name, root) =>
         MemberPin(name, root,
           SnapshotTable.latest(spark, root).getOrElse(
@@ -137,26 +142,10 @@ object Lane {
               s"lane member '$name': no snapshot-table version " +
                 s"committed under $root")))
       }
-      val v = latest(spark, laneRoot).getOrElse(0) + 1
-      val f = fs(spark, laneRoot)
-      f.mkdirs(manifestDir(laneRoot))
-      val body = pins.map(p =>
+      Some((pins.map(p =>
         s"#member\t${p.name}\t${java.net.URLEncoder.encode(p.root, "UTF-8")}" +
-          s"\t${p.version}").mkString("", "\n", "\n")
-      val tmp = new Path(manifestDir(laneRoot),
-        s".v$v.${java.util.UUID.randomUUID()}.tmp")
-      val out = f.create(tmp, true)
-      try out.write(body.getBytes("UTF-8")) finally out.close()
-      if (SnapshotTable.publishExclusive(f, tmp, manifestPath(laneRoot, v))) {
-        SnapshotTable.writeHint(spark, laneRoot, v)
-        return v
-      }
-      f.delete(tmp, false)
-      attempts += 1
-      if (attempts > 8) throw new java.io.IOException(
-        s"lane publish lost the race 8 times under $laneRoot")
-    }
-    throw new IllegalStateException("unreachable")
+          s"\t${p.version}").mkString("", "\n", "\n"), ()))
+    }._1
   }
 
   /** Drop all but the newest `keepVersions` lane manifests — this is

@@ -78,11 +78,6 @@ object SnapshotTable {
 
   private[lake] def manifestDir(root: String) = new Path(root, "_versions")
 
-  /** A manifest rename lost the race to a concurrent committer for the
-    * SAME version number — retryable against the new latest. */
-  private final class CommitRaceException(msg: String)
-    extends java.io.IOException(msg)
-
   /** A concurrent commit changed a partition this mutation also
     * touched: the staged merge is stale and must be recomputed against
     * the new latest version. Public so callers that manage their own
@@ -95,12 +90,13 @@ object SnapshotTable {
   val MaxMergeRetries = 3
 
   /** The one race and crash seam of every commit: invoked right before
-    * each manifest publish (every commit-loop attempt, and the v1
-    * publishes of [[create]]/[[shallowClone]]), after the data is
-    * staged. A spec injects a COMPETING committer here to exercise the
-    * optimistic-concurrency paths deterministically, or throws to
-    * simulate a crash between data write and commit. Volatile: one CDC
-    * drain commits from several threads. */
+    * each manifest publish — every [[publishLoop]] attempt, so every
+    * table version (v1 of [[create]]/[[shallowClone]] included) and
+    * every [[Lane.publish]] — after the data is staged. A spec injects
+    * a COMPETING committer here to exercise the optimistic-concurrency
+    * paths deterministically, or throws to simulate a crash between
+    * data write and commit. Volatile: one CDC drain commits from
+    * several threads. */
   @volatile private[lake] var onBeforeCommit: () => Unit = () => ()
 
   /** Whether `root` holds at least one committed version — the guard
@@ -310,14 +306,14 @@ object SnapshotTable {
     * whole `_versions` directory (O(retained versions); at a 5-minute
     * CDC cadence that listing is 100k entries/year on object stores
     * that price LIST by the page). Every committer, not only readers,
-    * resolves its base version through it, and [[Lane.publish]] keeps
-    * a lane's hint the same way. The hint is ADVISORY: a torn write, a
-    * stale value, or deleting the file entirely only costs the listing
-    * fallback, never a wrong answer — EXCEPT after a [[vacuum]] that
+    * resolves its base version through it ([[publishLoop]], which
+    * keeps a lane's hint the same way). The hint is ADVISORY: a torn
+    * write, a stale value, or deleting the file entirely only costs the
+    * listing fallback, never a wrong answer — EXCEPT after a [[vacuum]] that
     * opens a gap below the latest version, which is why vacuum alone
     * treats a failed re-anchor as loud (see there).
     * Returns whether the hint now holds `v` (rename landed). */
-  private[lake] def writeHint(
+  private def writeHint(
       spark: SparkSession, root: String, v: Int): Boolean =
     try {
       val f = fs(spark, root)
@@ -617,7 +613,7 @@ object SnapshotTable {
     * silently replaces the other's just-committed manifest; there we
     * publish via POSIX link(2) instead ([[java.nio.file.Files#createLink]]),
     * which is atomic and fails with EEXIST — no window at all. Shared
-    * with [[Lane]] and [[MaterializedAgg]]'s applied markers. */
+    * with [[MaterializedAgg]]'s applied markers. */
   private[lake] def publishExclusive(
       f: org.apache.hadoop.fs.FileSystem, tmp: Path, fin: Path): Boolean = {
     val won =
@@ -639,37 +635,6 @@ object SnapshotTable {
     won
   }
 
-  /** THE COMMIT: write the manifest file (full or delta) to a
-    * writer-unique tmp name (a SHARED tmp path would let a racing
-    * writer's create(overwrite=true) truncate the file this writer is
-    * about to publish), then publish it create-exclusive as exactly
-    * version `v`. The target version is the CALLER's expectation,
-    * pinned when it read the latest manifest — computing it here would
-    * let a commit that landed in between be silently dropped from the
-    * fold. A lost race throws [[CommitRaceException]]. Fires
-    * [[onBeforeCommit]] first: every version passes through here. */
-  private def commitManifest(
-      spark: SparkSession, root: String, v: Int,
-      payload: Manifest, deltaBase: Option[Int],
-      removed: Seq[String]): Int = {
-    onBeforeCommit()
-    val f = fs(spark, root)
-    f.mkdirs(manifestDir(root))
-    val tmp = new Path(manifestDir(root),
-      f".v$v%08d.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(
-      renderManifest(payload, deltaBase, removed).getBytes("UTF-8"))
-    finally out.close()
-    // create-exclusive publish: atomic no-overwrite on every
-    // filesystem, including local (link(2)).
-    if (!publishExclusive(f, tmp, manifestPath(root, v)))
-      throw new CommitRaceException(
-        s"snapshot commit lost the race: ${manifestPath(root, v)}")
-    writeHint(spark, root, v)
-    v
-  }
-
   /** What one commit attempt publishes as the next version: the
     * manifest file's payload, whether it is a delta on the attempt's
     * base (else a full manifest), the partition keys a delta retires,
@@ -679,41 +644,67 @@ object SnapshotTable {
       payload: Manifest, asDelta: Boolean, removed: Seq[String],
       fullState: () => Manifest)
 
-  /** THE optimistic commit loop, which mints every version after a
-    * table's v1. Each attempt resolves the base V through
+  /** THE race loop, which mints every version of every log in this
+    * layout: a table's manifests ([[commitLoop]]) and a lane's pin
+    * lists ([[Lane.publish]]). Each attempt resolves the base V through
     * [[latestVersion]] (hint + forward probe, no listing; V = 0 on a
-    * never-committed root), runs `attempt` over (V, V's folded state)
-    * and publishes its result create-exclusive as exactly V+1, or
-    * returns V when it declares a no-op (None). A lost rename race
-    * re-runs the attempt, at most 8 times (then surfaces rather than
-    * spins); stale staged work is the attempt's to refuse with
-    * [[ConcurrentWriteException]]. Every `CheckpointEvery`-th delta
-    * also writes the full-state checkpoint. */
-  private def commitLoop(spark: SparkSession, root: String)(
-      attempt: (Int, Option[Manifest]) => Option[Publish]): Int = {
-    var raceRetries = 0
+    * never-committed root) and returns the body of V+1 with a value for
+    * the caller, or None to declare a no-op (the loop returns V). The
+    * body goes to a writer-unique tmp name (a SHARED tmp path would let
+    * a racing writer's create(overwrite=true) truncate the file this
+    * writer is about to publish), [[onBeforeCommit]] fires, and the tmp
+    * publishes create-exclusive as exactly V+1; the winner re-points
+    * the hint. The target is the attempt's own V+1 — computing it later
+    * would let a commit that landed in between be silently dropped from
+    * the fold. A lost race re-runs the attempt against the new latest,
+    * at most 8 times, then surfaces rather than spins. Returns the
+    * version and the winning attempt's value. */
+  private[lake] def publishLoop[A](spark: SparkSession, root: String)(
+      attempt: Int => Option[(String, A)]): (Int, Option[A]) = {
+    val f = fs(spark, root)
+    var races = 0
     while (true) {
       val latestV = latestVersion(spark, root).getOrElse(0)
-      val latestM =
-        if (latestV == 0) None else Some(readManifest(spark, root, latestV))
-      attempt(latestV, latestM) match {
-        case None => return latestV
-        case Some(p) =>
+      attempt(latestV) match {
+        case None => return (latestV, None)
+        case Some((body, a)) =>
           val v = latestV + 1
-          try {
-            commitManifest(spark, root, v, p.payload,
-              if (p.asDelta) Some(latestV) else None, p.removed)
-            if (p.asDelta && v % CheckpointEvery == 0)
-              writeCheckpoint(spark, root, v, p.fullState())
-            return v
-          } catch {
-            case e: CommitRaceException =>
-              raceRetries += 1
-              if (raceRetries > 8) throw e
+          onBeforeCommit()
+          f.mkdirs(manifestDir(root))
+          val tmp = new Path(manifestDir(root),
+            f".v$v%08d.${java.util.UUID.randomUUID()}.tmp")
+          val out = f.create(tmp, true)
+          try out.write(body.getBytes("UTF-8")) finally out.close()
+          if (publishExclusive(f, tmp, manifestPath(root, v))) {
+            writeHint(spark, root, v)
+            return (v, Some(a))
           }
+          races += 1
+          if (races > 8) throw new java.io.IOException(
+            s"commit lost the publish race 8 times under $root")
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** A table's commit: one [[publishLoop]] whose attempt folds the base
+    * V's state, runs `attempt` over (V, V's folded state, None when
+    * V = 0) and renders its [[Publish]] as a full manifest or a delta
+    * on V. Stale staged work is the attempt's to refuse with
+    * [[ConcurrentWriteException]]. A winning delta on every
+    * `CheckpointEvery`-th version also writes the full-state
+    * checkpoint. */
+  private def commitLoop(spark: SparkSession, root: String)(
+      attempt: (Int, Option[Manifest]) => Option[Publish]): Int = {
+    val (v, won) = publishLoop(spark, root) { latestV =>
+      val latestM =
+        if (latestV == 0) None else Some(readManifest(spark, root, latestV))
+      attempt(latestV, latestM).map(p => (renderManifest(p.payload,
+        if (p.asDelta) Some(latestV) else None, p.removed), p))
+    }
+    won.filter(p => p.asDelta && v % CheckpointEvery == 0)
+      .foreach(p => writeCheckpoint(spark, root, v, p.fullState()))
+    v
   }
 
   /** Best-effort full-state sidecar: losing the publish race (another
@@ -2021,21 +2012,16 @@ object SnapshotTable {
     * longer opens every footer. `clusterBy` range-clusters rows across
     * the `filesPerPartition` files of each partition (instead of the
     * default hash salt), so the per-file ranges are NARROW and the
-    * stats actually skip — a one-dimensional, manifest-served analog
-    * of the multi-dimensional locality the standalone
-    * [[Lake.writeZOrdered]] helper builds over plain parquet (not wired
-    * into this format). Both declarations persist
-    * in the manifest; upsert/applyChanges/deleteWhere maintain the
-    * stats automatically for every directory they rewrite. */
+    * stats actually skip. Both declarations persist in the manifest;
+    * upsert/applyChanges/deleteWhere maintain the stats automatically
+    * for every directory they rewrite. */
   def write(
       spark: SparkSession, root: String, df: DataFrame,
       partitionBy: Seq[String], filesPerPartition: Int = 1,
       statsFor: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
       lookupFor: Seq[String] = Nil): Int =
-    commitRewrite(spark, root, df, partitionBy, baseManifest = None,
-      touchedKeys = Set.empty, replaceAll = true,
-      filesPerPartition, declaredStats = statsFor,
-      declaredCluster = clusterBy, declaredLookup = lookupFor)
+    commitRewrite(spark, root, df, Replace(partitionBy, filesPerPartition,
+      statsFor, clusterBy, lookupFor))
 
   /** The table's recorded partition column NAMES (manifest
     * `#partitionby`, written by every commit since the recording was
@@ -2260,9 +2246,9 @@ object SnapshotTable {
     * re-creatable — adopting existing storage under a fresh declaration
     * set would silently re-contract a table someone else owns; bind it
     * instead ([[LakeCatalog.register]]). Every declared column must
-    * exist in the schema. Two racing CREATEs of one root surface as a
-    * loud commit-race failure (create-exclusive publish), never a
-    * silent overwrite. */
+    * exist in the schema. Of two racing CREATEs of one root, the one
+    * that loses the create-exclusive publish re-checks and refuses
+    * loudly like any re-create, never a silent overwrite. */
   def create(
       spark: SparkSession, root: String, schema: StructType,
       partitionBy: Seq[String], statsFor: Seq[String] = Nil,
@@ -2307,18 +2293,18 @@ object SnapshotTable {
     }
     require(checks.map(_._1).distinct.size == checks.size,
       "CREATE TABLE: duplicate CHECK constraint names")
-    require(latestVersion(spark, root).isEmpty,
-      s"CREATE TABLE: $root already holds a committed snapshot table — " +
-        "re-creating would silently re-contract existing data; bind it " +
-        "by name instead (LakeCatalog.register)")
     // the DDL's NOT NULL column flags become the #notnull declaration
     // (the one place schema typing IS a contract: the user wrote it)
     val notNull = schema.fields.filter(!_.nullable).map(_.name).toSeq
-    commitManifest(spark, root, 1,
-      Manifest(Nil, Some(schema), statsFor, clusterBy, Nil, Nil,
-        partitionBy, rowKey.toSeq, Nil, Nil, lookupFor, Nil, checks,
-        notNull),
-      None, Nil)
+    val v1 = Manifest(Nil, Some(schema), statsFor, clusterBy, Nil, Nil,
+      partitionBy, rowKey.toSeq, Nil, Nil, lookupFor, Nil, checks, notNull)
+    commitLoop(spark, root) { (latestV, _) =>
+      require(latestV == 0,
+        s"CREATE TABLE: $root already holds a committed snapshot table — " +
+          "re-creating would silently re-contract existing data; bind it " +
+          "by name instead (LakeCatalog.register)")
+      Some(Publish(v1, asDelta = false, Nil, () => v1))
+    }
   }
 
   /** Evolve the recorded schema by APPENDING `fields` — the
@@ -2519,8 +2505,8 @@ object SnapshotTable {
       if (liveTouched.isEmpty) projected
       else readDirs(spark, root, base, liveTouched.map(_._2))
         .unionByName(projected, allowMissingColumns = true)
-    commitRewrite(spark, root, merged, partitionBy, Some(base),
-      touchedKeys, replaceAll = false, filesPerPartition)
+    commitRewrite(spark, root, merged,
+      Merge(partitionBy, filesPerPartition, Some(base), touchedKeys))
   }
 
   /** Upsert `updates` (full schema, unique non-null keys, stable
@@ -2548,52 +2534,11 @@ object SnapshotTable {
     * [[onBeforeCommit]]) leaves readers on the previous version
     * exactly. */
   def upsert(
-      spark: SparkSession, root: String, updates0: DataFrame, key: String,
+      spark: SparkSession, root: String, updates: DataFrame, key: String,
       partitionBy: Seq[String], filesPerPartition: Int = 1,
-      mergeSchema: Boolean = false): Int = {
-    // one-pass validation + touched probe (round 19): two executions
-    // of the batch plan total (probe + staging write), down from
-    // three; no caching imposed — see [[applyChanges]]
-    val updates = updates0
-    val touchedKeys = validateAndProbe(updates, key, None, partitionBy)
-    withConflictRetry {
-      // bootstrap: an upsert into a never-written table is the initial
-      // commit (the CDC-stream shape — the first drained batch creates v1)
-      val base =
-        latestVersion(spark, root).map(readManifest(spark, root, _))
-      base.flatMap(_.rowKey.headOption).foreach(k0 => require(k0 == key,
-        s"table $root records row key '$k0'; an upsert keyed by '$key' " +
-          "would split the table's identity — one key per table"))
-      val entries = base.map(_.entries).getOrElse(Nil)
-      val schema = base.flatMap(_.schema)
-      val liveTouched = entries.filter(e => touchedKeys(e._1))
-      val merged =
-        if (entries.isEmpty && schema.isEmpty) updates // bootstrap
-        else {
-          val tableCols = tableColumns(spark, root, entries, schema)
-          val projected =
-            if (mergeSchema) updates // keep new columns: evolving batch
-            else updates.select(
-              tableCols.filter(updates.columns.contains).map(col).toSeq: _*)
-          require(mergeSchema ||
-              tableCols.forall(updates.columns.contains),
-            s"update batch is missing table columns " +
-              s"${tableCols.filterNot(updates.columns.contains).mkString(",")}" +
-              "; updates must carry the full schema")
-          if (liveTouched.isEmpty) projected // all-new partitions: insert
-          else {
-            // liveTouched nonempty => entries nonempty => base defined
-            val live = readDirs(spark, root, base.get, liveTouched.map(_._2))
-            live
-              .join(projected.select(col(key).as("_graft_k")),
-                col(key) === col("_graft_k"), "left_anti")
-              .unionByName(projected, allowMissingColumns = mergeSchema)
-          }
-        }
-      commitRewrite(spark, root, merged, partitionBy, base, touchedKeys,
-        replaceAll = false, filesPerPartition, declaredKey = Some(key))
-    }
-  }
+      mergeSchema: Boolean = false): Int =
+    mergeKeyed(spark, root, updates, key, partitionBy, None,
+      filesPerPartition, mergeSchema, () => ())
 
   /** Apply a MIXED change batch — upserts AND delete tombstones — in
     * ONE atomic commit (the shape a real CDC feed has: Debezium-style
@@ -2615,8 +2560,9 @@ object SnapshotTable {
     * still anti-join its key out of the live set, i.e. silently delete
     * — a malformed feed must fail loudly instead, round-9 advice
     * item 3). Non-key columns of a tombstone are ignored. Returns the
-    * new version. */
-  /** `publishGate` (round 20) runs AFTER the staging write/census/stats
+    * new version.
+    *
+    * `publishGate` (round 20) runs AFTER the staging write/census/stats
     * of an attempt and immediately BEFORE its manifest commit — the
     * seam that lets a caller overlap this commit's Spark work with
     * other work while still ordering the PUBLICATION after an external
@@ -2625,57 +2571,66 @@ object SnapshotTable {
     * the applied marker). Must be idempotent: a conflict retry re-runs
     * the whole attempt, gate included. */
   def applyChanges(
-      spark: SparkSession, root: String, changes0: DataFrame, key: String,
+      spark: SparkSession, root: String, changes: DataFrame, key: String,
       partitionBy: Seq[String], opCol: String,
       filesPerPartition: Int = 1, mergeSchema: Boolean = false,
-      publishGate: () => Unit = () => ()): Int = {
-    // The batch plan used to execute FOUR times per commit (key
-    // validation, null-op validation, touched-partition probe, the
-    // staging write). Round 19 fuses the first three into ONE
-    // aggregate (validateAndProbe; messages unchanged) — two
-    // executions total, with NO caching imposed here: a bulk CDC batch
-    // can be arbitrarily large, and materializing it to executor
-    // storage on top of the staging write is a disk-pressure failure
-    // mode streaming re-execution cannot produce. A caller whose batch
-    // is a multi-join worth holding (the incremental-MV refresh — its
-    // batches are view-slice- and sidecar-sized by construction)
-    // caches BEFORE calling and keeps the lifecycle.
-    val changes = changes0
-    val touchedKeys =
-      validateAndProbe(changes, key, Some(opCol), partitionBy)
+      publishGate: () => Unit = () => ()): Int =
+    mergeKeyed(spark, root, changes, key, partitionBy, Some(opCol),
+      filesPerPartition, mergeSchema, publishGate)
+
+  /** THE keyed merge behind [[upsert]], [[applyChanges]] and the CDC
+    * drains: every batch key leaves the touched partitions' live rows
+    * (one left-anti join), and the batch's upsert rows — all of them,
+    * or those whose `opCol` is not "d" — come back, in one
+    * [[commitRewrite]]. On a never-written root the upsert rows ARE v1
+    * (the CDC-stream shape: the first drained batch creates the table)
+    * and tombstones are no-ops.
+    *
+    * The batch plan executes twice per commit — the fused
+    * validation + touched probe ([[validateAndProbe]]) and the staging
+    * write — with NO caching imposed here: a bulk CDC batch can be
+    * arbitrarily large, and materializing it to executor storage on
+    * top of the staging write is a disk-pressure failure mode
+    * streaming re-execution cannot produce. A caller whose batch is a
+    * multi-join worth holding (the incremental-MV refresh — its
+    * batches are view-slice- and sidecar-sized by construction) caches
+    * BEFORE calling and keeps the lifecycle. */
+  private[graft] def mergeKeyed(
+      spark: SparkSession, root: String, batch: DataFrame, key: String,
+      partitionBy: Seq[String], opCol: Option[String],
+      filesPerPartition: Int, mergeSchema: Boolean,
+      publishGate: () => Unit): Int = {
+    val touchedKeys = validateAndProbe(batch, key, opCol, partitionBy)
+    val upserts = opCol.fold(batch)(c => batch.filter(col(c) =!= "d").drop(c))
     withConflictRetry {
-      val base = manifestAt(spark, root, -1)
-      base.rowKey.headOption.foreach(k0 => require(k0 == key,
-        s"table $root records row key '$k0'; a change batch keyed by " +
-          s"'$key' would split the table's identity — one key per table"))
-      val entries = base.entries
-      val schema = base.schema
-      val liveTouched = entries.filter(e => touchedKeys(e._1))
-      val upserts = changes.filter(col(opCol) =!= "d").drop(opCol)
-      val tableCols = tableColumns(spark, root, entries, schema)
-        .filter(_ != opCol)
-      val projected =
-        if (mergeSchema) upserts
-        else {
-          require(tableCols.forall(upserts.columns.contains),
-            s"change batch is missing table columns " +
-              s"${tableCols.filterNot(upserts.columns.contains).mkString(",")}")
-          upserts.select(tableCols.map(col).toSeq: _*)
-        }
-      val merged =
-        if (liveTouched.isEmpty) projected
-        else {
-          val live = readDirs(spark, root, base, liveTouched.map(_._2))
-          // ALL change keys leave the live set (a deleted key vanishes, an
-          // upserted key is replaced); only upsert rows come back
-          live
-            .join(changes.select(col(key).as("_graft_k")),
+      val base = latestVersion(spark, root).map(readManifest(spark, root, _))
+      base.flatMap(_.rowKey.headOption).foreach(k0 => require(k0 == key,
+        s"table $root records row key '$k0'; a batch keyed by '$key' " +
+          "would split the table's identity — one key per table"))
+      val merged = base match {
+        case Some(m) if m.entries.nonEmpty || m.schema.isDefined =>
+          val tableCols = tableColumns(spark, root, m.entries, m.schema)
+            .filterNot(opCol.contains)
+          require(mergeSchema || tableCols.forall(upserts.columns.contains),
+            s"batch is missing table columns " +
+              s"${tableCols.filterNot(upserts.columns.contains).mkString(",")}" +
+              "; upserts must carry the full schema")
+          // default: projected to the table's columns (a feed-only
+          // column cannot silently widen the table); mergeSchema keeps
+          // the batch's new columns
+          val projected =
+            if (mergeSchema) upserts
+            else upserts.select(tableCols.map(col).toSeq: _*)
+          val liveTouched = m.entries.filter(e => touchedKeys(e._1))
+          if (liveTouched.isEmpty) projected // all-new partitions: insert
+          else readDirs(spark, root, m, liveTouched.map(_._2))
+            .join(batch.select(col(key).as("_graft_k")),
               col(key) === col("_graft_k"), "left_anti")
             .unionByName(projected, allowMissingColumns = mergeSchema)
-        }
-      commitRewrite(spark, root, merged, partitionBy, Some(base),
-        touchedKeys, replaceAll = false, filesPerPartition,
-        declaredKey = Some(key), publishGate = publishGate)
+        case _ => upserts // bootstrap
+      }
+      commitRewrite(spark, root, merged, Merge(partitionBy,
+        filesPerPartition, base, touchedKeys, Some(key), publishGate))
     }
   }
 
@@ -2712,8 +2667,7 @@ object SnapshotTable {
             spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               schema),
-            partitionBy, Some(base), touchedKeys, replaceAll = false,
-            filesPerPartition)
+            Merge(partitionBy, filesPerPartition, Some(base), touchedKeys))
         case _ =>
           // mergeSchema like every other touched-partition read: after an
           // evolving upsert the touched directories can span schema
@@ -2722,8 +2676,8 @@ object SnapshotTable {
           // partitions (round-9 advice item 2)
           val kept = readDirs(spark, root, base, liveTouched.map(_._2))
             .filter(coalesce(!predicate, lit(true)))
-          commitRewrite(spark, root, kept, partitionBy, Some(base),
-            touchedKeys, replaceAll = false, filesPerPartition)
+          commitRewrite(spark, root, kept,
+            Merge(partitionBy, filesPerPartition, Some(base), touchedKeys))
       }
     }
 
@@ -2779,8 +2733,8 @@ object SnapshotTable {
             .unionByName(projected, allowMissingColumns = true)
             .select(tableCols.map(col).toSeq: _*)
         }
-      commitRewrite(spark, root, merged, partitionBy, Some(base),
-        touchedKeys, replaceAll = false, filesPerPartition)
+      commitRewrite(spark, root, merged,
+        Merge(partitionBy, filesPerPartition, Some(base), touchedKeys))
     }
 
   /** Replace whole partition TUPLES in one commit — the derived-table
@@ -2813,9 +2767,8 @@ object SnapshotTable {
         case Some(v) =>
           val touched = knownTouched.getOrElse(
             touchedCompositeKeys(rows, partitionBy) ++ dropKeys)
-          commitRewrite(spark, root, rows, partitionBy,
-            Some(readManifest(spark, root, v)), touched,
-            replaceAll = false, filesPerPartition)
+          commitRewrite(spark, root, rows, Merge(partitionBy,
+            filesPerPartition, Some(readManifest(spark, root, v)), touched))
       }
     }
 
@@ -2850,6 +2803,37 @@ object SnapshotTable {
     }
   }
 
+  /** What one [[commitRewrite]] commits — one case per caller shape,
+    * each holding only what its callers set. */
+  private sealed trait CommitRequest { def partitionBy: Seq[String] }
+
+  /** [[write]]: the rows ARE the new version (a full manifest), laid
+    * out by `partitionBy` × `filesPerPartition` under the skip-read
+    * declarations the replace (re)states. */
+  private final case class Replace(
+      partitionBy: Seq[String], filesPerPartition: Int,
+      statsFor: Seq[String], clusterBy: Seq[String],
+      lookupFor: Seq[String]) extends CommitRequest
+
+  /** The mutators: the rows are the merged content of the `touched`
+    * partitions as read at `base` (None on a never-written root); the
+    * table keeps `base`'s declarations, a keyed merge records `rowKey`
+    * (else the latest one carries), and `publishGate` runs after the
+    * attempt's Spark work, right before its publish. */
+  private final case class Merge(
+      partitionBy: Seq[String], filesPerPartition: Int,
+      base: Option[Manifest], touched: Set[String],
+      rowKey: Option[String] = None,
+      publishGate: () => Unit = () => ()) extends CommitRequest
+
+  /** [[optimize]]: the rows are the `touched` partitions' unchanged
+    * rows, already laid out by the caller, so the recorded schema stays
+    * `base`'s (the compacted subset could lack an evolved column that
+    * only untouched directories carry). */
+  private final case class Compact(
+      partitionBy: Seq[String], base: Manifest,
+      touched: Set[String]) extends CommitRequest
+
   /** Write `newRows` as fresh immutable per-partition-tuple directories,
     * then commit `untouched-at-latest ++ new` as one manifest. The
     * staging write duplicates each partition column into a throwaway
@@ -2860,37 +2844,33 @@ object SnapshotTable {
     * manifest key is read off the nested directory names, byte-identical
     * to what a Hive-layout writer would have produced.
     *
-    * Its [[commitLoop]] attempt is the optimistic-concurrency core: it
-    * verifies every TOUCHED key of the latest version V maps to the
-    * same directory as in the base (else the merge in `newRows` is
-    * stale -> [[ConcurrentWriteException]], and the outer
-    * [[withConflictRetry]] re-merges from scratch), recomputes
-    * `untouched` from V's entries (so a disjoint concurrent commit's
-    * changes are CARRIED FORWARD, not clobbered), and publishes V+1. */
+    * For a [[Merge]] or [[Compact]], its [[commitLoop]] attempt is the
+    * optimistic-concurrency core: it verifies every TOUCHED key of the
+    * latest version V maps to the same directory as in the base (else
+    * the merge in `newRows` is stale -> [[ConcurrentWriteException]],
+    * and the outer [[withConflictRetry]] re-merges from scratch),
+    * recomputes `untouched` from V's entries (so a disjoint concurrent
+    * commit's changes are CARRIED FORWARD, not clobbered), and
+    * publishes V+1 as a delta. A [[Replace]] publishes V+1 as a full
+    * manifest (last-replace-wins). */
   private def commitRewrite(
       spark: SparkSession, root: String, newRows: DataFrame,
-      partitionBy: Seq[String], baseManifest: Option[Manifest],
-      touchedKeys: Set[String], replaceAll: Boolean,
-      filesPerPartition: Int,
-      declaredStats: Seq[String] = Nil,
-      declaredCluster: Seq[String] = Nil,
-      declaredLookup: Seq[String] = Nil,
-      layoutDone: Boolean = false,
-      schemaOverride: Option[StructType] = None,
-      declaredKey: Option[String] = None,
-      publishGate: () => Unit = () => ()): Int = {
+      req: CommitRequest): Int = {
+    val partitionBy = req.partitionBy
     require(partitionBy.nonEmpty, "partitionBy must name at least one column")
-    // write() (re)declares; every other mutation inherits the table's
+    val (baseManifest, touchedKeys, filesPerPartition) = req match {
+      case r: Replace => (None, Set.empty[String], r.filesPerPartition)
+      case m: Merge => (m.base, m.touched, m.filesPerPartition)
+      case c: Compact => (Some(c.base), c.touched, 1)
+    }
+    val isReplace = req.isInstanceOf[Replace]
+    // a replace (re)declares; every other commit inherits the table's
     // persisted declarations, so stats maintenance is automatic
-    val statsCols =
-      if (replaceAll) declaredStats
-      else baseManifest.map(_.statsCols).getOrElse(declaredStats)
-    val clusterBy =
-      if (replaceAll) declaredCluster
-      else baseManifest.map(_.clusterBy).getOrElse(declaredCluster)
-    val lookupCols =
-      if (replaceAll) declaredLookup
-      else baseManifest.map(_.lookupCols).getOrElse(declaredLookup)
+    val (statsCols, clusterBy, lookupCols) = req match {
+      case r: Replace => (r.statsFor, r.clusterBy, r.lookupFor)
+      case _ => baseManifest.fold((Seq.empty[String], Seq.empty[String],
+        Seq.empty[String]))(m => (m.statsCols, m.clusterBy, m.lookupCols))
+    }
     val f = fs(spark, root)
     val staging = new Path(root, s".staging-${java.util.UUID.randomUUID()}")
     // column mapping (round 16): data files are written under PHYSICAL
@@ -2911,9 +2891,8 @@ object SnapshotTable {
     // contract, so it resolves the constraints from the latest
     // committed manifest.
     val constraintM: Option[Manifest] =
-      if (!replaceAll) baseManifest
-      else baseManifest.orElse(
-        latestVersion(spark, root).map(readManifest(spark, root, _)))
+      if (!isReplace) baseManifest
+      else latestVersion(spark, root).map(readManifest(spark, root, _))
     val checkedRows = enforceConstraints(root, newRows, constraintM)
     val colMapping = mappingOf(baseManifest.flatMap(_.schema))
     // two logical columns landing on ONE physical name means the frame
@@ -2946,7 +2925,7 @@ object SnapshotTable {
       case (d, (c, sc)) => d.withColumn(sc, col(c).cast("string"))
     }
     val layout =
-      if (layoutDone) staged // caller pre-partitioned (e.g. [[optimize]])
+      if (req.isInstanceOf[Compact]) staged // the caller laid it out
       else if (clusterBy.isEmpty)
         repartitionForLayout(staged, partitionBy, filesPerPartition,
           spark.sessionState.conf.numShufflePartitions.min(64) *
@@ -3121,8 +3100,14 @@ object SnapshotTable {
     val newStats = footers.flatMap(_._3) ++ aggStats
     // caller's publication gate (see [[applyChanges]]): every Spark
     // job of this attempt is done; only the manifest rename follows
-    publishGate()
-    val newSchema = schemaOverride.getOrElse(newRows.schema)
+    req match {
+      case m: Merge => m.publishGate()
+      case _ =>
+    }
+    val newSchema = req match {
+      case c: Compact => c.base.schema.getOrElse(newRows.schema)
+      case _ => newRows.schema
+    }
     val baseTouched = baseManifest.map(_.entries).getOrElse(Nil)
       .filter(e => touchedKeys(e._1)).toSet
     commitLoop(spark, root) { (latestV, latestM) =>
@@ -3139,10 +3124,10 @@ object SnapshotTable {
       // a stale base would silently drop the racer's new column from
       // every schema-pinned read.
       val schema =
-        if (replaceAll) newSchema
+        if (isReplace) newSchema
         else latestM.flatMap(_.schema)
           .map(unionSchema(_, newSchema)).getOrElse(newSchema)
-      if (!replaceAll) {
+      if (!isReplace) {
         val nowTouched = latest.filter(e => touchedKeys(e._1)).toSet
         if (nowTouched != baseTouched)
           throw new ConcurrentWriteException(
@@ -3172,7 +3157,7 @@ object SnapshotTable {
       // commit folds the chain into a best-effort full sidecar so read
       // cost stays bounded. A replace-all (or first-ever) commit IS a
       // full manifest and resets the chain.
-      val asDelta = !replaceAll && latestV > 0
+      val asDelta = !isReplace && latestV > 0
       val movedKeys = moved.map(_._1).toSet
       val removed =
         if (!asDelta) Nil
@@ -3183,8 +3168,10 @@ object SnapshotTable {
       // it, every other commit (including full replace) carries the
       // latest declaration forward — a table's identity column does not
       // vanish because an INSERT OVERWRITE restated its contents
-      val rowKey = declaredKey.map(Seq(_)).getOrElse(
-        latestM.map(_.rowKey).getOrElse(Nil))
+      val rowKey = (req match {
+        case m: Merge => m.rowKey.map(Seq(_))
+        case _ => None
+      }).getOrElse(latestM.map(_.rowKey).getOrElse(Nil))
       // constraints persist like the row key: declared at CREATE,
       // carried forward by every commit (including full replace)
       val checks = latestM.map(_.checks).getOrElse(Nil)
@@ -3252,9 +3239,6 @@ object SnapshotTable {
       version: Int = -1): Int = {
     require(isTableRoot(spark, sourceRoot),
       s"SHALLOW CLONE: $sourceRoot holds no committed version")
-    require(latestVersion(spark, targetRoot).isEmpty,
-      s"SHALLOW CLONE: $targetRoot already holds a committed snapshot " +
-        "table")
     val m = manifestAt(spark, sourceRoot, version)
     val fSrc = fs(spark, sourceRoot)
     // a clone-of-a-clone's entries are already absolute and keep
@@ -3273,7 +3257,12 @@ object SnapshotTable {
       fileRows = m.fileRows.map { case (r, n) => (absFile(r), n) },
       fileSketch = m.fileSketch.map { case (r, c, b) => (absFile(r), c, b) },
       fileDvs = m.fileDvs.map { case (r, n, b) => (absFile(r), n, b) })
-    val v = commitManifest(spark, targetRoot, 1, m2, None, Nil)
+    val v = commitLoop(spark, targetRoot) { (latestV, _) =>
+      require(latestV == 0,
+        s"SHALLOW CLONE: $targetRoot already holds a committed snapshot " +
+          "table")
+      Some(Publish(m2, asDelta = false, Nil, () => m2))
+    }
     val tgtAbs = fs(spark, targetRoot)
       .makeQualified(new Path(targetRoot)).toString
     m2.entries.map(_._2).flatMap(ownerRootOf).distinct
@@ -3539,14 +3528,8 @@ object SnapshotTable {
         }
         val merged = frames.reduce(_.unionByName(_,
           allowMissingColumns = true))
-        commitRewrite(spark, root, merged, partitionBy,
-          baseManifest = Some(base),
-          touchedKeys = cands.map(_._1).toSet, replaceAll = false,
-          filesPerPartition = 1, layoutDone = true,
-          // rows are untouched: the recorded schema must stay the
-          // table's (the compacted subset could lack an evolved
-          // column that only untouched directories carry)
-          schemaOverride = base.schema)
+        commitRewrite(spark, root, merged,
+          Compact(partitionBy, base, cands.map(_._1).toSet))
       }
     }
   }

@@ -681,29 +681,6 @@ object Search {
     bm25ScoreBatch(postings, q, dfStats, corpus, k)
   }
 
-  /** Batched FLOAT fast path over a corpus — [[bm25BatchOver]]'s exact
-    * pipeline with [[bm25ScoreBatchFast]] scoring; rank-pinned equal
-    * to the exact batch in `Bm25FastSpec`. */
-  def bm25BatchFastOver(
-      docs: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(col("query_id"), col("tok")).distinct()
-    val terms = workloadTerms(queries)
-    val base = tokenized(docs)
-      .select(col("doc_id"), col("dl"), col("toks"))
-      .cache()
-    val corpus = base.agg(
-      count(lit(1)).as("n_docs"), sum(col("dl")).as("total_dl"))
-    val postings = base
-      .select(col("doc_id"), col("dl"),
-        explode(filter(col("toks"), _.isin(terms: _*))).as("tok"))
-      .repartition(col("doc_id")) // one-exchange pipeline, see exact twin
-      .groupBy(col("doc_id"), col("dl"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-      .cache() // two consumers: df stats + the query join (see bm25)
-    val dfStats = postings.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    bm25ScoreBatchFast(postings, q, dfStats, corpus, k)
-  }
-
   /** Deterministic salient-term extraction for retrieval-based
     * decontamination: a document's query = its 3 lexicographically
     * smallest distinct tokens of length >= 4 (drops closed-class short

@@ -187,11 +187,8 @@ object CdcStream {
       partitionBy: Seq[String],
       versionCol: Option[String] = None,
       maintenance: TableMaintenance = TableMaintenance()): StreamingQuery =
-    maintain(updates, root, key, versionCol) { (batch, reduced, batchId) =>
-      graft.lake.SnapshotTable.upsert(batch.sparkSession, root, reduced,
-        key, partitionBy)
-      maintenance.run(batch.sparkSession, root, partitionBy, batchId)
-    }
+    maintainKeyed(updates, root, key, partitionBy, None, versionCol,
+      maintenance)
 
   /** Full CDC semantics, atomically: the feed carries DELETE tombstones
     * alongside upserts (`opCol` = "d" marks a delete; tombstones must
@@ -202,9 +199,10 @@ object CdcStream {
     * [[graft.lake.SnapshotTable.applyChanges]] — upserts and deletes in
     * ONE manifest commit, so no reader can observe the
     * deletes-without-upserts (or reverse) half state that routing
-    * through two calls would expose. Pre-create the table with
-    * `SnapshotTable.write` — a delete tombstone has no meaning against
-    * a table that does not exist yet. */
+    * through two calls would expose. On a never-written root the first
+    * batch's upserts create v1 and its tombstones delete nothing;
+    * pre-create the table with `SnapshotTable.write` to pin its
+    * schema. */
   def maintainChangesAtomic(
       updates: DataFrame,
       root: String,
@@ -213,11 +211,8 @@ object CdcStream {
       opCol: String,
       versionCol: Option[String] = None,
       maintenance: TableMaintenance = TableMaintenance()): StreamingQuery =
-    maintain(updates, root, key, versionCol) { (batch, reduced, batchId) =>
-      graft.lake.SnapshotTable.applyChanges(batch.sparkSession, root,
-        reduced, key, partitionBy, opCol)
-      maintenance.run(batch.sparkSession, root, partitionBy, batchId)
-    }
+    maintainKeyed(updates, root, key, partitionBy, Some(opCol), versionCol,
+      maintenance)
 
   /** The NAME-addressed CDC drain (round-14 verdict item 8) — the
     * write-side completion of what `followTableIntoInvertedIndex` did
@@ -242,17 +237,6 @@ object CdcStream {
       maintenance)
   }
 
-  /** Upsert-only sibling of [[maintainChangesAtomicIntoTable]]. */
-  def maintainUpsertsAtomicIntoTable(
-      spark: org.apache.spark.sql.SparkSession,
-      updates: DataFrame,
-      table: String,
-      versionCol: Option[String] = None,
-      maintenance: TableMaintenance = TableMaintenance()): StreamingQuery = {
-    val (root, key, pby) = resolveWritable(spark, table)
-    maintainUpsertsAtomic(updates, root, key, pby, versionCol, maintenance)
-  }
-
   private def resolveWritable(
       spark: org.apache.spark.sql.SparkSession,
       table: String): (String, String, Seq[String]) = {
@@ -272,11 +256,15 @@ object CdcStream {
     (root, key, pby)
   }
 
-  private def maintain(
+  /** Both drains: each micro-batch reduced to its latest event per key,
+    * then ONE keyed merge ([[graft.lake.SnapshotTable.mergeKeyed]] —
+    * tombstones are the rows whose `opCol` is "d"), then the batch's
+    * table upkeep. */
+  private def maintainKeyed(
       updates: DataFrame, root: String, key: String,
-      versionCol: Option[String])(
-      apply: (org.apache.spark.sql.Dataset[Row], DataFrame, Long) => Unit)
-      : StreamingQuery =
+      partitionBy: Seq[String], opCol: Option[String],
+      versionCol: Option[String],
+      maintenance: TableMaintenance): StreamingQuery =
     updates.writeStream
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
@@ -294,11 +282,14 @@ object CdcStream {
             row_number().over(Window.partitionBy(col(key)).orderBy(order)))
           .filter(col("__cdc_rn") === 1)
           .drop("__cdc_rn")
-        // versionCol stays in the frame: the upsert projects updates
-        // to the dataset's columns, so an extra feed-only column is
-        // ignored there, while a version that IS a dataset column
-        // lands like any other field
-        apply(batch, reduced, bid)
+        // versionCol stays in the frame: the merge projects the batch
+        // to the table's columns, so an extra feed-only column is
+        // ignored there, while a version that IS a table column lands
+        // like any other field
+        graft.lake.SnapshotTable.mergeKeyed(batch.sparkSession, root,
+          reduced, key, partitionBy, opCol, filesPerPartition = 1,
+          mergeSchema = false, publishGate = () => ())
+        maintenance.run(batch.sparkSession, root, partitionBy, bid)
       }
       .start()
 }

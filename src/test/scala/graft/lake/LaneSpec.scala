@@ -189,6 +189,41 @@ class LaneSpec extends SparkSpec {
       "vacuum reaped a registered lane inside the first-publish window")
   }
 
+  test("a raced publish retries onto v+1 with re-read pins; the seam " +
+      "fires once per attempt") {
+    val (base, derived, lane) = freshLane()
+    val laneV = Lane.latest(spark, lane).get
+    val baseV = SnapshotTable.latest(spark, base).get
+    val derivedV = SnapshotTable.latest(spark, derived).get
+    val members = Seq("base" -> base, "derived" -> derived)
+    // the first attempt's seam: a racer advances the base, then a
+    // competing publish takes the lane version the attempt resolved
+    // (the racer's own commits pass the seam unobserved)
+    var fired = 0
+    var racing = false
+    SnapshotTable.onBeforeCommit = () => if (!racing) {
+      fired += 1
+      if (fired == 1) {
+        racing = true
+        try {
+          SnapshotTable.upsert(spark, base,
+            Seq(("0", 700L, 1L)).toDF("src", "k", "v"), "k", Seq("src"))
+          assert(Lane.publish(spark, lane, members) == laneV + 1)
+        } finally racing = false
+      }
+    }
+    val v =
+      try Lane.publish(spark, lane, members)
+      finally SnapshotTable.onBeforeCommit = () => ()
+    assert(v == laneV + 2, s"the raced publish landed at v$v")
+    assert(fired == 2, s"the seam fired $fired times over 2 attempts")
+    // the landed pins are the second attempt's re-read: the base the
+    // racer advanced, not the version the first attempt read
+    assert(Lane.at(spark, lane, v) == Seq(
+      Lane.MemberPin("base", base, baseV + 1),
+      Lane.MemberPin("derived", derived, derivedV)))
+  }
+
   test("publish pins are re-read per attempt and members validate") {
     val (base, derived, lane) = freshLane()
     // unknown member root fails loudly

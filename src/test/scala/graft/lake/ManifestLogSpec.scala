@@ -256,6 +256,14 @@ class ManifestLogSpec extends SparkSpec {
     assert(Lane.latest(spark, lane) == Some(21))
     assert(Lane.at(spark, lane) ==
       Seq(Lane.MemberPin("base", root, v0 + 7)))
+    // an unpinned Lane.at opens the manifest its hint resolution just
+    // probed: it issues no status call of its own on that manifest
+    val laneManifest = s"${versionsDirOf(lane)}/v00000021.manifest"
+    def manifestProbes(op: => Any): Int =
+      ListRecordingFs.statused(spark)(op).count(_ == laneManifest)
+    assert(manifestProbes(Lane.latest(spark, lane)) == 1)
+    assert(manifestProbes(Lane.at(spark, lane)) == 1,
+      "unpinned Lane.at re-probed the manifest the hint resolved")
     // the recorder sees listings where every version IS needed
     assert(ListRecordingFs.listed(spark)(
       SnapshotTable.history(spark, root)).contains(versionsDir))

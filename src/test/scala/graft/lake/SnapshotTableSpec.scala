@@ -360,6 +360,32 @@ class SnapshotTableSpec extends SparkSpec {
       .filter(col("doc_id") === 7L).count() == 1)
   }
 
+  test("applyChanges on a never-written root: v1 holds exactly its " +
+      "upserts") {
+    val root = tmpDir("snaptable-bootstrap-changes")
+    val changes = spark.createDataFrame(Seq(
+      ("u", 1L, "one", "en", 3L, "src1"),
+      ("u", 2L, "two", "en", 3L, "src2"),
+      // tombstones: a key never written, and a partition never written
+      ("d", 3L, null.asInstanceOf[String], null.asInstanceOf[String],
+        0L, "src1"),
+      ("d", 4L, null.asInstanceOf[String], null.asInstanceOf[String],
+        0L, "src9")))
+      .toDF("op", "doc_id", "text", "lang", "n_chars", "source")
+    val v = SnapshotTable.applyChanges(spark, root, changes,
+      "doc_id", Seq("source"), opCol = "op")
+    assert(v == 1)
+    val got = SnapshotTable.read(spark, root)
+    assert(got.columns.toSeq ==
+      Seq("doc_id", "text", "lang", "n_chars", "source"))
+    assert(got.collect().map(r => (r.getLong(0), r.getString(1),
+        r.getString(2), r.getLong(3), r.getString(4))).toSeq.sorted ==
+      Seq((1L, "one", "en", 3L, "src1"), (2L, "two", "en", 3L, "src2")))
+    assert(SnapshotTable.entriesFor(spark, root, 1).map(_._1).sorted ==
+      Seq("src1", "src2"))
+    assert(SnapshotTable.rowKey(spark, root) == Some("doc_id"))
+  }
+
   test("schema evolution: mergeSchema adds a column; old versions keep theirs") {
     // The crawler's UPDATE_IN_DATABASE policy at the table layer: a CDC
     // feed starts shipping a new column. Default: dropped (a
