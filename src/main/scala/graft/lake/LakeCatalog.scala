@@ -982,9 +982,7 @@ final case class LakeTable(
     * capability check (dynamic overwrite has no V1 fallback — it needs
     * a real executor-side BatchWrite, which would bypass the manifest
     * commit): use a static `PARTITION (k=v)` spec — same
-    * partition-scoped result, filter pinned at analysis — or
-    * [[SnapshotTable.overwritePartitions]] for replace-what-the-batch-
-    * contains semantics. */
+    * partition-scoped result, filter pinned at analysis. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     requireWritable("INSERT")
     new WriteBuilder with SupportsTruncate with SupportsOverwrite {

@@ -65,17 +65,16 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * recomputed, never inverted.
   *
   * Crash/replay protocol (single-maintainer, like
-  * [[SnapshotTable.vacuum]]): a marker file `_mv/applied-v<N>` records
-  * which base version view version N reflects, and is published
-  * create-exclusively BEFORE the view commit it describes. A crash
-  * between marker and commit leaves a marker for a version that does
-  * not exist — the next refresh deletes it and recomputes from the
-  * intact previous marker. The partials sidecar updates BEFORE the
-  * marker and is idempotent (retired-directory tombstones + same-value
-  * re-upserts), so replaying a crashed refresh converges. Vacuuming
-  * the base below the last-applied version breaks the incremental path
-  * loudly; [[appliedBaseVersion]] exists to be passed to the base
-  * table's vacuum `protect` set.
+  * [[SnapshotTable.vacuum]]): every view commit records the base
+  * version it reflects in its own manifest (`#source`), so a view
+  * version and its anchor land in one atomic publish. A crash before
+  * that publish leaves the previous view version and its anchor
+  * intact, and the next refresh recomputes from there. The partials
+  * sidecar commits BEFORE the view and is idempotent (retired-directory
+  * tombstones + same-value re-upserts), so replaying a crashed refresh
+  * converges. Vacuuming the base below the last-applied version falls
+  * back to [[fullRefresh]]; [[appliedBaseVersion]] exists to be passed
+  * to the base table's vacuum `protect` set.
   */
 object MaterializedAgg {
 
@@ -146,6 +145,7 @@ object MaterializedAgg {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def mvMeta(root: String) = new Path(root, "_mv")
+  private def specPath(root: String) = new Path(mvMeta(root), "spec")
   private[lake] def auxRoot(mvRoot: String): String =
     new Path(mvRoot, "_mvpartials").toString
 
@@ -356,17 +356,18 @@ object MaterializedAgg {
       when(col(spec.countName) === 0L, lit("d")).otherwise(lit("u")))
   }
 
-  // ---- spec + applied-version sidecar ------------------------------
+  // ---- stored spec -------------------------------------------------
 
-  private[lake] def writeSideFile(
-      spark: SparkSession, root: String, name: String, content: String,
-      overwrite: Boolean): Unit = {
+  /** (Re)write `_mv/spec` — only [[init]] does, before the view's first
+    * commit, so a re-run after a crashed init replaces its file. */
+  private def writeSpec(
+      spark: SparkSession, root: String, content: String): Unit = {
     val f = fs(spark, root)
     f.mkdirs(mvMeta(root))
-    val fin = new Path(mvMeta(root), name)
-    if (overwrite) f.delete(fin, false)
+    val fin = specPath(root)
+    f.delete(fin, false)
     val tmp = new Path(mvMeta(root),
-      s".$name.${java.util.UUID.randomUUID()}.tmp")
+      s".spec.${java.util.UUID.randomUUID()}.tmp")
     val out = f.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
     if (!SnapshotTable.publishExclusive(f, tmp, fin))
@@ -375,10 +376,9 @@ object MaterializedAgg {
           "(concurrent maintainer? the contract is single-maintainer)")
   }
 
-  private[lake] def readSideFile(
-      spark: SparkSession, root: String, name: String): Option[String] = {
+  private def readSpec(spark: SparkSession, root: String): Option[String] = {
     val f = fs(spark, root)
-    val p = new Path(mvMeta(root), name)
+    val p = specPath(root)
     if (!f.exists(p)) None
     else {
       val in = f.open(p)
@@ -400,38 +400,39 @@ object MaterializedAgg {
       spec.kmvs.map { case (n, e) => s"kmv\t$n\t$e\t${spec.kmvK}" })
       .mkString("\n")
 
-  /** Base version that view version `v` reflects (None: no marker —
-    * either never initialized or a pre-marker crash). */
-  private[lake] def appliedAt(
-      spark: SparkSession, mvRoot: String, v: Int): Option[Int] =
-    readSideFile(spark, mvRoot, f"applied-v$v%08d").map(_.trim.toInt)
-
-  /** Base version the LATEST view version reflects — pass this to the
-    * base table's `vacuum(protect = ...)` so the next incremental
-    * refresh can still read its retraction side. */
+  /** Base version the LATEST view version reflects (its manifest's
+    * recorded source) — pass this to the base table's
+    * `vacuum(protect = ...)` so the next incremental refresh can still
+    * read its retraction side. */
   def appliedBaseVersion(
       spark: SparkSession, mvRoot: String): Option[Int] =
-    SnapshotTable.latest(spark, mvRoot).flatMap(appliedAt(spark, mvRoot, _))
+    SnapshotTable.sourceVersion(spark, mvRoot)
+
+  private def notAView(mvRoot: String, v: Int): String =
+    s"$mvRoot@v$v records no source base version — not a " +
+      "MaterializedAgg root (or a plain commit rewrote the view)"
 
   // ---- lifecycle ---------------------------------------------------
 
   /** Create the view: full aggregate of the base's LATEST version,
     * committed as view v1. Idempotent: an already-initialized root
-    * (with a marker) is left as-is. `nBuckets` fixes the view's
-    * key-hash partition count for its lifetime (stored alongside). */
+    * (whose latest version records its source) is left as-is. A root
+    * with versions but no recorded source is refused, so an MV never
+    * overwrites a plain table. `nBuckets` fixes the view's key-hash
+    * partition count for its lifetime (stored alongside). */
   def init(
       spark: SparkSession, baseRoot: String, mvRoot: String,
       spec: MvSpec, nBuckets: Int = 16): Int = {
     require(nBuckets > 0, "nBuckets must be positive")
-    val have = SnapshotTable.latest(spark, mvRoot)
-    if (have.exists(appliedAt(spark, mvRoot, _).isDefined)) return have.get
-    require(have.isEmpty,
-      s"$mvRoot has committed versions but no applied marker — not a " +
-        "MaterializedAgg root (or its _mv sidecar was deleted); " +
-        "rebuild under a fresh root")
-    writeSideFile(spark, mvRoot, "spec", specToText(spec, nBuckets),
-      overwrite = true)
-    fullRefresh(spark, baseRoot, mvRoot, spec, nBuckets)
+    SnapshotTable.latest(spark, mvRoot) match {
+      case Some(v) =>
+        require(SnapshotTable.manifestAt(spark, mvRoot, v).source.isDefined,
+          notAView(mvRoot, v) + "; rebuild under a fresh root")
+        v
+      case None =>
+        writeSpec(spark, mvRoot, specToText(spec, nBuckets))
+        fullRefresh(spark, baseRoot, mvRoot, spec, nBuckets)
+    }
   }
 
   /** Full recompute against the base's latest version, committed as
@@ -481,27 +482,22 @@ object MaterializedAgg {
     if (spec.auxNames.nonEmpty)
       SnapshotTable.write(spark, auxRoot(mvRoot),
         partialsFrame(base, spec, mmTypes, nBuckets), Seq(ABucketCol))
-    val target = SnapshotTable.latest(spark, mvRoot).getOrElse(0) + 1
-    writeSideFile(spark, mvRoot, f"applied-v$target%08d",
-      baseV.toString, overwrite = true)
-    val v = SnapshotTable.write(spark, mvRoot, full, Seq(BucketCol))
-    require(v == target, s"view commit landed at v$v, marker at " +
-      s"v$target — concurrent maintainer violates the single-" +
-      "maintainer contract")
-    v
+    SnapshotTable.writeDerived(spark, mvRoot, full, Seq(BucketCol), baseV)
   }
 
   /** Incremental refresh: fold every base commit since the last
     * applied version into the view, reading ONLY the changed
     * partitions at both versions (manifest diff) and only the view
     * buckets holding affected keys. No-op (same version returned) when
-    * the base has not advanced. Falls back to [[fullRefresh]] when the
-    * applied base version was vacuumed away. Returns the view version
-    * reflecting the base's latest. */
+    * the base has not advanced; a base advance that changes no row
+    * re-anchors in a metadata-only view commit. Every view commit
+    * records the base version it reflects. Falls back to
+    * [[fullRefresh]] when the applied base version was vacuumed away.
+    * Returns the view version reflecting the base's latest. */
   def refresh(
       spark: SparkSession, baseRoot: String, mvRoot: String,
       spec: MvSpec, nBuckets: Int = 16): Int = {
-    val stored = readSideFile(spark, mvRoot, "spec")
+    val stored = readSpec(spark, mvRoot)
     require(stored.isEmpty || stored.get == specToText(spec, nBuckets),
       s"spec drift under $mvRoot: the view was initialized with a " +
         "different aggregate/bucketing — rebuild under a fresh root " +
@@ -513,15 +509,12 @@ object MaterializedAgg {
     val latestB = SnapshotTable.latest(spark, baseRoot).getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot-table version committed under $baseRoot"))
-    val applied = appliedAt(spark, mvRoot, m).getOrElse(
-      throw new IllegalStateException(
-        s"view $mvRoot@v$m has no applied marker — the _mv sidecar " +
-          "is damaged; fullRefresh to re-anchor"))
+    // one fold of the view serves its recorded source and the schema
+    // that pins the delta's output types
+    val viewM = SnapshotTable.manifestAt(spark, mvRoot, m)
+    val applied = viewM.source.getOrElse(throw new IllegalStateException(
+      notAView(mvRoot, m) + "; fullRefresh to re-anchor"))
     if (applied == latestB) return m
-    // a marker for a view version that does not exist = a refresh that
-    // crashed after publishing its marker, before its commit — discard
-    fs(spark, mvRoot).delete(
-      new Path(mvMeta(mvRoot), f"applied-v${m + 1}%08d"), false)
     if (!SnapshotTable.hasVersion(spark, baseRoot, applied))
       return fullRefresh(spark, baseRoot, mvRoot, spec, nBuckets)
     // any sidecar-maintained column (min/max OR kmv) needs the
@@ -539,20 +532,17 @@ object MaterializedAgg {
     val oldMap = mOld.entries.toMap
     val newMap = mNew.entries.toMap
     val changed = SnapshotTable.changedKeysOf(mOld, mNew)
-    if (changed.isEmpty) {
-      // base advanced with identical data mapping (e.g. an empty
-      // upsert minting a version): re-anchor the marker, no commit
-      writeSideFile(spark, mvRoot, f"applied-v$m%08d",
-        latestB.toString, overwrite = true)
-      return m
-    }
+    // base advanced with identical data mapping (e.g. an empty upsert
+    // minting a version): re-anchor in a metadata-only view commit
+    if (changed.isEmpty)
+      return SnapshotTable.commitSource(spark, mvRoot, latestB)
     val oldKeys = changed.filter(oldMap.contains)
     val newKeys = changed.filter(newMap.contains)
 
     // 2. signed delta over ONLY the changed tuples' directories.
     // Output types come from the VIEW's own schema (pinned at init) —
     // a base read here would list every base directory just for types.
-    val viewSchema = SnapshotTable.read(spark, mvRoot, m).schema
+    val viewSchema = SnapshotTable.readState(spark, mvRoot, viewM).schema
     val types = spec.effSums.map { case (n, _) => viewSchema(n).dataType }
     val mmTypes = spec.mmNames.map(n => viewSchema(n).dataType)
     def changedRows(keys: Set[String], atVersion: Int): Option[DataFrame] =
@@ -600,21 +590,19 @@ object MaterializedAgg {
     val plainBuckets = if (trackAux) None else Some(bucketsOf(delta))
     if (plainBuckets.exists(_.isEmpty)) {
       // row-preserving rewrites only (OPTIMIZE, re-clustering): the
-      // view already equals base@latest — re-anchor without minting a
-      // content-identical version
+      // view already equals base@latest — re-anchor in a metadata-only
+      // commit, no content-identical data
       deltaAll.unpersist(false)
-      writeSideFile(spark, mvRoot, f"applied-v$m%08d",
-        latestB.toString, overwrite = true)
-      return m
+      return SnapshotTable.commitSource(spark, mvRoot, latestB)
     }
 
     // 3. min/max partials sidecar: dead directories tombstone, the
     // changed tuples' new directories get fresh partials, and affected
-    // groups re-derive their extrema from the sidecar alone. Runs
-    // BEFORE the marker: idempotent on replay (same tombstones, same
+    // groups re-derive their extrema from the sidecar alone. Lands
+    // BEFORE the view: idempotent on replay (same tombstones, same
     // values), so a crash anywhere re-converges. Tombstones are "every
     // sidecar row whose directory is not live at latest" — NOT just
-    // the applied-version diff's old dirs: a refresh that crashed
+    // the applied-to-latest diff's old dirs: a refresh that crashed
     // after its sidecar commit but before its view commit left
     // partials keyed to a directory generation BETWEEN applied and
     // latest, and once the base advances that generation appears in no
@@ -629,8 +617,7 @@ object MaterializedAgg {
     // commits), not of the commit having LANDED. So the sidecar commit
     // runs on a background thread while the main thread derives the
     // rollup and builds + materializes the view-merge batch; the view
-    // COMMIT still waits for the sidecar commit (await before the
-    // marker), so the crash protocol is unchanged: a failure anywhere
+    // PUBLISH still waits for the sidecar commit, so a failure anywhere
     // leaves "sidecar committed, view not" at worst — the documented
     // idempotent-replay window. Warm refresh = max(sidecar commit,
     // view prep) + view commit instead of their sum.
@@ -706,24 +693,19 @@ object MaterializedAgg {
     try {
     // 5. the view commit's Spark work (validation probe + staging
     // write) runs NOW, overlapping the background sidecar commit; the
-    // publish gate below holds only the manifest RENAME until the
-    // sidecar has landed and the applied marker exists — the same
-    // ordering as before (aux commit → marker → view publication),
-    // with the expensive stages concurrent instead of serial. The
-    // marker write is once-only so a conflict-retried attempt (which
-    // re-runs the gate) stays create-exclusive-clean.
-    val markerDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-    SnapshotTable.applyChanges(spark, mvRoot, viewChanges,
-      key = KeyCol, partitionBy = Seq(BucketCol), opCol = "_mv_op",
-      publishGate = () => {
-        auxTask.foreach(_.get()) // surfaces a sidecar failure pre-marker
-        if (markerDone.compareAndSet(false, true))
-          writeSideFile(spark, mvRoot, f"applied-v${m + 1}%08d",
-            latestB.toString, overwrite = false)
-      })
+    // publish gate holds only the manifest publish until the sidecar
+    // has landed (aux commit → view publication, with the expensive
+    // stages concurrent instead of serial). The publish records
+    // latestB as the view's source, atomically with its rows.
+    SnapshotTable.mergeKeyed(spark, mvRoot, viewChanges, KeyCol,
+      Seq(BucketCol), Some("_mv_op"), filesPerPartition = 1,
+      mergeSchema = false,
+      // surfaces a sidecar failure before the view publishes
+      publishGate = () => auxTask.foreach(_.get()),
+      source = Some(latestB))
     } finally viewChanges.unpersist(false)
     // the try covers steps 3-5: a failure ANYWHERE after the cache
-    // (sidecar commit, rollup, marker, view commit) must still release
+    // (sidecar commit, rollup, view commit) must still release
     // the cached delta — a long-lived CDC maintainer would otherwise
     // pin one dataset per failed refresh
     } finally {
@@ -736,14 +718,11 @@ object MaterializedAgg {
       auxChangesHeld.foreach(_.unpersist(false))
       deltaAll.unpersist(false)
     }
-    require(v == m + 1, s"view commit landed at v$v, marker at " +
-      s"v${m + 1} — concurrent maintainer violates the single-" +
-      "maintainer contract")
     v
   }
 
   /** Retention for the view AND its partials sidecar: old view
-    * versions serve only time travel (refresh reads latest + markers),
+    * versions serve only time travel (refresh reads only the latest),
     * so both tables vacuum to `keepVersions`. The BASE table's vacuum
     * is the caller's (protect [[appliedBaseVersion]] there — see
     * [[graft.streaming.CdcStream.TableMaintenance]]). */

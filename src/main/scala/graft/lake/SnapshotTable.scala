@@ -195,7 +195,14 @@ object SnapshotTable {
       // deletions into real bytes. deletedCount is the decoded
       // position count, recorded so metadata-only counts subtract
       // without decoding.
-      fileDvs: Seq[(String, Long, String)] = Nil)
+      fileDvs: Seq[(String, Long, String)] = Nil,
+      // the BASE version a derived table's rows reflect (`#source`
+      // line): recorded inside the same commit as the derived rows
+      // ([[MaterializedAgg]], [[graft.operators.TokenizedCorpus]]), so
+      // the anchor lands atomically with its data — Delta's streaming
+      // transaction identifier. Set only from package graft; a commit
+      // that does not set it carries the latest one, like the row key.
+      source: Option[Int] = None)
 
   /** One manifest FILE as written: either a full state (`deltaBase`
     * empty — the initial commit, a replace-all, or a checkpoint) or a
@@ -483,11 +490,13 @@ object SnapshotTable {
       val parts = l.split('\t')
       (parts(1), parts(2).toLong, parts(3))
     }
+    val source = lines.find(_.startsWith("#source\t"))
+      .map(_.stripPrefix("#source\t").trim.toInt)
     RawManifest(deltaBase, removed,
       Manifest(entries, schema, tabList("#statscols"), tabList("#clusterby"),
         fileStats, fileSizes, tabList("#partitionby"), tabList("#rowkey"),
         fileRows, tabList("#droppedphys"), tabList("#lookupcols"),
-        fileSketch, checks, tabList("#notnull"), fileDvs))
+        fileSketch, checks, tabList("#notnull"), fileDvs, source))
   }
 
   /** Fold one delta onto a base state. A key present in the delta's
@@ -532,7 +541,8 @@ object SnapshotTable {
         val replaced = d.m.fileDvs.map(_._1).toSet
         base.fileDvs.filter(x => live(x._1) && !replaced(x._1)) ++
           d.m.fileDvs
-      })
+      },
+      d.m.source.orElse(base.source))
   }
 
   /** A version's checkpoint sidecar, parsed — None when absent OR
@@ -593,6 +603,7 @@ object SnapshotTable {
         s"#check\t$n\t${java.net.URLEncoder.encode(e, "UTF-8")}" } ++
       (if (m.notNullCols.nonEmpty)
         Seq(("#notnull" +: m.notNullCols).mkString("\t")) else Nil) ++
+      m.source.map(s => s"#source\t$s") ++
       removed.map(k => s"#rm\t$k") ++
       m.fileStats.map(fs =>
         s"#f\t${fs.relPath}\t${fs.column}\t${encStat(fs.min)}\t${encStat(fs.max)}") ++
@@ -613,7 +624,7 @@ object SnapshotTable {
     * silently replaces the other's just-committed manifest; there we
     * publish via POSIX link(2) instead ([[java.nio.file.Files#createLink]]),
     * which is atomic and fails with EEXIST — no window at all. Shared
-    * with [[MaterializedAgg]]'s applied markers. */
+    * with [[MaterializedAgg]]'s spec file. */
   private[lake] def publishExclusive(
       f: org.apache.hadoop.fs.FileSystem, tmp: Path, fin: Path): Boolean = {
     val won =
@@ -788,8 +799,12 @@ object SnapshotTable {
     * A version whose manifest is EMPTY (every partition deleted) reads
     * as an empty frame with the schema the emptying commit recorded —
     * an emptied table is a table, not an error state. */
-  def read(spark: SparkSession, root: String, version: Int = -1): DataFrame = {
-    val m = manifestAt(spark, root, version)
+  def read(spark: SparkSession, root: String, version: Int = -1): DataFrame =
+    readState(spark, root, manifestAt(spark, root, version))
+
+  /** [[read]] of a state the caller already folded. */
+  private[lake] def readState(
+      spark: SparkSession, root: String, m: Manifest): DataFrame = {
     if (m.entries.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -2476,6 +2491,29 @@ object SnapshotTable {
         asDelta = true, Nil, () => next))
     }
 
+  /** The base version the latest commit of derived table `root`
+    * reflects (the manifest's `#source`); None on a never-written root
+    * or one no derived-table commit wrote. */
+  private[graft] def sourceVersion(
+      spark: SparkSession, root: String): Option[Int] =
+    latestVersion(spark, root).flatMap(readManifest(spark, root, _).source)
+
+  /** Re-anchor derived table `root` at base version `source` without
+    * touching data: its rows already reflect it (the base advanced with
+    * no change the table derives from). */
+  private[graft] def commitSource(
+      spark: SparkSession, root: String, source: Int): Int =
+    commitMetadata(spark, root)(_.copy(source = Some(source)))
+
+  /** [[write]] for a derived table: the replace records `source`, the
+    * base version its rows reflect. */
+  private[graft] def writeDerived(
+      spark: SparkSession, root: String, df: DataFrame,
+      partitionBy: Seq[String], source: Int, filesPerPartition: Int = 1,
+      statsFor: Seq[String] = Nil, clusterBy: Seq[String] = Nil): Int =
+    commitRewrite(spark, root, df, Replace(partitionBy, filesPerPartition,
+      statsFor, clusterBy, Nil, Some(source)))
+
   /** Append `rows` — plain INSERT semantics: no key, no dedup, every
     * row lands (SQL `INSERT INTO` through [[LakeCatalog]] routes
     * here). Partition layout comes from the manifest's recorded
@@ -2538,7 +2576,7 @@ object SnapshotTable {
       partitionBy: Seq[String], filesPerPartition: Int = 1,
       mergeSchema: Boolean = false): Int =
     mergeKeyed(spark, root, updates, key, partitionBy, None,
-      filesPerPartition, mergeSchema, () => ())
+      filesPerPartition, mergeSchema)
 
   /** Apply a MIXED change batch — upserts AND delete tombstones — in
     * ONE atomic commit (the shape a real CDC feed has: Debezium-style
@@ -2560,23 +2598,13 @@ object SnapshotTable {
     * still anti-join its key out of the live set, i.e. silently delete
     * — a malformed feed must fail loudly instead, round-9 advice
     * item 3). Non-key columns of a tombstone are ignored. Returns the
-    * new version.
-    *
-    * `publishGate` (round 20) runs AFTER the staging write/census/stats
-    * of an attempt and immediately BEFORE its manifest commit — the
-    * seam that lets a caller overlap this commit's Spark work with
-    * other work while still ordering the PUBLICATION after an external
-    * event (the incremental-MV refresh stages its view commit while
-    * the sidecar commit runs, and the gate awaits the sidecar + writes
-    * the applied marker). Must be idempotent: a conflict retry re-runs
-    * the whole attempt, gate included. */
+    * new version. */
   def applyChanges(
       spark: SparkSession, root: String, changes: DataFrame, key: String,
       partitionBy: Seq[String], opCol: String,
-      filesPerPartition: Int = 1, mergeSchema: Boolean = false,
-      publishGate: () => Unit = () => ()): Int =
+      filesPerPartition: Int = 1, mergeSchema: Boolean = false): Int =
     mergeKeyed(spark, root, changes, key, partitionBy, Some(opCol),
-      filesPerPartition, mergeSchema, publishGate)
+      filesPerPartition, mergeSchema)
 
   /** THE keyed merge behind [[upsert]], [[applyChanges]] and the CDC
     * drains: every batch key leaves the touched partitions' live rows
@@ -2594,12 +2622,21 @@ object SnapshotTable {
     * streaming re-execution cannot produce. A caller whose batch is a
     * multi-join worth holding (the incremental-MV refresh — its
     * batches are view-slice- and sidecar-sized by construction) caches
-    * BEFORE calling and keeps the lifecycle. */
+    * BEFORE calling and keeps the lifecycle.
+    *
+    * `publishGate` runs AFTER an attempt's staging write/census/stats
+    * and immediately BEFORE its manifest publish — the seam that lets
+    * the incremental-MV refresh stage its view commit while its
+    * sidecar commit runs, and still publish only after the sidecar
+    * landed. Must be idempotent: a conflict retry re-runs the whole
+    * attempt, gate included. `source` records the base version a
+    * derived table's merged rows reflect. */
   private[graft] def mergeKeyed(
       spark: SparkSession, root: String, batch: DataFrame, key: String,
       partitionBy: Seq[String], opCol: Option[String],
       filesPerPartition: Int, mergeSchema: Boolean,
-      publishGate: () => Unit): Int = {
+      publishGate: () => Unit = () => (),
+      source: Option[Int] = None): Int = {
     val touchedKeys = validateAndProbe(batch, key, opCol, partitionBy)
     val upserts = opCol.fold(batch)(c => batch.filter(col(c) =!= "d").drop(c))
     withConflictRetry {
@@ -2630,7 +2667,8 @@ object SnapshotTable {
         case _ => upserts // bootstrap
       }
       commitRewrite(spark, root, merged, Merge(partitionBy,
-        filesPerPartition, base, touchedKeys, Some(key), publishGate))
+        filesPerPartition, base, touchedKeys, Some(key), publishGate,
+        source))
     }
   }
 
@@ -2750,25 +2788,28 @@ object SnapshotTable {
     * partition tuples (escaped, `dropKeys` included) — an incremental
     * maintainer that derived its frame FROM a changed-partition diff
     * already knows the touched set exactly, and passing it skips one
-    * full evaluation of the frame (the distinct-keys job) per commit. */
-  def overwritePartitions(
+    * full evaluation of the frame (the distinct-keys job) per commit.
+    * `source` records the base version the derived rows reflect. */
+  private[graft] def overwritePartitions(
       spark: SparkSession, root: String, rows: DataFrame,
       partitionBy: Seq[String], dropKeys: Set[String] = Set.empty,
       filesPerPartition: Int = 1,
       statsFor: Seq[String] = Nil, clusterBy: Seq[String] = Nil,
-      knownTouched: Option[Set[String]] = None): Int =
+      knownTouched: Option[Set[String]] = None,
+      source: Option[Int] = None): Int =
     withConflictRetry {
       latestVersion(spark, root) match {
         case None =>
           // bootstrap declares stats/clustering; later overwrites inherit
           // the table's persisted declarations like every other mutation
-          write(spark, root, rows, partitionBy, filesPerPartition,
-            statsFor, clusterBy)
+          commitRewrite(spark, root, rows, Replace(partitionBy,
+            filesPerPartition, statsFor, clusterBy, Nil, source))
         case Some(v) =>
           val touched = knownTouched.getOrElse(
             touchedCompositeKeys(rows, partitionBy) ++ dropKeys)
           commitRewrite(spark, root, rows, Merge(partitionBy,
-            filesPerPartition, Some(readManifest(spark, root, v)), touched))
+            filesPerPartition, Some(readManifest(spark, root, v)), touched,
+            source = source))
       }
     }
 
@@ -2809,22 +2850,26 @@ object SnapshotTable {
 
   /** [[write]]: the rows ARE the new version (a full manifest), laid
     * out by `partitionBy` × `filesPerPartition` under the skip-read
-    * declarations the replace (re)states. */
+    * declarations the replace (re)states. A replace restates contents,
+    * so it records only its own `source`. */
   private final case class Replace(
       partitionBy: Seq[String], filesPerPartition: Int,
       statsFor: Seq[String], clusterBy: Seq[String],
-      lookupFor: Seq[String]) extends CommitRequest
+      lookupFor: Seq[String],
+      source: Option[Int] = None) extends CommitRequest
 
   /** The mutators: the rows are the merged content of the `touched`
     * partitions as read at `base` (None on a never-written root); the
     * table keeps `base`'s declarations, a keyed merge records `rowKey`
-    * (else the latest one carries), and `publishGate` runs after the
-    * attempt's Spark work, right before its publish. */
+    * and a derived-table merge `source` (else the latest ones carry),
+    * and `publishGate` runs after the attempt's Spark work, right
+    * before its publish. */
   private final case class Merge(
       partitionBy: Seq[String], filesPerPartition: Int,
       base: Option[Manifest], touched: Set[String],
       rowKey: Option[String] = None,
-      publishGate: () => Unit = () => ()) extends CommitRequest
+      publishGate: () => Unit = () => (),
+      source: Option[Int] = None) extends CommitRequest
 
   /** [[optimize]]: the rows are the `touched` partitions' unchanged
     * rows, already laid out by the caller, so the recorded schema stays
@@ -3098,7 +3143,7 @@ object SnapshotTable {
       }
     }
     val newStats = footers.flatMap(_._3) ++ aggStats
-    // caller's publication gate (see [[applyChanges]]): every Spark
+    // caller's publication gate (see [[mergeKeyed]]): every Spark
     // job of this attempt is done; only the manifest rename follows
     req match {
       case m: Merge => m.publishGate()
@@ -3176,10 +3221,17 @@ object SnapshotTable {
       // carried forward by every commit (including full replace)
       val checks = latestM.map(_.checks).getOrElse(Nil)
       val notNull = latestM.map(_.notNullCols).getOrElse(Nil)
+      // the derived-table anchor persists like the row key, except
+      // through a replace: new contents reflect no earlier source
+      val source = req match {
+        case r: Replace => r.source
+        case m: Merge => m.source.orElse(latestM.flatMap(_.source))
+        case _: Compact => latestM.flatMap(_.source)
+      }
       val payload = Manifest(moved, Some(schema), statsCols, clusterBy,
         newStats, newSizes, partitionBy, rowKey, newRowCounts,
         latestM.map(_.droppedPhys).getOrElse(Nil), lookupCols,
-        newSketches, checks, notNull)
+        newSketches, checks, notNull, source = source)
       Some(Publish(payload, asDelta, removed, () => {
         // fold in-memory from state already in hand — no re-read
         val untouched = latest.filterNot(e => touchedKeys(e._1))
@@ -3202,7 +3254,7 @@ object SnapshotTable {
           // dv lines of untouched directories carry; touched dirs'
           // deletions just got folded into the rewritten bytes
           latestM.map(_.fileDvs).getOrElse(Nil)
-            .filter(s => carried(s._1)))
+            .filter(s => carried(s._1)), source)
       }))
     }
   }

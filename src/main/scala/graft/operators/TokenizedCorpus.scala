@@ -70,15 +70,16 @@ import org.apache.spark.sql.functions._
   * ranking served from this table can never diverge on tokenization
   * (pinned in `TokenizedCorpusSpec` and oracle-gated via t46).
   *
-  * Crash/replay: `_tok/applied` records the reflected base version and
-  * is written AFTER the table commit; a crash in between replays the
-  * same partition overwrite (same content, idempotent) on the next
-  * refresh. Single-maintainer, like the MV layer.
+  * Crash/replay: every refresh commit records the base version it
+  * reflects in the postings manifest (`#source`), inside the same
+  * commit as its rows, so a crash leaves the previous version and its
+  * anchor intact and the next refresh re-derives from there.
+  * Single-maintainer, like the MV layer.
   *
-  * Format: `_tok/format` records the layout version. Pre-v3 roots
-  * (round 16: separate postings/stats/df tables) are rebuilt in full
-  * on their next [[refresh]] and refuse reads until then — loud,
-  * one-time, and only for roots that survived a code upgrade. */
+  * A root is current exactly when its postings manifest records a
+  * source. Any other root (an older layout, or a table no refresh
+  * wrote) is rebuilt in full on its next [[refresh]] and refuses reads
+  * until then — loud, one-time. */
 object TokenizedCorpus {
   import graft.lake.SnapshotTable
 
@@ -94,80 +95,29 @@ object TokenizedCorpus {
     * partition tuple. */
   val StatsTok = "#corpus"
 
-  /** Current on-disk layout version (see the format note above). */
-  private val FormatVersion = "3"
-
-  private def fs(spark: SparkSession, root: String) =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private lazy val log =
-    org.slf4j.LoggerFactory.getLogger(getClass)
-
   def postingsRoot(tokRoot: String): String =
     new Path(tokRoot, "postings").toString
-  // pre-v3 derived tables — only referenced to delete them on rebuild
-  private def legacyStatsRoot(tokRoot: String): String =
-    new Path(tokRoot, "stats").toString
-  private def legacyDfRoot(tokRoot: String): String =
-    new Path(tokRoot, "df").toString
 
-  private def appliedPath(tokRoot: String) =
-    new Path(tokRoot, "_tok/applied")
-  private def formatPath(tokRoot: String) =
-    new Path(tokRoot, "_tok/format")
-
-  /** Base version the tokenized table reflects (None: never built). */
+  /** Base version the tokenized table reflects — its postings
+    * manifest's recorded source (None: never built by a refresh). */
   def appliedBaseVersion(
       spark: SparkSession, tokRoot: String): Option[Int] =
-    readMarker(spark, appliedPath(tokRoot)).map(_.toInt)
+    SnapshotTable.sourceVersion(spark, postingsRoot(tokRoot))
 
-  private def readMarker(
-      spark: SparkSession, p: Path): Option[String] = {
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
-  }
-
-  private def writeMarker(
-      spark: SparkSession, tokRoot: String, p: Path, v: String): Unit = {
-    val f = fs(spark, tokRoot)
-    f.mkdirs(new Path(tokRoot, "_tok"))
-    val tmp = new Path(tokRoot,
-      s"_tok/.${p.getName}.${java.util.UUID.randomUUID()}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.getBytes("UTF-8")) finally out.close()
-    // plain rename, not create-exclusive: the marker is single-
-    // maintainer AND advisory — a torn/missing marker only means the
-    // next refresh replays idempotent partition overwrites
-    f.delete(p, false)
-    if (!f.rename(tmp, p))
-      throw new java.io.IOException(
-        s"tokenized-corpus marker rename failed under $tokRoot")
-  }
-
-  /** Roots confirmed at the current layout — format only ever moves
-    * forward, so a positive check is safe to memoize for the life of
+  /** Roots confirmed current — a refresh only ever keeps a source
+    * recorded, so a positive check is safe to memoize for the life of
     * the process (keeps the read paths at zero extra metadata I/O). */
-  private val v3Roots =
+  private val currentRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def formatCurrent(spark: SparkSession, tokRoot: String): Boolean =
-    v3Roots.contains(tokRoot) || {
-      val ok = readMarker(spark, formatPath(tokRoot))
-        .contains(FormatVersion)
-      if (ok) v3Roots.add(tokRoot)
+  private def requireCurrent(spark: SparkSession, tokRoot: String): Unit =
+    require(currentRoots.contains(tokRoot) || {
+      val ok = appliedBaseVersion(spark, tokRoot).isDefined
+      if (ok) currentRoots.add(tokRoot)
       ok
-    }
-
-  private def requireFormat(spark: SparkSession, tokRoot: String): Unit =
-    require(formatCurrent(spark, tokRoot),
-      s"tokenized corpus under $tokRoot predates layout v$FormatVersion " +
-        "(separate stats/df tables) — run TokenizedCorpus.refresh to " +
-        "migrate before reading")
+    }, s"tokenized corpus under $tokRoot records no source base version " +
+      "(an older layout, or not written by a refresh) — run " +
+      "TokenizedCorpus.refresh to rebuild before reading")
 
   /** The ONE tokenization pass a refresh pays: documents whose
     * tokenization is empty contribute NOTHING (dl = 0 documents are
@@ -226,25 +176,27 @@ object TokenizedCorpus {
     * First call builds it in full; later calls re-tokenize ONLY the
     * partitions whose base directories changed (manifest diff) and
     * overwrite those partitions in place — dropped base partitions
-    * drop here too. ONE commit either way. Returns the applied base
-    * version. No-op when already current. */
+    * drop here too. ONE commit either way, recording the base version
+    * it reflects; a base advance that changes no partition records it
+    * in a metadata-only commit. Returns the applied base version.
+    * No-op when already current. */
   def refresh(
       spark: SparkSession, baseRoot: String, tokRoot: String,
       partitionBy: Seq[String]): Int = {
     // hint + forward probe (SnapshotTable.latest), NOT a _versions
     // listing: per-batch CDC maintenance calls refresh every few
-    // minutes, and this resolution is the only metadata it pays on the
-    // already-current path (round-12 advice item 2 — the old
-    // versions().last here re-paid the O(retained-versions) LIST the
-    // hint pointer exists to eliminate, up to three times per call)
+    // minutes, and this resolution plus the postings manifest's fold
+    // is all the metadata it pays on the already-current path
+    // (round-12 advice item 2 — the old versions().last here re-paid
+    // the O(retained-versions) LIST the hint pointer exists to
+    // eliminate, up to three times per call)
     val latestB = SnapshotTable.latest(spark, baseRoot).getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot-table version committed under $baseRoot"))
-    val fmtOk = formatCurrent(spark, tokRoot)
     appliedBaseVersion(spark, tokRoot) match {
-      case Some(v) if fmtOk && v == latestB =>
+      case Some(v) if v == latestB =>
         latestB // already current
-      case Some(v) if fmtOk && SnapshotTable.hasVersion(spark, baseRoot, v) =>
+      case Some(v) if SnapshotTable.hasVersion(spark, baseRoot, v) =>
         val newMap = SnapshotTable.entriesFor(spark, baseRoot, latestB).toMap
         // dv-aware diff (round 18): a deletion-vector commit changes
         // rows without changing a directory — an entries-only compare
@@ -281,50 +233,31 @@ object TokenizedCorpus {
             SnapshotTable.overwritePartitions(spark, postingsRoot(tokRoot),
               rows, partitionBy,
               dropKeys = changed, filesPerPartition = PostingsFiles,
-              knownTouched = Some(changed))
+              knownTouched = Some(changed), source = Some(latestB))
           finally { rows.unpersist(false); pf.unpersist(false) }
         }
-        writeMarker(spark, tokRoot, appliedPath(tokRoot), latestB.toString)
+        // the base advanced but no partition changed: re-anchor in a
+        // metadata-only commit
+        else SnapshotTable.commitSource(spark, postingsRoot(tokRoot), latestB)
         latestB
       case _ =>
-        // never built, pre-v3 layout, or the applied version was
-        // vacuumed away: full (re)build against base@latest
+        // never built, no recorded source, or the applied version was
+        // vacuumed away: full rebuild against base@latest, replacing
+        // whatever the root held
         val pf = postingsFrame(tokenizedFrame(
           SnapshotTable.read(spark, baseRoot, latestB)), partitionBy)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        def staleKeys(root: String): Set[String] =
-          SnapshotTable.latest(spark, root)
-            .map(v => SnapshotTable.entriesFor(spark, root, v)
-              .map(_._1).toSet).getOrElse(Set.empty)
         // same union cache as the incremental branch: the sampling
         // pass fills it, the write reads memory (disk-spillable here —
         // the full build's union is corpus-sized)
         val rows = allRows(pf, partitionBy)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try
-          SnapshotTable.overwritePartitions(spark, postingsRoot(tokRoot),
-            rows, partitionBy,
-            dropKeys = staleKeys(postingsRoot(tokRoot)),
-            filesPerPartition = PostingsFiles,
+          SnapshotTable.writeDerived(spark, postingsRoot(tokRoot), rows,
+            partitionBy, latestB, filesPerPartition = PostingsFiles,
             statsFor = Seq("tok"), clusterBy = Seq("tok"))
         finally { rows.unpersist(false); pf.unpersist(false) }
-        // retire pre-v3 derived tables (no reader is allowed at them
-        // once the format marker says v3). Hadoop FS, not java.io —
-        // a scheme-qualified tokRoot (hdfs://, s3a://) is not a local
-        // File, and a silent no-op here would leak the retired tables
-        // forever. Failure to delete is a storage leak, not
-        // corruption (the format marker gates reads), so log and go.
-        val f = fs(spark, tokRoot)
-        Seq(legacyStatsRoot(tokRoot), legacyDfRoot(tokRoot)).foreach { r =>
-          val p = new org.apache.hadoop.fs.Path(r)
-          try { if (f.exists(p) && !f.delete(p, true))
-            log.warn(s"could not retire pre-v3 table at $r (leak, not corruption)")
-          } catch { case e: java.io.IOException =>
-            log.warn(s"could not retire pre-v3 table at $r: ${e.getMessage}") }
-        }
-        writeMarker(spark, tokRoot, formatPath(tokRoot), FormatVersion)
-        v3Roots.add(tokRoot)
-        writeMarker(spark, tokRoot, appliedPath(tokRoot), latestB.toString)
+        currentRoots.add(tokRoot)
         latestB
     }
   }
@@ -332,7 +265,7 @@ object TokenizedCorpus {
   /** The postings rows `(…, doc_id, dl, tok, tf)` at the latest
     * version — the one-scan shape for corpus-wide work. */
   def postings(spark: SparkSession, tokRoot: String): DataFrame = {
-    requireFormat(spark, tokRoot)
+    requireCurrent(spark, tokRoot)
     SnapshotTable.read(spark, postingsRoot(tokRoot))
       .where(col("doc_id").isNotNull)
   }
@@ -344,7 +277,7 @@ object TokenizedCorpus {
   def postingsForTerms(
       spark: SparkSession, tokRoot: String,
       terms: Seq[String]): DataFrame = {
-    requireFormat(spark, tokRoot)
+    requireCurrent(spark, tokRoot)
     SnapshotTable.readIn(
       spark, postingsRoot(tokRoot), "tok", terms.distinct)
       .where(col("doc_id").isNotNull)
@@ -354,7 +287,7 @@ object TokenizedCorpus {
     * rows — O(|partitions|) rows, pruned to the one [[StatsTok]]-
     * covering file per partition, never a document scan. */
   def corpusStats(spark: SparkSession, tokRoot: String): DataFrame = {
-    requireFormat(spark, tokRoot)
+    requireCurrent(spark, tokRoot)
     SnapshotTable.readIn(spark, postingsRoot(tokRoot), "tok", Seq(StatsTok))
       .agg(sum(col("tf")).cast("long").as("n_docs"),
         sum(col("dl")).cast("long").as("total_dl"))
@@ -367,7 +300,7 @@ object TokenizedCorpus {
     * never lag the postings it scores (round-16 advice item 3). */
   def dfForTerms(
       spark: SparkSession, tokRoot: String, terms: Seq[String]): DataFrame = {
-    requireFormat(spark, tokRoot)
+    requireCurrent(spark, tokRoot)
     SnapshotTable.readIn(spark, postingsRoot(tokRoot), "tok", terms.distinct)
       .where(col("doc_id").isNull)
       .groupBy(col("tok")).agg(sum(col("tf")).as("df"))

@@ -1516,9 +1516,9 @@ object Corpus {
     import graft.lake.{MaterializedAgg, SnapshotTable}
     import graft.lake.MaterializedAgg.MvSpec
     val baseRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
-      "graft_mv_base_v1")
+      "graft_mv_base_v2")
     val mvRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
-      "graft_mv_view_v1")
+      "graft_mv_view_v2")
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
@@ -1648,9 +1648,9 @@ object Corpus {
     import graft.lake.{MaterializedAgg, SnapshotTable}
     import graft.lake.MaterializedAgg.MvSpec
     val baseRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
-      "graft_mv2_base_v1")
+      "graft_mv2_base_v2")
     val mvRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
-      "graft_mv2_view_v1")
+      "graft_mv2_view_v2")
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))
@@ -1724,9 +1724,9 @@ object Corpus {
     import graft.lake.{MaterializedAgg, SnapshotTable}
     import graft.lake.MaterializedAgg.MvSpec
     val baseRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
-      "graft_mv3_base_v1")
+      "graft_mv3_base_v2")
     val mvRoot = graft.core.IndexRoot.of(dir, "documents.parquet",
-      "graft_mv3_view_v1")
+      "graft_mv3_view_v2")
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("text"), col("lang"), col("n_chars"),
         col("source"))

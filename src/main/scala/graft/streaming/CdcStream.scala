@@ -288,7 +288,7 @@ object CdcStream {
         // like any other field
         graft.lake.SnapshotTable.mergeKeyed(batch.sparkSession, root,
           reduced, key, partitionBy, opCol, filesPerPartition = 1,
-          mergeSchema = false, publishGate = () => ())
+          mergeSchema = false)
         maintenance.run(batch.sparkSession, root, partitionBy, bid)
       }
       .start()

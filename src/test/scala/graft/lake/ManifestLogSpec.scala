@@ -273,6 +273,33 @@ class ManifestLogSpec extends SparkSpec {
       Lane.vacuum(spark, lane, 30)).contains(versionsDirOf(lane)))
   }
 
+  test("the recorded source carries through mutations, OPTIMIZE and RESTORE") {
+    val root = tmpDir("mlog-source")
+    def src() = SnapshotTable.sourceVersion(spark, root)
+    // a derived-table bootstrap: over-fanned so OPTIMIZE has work
+    assert(SnapshotTable.overwritePartitions(spark, root,
+      spark.range(40L).select(
+        concat(lit("p"), (col("id") % 2).cast("string")).as("p"),
+        col("id").as("k")),
+      Seq("p"), filesPerPartition = 4, source = Some(7)) == 1)
+    assert(src().contains(7))
+    assert(SnapshotTable.optimize(spark, root, Seq("p")) == 2)
+    assert(src().contains(7), "a compaction must carry the source")
+    // a mutation that sets no source carries it too, like the row key
+    SnapshotTable.upsert(spark, root, Seq(("p0", 100L)).toDF("p", "k"),
+      "k", Seq("p"))
+    assert(src().contains(7))
+    assert(SnapshotTable.commitSource(spark, root, 9) == 4)
+    assert(src().contains(9))
+    // restore restates the restored version's source with its rows
+    assert(SnapshotTable.restore(spark, root, 2) == 5)
+    assert(src().contains(7))
+    // a plain replace restates contents that reflect no source
+    SnapshotTable.write(spark, root, Seq(("p0", 1L)).toDF("p", "k"),
+      Seq("p"))
+    assert(src().isEmpty)
+  }
+
   test("NaN/Infinity stat renderings never skip and never throw") {
     val root = tmpDir("mlog-nan")
     // three files by construction: finite-low, NaN-containing, finite-hi

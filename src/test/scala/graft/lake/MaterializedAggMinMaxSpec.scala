@@ -191,13 +191,18 @@ class MaterializedAggMinMaxSpec extends SparkSpec {
     val baseRoot = tmpDir("mm-base"); val mvRoot = tmpDir("mm-view")
     mkBase(baseRoot, seed)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
+    val before = viewRows(mvRoot)
+    val auxV = SnapshotTable.latest(spark, MaterializedAgg.auxRoot(mvRoot))
     SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L, Seq("source"))
-    // simulate: refresh ran the sidecar update + published its marker,
-    // then died before the view commit — replay must converge
-    val stale = new org.apache.hadoop.fs.Path(mvRoot, "_mv/applied-v00000002")
-    val hfs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = hfs.create(stale, true)
-    out.write("2".getBytes("UTF-8")); out.close()
+    // the refresh commits its sidecar update, then dies right before
+    // the view publish — replay must converge
+    ViewCrash.atViewPublish(spark, mvRoot)(
+      MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4))
+    assert(SnapshotTable.latest(spark, MaterializedAgg.auxRoot(mvRoot)) ==
+      auxV.map(_ + 1), "the sidecar commit landed before the crash")
+    assert(SnapshotTable.versions(spark, mvRoot) == Seq(1))
+    assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(1))
+    assert(viewRows(mvRoot) == before)
     val v = MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4)
     assert(v == 2)
     assert(viewRows(mvRoot) == oracle(baseRoot))

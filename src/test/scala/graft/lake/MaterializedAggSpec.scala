@@ -8,8 +8,9 @@ import graft.lake.MaterializedAgg.MvSpec
 /** Incremental materialized aggregate: refresh equals full recompute
   * after every kind of base mutation, refresh work is bounded by the
   * CHANGED partitions (proved destructively: an untouched partition's
-  * directory is deleted from disk and refresh still succeeds), and the
-  * marker protocol recovers from a crash between marker and commit. */
+  * directory is deleted from disk and refresh still succeeds), every
+  * view commit records the base version it reflects, and a crash before
+  * a view publish leaves the view and that anchor intact. */
 class MaterializedAggSpec extends SparkSpec {
   import spark.implicits._
 
@@ -117,16 +118,28 @@ class MaterializedAggSpec extends SparkSpec {
     assert(got.contains(("a", "en", 99L + 20L, 2L)))
   }
 
-  test("a row-preserving rewrite (OPTIMIZE) re-anchors without a commit") {
+  private def dataDirs(root: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(root, "data")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).toSet
+  }
+
+  test("a row-preserving OPTIMIZE re-anchors with a metadata-only commit") {
     val baseRoot = tmpDir("mv-base"); val mvRoot = tmpDir("mv-view")
     val df = seed.toDF("doc_id", "source", "lang", "n_chars")
     SnapshotTable.write(spark, baseRoot, df, Seq("source"),
       filesPerPartition = 4)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
+    val dirs = dataDirs(mvRoot)
     // compaction: new base version, identical rows
     assert(SnapshotTable.optimize(spark, baseRoot, Seq("source")) == 2)
-    assert(MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4) == 1)
-    assert(SnapshotTable.versions(spark, mvRoot) == Seq(1))
+    assert(MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4) == 2)
+    // one view version that only records the new source: no data
+    // directory written, same entries as v1
+    assert(SnapshotTable.versions(spark, mvRoot) == Seq(1, 2))
+    assert(dataDirs(mvRoot) == dirs)
+    assert(SnapshotTable.entriesFor(spark, mvRoot, 2) ==
+      SnapshotTable.entriesFor(spark, mvRoot, 1))
     assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(2))
     // and a REAL change after the re-anchor still folds correctly
     SnapshotTable.upsert(spark, baseRoot,
@@ -136,22 +149,78 @@ class MaterializedAggSpec extends SparkSpec {
     assert(mvRows(mvRoot) == fullAgg(SnapshotTable.read(spark, baseRoot)))
   }
 
-  test("a crash between marker publish and commit is recovered") {
+  test("a crash before the view publish is recovered") {
     val baseRoot = tmpDir("mv-base"); val mvRoot = tmpDir("mv-view")
     mkBase(baseRoot, seed)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
+    val before = mvRows(mvRoot)
     SnapshotTable.upsert(spark, baseRoot,
       Seq((1L, "a", "en", 50L)).toDF("doc_id", "source", "lang", "n_chars"),
       "doc_id", Seq("source"))
-    // simulate the crashed refresh: marker for v2 published, commit
-    // never happened
-    val stale = new org.apache.hadoop.fs.Path(mvRoot, "_mv/applied-v00000002")
-    val fs = stale.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(stale, true)
-    out.write("2".getBytes("UTF-8")); out.close()
+    ViewCrash.atViewPublish(spark, mvRoot)(
+      MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4))
+    // the crashed refresh left the view and its anchor as they were
+    assert(SnapshotTable.versions(spark, mvRoot) == Seq(1))
+    assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(1))
+    assert(mvRows(mvRoot) == before)
     val v = MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4)
     assert(v == 2)
     assert(mvRows(mvRoot) == fullAgg(SnapshotTable.read(spark, baseRoot)))
+  }
+
+  test("a crash at the re-anchor commit leaves the view refreshable") {
+    val baseRoot = tmpDir("mv-base"); val mvRoot = tmpDir("mv-view")
+    val df = seed.toDF("doc_id", "source", "lang", "n_chars")
+    SnapshotTable.write(spark, baseRoot, df, Seq("source"),
+      filesPerPartition = 4)
+    MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
+    // a row-preserving base commit: the refresh only re-anchors
+    assert(SnapshotTable.optimize(spark, baseRoot, Seq("source")) == 2)
+    ViewCrash.atViewPublish(spark, mvRoot)(
+      MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4))
+    assert(SnapshotTable.versions(spark, mvRoot) == Seq(1))
+    assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(1))
+    SnapshotTable.upsert(spark, baseRoot,
+      Seq((7L, "d", "en", 42L)).toDF("doc_id", "source", "lang", "n_chars"),
+      "doc_id", Seq("source"))
+    assert(MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4) == 2)
+    assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(3))
+    assert(mvRows(mvRoot) == fullAgg(SnapshotTable.read(spark, baseRoot)))
+  }
+
+  test("the applied base version reads right through view checkpoints and vacuum") {
+    val baseRoot = tmpDir("mv-base"); val mvRoot = tmpDir("mv-view")
+    mkBase(baseRoot, seed)
+    MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
+    // ten refreshes past CheckpointEvery = 8: odd rounds fold a row
+    // change, even rounds a metadata-only base commit (a re-anchor)
+    (1 to 10).foreach { i =>
+      if (i % 2 == 1)
+        SnapshotTable.upsert(spark, baseRoot,
+          Seq((100L + i, "a", "en", i.toLong))
+            .toDF("doc_id", "source", "lang", "n_chars"),
+          "doc_id", Seq("source"))
+      else SnapshotTable.declareKey(spark, baseRoot, "doc_id")
+      val v = MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4)
+      assert(v == i + 1)
+      assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot) ==
+        SnapshotTable.latest(spark, baseRoot))
+    }
+    val cp = new org.apache.hadoop.fs.Path(mvRoot,
+      s"_versions/v${"%08d".format(SnapshotTable.CheckpointEvery)}.checkpoint")
+    assert(cp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(cp))
+    // every view version records the base version it reflects
+    (1 to 11).foreach(v =>
+      assert(SnapshotTable.manifestAt(spark, mvRoot, v).source.contains(v)))
+    assert(mvRows(mvRoot) == fullAgg(SnapshotTable.read(spark, baseRoot)))
+    // the anchor lives in the view log alone: after a vacuum the
+    // latest version still reads it, and _mv holds only the spec
+    MaterializedAgg.vacuum(spark, mvRoot, keepVersions = 1)
+    assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(11))
+    val meta = new org.apache.hadoop.fs.Path(mvRoot, "_mv")
+    assert(meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(meta).map(_.getPath.getName)
+      .filterNot(_.startsWith(".")).toSeq == Seq("spec"))
   }
 
   test("vacuumed-away applied version falls back to full recompute") {

@@ -92,27 +92,11 @@ class ReviewRegressionSpec extends SparkSpec {
     // base commit 1: g1 gains a NEW minimum (v=1)
     SnapshotTable.upsert(spark, baseRoot,
       Seq((4L, "g1", 1L)).toDF("id", "g", "v"), "id", Seq("g"))
-    // R1 "crashes" after its sidecar update, before its view commit:
-    // run the sidecar half by hand — a refresh against a COPY of the
-    // marker state. Simplest faithful simulation: full refresh now,
-    // then delete the view's latest version files to mimic the lost
-    // commit while keeping the sidecar's newer generation.
-    val mvV = SnapshotTable.versions(spark, mvRoot).last
-    MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4)
-    val committed = SnapshotTable.versions(spark, mvRoot).last
-    assert(committed == mvV + 1)
-    // roll the VIEW back to the pre-refresh version (manifest delete =
-    // the crash landed between sidecar and view commit); the marker
-    // for the rolled-back version must go too
-    val f = new Path(mvRoot).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    assert(f.delete(
-      new Path(mvRoot, f"_versions/v$committed%08d.manifest"), false))
-    f.delete(new Path(mvRoot, f"_versions/v$committed%08d.checkpoint"),
-      false)
-    f.delete(new Path(mvRoot, "_versions/_latest.hint"), false)
-    assert(f.delete(
-      new Path(mvRoot, f"_mv/applied-v$committed%08d"), false))
+    // R1 "crashes" after its sidecar commit, before its view publish
+    val mvV = SnapshotTable.latest(spark, mvRoot)
+    ViewCrash.atViewPublish(spark, mvRoot)(
+      MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4))
+    assert(SnapshotTable.latest(spark, mvRoot) == mvV)
     // base commit 2: the interim minimum (v=1) is DELETED — its dir
     // generation now appears in no applied->latest diff
     SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 4L, Seq("g"))

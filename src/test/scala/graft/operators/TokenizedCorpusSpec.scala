@@ -97,28 +97,51 @@ class TokenizedCorpusSpec extends SparkSpec {
       "new term's df row must land in the same commit as its postings")
   }
 
-  test("pre-v3 roots refuse reads loudly and migrate on refresh") {
+  test("a source-less root refuses reads; refresh rebuilds it") {
     val baseRoot = tmpDir("tok-base"); val tokRoot = tmpDir("tok-idx")
     mkBase(baseRoot, seed)
-    TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source"))
-    // simulate a root written by the previous layout: no format marker
-    // (a genuine pre-v3 root also has stats/df tables; their absence
-    // only makes this stricter). Use a FRESH logical root path so the
-    // in-process format memo cannot mask the missing marker.
-    val legacy = tmpDir("tok-idx-legacy")
-    val hfs = new org.apache.hadoop.fs.Path(tokRoot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(hfs.rename(new org.apache.hadoop.fs.Path(tokRoot, "postings"),
-      new org.apache.hadoop.fs.Path(legacy, "postings")))
+    // a postings table no refresh wrote: a plain write records no
+    // source base version (an older layout's root reads the same)
+    SnapshotTable.write(spark, TokenizedCorpus.postingsRoot(tokRoot),
+      Seq(("a", 1L, 3L, "stale", 1L)).toDF("source", "doc_id", "dl", "tok", "tf"),
+      Seq("source"))
     val e = intercept[IllegalArgumentException] {
-      TokenizedCorpus.corpusStats(spark, legacy).collect()
+      TokenizedCorpus.corpusStats(spark, tokRoot).collect()
     }
-    assert(e.getMessage.contains("predates layout"), e.getMessage)
-    // refresh migrates: full rebuild + format marker; reads serve again
-    TokenizedCorpus.refresh(spark, baseRoot, legacy, Seq("source"))
-    val stats = TokenizedCorpus.corpusStats(spark, legacy).collect()(0)
+    assert(e.getMessage.contains("records no source"), e.getMessage)
+    // refresh rebuilds it in full and records the source; reads serve
+    TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source"))
+    assert(TokenizedCorpus.appliedBaseVersion(spark, tokRoot).contains(1))
+    val stats = TokenizedCorpus.corpusStats(spark, tokRoot).collect()(0)
     assert((stats.getLong(0), stats.getLong(1)) == (5L, 17L))
-    assert(postingsSet(legacy) == oracle(baseRoot))
+    assert(postingsSet(tokRoot) == oracle(baseRoot))
+  }
+
+  test("every refresh records its source in the postings log; no _tok files") {
+    val baseRoot = tmpDir("tok-base"); val tokRoot = tmpDir("tok-idx")
+    val postRoot = TokenizedCorpus.postingsRoot(tokRoot)
+    mkBase(baseRoot, seed)
+    TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source"))
+    SnapshotTable.upsert(spark, baseRoot,
+      Seq((1L, "a", "changed text")).toDF("doc_id", "source", "text"),
+      "doc_id", Seq("source"))
+    assert(TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source")) == 2)
+    assert(TokenizedCorpus.appliedBaseVersion(spark, tokRoot).contains(2))
+    // the base advances with no partition change: one metadata-only
+    // postings version re-anchors it
+    SnapshotTable.declareKey(spark, baseRoot, "doc_id")
+    val pv = SnapshotTable.latest(spark, postRoot).get
+    assert(TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source")) == 3)
+    assert(SnapshotTable.latest(spark, postRoot).contains(pv + 1))
+    assert(SnapshotTable.entriesFor(spark, postRoot, pv + 1) ==
+      SnapshotTable.entriesFor(spark, postRoot, pv))
+    assert(TokenizedCorpus.appliedBaseVersion(spark, tokRoot).contains(3))
+    TokenizedCorpus.vacuum(spark, tokRoot, keepVersions = 1)
+    assert(TokenizedCorpus.appliedBaseVersion(spark, tokRoot).contains(3))
+    assert(postingsSet(tokRoot) == oracle(baseRoot))
+    val tokMeta = new org.apache.hadoop.fs.Path(tokRoot, "_tok")
+    assert(!tokMeta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(tokMeta))
   }
 
   test("refresh re-tokenizes ONLY changed partitions (destructive)") {
