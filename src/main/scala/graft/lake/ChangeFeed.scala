@@ -119,23 +119,18 @@ object ChangeFeed {
       val oldE: Map[String, String] =
         oldM.map(_.entries.toMap).getOrElse(Map.empty)
       val newE = newM.entries.toMap
-      // a deletion-vector commit moves rows without moving a directory:
-      // partitions whose dir is UNCHANGED but whose dv lines differ are
-      // changed too (the dv-aware reads at the two versions then yield
-      // the newly-deleted rows as ordinary deletes)
-      val oldDv = oldM.map(dvStateByDir).getOrElse(Map.empty)
-      val newDv = dvStateByDir(newM)
-      val changed = (oldE.keySet ++ newE.keySet)
-        .filter(k => oldE.get(k) != newE.get(k) ||
-          (newE.get(k).exists(d =>
-            oldDv.getOrElse(d, Map.empty) != newDv.getOrElse(d, Map.empty))))
+      // the dv-aware diff: a deletion-vector commit moves rows without
+      // moving a directory, and the dv-aware reads at the two versions
+      // then yield the newly-deleted rows as ordinary deletes
+      val changed =
+        oldM.fold(newE.keySet)(SnapshotTable.changedKeysOf(_, newM))
       val old =
         if (v == 1 || changed.forall(!oldE.contains(_))) None
-        else Some(SnapshotTable.selectDirs(spark, root, v - 1,
+        else Some(SnapshotTable.selectDirs(spark, root, oldM.get,
           k => changed(k) && oldE.contains(k)))
       val nw =
         if (changed.forall(!newE.contains(_))) None
-        else Some(SnapshotTable.selectDirs(spark, root, v,
+        else Some(SnapshotTable.selectDirs(spark, root, newM,
           k => changed(k) && newE.contains(k)))
       (v, old, nw)
     }
@@ -160,10 +155,7 @@ object ChangeFeed {
         if (df.columns.contains(name)) col(name).cast(dt)
         else lit(null).cast(dt).as(name)
       }.toSeq: _*)
-    val empty = align(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        latestSchema))
+    val empty = align(SnapshotTable.emptyFrame(spark, latestSchema))
 
     val parts = steps.flatMap { case (v, o, n) =>
       stepDiff(o.map(align), n.map(align), v.toLong)
@@ -212,23 +204,19 @@ object ChangeFeed {
     val oldE: Map[String, String] =
       oldM.map(_.entries.toMap).getOrElse(Map.empty)
     val newE = newM.entries.toMap
-    // same dv-awareness as between(): an unchanged directory whose
+    // same dv-aware diff as between(): an unchanged directory whose
     // deletion vectors moved across the range is a changed partition
-    val oldDv = oldM.map(dvStateByDir).getOrElse(Map.empty)
-    val newDv = dvStateByDir(newM)
-    val changed = (oldE.keySet ++ newE.keySet)
-      .filter(k => oldE.get(k) != newE.get(k) ||
-        (newE.get(k).exists(d =>
-          oldDv.getOrElse(d, Map.empty) != newDv.getOrElse(d, Map.empty))))
+    val changed =
+      oldM.fold(newE.keySet)(SnapshotTable.changedKeysOf(_, newM))
 
     val latestSchema = feedBaseSchema(spark, root, toV)
     val old =
       if (fromVersion == 0 || changed.forall(!oldE.contains(_))) None
-      else Some(SnapshotTable.selectDirs(spark, root, fromVersion,
+      else Some(SnapshotTable.selectDirs(spark, root, oldM.get,
         k => changed(k) && oldE.contains(k)))
     val nw =
       if (changed.forall(!newE.contains(_))) None
-      else Some(SnapshotTable.selectDirs(spark, root, toV,
+      else Some(SnapshotTable.selectDirs(spark, root, newM,
         k => changed(k) && newE.contains(k)))
 
     val cols = scala.collection.mutable.LinkedHashMap[String, DataType](
@@ -246,10 +234,7 @@ object ChangeFeed {
         if (df.columns.contains(name)) col(name).cast(dt)
         else lit(null).cast(dt).as(name)
       }.toSeq: _*)
-    val empty = align(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        latestSchema))
+    val empty = align(SnapshotTable.emptyFrame(spark, latestSchema))
     // same one-pass diff as [[between]]'s steps
     stepDiff(old.map(align), nw.map(align), toV.toLong)
       .reduceOption(_.union(_))
@@ -331,13 +316,6 @@ object ChangeFeed {
       spark: SparkSession, root: String, version: Int): StructType =
     SnapshotTable.read(spark, root, version).schema
 
-  /** Per-directory deletion-vector state (file -> encoded dv) — two
-    * versions of a directory are row-identical iff the dir (immutable)
-    * AND this map are equal. */
-  private def dvStateByDir(m: SnapshotTable.Manifest)
-      : Map[String, Map[String, String]] =
-    m.fileDvs.groupBy(d => d._1.take(d._1.lastIndexOf('/')))
-      .map { case (d, dvs) => d -> dvs.map(x => x._1 -> x._3).toMap }
 
   private def containsMap(dt: DataType): Boolean = dt match {
     case _: MapType => true

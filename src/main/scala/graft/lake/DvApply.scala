@@ -18,8 +18,9 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
   *    partition filters, per-file sketch admission, and pruned
   *    planner statistics;
   *  - dv-CARRYING directories are served by the dv-aware API read
-  *    ([[SnapshotTable.readDvDirs]] — ManifestScan over just those
-  *    directories plus the broadcast position anti-join);
+  *    ([[SnapshotTable.readDirs]] over the relation's own folded
+  *    manifest — ManifestScan over just those directories plus the
+  *    broadcast position anti-join);
   *
   * and the two halves union under a projection re-labeled to the
   * relation's original attribute ids, so the surrounding plan is
@@ -93,7 +94,7 @@ object DvApply extends Rule[LogicalPlan] {
           new org.apache.hadoop.fs.Path(lt.root, rd).toString) => rd
       }.distinct
       val dirtyChild = SnapshotTable
-        .readDvDirs(spark, lt.root, lt.snapshotVersion, dirtyRel)
+        .readDirs(spark, lt.root, m, dirtyRel)
         .queryExecution.optimizedPlan
       // re-label by NAME onto target attributes — both halves serve
       // the same recorded schema, so the mapping must be total.
@@ -119,7 +120,7 @@ object DvApply extends Rule[LogicalPlan] {
         return alignTo(rel.output, dirtyChild, pinIds = true)
           .map(Project(_, dirtyChild))
       val cleanTable = lt.copy(paths = cleanPaths,
-        keyedDirs = lt.keyedDirs.filterNot(kd => dirtyAbs(kd._2)))
+        keyedDirs = lt.keyedDirs.filterNot(kd => dirtyAbs(kd._2)))(m)
       // fresh attribute ids for the union's head child — the original
       // ids live on the re-labeling Project above the union, where the
       // surrounding plan expects them

@@ -178,22 +178,24 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
       throw new IllegalArgumentException(
         s"unknown version v$version of $display (root $root)")
     }
-    val (dirs, schema) = SnapshotTable.scanInputs(s, root, version)
+    // ONE fold of the version serves the table's every derived field
+    // and, through the second parameter list, its planner-time reads
+    val m = SnapshotTable.manifestAt(s, root, version)
     // (escaped partition key -> absolute dir) pairs power the scan's
     // manifest-dir pruning on partition filters
-    val keyed = SnapshotTable.entriesFor(s, root, version).map {
-      case (k, rel) =>
-        k -> new org.apache.hadoop.fs.Path(root, rel).toString
+    val keyed = m.entries.map { case (k, rel) =>
+      k -> new org.apache.hadoop.fs.Path(root, rel).toString
     }
     // DML only against the live table: a VERSION AS OF load, an
     // @vN-pinned binding, or a LANE pin all name an immutable
     // historical state — a lane session reading a consistent cut
     // must not mutate a latest it is not even reading
-    LakeTable(s"$display@v$version", root, version, dirs, schema,
+    LakeTable(s"$display@v$version", root, version, keyed.map(_._2),
+      m.schema,
       writable = versionOverride.isEmpty && pinned.isEmpty &&
         lanePin.isEmpty,
-      partitionCols = SnapshotTable.partitionColumns(s, root, version),
-      keyedDirs = keyed)
+      partitionCols = m.partitionBy,
+      keyedDirs = keyed)(m)
   }
 
   private def readOnly: Nothing =
@@ -690,19 +692,23 @@ object LakeCatalog {
 
 /** One immutable snapshot version as a read-only DSv2 table: the scan
   * delegates to Spark's parquet [[FileTable]] over exactly this
-  * version's data directories with the manifest-recorded schema pinned
-  * (None only for a manifest written before the schema line existed →
-  * footer inference with mergeSchema, like [[SnapshotTable.read]]'s
-  * no-recorded-schema path). A case class so two loads of the same
-  * (name, root, version) are EQUAL — DataSourceV2Relation
-  * canonicalization compares the table, and [[graft.security.Rbac]]'s
-  * sanctioned-subtree check needs role-view loads to canonicalize
-  * identically across analyses. */
+  * version's data directories with the manifest-recorded schema
+  * pinned. A case class so two loads of the same (name, root, version)
+  * are EQUAL — DataSourceV2Relation canonicalization compares the
+  * table, and [[graft.security.Rbac]]'s sanctioned-subtree check needs
+  * role-view loads to canonicalize identically across analyses. The
+  * version's folded `manifest` rides in the second parameter list: out
+  * of equality (the first list already derives from it), and the one
+  * fold the planner (scan pruning, [[MetadataAggregate]], [[DvApply]],
+  * the census statistics) consults across every optimizer iteration —
+  * a version's folded state is immutable, and a fresh catalog
+  * resolution always folds afresh. */
 final case class LakeTable(
     tableName: String, root: String, snapshotVersion: Int,
-    paths: Seq[String], recordedSchema: Option[StructType],
+    paths: Seq[String], recordedSchema: StructType,
     writable: Boolean = false, partitionCols: Seq[String] = Nil,
-    keyedDirs: Seq[(String, String)] = Nil)
+    keyedDirs: Seq[(String, String)] = Nil)(
+    private[lake] val manifest: SnapshotTable.Manifest)
   extends Table with SupportsRead with SupportsWrite with SupportsDelete
   with org.apache.spark.sql.connector.catalog.SupportsPartitionManagement {
 
@@ -716,26 +722,21 @@ final case class LakeTable(
     SnapshotTable.mappingOf(recordedSchema)
 
   private def physSchema: Option[StructType] =
-    recordedSchema.map(SnapshotTable.physicalSchema)
+    Some(SnapshotTable.physicalSchema(recordedSchema))
 
-  @transient private lazy val delegate =
+  private def parquetTable(
+      options: CaseInsensitiveStringMap, dirs: Seq[String]) =
     org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-      tableName, SparkSession.active, baseOptions, paths, physSchema,
+      tableName, SparkSession.active, options, dirs, physSchema,
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-
-  private def baseOptions = new CaseInsensitiveStringMap(
-    (if (recordedSchema.isEmpty) Map("mergeSchema" -> "true")
-     else Map.empty[String, String]).asJava)
 
   override def name(): String = tableName
 
-  override def schema(): StructType =
-    recordedSchema.getOrElse((delegate: Table).schema())
+  override def schema(): StructType = recordedSchema
 
   /** The manifest-recorded partition columns as identity transforms —
     * what lets a static `INSERT OVERWRITE … PARTITION (k=v)` spec
-    * validate and land as an overwrite-by-filter. Empty for
-    * pre-recording manifests (no declared layout to name). */
+    * validate and land as an overwrite-by-filter. */
   override def partitioning(): Array[Transform] =
     partitionCols.map(c =>
       org.apache.spark.sql.connector.expressions.Expressions.identity(c))
@@ -751,10 +752,8 @@ final case class LakeTable(
   // committed mutations (INSERT/DELETE/MERGE/applyChanges), never as
   // out-of-band metadata surgery.
   override def partitionSchema(): StructType = {
-    val types = recordedSchema
-      .map(s => s.fields.map(f =>
-        f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap)
-      .getOrElse(Map.empty[String, org.apache.spark.sql.types.DataType])
+    val types = recordedSchema.fields.map(f =>
+      f.name.toLowerCase(java.util.Locale.ROOT) -> f.dataType).toMap
     StructType(partitionCols.map(c => org.apache.spark.sql.types
       .StructField(c, types.getOrElse(
         c.toLowerCase(java.util.Locale.ROOT),
@@ -831,45 +830,31 @@ final case class LakeTable(
     * without listing a file: broadcast-vs-shuffle join decisions on a
     * governed table see the bytes of the partitions the query actually
     * reads, plus an exact row count parquet's listing-based estimate
-    * never carries. Rows are None for any directory whose census
-    * predates the `#n` recording. */
-  /** This snapshot version's folded manifest, read ONCE per resolved
-    * table instance: the planner (scan pruning, [[MetadataAggregate]],
-    * the census below) may consult it across several optimizer
-    * iterations, and a version's folded state is immutable — while a
-    * fresh catalog resolution always constructs a fresh instance and
-    * re-reads. */
-  @transient private[lake] lazy val manifest: SnapshotTable.Manifest =
-    SnapshotTable.manifestAt(SparkSession.active, root, snapshotVersion)
-
+    * never carries. Rows are None for a directory holding a file
+    * without its `#n` line. */
   @transient private lazy val dirCensus
       : Map[String, (Long, Option[Long])] = {
     val m = manifest
-    def dirOf(rel: String): String = rel.take(rel.lastIndexOf('/'))
-    val byDir = m.fileSizes.groupBy(e => dirOf(e._1))
     val rowsByFile = m.fileRows.toMap
     // planner stats see LIVE rows: deletion-vector positions subtract
     val dvByFile = m.fileDvs.map(d => d._1 -> d._2).toMap
-    m.entries.flatMap { case (_, rel) =>
-      byDir.get(rel).map { fs =>
-        val files = fs.map(_._1)
-        val rows =
-          if (files.forall(rowsByFile.contains))
-            Some(files.map(f =>
-              rowsByFile(f) - dvByFile.getOrElse(f, 0L)).sum)
-          else None
-        new org.apache.hadoop.fs.Path(root, rel).toString ->
-          (fs.map(_._2).sum, rows)
-      }
+    m.entries.map { case (_, rel) =>
+      val fs = m.filesByDir(rel)
+      val rows =
+        if (fs.forall(f => rowsByFile.contains(f._1)))
+          Some(fs.map(f =>
+            rowsByFile(f._1) - dvByFile.getOrElse(f._1, 0L)).sum)
+        else None
+      new org.apache.hadoop.fs.Path(root, rel).toString ->
+        (fs.map(_._2).sum, rows)
     }.toMap
   }
 
   /** SQL-plane sketch pruning (round 16): from the pushed catalyst
     * filters, the (absPath, bytes, rows) file subset the per-file
     * Bloom sketches admit within the partition-surviving directories —
-    * None when no equality on a declared lookup column is pushed, when
-    * a surviving directory lacks the byte census (we will not LIST
-    * just to sketch-prune), or when nothing would be skipped. */
+    * None when no equality on a declared lookup column is pushed, or
+    * when nothing would be skipped. */
   private[lake] def sketchPrunedFiles(
       filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       survivingAbsDirs: Seq[String])
@@ -887,19 +872,15 @@ final case class LakeTable(
     if (admits.isEmpty) return None
     val surviving = survivingAbsDirs.toSet
     val rowsByFile = m.fileRows.toMap
-    val candidates = m.fileSizes.flatMap { case (rel, len) =>
-      val relDir = rel.take(rel.lastIndexOf('/'))
-      val absDir = new org.apache.hadoop.fs.Path(root, relDir).toString
-      if (!surviving(absDir)) None
-      else Some((rel, absDir,
-        new org.apache.hadoop.fs.Path(root, rel).toString, len))
+    val candidates = m.entries.flatMap { case (_, rel) =>
+      if (!surviving(new org.apache.hadoop.fs.Path(root, rel).toString)) Nil
+      else m.filesByDir(rel)
     }
-    // bail unless the census covers every surviving dir: a dir with no
-    // census files would silently vanish from the scan
-    if (candidates.map(_._2).toSet != surviving) return None
     val kept = candidates.filter(c => admits.forall(f => f(c._1)))
     if (kept.size == candidates.size) None // nothing skipped: keep dirs
-    else Some(kept.map(c => (c._3, c._4, rowsByFile.get(c._1))))
+    else Some(kept.map { case (rel, len) =>
+      (new org.apache.hadoop.fs.Path(root, rel).toString, len,
+        rowsByFile.get(rel)) })
   }
 
   override def newScanBuilder(
@@ -939,13 +920,11 @@ final case class LakeTable(
               "OPTIMIZE first")
       }
     }
-    val merged = new CaseInsensitiveStringMap(
-      (baseOptions.asScala ++ options.asScala).asJava)
     val mapped: ScanBuilder => ScanBuilder =
       if (colMapping.isEmpty) identity
-      else sb => new MappedScanBuilder(sb, recordedSchema.get)
-    if (keyedDirs.isEmpty || partitionCols.isEmpty)
-      mapped(delegate.newScanBuilder(merged))
+      else sb => new MappedScanBuilder(sb, recordedSchema)
+    if (keyedDirs.isEmpty)
+      mapped(parquetTable(options, paths).newScanBuilder(options))
     else
       // partition filters prune manifest DIRECTORIES before the
       // parquet source ever lists a file — the SQL plane's analog of
@@ -953,11 +932,7 @@ final case class LakeTable(
       // not open every directory's footers just to discard their rows
       new LakePruningScanBuilder(keyedDirs, partitionCols,
         recordedSchema,
-        ps => mapped(org.apache.spark.sql.execution.datasources.v2.parquet
-          .ParquetTable(tableName, SparkSession.active, merged, ps,
-            physSchema,
-            classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-          .newScanBuilder(merged)),
+        ps => mapped(parquetTable(options, ps).newScanBuilder(options)),
         () => dirCensus,
         sketchPrunedFiles)
   }
@@ -1004,12 +979,6 @@ final case class LakeTable(
             new InsertableRelation {
               override def insert(data: DataFrame, ov: Boolean): Unit = {
                 val s = SparkSession.active
-                val pby = SnapshotTable.partitionColumns(s, root)
-                if (pby.isEmpty) throw new UnsupportedOperationException(
-                  s"$tableName has no recorded partition columns (last " +
-                    "commit predates the #partitionby manifest line); " +
-                    "run any API mutation to record the layout, then " +
-                    "INSERT by name")
                 ow match {
                   case None =>
                     SnapshotTable.append(s, root, data)
@@ -1018,7 +987,8 @@ final case class LakeTable(
                     // write() redeclares, so restate them explicitly
                     val (stats, cluster) =
                       SnapshotTable.declaredColumns(s, root)
-                    SnapshotTable.write(s, root, data, pby,
+                    SnapshotTable.write(s, root, data,
+                      SnapshotTable.partitionColumns(s, root),
                       statsFor = stats, clusterBy = cluster,
                       lookupFor = SnapshotTable.lookupColumns(s, root))
                   case Some(fs) =>
@@ -1051,10 +1021,6 @@ final case class LakeTable(
   override def deleteWhere(filters: Array[sources.Filter]): Unit = {
     requireWritable("DELETE")
     val s = SparkSession.active
-    val pby = SnapshotTable.partitionColumns(s, root)
-    if (pby.isEmpty) throw new UnsupportedOperationException(
-      s"$tableName has no recorded partition columns; run any API " +
-        "mutation to record the layout, then DELETE by name")
     val pred = LakeFilters.translate(filters).getOrElse(
       throw new UnsupportedOperationException(
         s"untranslatable DELETE predicate: ${filters.mkString(", ")}"))
@@ -1062,7 +1028,7 @@ final case class LakeTable(
         "merge-on-read")
       SnapshotTable.deleteRowsWhere(s, root, pred)
     else
-      SnapshotTable.deleteWhere(s, root, pred, pby)
+      SnapshotTable.deleteWhere(s, root, pred)
   }
 }
 
@@ -1097,7 +1063,7 @@ final case class LakeTable(
 private[lake] class LakePruningScanBuilder(
     keyedDirs: Seq[(String, String)],
     partitionCols: Seq[String],
-    recordedSchema: Option[StructType],
+    recordedSchema: StructType,
     mkInner: Seq[String] => ScanBuilder,
     dirCensus: () => Map[String, (Long, Option[Long])] = () => Map.empty,
     sketchFiles: (Seq[org.apache.spark.sql.catalyst.expressions.Expression],

@@ -238,9 +238,6 @@ final case class MergeIntoLakeCommand(
         "none: run any keyed mutation (upsert/applyChanges) or " +
         "SnapshotTable.declareKey once — the declaration is durable"))
     val pby = SnapshotTable.partitionColumns(spark, root)
-    if (pby.isEmpty) deny(
-      s"$root has no recorded partition columns; run any API mutation " +
-        "to record the layout, then MERGE by name")
     val cols = target.output.map(_.name)
     val keyAttr = target.output.find(_.name.equalsIgnoreCase(key)).getOrElse(
       deny(s"recorded row key '$key' is not a column of the table"))

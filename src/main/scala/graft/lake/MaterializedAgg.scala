@@ -542,15 +542,14 @@ object MaterializedAgg {
     // 2. signed delta over ONLY the changed tuples' directories.
     // Output types come from the VIEW's own schema (pinned at init) —
     // a base read here would list every base directory just for types.
-    val viewSchema = SnapshotTable.readState(spark, mvRoot, viewM).schema
+    val viewSchema = viewM.schema
     val types = spec.effSums.map { case (n, _) => viewSchema(n).dataType }
     val mmTypes = spec.mmNames.map(n => viewSchema(n).dataType)
-    def changedRows(keys: Set[String], atVersion: Int): Option[DataFrame] =
+    def changedRows(keys: Set[String], at: SnapshotTable.Manifest) =
       if (keys.isEmpty) None
-      else Some(SnapshotTable.readPartitionKeys(
-        spark, baseRoot, keys, atVersion))
-    val added = changedRows(newKeys, latestB).map(aggFrame(_, spec, types, 1))
-    val removed = changedRows(oldKeys, applied)
+      else Some(SnapshotTable.selectDirs(spark, baseRoot, at, keys))
+    val added = changedRows(newKeys, mNew).map(aggFrame(_, spec, types, 1))
+    val removed = changedRows(oldKeys, mOld)
       .map(aggFrame(_, spec, types, -1))
     val signed = (added.toSeq ++ removed.toSeq).reduce(_.unionByName(_))
     val deltaNames = spec.effSums.map(_._1) ++
@@ -636,7 +635,7 @@ object MaterializedAgg {
       val tombs = aux0.join(broadcast(liveDirs),
           col(DirCol) === col("_live_dir"), "left_anti")
         .withColumn("_mv_op", lit("d"))
-      val fresh = changedRows(newKeys, latestB)
+      val fresh = changedRows(newKeys, mNew)
         .map(partialsFrame(_, spec, mmTypes, nBuckets)
           .withColumn("_mv_op", lit("u")))
       // cached for the duration: the isEmpty probe, the sidecar
@@ -676,11 +675,8 @@ object MaterializedAgg {
 
     // 4. merge into the view: only buckets holding affected keys
     val buckets = plainBuckets.getOrElse(bucketsOf(delta))
-    val current =
-      if (buckets.isEmpty)
-        SnapshotTable.read(spark, mvRoot, m).limit(0)
-      else SnapshotTable.readPartitions(
-        spark, mvRoot, buckets.map(Seq(_)), m)
+    val current = SnapshotTable.selectDirs(spark, mvRoot, viewM,
+      buckets.map(SnapshotTable.escapeKey).toSet)
     // cached for the duration (round 19): the view commit executes the
     // batch twice (one-pass validation probe + staging write), and the
     // batch is a multi-join over the bucket reads, the cached delta and

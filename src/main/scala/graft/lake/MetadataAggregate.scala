@@ -43,8 +43,8 @@ import org.apache.spark.sql.types._
   *    is a partition column;
   *  - every live file of the snapshot carries a `#n` row count and —
   *    for each MIN/MAX column — a `#f` stats line (partial coverage,
-  *    e.g. pre-recording vintages, disables the rewrite rather than
-  *    risking a wrong answer);
+  *    e.g. a file whose footer read failed at commit, disables the
+  *    rewrite rather than risking a wrong answer);
   *  - the typed partition/stat values fold to a [[LocalRelation]] at
   *    plan time with no lossy cast (same guard as
   *    [[SnapshotTable.matchingKeys]]) and no Spark job.
@@ -184,8 +184,6 @@ object MetadataAggregate extends Rule[LogicalPlan] {
     val m = lt.manifest
     if (m.entries.exists(_._1.split("/", -1).length !=
         lt.partitionCols.length)) return None
-    val filesByDir: Map[String, Seq[String]] = m.fileSizes.map(_._1)
-      .groupBy(rel0 => rel0.take(rel0.lastIndexOf('/')))
     val rowsByFile = m.fileRows.toMap
     val statByFileCol = m.fileStats
       .map(fs => (fs.relPath, fs.column) -> fs).toMap
@@ -203,14 +201,13 @@ object MetadataAggregate extends Rule[LogicalPlan] {
 
     // one row per live directory: raw partition fragments + summed
     // rows + per-column folded min/max renderings. Any coverage hole
-    // (pre-census dir, file without `#n`, missing `#f` line, NaN-ish
-    // float bound) aborts the rewrite.
+    // (file without `#n`, missing `#f` line, NaN-ish float bound)
+    // aborts the rewrite.
     final case class DirRow(frags: Seq[String], rows: Long,
         mins: Seq[Option[String]], maxs: Seq[Option[String]])
     val dirRows =
       try m.entries.map { case (key, dir) =>
-        val files = filesByDir.getOrElse(dir, throw new Unanswerable)
-        if (files.isEmpty) throw new Unanswerable
+        val files = m.filesByDir(dir).map(_._1)
         var rows = 0L
         files.foreach(f =>
           rows += rowsByFile.getOrElse(f, throw new Unanswerable) -

@@ -179,7 +179,9 @@ object TokenizedCorpus {
     * drop here too. ONE commit either way, recording the base version
     * it reflects; a base advance that changes no partition records it
     * in a metadata-only commit. Returns the applied base version.
-    * No-op when already current. */
+    * No-op when already current. Each log folds once: the postings
+    * state serves both the applied-source read and the merge base, and
+    * base@latest serves the diff and the changed partitions' read. */
   def refresh(
       spark: SparkSession, baseRoot: String, tokRoot: String,
       partitionBy: Seq[String]): Int = {
@@ -193,22 +195,21 @@ object TokenizedCorpus {
     val latestB = SnapshotTable.latest(spark, baseRoot).getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot-table version committed under $baseRoot"))
-    appliedBaseVersion(spark, tokRoot) match {
+    val posted = SnapshotTable.latestState(spark, postingsRoot(tokRoot))
+    posted.flatMap(_._2.source) match {
       case Some(v) if v == latestB =>
         latestB // already current
       case Some(v) if SnapshotTable.hasVersion(spark, baseRoot, v) =>
-        val newMap = SnapshotTable.entriesFor(spark, baseRoot, latestB).toMap
+        val newM = SnapshotTable.manifestAt(spark, baseRoot, latestB)
         // dv-aware diff (round 18): a deletion-vector commit changes
         // rows without changing a directory — an entries-only compare
         // would skip the refresh and serve stale postings
-        val changed =
-          SnapshotTable.changedKeysBetween(spark, baseRoot, v, latestB)
+        val changed = SnapshotTable.changedKeysOf(
+          SnapshotTable.manifestAt(spark, baseRoot, v), newM)
         if (changed.nonEmpty) {
+          // every changed tuple gone from base: an empty frame, no read
           val changedDocs =
-            if (changed.forall(k => !newMap.contains(k)))
-              SnapshotTable.read(spark, baseRoot, latestB).limit(0)
-            else SnapshotTable.readPartitionKeys(
-              spark, baseRoot, changed, latestB)
+            SnapshotTable.selectDirs(spark, baseRoot, newM, changed)
           // the ONE cache of a refresh: every allRows branch and both
           // commit passes re-read this instead of re-tokenizing
           val pf = postingsFrame(tokenizedFrame(changedDocs), partitionBy)
@@ -233,7 +234,8 @@ object TokenizedCorpus {
             SnapshotTable.overwritePartitions(spark, postingsRoot(tokRoot),
               rows, partitionBy,
               dropKeys = changed, filesPerPartition = PostingsFiles,
-              knownTouched = Some(changed), source = Some(latestB))
+              knownTouched = Some(changed), source = Some(latestB),
+              base = posted)
           finally { rows.unpersist(false); pf.unpersist(false) }
         }
         // the base advanced but no partition changed: re-anchor in a

@@ -554,7 +554,7 @@ object Corpus {
     * per source. The DuckDB oracle reproduces the final state
     * relationally (filter + CASE rewrite over `documents`), so the
     * whole write → immutable-directory staging → manifest commit →
-    * mergeSchema read path must be byte-exact cross-engine — a
+    * census-planned read path must be byte-exact cross-engine — a
     * manifest that lost a partition, a rewrite that dropped or
     * duplicated a row, or a tombstone that leaked would all break the
     * hash.
@@ -834,7 +834,7 @@ object Corpus {
       // a data-column predicate: touched partitions rewrite, and the
       // rewrite's fresh files re-record their `#n`/`#f` lines
       SnapshotTable.deleteWhere(spark, root,
-        col("doc_id") % 97 === 0, Seq("source"))
+        col("doc_id") % 97 === 0)
     root
   }
 
@@ -1110,7 +1110,7 @@ object Corpus {
     // the mid-drain batch: base moves on, derived and lane do NOT
     if (SnapshotTable.latest(spark, base).forall(_ < 3))
       SnapshotTable.deleteWhere(spark, base,
-        col("doc_id") % 101 === 0, Seq("source"))
+        col("doc_id") % 101 === 0)
     lane
   }
 
@@ -1580,7 +1580,7 @@ object Corpus {
         opCol = "op", filesPerPartition = 6)
     }
     if (SnapshotTable.latest(spark, root).forall(_ < 3))
-      SnapshotTable.optimize(spark, root, Seq("source"))
+      SnapshotTable.optimize(spark, root)
     // latest = the optimized layout when compaction fired, the CDC
     // version when every partition was already at its target
     SnapshotTable.read(spark, root, SnapshotTable.latest(spark, root).get)

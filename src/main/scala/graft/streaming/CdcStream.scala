@@ -89,8 +89,7 @@ object CdcStream {
       // having to fold the compaction as a separate version next batch
       if (optimizeEveryBatches > 0 &&
           batchId % optimizeEveryBatches == optimizeEveryBatches - 1)
-        SnapshotTable.optimize(spark, root, partitionBy,
-          optimizeTargetBytes)
+        SnapshotTable.optimize(spark, root, optimizeTargetBytes)
       runJoined(
         views.zipWithIndex.map { case (b, i) => s"mv$i" -> (() => {
           MaterializedAgg.refresh(spark, root, b.mvRoot, b.spec, b.nBuckets)
@@ -249,11 +248,7 @@ object CdcStream {
       throw new IllegalArgumentException(
         s"$table has no recorded row key: run any keyed mutation " +
           "(upsert/applyChanges) or SnapshotTable.declareKey once"))
-    val pby = SnapshotTable.partitionColumns(spark, root)
-    require(pby.nonEmpty,
-      s"$table has no recorded partition columns; run any API mutation " +
-        "to record the layout first")
-    (root, key, pby)
+    (root, key, SnapshotTable.partitionColumns(spark, root))
   }
 
   /** Both drains: each micro-batch reduced to its latest event per key,

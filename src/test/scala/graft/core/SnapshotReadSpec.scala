@@ -127,7 +127,7 @@ class SnapshotReadSpec extends SparkSpec {
     val n1 = docs.count()
     // v2 halves the corpus via a delete (an atomic re-curation)
     SnapshotTable.deleteWhere(spark, root,
-      col("doc_id") % 2 === 1, Seq("source"))
+      col("doc_id") % 2 === 1)
     try {
       spark.conf.set("spark.graft.snapshot.documents", s"$root@v1")
       assert(SnapshotTable.isTableRoot(spark, root))
@@ -139,7 +139,7 @@ class SnapshotReadSpec extends SparkSpec {
       // vacuum spares the session-bound v1 (commit v3 so v1 is old)
       spark.conf.set("spark.graft.snapshot.documents", s"$root@v1")
       SnapshotTable.deleteWhere(spark, root,
-        col("doc_id") % 4 === 2, Seq("source")) // v3
+        col("doc_id") % 4 === 2) // v3
       val (dropped, _) = SnapshotTable.vacuum(spark, root, keepVersions = 1)
       assert(dropped == 1, s"only unbound v2 should drop: $dropped")
       assert(SnapshotTable.versions(spark, root) == Seq(1, 3))

@@ -19,7 +19,7 @@ class ChangeFeedSpec extends SparkSpec {
     SnapshotTable.upsert(spark, root,
       Seq(("s1", 5L, 999L), ("s2", 1000L, -1L)).toDF("src", "k", "v"),
       "k", Seq("src"))
-    SnapshotTable.deleteWhere(spark, root, $"k" % 10 === 3, Seq("src"))
+    SnapshotTable.deleteWhere(spark, root, $"k" % 10 === 3)
 
     val feed = ChangeFeed.between(spark, root, 0)
     // inserts minus deletes, per row identity, must equal the live state

@@ -154,7 +154,7 @@ class DvSpec extends SparkSpec {
     SnapshotTable.deleteRowsWhere(spark, root, $"k" === 101L)
     assert(liveDvs(root).size == 1)
     val before = SnapshotTable.read(spark, root).collect().toSet
-    SnapshotTable.optimize(spark, root, Seq("src"))
+    SnapshotTable.optimize(spark, root)
     assert(liveDvs(root).isEmpty, "OPTIMIZE left dv lines behind")
     assert(SnapshotTable.read(spark, root).collect().toSet == before)
   }
@@ -269,7 +269,7 @@ class DvSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("deletion vectors"))
     // after OPTIMIZE folds the vectors the raw scan is legal again
-    SnapshotTable.optimize(spark, root, Seq("src"))
+    SnapshotTable.optimize(spark, root)
     cat.loadTable(org.apache.spark.sql.connector.catalog
       .Identifier.of(Array.empty, "dv_failsafe"))
       .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]

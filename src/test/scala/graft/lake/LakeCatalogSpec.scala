@@ -19,7 +19,7 @@ class LakeCatalogSpec extends SparkSpec {
       statsFor = Seq("k"), clusterBy = Seq("k"), filesPerPartition = 2)
     // v2: delete one partition's multiples of 3, upsert a few rows
     SnapshotTable.deleteWhere(spark, root,
-      $"src" === "s1" && $"k" % 3 === 0, Seq("src"))
+      $"src" === "s1" && $"k" % 3 === 0)
     SnapshotTable.upsert(spark, root,
       Seq(("s2", 1000L, -1L), ("s2", 1001L, -2L)).toDF("src", "k", "v"),
       "k", Seq("src"))
@@ -56,6 +56,15 @@ class LakeCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) FROM lake.$name")
       .collect()(0).getLong(0) ==
       SnapshotTable.read(spark, root).count())
+  }
+
+  test("a resolve and its scan fold the version's manifest once") {
+    val (name, root) = freshTable("lakecat-fold")
+    val latest = new org.apache.hadoop.fs.Path(
+      root, "_versions/v00000003.manifest").toUri.getPath
+    val opens = ListRecordingFs.recorded(spark)(
+      spark.sql(s"SELECT k FROM lake.$name WHERE src = 's2'").collect()).opens
+    assert(opens.count(_ == latest) == 1, opens.mkString("\n"))
   }
 
   test("recorded schema is pinned; filters push into the parquet scan") {

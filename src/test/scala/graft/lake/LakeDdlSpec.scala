@@ -427,10 +427,10 @@ class LakeDdlSpec extends SparkSpec {
       .replaceAll("LOCATION '[^']+'", s"LOCATION '$root2'")
       .replace(s"lake.$name", s"lake.${name}_rt")
     spark.sql(stmt2)
-    assert(SnapshotTable.schemaOf(spark, root2).map(_.fields.toSeq.map(f =>
-        (f.name, f.dataType, f.nullable))) ==
-      SnapshotTable.schemaOf(spark, root).map(_.fields.toSeq.map(f =>
-        (f.name, f.dataType, f.nullable))),
+    assert(SnapshotTable.schemaOf(spark, root2).fields.toSeq.map(f =>
+        (f.name, f.dataType, f.nullable)) ==
+      SnapshotTable.schemaOf(spark, root).fields.toSeq.map(f =>
+        (f.name, f.dataType, f.nullable)),
       "round-tripped schema diverged")
     assert(SnapshotTable.partitionColumns(spark, root2) ==
       SnapshotTable.partitionColumns(spark, root))

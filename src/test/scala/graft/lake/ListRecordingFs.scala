@@ -4,68 +4,57 @@ import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, LocalFileSystem, Pat
 import org.apache.spark.sql.SparkSession
 
 /** The local file system, recording the path of every directory
-  * listing (`listStatus`, `listStatusIterator`, `listLocatedStatus`)
-  * and of every status probe the caller issues (`getFileStatus`, which
+  * listing (`listStatus`, `listStatusIterator`, `listLocatedStatus`),
+  * every status probe the caller issues (`getFileStatus`, which
   * `exists` goes through; the checksum layer's own probe inside `open`
-  * is not the caller's and is not recorded) — what lets a spec assert
-  * which code paths pay an O(entries) LIST or a redundant status call.
-  * Installed per operation by [[ListRecordingFs.listed]] /
-  * [[ListRecordingFs.statused]]. */
+  * is not the caller's and is not recorded) and every open — one entry
+  * per call, in call order, so a spec can count what a code path pays:
+  * an O(entries) LIST, a redundant status call, a manifest read twice.
+  * Installed per operation by [[ListRecordingFs.recorded]]. */
 class ListRecordingFs extends LocalFileSystem {
-  import ListRecordingFs.{opening, record, recordStatus}
+  import ListRecordingFs.{lists, opening, opens, record, statuses}
   override def listStatus(f: Path): Array[FileStatus] = {
-    record(f); super.listStatus(f)
+    record(lists, f); super.listStatus(f)
   }
   override def listStatusIterator(f: Path) = {
-    record(f); super.listStatusIterator(f)
+    record(lists, f); super.listStatusIterator(f)
   }
   override def listLocatedStatus(f: Path) = {
-    record(f); super.listLocatedStatus(f)
+    record(lists, f); super.listLocatedStatus(f)
   }
   override def getFileStatus(f: Path): FileStatus = {
-    if (!opening.get) recordStatus(f)
+    if (!opening.get) record(statuses, f)
     super.getFileStatus(f)
   }
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    record(opens, f)
     opening.set(true)
     try super.open(f, bufferSize) finally opening.set(false)
   }
 }
 
 object ListRecordingFs {
-  private val paths =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val statusPaths =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** The absolute paths one operation listed, probed and opened — one
+    * entry per call, in call order. */
+  final case class Calls(
+      lists: Seq[String], statuses: Seq[String], opens: Seq[String])
+
+  private type Log = java.util.concurrent.ConcurrentLinkedQueue[String]
+  private val lists, statuses, opens = new Log()
   private val opening = ThreadLocal.withInitial[Boolean](() => false)
 
-  private def record(f: Path): Unit = paths.add(f.toUri.getPath)
-  private def recordStatus(f: Path): Unit = statusPaths.add(f.toUri.getPath)
+  private def record(log: Log, f: Path): Unit = log.add(f.toUri.getPath)
 
   /** Runs `op` with this class as the session's `file:` file system
     * (FS cache disabled, so every lookup gets a recording instance) and
-    * returns the absolute paths it listed. Both settings are restored
+    * returns the calls it issued. Both settings are restored
     * afterwards. */
-  def listed(spark: SparkSession)(op: => Any): Set[String] = {
+  def recorded(spark: SparkSession)(op: => Any): Calls = {
     import scala.jdk.CollectionConverters._
-    recording(spark)(op)
-    paths.asScala.toSet
-  }
-
-  /** Like [[listed]], returning the absolute path of every status probe
-    * `op` issued, in order (one entry per call). */
-  def statused(spark: SparkSession)(op: => Any): Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    recording(spark)(op)
-    statusPaths.asScala.toSeq
-  }
-
-  private def recording(spark: SparkSession)(op: => Any): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
     val saved = keys.map(k => k -> Option(conf.get(k)))
-    paths.clear()
-    statusPaths.clear()
+    Seq(lists, statuses, opens).foreach(_.clear())
     conf.set("fs.file.impl", classOf[ListRecordingFs].getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
     try op
@@ -73,5 +62,6 @@ object ListRecordingFs {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+    Calls(lists.asScala.toSeq, statuses.asScala.toSeq, opens.asScala.toSeq)
   }
 }

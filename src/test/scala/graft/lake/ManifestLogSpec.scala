@@ -114,7 +114,7 @@ class ManifestLogSpec extends SparkSpec {
       .toDF("p", "k", "v")
     SnapshotTable.write(spark, root, base, Seq("p"), statsFor = Seq("k"))
     // delete every row of partition a -> its key must tombstone
-    val v = SnapshotTable.deleteWhere(spark, root, col("p") === "a", Seq("p"))
+    val v = SnapshotTable.deleteWhere(spark, root, col("p") === "a")
     val src = scala.io.Source.fromFile(root + f"/_versions/v$v%08d.manifest")
     val lines = try src.getLines().toList finally src.close()
     assert(lines.exists(_.startsWith("#rm\ta")),
@@ -226,9 +226,8 @@ class ManifestLogSpec extends SparkSpec {
       "append" -> (() => SnapshotTable.append(spark, root,
         Seq(("p2", 100L, 3L)).toDF("p", "k", "v"))),
       "no-op deleteWhere" -> (() => SnapshotTable.deleteWhere(spark, root,
-        col("p") === "absent", Seq("p"))),
-      "no-op optimize" -> (() => SnapshotTable.optimize(spark, root,
-        Seq("p"))),
+        col("p") === "absent")),
+      "no-op optimize" -> (() => SnapshotTable.optimize(spark, root)),
       "deleteRowsWhere" -> (() => SnapshotTable.deleteRowsWhere(spark,
         root, col("k") === 9L)),
       "addColumns" -> (() => SnapshotTable.addColumns(spark, root,
@@ -245,7 +244,7 @@ class ManifestLogSpec extends SparkSpec {
     val v0 = SnapshotTable.latest(spark, root).get
     ops.foreach { case (name, op) =>
       // the base's, the view's and the view sidecar's logs alike
-      val hit = ListRecordingFs.listed(spark)(op())
+      val hit = ListRecordingFs.recorded(spark)(op()).lists
         .filter(_.endsWith("/_versions"))
       assert(hit.isEmpty, s"$name listed ${hit.mkString(", ")}")
     }
@@ -260,17 +259,47 @@ class ManifestLogSpec extends SparkSpec {
     // probed: it issues no status call of its own on that manifest
     val laneManifest = s"${versionsDirOf(lane)}/v00000021.manifest"
     def manifestProbes(op: => Any): Int =
-      ListRecordingFs.statused(spark)(op).count(_ == laneManifest)
+      ListRecordingFs.recorded(spark)(op).statuses.count(_ == laneManifest)
     assert(manifestProbes(Lane.latest(spark, lane)) == 1)
     assert(manifestProbes(Lane.at(spark, lane)) == 1,
       "unpinned Lane.at re-probed the manifest the hint resolved")
     // the recorder sees listings where every version IS needed
-    assert(ListRecordingFs.listed(spark)(
-      SnapshotTable.history(spark, root)).contains(versionsDir))
-    assert(ListRecordingFs.listed(spark)(
-      SnapshotTable.vacuum(spark, root, 30)).contains(versionsDir))
-    assert(ListRecordingFs.listed(spark)(
-      Lane.vacuum(spark, lane, 30)).contains(versionsDirOf(lane)))
+    assert(ListRecordingFs.recorded(spark)(
+      SnapshotTable.history(spark, root)).lists.contains(versionsDir))
+    assert(ListRecordingFs.recorded(spark)(
+      SnapshotTable.vacuum(spark, root, 30)).lists.contains(versionsDir))
+    assert(ListRecordingFs.recorded(spark)(
+      Lane.vacuum(spark, lane, 30)).lists.contains(versionsDirOf(lane)))
+  }
+
+  test("a log without its schema, layout or file census is refused at read") {
+    // every commit records all three; a log missing any of them gets
+    // one error naming the root and version, not a fallback read
+    def refusal(stripped: String): String = {
+      val root = tmpDir("mlog-contract")
+      SnapshotTable.write(spark, root,
+        Seq(("p0", 1L), ("p1", 2L)).toDF("p", "k"), Seq("p"))
+      SnapshotTable.upsert(spark, root, Seq(("p0", 3L)).toDF("p", "k"),
+        "k", Seq("p"))
+      new java.io.File(root, "_versions").listFiles()
+        .filter(f => f.getName.endsWith(".manifest") ||
+          f.getName.endsWith(".checkpoint"))
+        .foreach { f =>
+          val src = scala.io.Source.fromFile(f, "UTF-8")
+          val kept = try src.getLines().filterNot(_.startsWith(stripped))
+            .mkString("", "\n", "\n") finally src.close()
+          java.nio.file.Files.write(f.toPath, kept.getBytes("UTF-8"))
+        }
+      intercept[IllegalStateException](SnapshotTable.read(spark, root))
+        .getMessage
+    }
+    Seq("#schema\t" -> "missing: #schema",
+        "#partitionby\t" -> "missing: #partitionby",
+        "#sz\t" -> "missing: #sz census of 2 live director(ies)")
+      .foreach { case (stripped, named) =>
+        val msg = refusal(stripped)
+        assert(msg.contains(named) && msg.contains(" v2 "), msg)
+      }
   }
 
   test("the recorded source carries through mutations, OPTIMIZE and RESTORE") {
@@ -283,7 +312,7 @@ class ManifestLogSpec extends SparkSpec {
         col("id").as("k")),
       Seq("p"), filesPerPartition = 4, source = Some(7)) == 1)
     assert(src().contains(7))
-    assert(SnapshotTable.optimize(spark, root, Seq("p")) == 2)
+    assert(SnapshotTable.optimize(spark, root) == 2)
     assert(src().contains(7), "a compaction must carry the source")
     // a mutation that sets no source carries it too, like the row key
     SnapshotTable.upsert(spark, root, Seq(("p0", 100L)).toDF("p", "k"),

@@ -51,7 +51,7 @@ class MaterializedAggKmvSpec extends SparkSpec {
     // delete c's only v=14 row (distinct count drops), insert a new
     // value into b
     SnapshotTable.deleteWhere(spark, baseRoot,
-      $"id" === 3L || $"id" === 8L, Seq("source"))
+      $"id" === 3L || $"id" === 8L)
     SnapshotTable.upsert(spark, baseRoot,
       Seq((9L, "b", Some(8L))).toDF("id", "source", "v"),
       "id", Seq("source"))
@@ -89,8 +89,7 @@ class MaterializedAggKmvSpec extends SparkSpec {
     assert(viewKmv(mvRoot) == Set(("a", estOracle())))
     // churn: delete a third, add new values, refresh — the re-derived
     // estimate must equal the from-scratch formula on the mutated base
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" % 3 === 0,
-      Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" % 3 === 0)
     SnapshotTable.upsert(spark, baseRoot,
       (300L to 340L).map(i => (i, "a", Some(i * 17 % 1009)))
         .toDF("id", "source", "v"), "id", Seq("source"))
@@ -120,7 +119,7 @@ class MaterializedAggKmvSpec extends SparkSpec {
     mkBase(baseRoot, seed)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec(64), nBuckets = 4)
     // mutate ONLY partition a (delete its duplicate v=5 row)
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L, Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     // destroy untouched partition b's directory: any read beyond the
     // changed partitions + sidecar now crashes
     val bDir = SnapshotTable.entriesFor(spark, baseRoot, 2)
@@ -143,7 +142,7 @@ class MaterializedAggKmvSpec extends SparkSpec {
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec(64), nBuckets = 4)
     assert(viewKmv(mvRoot) == Set(("a", 0.0), ("b", 1.0)))
     // delete b's only non-null value: its count must drop to 0 too
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L, Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec(64), 4)
     assert(viewKmv(mvRoot) == Set(("a", 0.0), ("b", 0.0)))
   }

@@ -56,7 +56,7 @@ class MaterializedAggMinMaxSpec extends SparkSpec {
     assert(viewRows(mvRoot) == oracle(baseRoot))
     // delete id=3 — the CURRENT min of group a (v=2). The non-invertible
     // case: the new min (5) must come from recomputation, not inversion.
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L, Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4)
     assert(viewRows(mvRoot) == oracle(baseRoot))
     val a = MaterializedAgg.read(spark, mvRoot).filter($"source" === "a")
@@ -109,7 +109,7 @@ class MaterializedAggMinMaxSpec extends SparkSpec {
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
     // mutate ONLY partition a — including deleting a's current min, the
     // case a naive implementation would answer with a table rescan
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L, Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     // destroy untouched partition b's directory: any read beyond the
     // changed partitions + sidecar now crashes
     val bDir = SnapshotTable.entriesFor(spark, baseRoot, 2)
@@ -193,7 +193,7 @@ class MaterializedAggMinMaxSpec extends SparkSpec {
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
     val before = viewRows(mvRoot)
     val auxV = SnapshotTable.latest(spark, MaterializedAgg.auxRoot(mvRoot))
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L, Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     // the refresh commits its sidecar update, then dies right before
     // the view publish — replay must converge
     ViewCrash.atViewPublish(spark, mvRoot)(

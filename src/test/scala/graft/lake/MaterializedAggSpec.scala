@@ -85,7 +85,7 @@ class MaterializedAggSpec extends SparkSpec {
     SnapshotTable.upsert(spark, baseRoot,
       Seq((8L, "a", "en", 3L)).toDF("doc_id", "source", "lang", "n_chars"),
       "doc_id", Seq("source"))
-    SnapshotTable.deleteWhere(spark, baseRoot, $"doc_id" === 3L, Seq("source"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"doc_id" === 3L)
     SnapshotTable.upsert(spark, baseRoot,
       Seq((2L, "a", "en", 21L)).toDF("doc_id", "source", "lang", "n_chars"),
       "doc_id", Seq("source"))
@@ -132,7 +132,7 @@ class MaterializedAggSpec extends SparkSpec {
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
     val dirs = dataDirs(mvRoot)
     // compaction: new base version, identical rows
-    assert(SnapshotTable.optimize(spark, baseRoot, Seq("source")) == 2)
+    assert(SnapshotTable.optimize(spark, baseRoot) == 2)
     assert(MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4) == 2)
     // one view version that only records the new source: no data
     // directory written, same entries as v1
@@ -175,7 +175,7 @@ class MaterializedAggSpec extends SparkSpec {
       filesPerPartition = 4)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
     // a row-preserving base commit: the refresh only re-anchors
-    assert(SnapshotTable.optimize(spark, baseRoot, Seq("source")) == 2)
+    assert(SnapshotTable.optimize(spark, baseRoot) == 2)
     ViewCrash.atViewPublish(spark, mvRoot)(
       MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4))
     assert(SnapshotTable.versions(spark, mvRoot) == Seq(1))

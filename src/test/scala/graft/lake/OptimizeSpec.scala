@@ -36,7 +36,7 @@ class OptimizeSpec extends SparkSpec {
     val before = SnapshotTable.read(spark, root)
       .collect().map(_.toSeq).toSet
     // generous target: every partition's bytes fit one file
-    val v = SnapshotTable.optimize(spark, root, Seq("source"))
+    val v = SnapshotTable.optimize(spark, root)
     assert(v == 2)
     assert(fileCount(root, "a", 2) == 1)
     assert(fileCount(root, "b", 2) == 1)
@@ -61,14 +61,14 @@ class OptimizeSpec extends SparkSpec {
     val bytes = fs.listStatus(new Path(root, aDir))
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     // target ~ half the partition: expect ceil(bytes/target) = 2 files
-    SnapshotTable.optimize(spark, root, Seq("source"),
+    SnapshotTable.optimize(spark, root,
       targetBytes = bytes / 2 + 1)
     assert(fileCount(root, "a", 2) == 2)
   }
 
   test("already-compact partitions are a version-preserving no-op") {
     val root = mkFragmented(fanOut = 1)
-    val v = SnapshotTable.optimize(spark, root, Seq("source"))
+    val v = SnapshotTable.optimize(spark, root)
     assert(v == 1)
     assert(SnapshotTable.versions(spark, root) == Seq(1))
   }
@@ -83,11 +83,11 @@ class OptimizeSpec extends SparkSpec {
       (301L to 400L).map(i => (i, s"d$i", "light")).toDF(
         "id", "text", "source"),
       "id", Seq("source"), filesPerPartition = 3)
-    SnapshotTable.optimize(spark, root, Seq("source"), maxPartitions = 1)
+    SnapshotTable.optimize(spark, root, maxPartitions = 1)
     val v = SnapshotTable.versions(spark, root).last
     assert(fileCount(root, "heavy", v) == 1) // 8 excess beats 3
     assert(fileCount(root, "light", v) == 3)
-    SnapshotTable.optimize(spark, root, Seq("source"), maxPartitions = 1)
+    SnapshotTable.optimize(spark, root, maxPartitions = 1)
     val v2 = SnapshotTable.versions(spark, root).last
     assert(fileCount(root, "light", v2) == 1)
   }
@@ -105,7 +105,7 @@ class OptimizeSpec extends SparkSpec {
     val bytes = fs.listStatus(new Path(root, aDir1))
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     // compact 8 -> 4 files, range-clustered on id
-    SnapshotTable.optimize(spark, root, Seq("source"),
+    SnapshotTable.optimize(spark, root,
       targetBytes = bytes / 4 + 1)
     assert(fileCount(root, "a", 2) == 4)
     val band = SnapshotTable.readBetween(spark, root, "id", 10, 20)
@@ -133,7 +133,7 @@ class OptimizeSpec extends SparkSpec {
       }
     }
     try {
-      val v = SnapshotTable.optimize(spark, root, Seq("source"))
+      val v = SnapshotTable.optimize(spark, root)
       assert(v == 3)
     } finally SnapshotTable.onBeforeCommit = () => ()
     val after = SnapshotTable.read(spark, root)
@@ -156,7 +156,7 @@ class OptimizeSpec extends SparkSpec {
           "id", Seq("source"))
       }
     }
-    try SnapshotTable.optimize(spark, root, Seq("source"))
+    try SnapshotTable.optimize(spark, root)
     finally SnapshotTable.onBeforeCommit = () => ()
     val after = SnapshotTable.read(spark, root)
     // the concurrent upsert's row SURVIVES — optimize re-planned

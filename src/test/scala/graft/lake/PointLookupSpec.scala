@@ -97,8 +97,7 @@ class PointLookupSpec extends SparkSpec {
       "doc_id", Seq("src"))
     assert(SnapshotTable.readPoint(spark, root, "doc_id", 999999L)
       .count() == 1L)
-    SnapshotTable.deleteWhere(spark, root, col("doc_id") === 999999L,
-      Seq("src"))
+    SnapshotTable.deleteWhere(spark, root, col("doc_id") === 999999L)
     assert(SnapshotTable.readPoint(spark, root, "doc_id", 999999L)
       .count() == 0L)
   }
@@ -109,7 +108,7 @@ class PointLookupSpec extends SparkSpec {
     // compact 4 files/partition down to 1: every data file is replaced,
     // so stale sketch lines would either vanish (probe stops pruning)
     // or mis-admit — the commit path must re-census the fresh files
-    val v = SnapshotTable.optimize(spark, root, Seq("src"),
+    val v = SnapshotTable.optimize(spark, root,
       targetBytes = 1L << 30)
     assert(v > 1, "optimize should have compacted the fanned partitions")
     val m = SnapshotTable.versions(spark, root).last

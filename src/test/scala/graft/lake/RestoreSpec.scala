@@ -26,7 +26,7 @@ class RestoreSpec extends SparkSpec {
         (col("id") % 2).cast("string").as("src"),
         concat(lit("v"), col("id")).as("v")),
       Seq("src"), statsFor = Seq("k"))
-    SnapshotTable.deleteWhere(spark, root, col("k") < 2, Seq("src"))
+    SnapshotTable.deleteWhere(spark, root, col("k") < 2)
     SnapshotTable.append(spark, root,
       Seq((100L, "1", "new")).toDF("k", "src", "v"))
     LakeCatalog.install(spark)

@@ -99,7 +99,7 @@ class ReviewRegressionSpec extends SparkSpec {
     assert(SnapshotTable.latest(spark, mvRoot) == mvV)
     // base commit 2: the interim minimum (v=1) is DELETED — its dir
     // generation now appears in no applied->latest diff
-    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 4L, Seq("g"))
+    SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 4L)
     MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec, 4)
     val g1 = MaterializedAgg.read(spark, mvRoot).filter($"g" === "g1")
       .select($"min_v", $"n").collect()(0)

@@ -96,12 +96,12 @@ class SnapshotTableSpec extends SparkSpec {
     SnapshotTable.write(spark, fanned, baseDocs, Seq("source"),
       filesPerPartition = 4)
     val fannedRows = rows(SnapshotTable.read(spark, fanned))
-    crashing(SnapshotTable.optimize(spark, fanned, Seq("source")))
+    crashing(SnapshotTable.optimize(spark, fanned))
     assert(SnapshotTable.latest(spark, fanned) == Some(1),
       "a crashed compaction must not commit a version")
     assert(rows(SnapshotTable.read(spark, fanned)) == fannedRows,
       "a crashed compaction lost or leaked rows")
-    assert(SnapshotTable.optimize(spark, fanned, Seq("source")) == 2)
+    assert(SnapshotTable.optimize(spark, fanned) == 2)
     assert(rows(SnapshotTable.read(spark, fanned)) == fannedRows)
   }
 
@@ -123,7 +123,7 @@ class SnapshotTableSpec extends SparkSpec {
     val n2 = SnapshotTable.read(spark, root).count()
     val victims = SnapshotTable.read(spark, root).filter(pred).count()
     assert(victims > 0, "no rows match at smoke scale; weak test")
-    SnapshotTable.deleteWhere(spark, root, pred, Seq("source"))
+    SnapshotTable.deleteWhere(spark, root, pred)
     val v3Entries = manifestLines(root, 3)
     val rewritten = v3Entries.toSet -- v2Entries.toSet
     assert(rewritten.size == 1 && rewritten.head.startsWith("src5\t"),
@@ -139,7 +139,7 @@ class SnapshotTableSpec extends SparkSpec {
       .filter(col("source") === "src5").count()
     assert(victims > 0)
     val v = SnapshotTable.deleteWhere(spark, root,
-      col("source") === "src5", Seq("source"))
+      col("source") === "src5")
     assert(v == 2)
     val after = SnapshotTable.read(spark, root)
     assert(after.count() == n0 - victims)
@@ -149,7 +149,7 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!v2Entries.exists(_.startsWith("src5\t")))
     // NULL-predicate rows are kept (three-valued logic)
     val v3 = SnapshotTable.deleteWhere(spark, root,
-      when(col("doc_id") < 0, lit(null).cast("boolean")), Seq("source"))
+      when(col("doc_id") < 0, lit(null).cast("boolean")))
     assert(SnapshotTable.read(spark, root, v3).count() == n0 - victims)
   }
 
@@ -172,12 +172,12 @@ class SnapshotTableSpec extends SparkSpec {
       .foreach(f => Files.write(Paths.get(f.getPath),
         "garbage".getBytes("UTF-8")))
     import spark.implicits._
-    SnapshotTable.deleteWhere(spark, root, $"src" === "s2", Seq("src"))
+    SnapshotTable.deleteWhere(spark, root, $"src" === "s2")
     val live = SnapshotTable.read(spark, root)
     assert(live.filter($"src" === "s2").count() == 0)
     assert(live.count() == 30, "survivors must be intact")
     // data-column predicates still take the scan path and work
-    SnapshotTable.deleteWhere(spark, root, $"k" === 1L, Seq("src"))
+    SnapshotTable.deleteWhere(spark, root, $"k" === 1L)
     assert(SnapshotTable.read(spark, root).count() == 29)
   }
 
@@ -191,11 +191,11 @@ class SnapshotTableSpec extends SparkSpec {
     // numeric comparison on the partition column: manifest values cast
     // back to the recorded LONG type, so p < 2 is a numeric match, not
     // a string-prefix accident
-    SnapshotTable.deleteWhere(spark, root, $"p" < 2L, Seq("p"))
+    SnapshotTable.deleteWhere(spark, root, $"p" < 2L)
     assert(SnapshotTable.read(spark, root).select("v").collect()
       .map(_.getString(0)).toSet == Set("c", "d"))
     // IS NULL names the null partition
-    SnapshotTable.deleteWhere(spark, root, $"p".isNull, Seq("p"))
+    SnapshotTable.deleteWhere(spark, root, $"p".isNull)
     assert(SnapshotTable.read(spark, root).select("v").collect()
       .map(_.getString(0)).toSet == Set("c"))
   }
@@ -529,7 +529,7 @@ class SnapshotTableSpec extends SparkSpec {
       (1L, "a", "s1"), (2L, "b", "s2")))
       .toDF("id", "v", "src")
     SnapshotTable.write(spark, root, base, Seq("src"))
-    val v2 = SnapshotTable.deleteWhere(spark, root, lit(true), Seq("src"))
+    val v2 = SnapshotTable.deleteWhere(spark, root, lit(true))
     val empty = SnapshotTable.read(spark, root, v2)
     assert(empty.isEmpty)
     assert(empty.columns.toSeq == Seq("id", "v", "src"),
@@ -565,8 +565,7 @@ class SnapshotTableSpec extends SparkSpec {
       mergeSchema = true)
     // delete from BOTH partitions: s1 dirs are pre-evolution vintage,
     // s2 mixes vintages in one version
-    val v = SnapshotTable.deleteWhere(spark, root, col("id") === 1L,
-      Seq("src"))
+    val v = SnapshotTable.deleteWhere(spark, root, col("id") === 1L)
     val after = SnapshotTable.read(spark, root, v)
     assert(after.columns.contains("lang"),
       "the evolved column vanished in the delete rewrite")
@@ -594,6 +593,28 @@ class SnapshotTableSpec extends SparkSpec {
     assert(SnapshotTable.versions(spark, root) == Seq(1))
     assert(SnapshotTable.read(spark, root)
       .filter(col("doc_id") === 7L).count() == 1)
+  }
+
+  test("a mutation stating a different layout is refused, not committed") {
+    // a batch laid out by (a, b) into a table recorded as (a) would
+    // match no live partition: every key would land twice
+    import spark.implicits._
+    val root = tmpDir("snaptable-layout")
+    SnapshotTable.write(spark, root,
+      Seq(("a0", "b0", 1L), ("a1", "b1", 2L)).toDF("a", "b", "k"), Seq("a"))
+    val batch = Seq(("a0", "b0", 1L)).toDF("a", "b", "k")
+    val refused: Seq[() => Any] = Seq(
+      () => SnapshotTable.upsert(spark, root, batch, "k", Seq("a", "b")),
+      () => SnapshotTable.applyChanges(spark, root,
+        batch.withColumn("op", lit("u")), "k", Seq("a", "b"), "op"),
+      () => SnapshotTable.overwritePartitions(spark, root, batch,
+        Seq("a", "b")))
+    refused.foreach { op =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains("partitioned by (a)"), e.getMessage)
+    }
+    assert(SnapshotTable.versions(spark, root) == Seq(1))
+    assert(SnapshotTable.read(spark, root).count() == 2)
   }
 
   test("vacuum spares protected versions") {
@@ -684,7 +705,7 @@ class SnapshotTableSpec extends SparkSpec {
         } else {
           val keys = gen(deleteGen, s0)
           SnapshotTable.deleteWhere(spark, root,
-            col("doc_id").isin(keys: _*), Seq("source"))
+            col("doc_id").isin(keys: _*))
           model = model -- keys
         }
         // a row list, not a Map: a merge that keeps a replaced row

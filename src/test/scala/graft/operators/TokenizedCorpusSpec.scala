@@ -97,6 +97,30 @@ class TokenizedCorpusSpec extends SparkSpec {
       "new term's df row must land in the same commit as its postings")
   }
 
+  test("an incremental refresh folds each log once") {
+    // the postings fold serves the applied-source read, the merge base
+    // and the commit; the base@latest fold serves the diff and the
+    // changed partitions' read
+    val baseRoot = tmpDir("tok-base"); val tokRoot = tmpDir("tok-idx")
+    val postRoot = TokenizedCorpus.postingsRoot(tokRoot)
+    mkBase(baseRoot, seed)
+    TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source"))
+    SnapshotTable.upsert(spark, baseRoot,
+      Seq((2L, "a", "window filter rewritten")).toDF("doc_id", "source",
+        "text"), "doc_id", Seq("source"))
+    def manifestOf(root: String): String = new org.apache.hadoop.fs.Path(
+      root, f"_versions/v${SnapshotTable.latest(spark, root).get}%08d" +
+        ".manifest").toUri.getPath
+    val (baseLatest, postLatest) = (manifestOf(baseRoot), manifestOf(postRoot))
+    val opens = graft.lake.ListRecordingFs.recorded(spark)(
+      TokenizedCorpus.refresh(spark, baseRoot, tokRoot, Seq("source"))).opens
+    assert(opens.count(_ == baseLatest) == 1, opens.mkString("\n"))
+    assert(opens.count(_ == postLatest) == 1, opens.mkString("\n"))
+    assert(TokenizedCorpus.appliedBaseVersion(spark, tokRoot) ==
+      SnapshotTable.latest(spark, baseRoot))
+    assert(postingsSet(tokRoot) == oracle(baseRoot))
+  }
+
   test("a source-less root refuses reads; refresh rebuilds it") {
     val baseRoot = tmpDir("tok-base"); val tokRoot = tmpDir("tok-idx")
     mkBase(baseRoot, seed)

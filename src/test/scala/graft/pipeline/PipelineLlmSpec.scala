@@ -206,7 +206,7 @@ class PipelineLlmSpec extends SparkSpec {
         s"${inline.size} rows")
     // and a feed carrying a delete fails the maintainer loudly
     SnapshotTable.deleteWhere(spark, tableRoot,
-      col("doc_id") === 7L, Seq("src"))                      // v3
+      col("doc_id") === 7L)                      // v3
     val e = intercept[Exception] { drain() }
     def causes(t: Throwable): Seq[Throwable] =
       if (t == null) Nil else t +: causes(t.getCause)

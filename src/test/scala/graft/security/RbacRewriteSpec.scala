@@ -448,7 +448,7 @@ class RbacRewriteSpec extends SparkSpec {
         col("id").as("k"), (col("id") * 3).as("payload")),
       Seq("endpoint"))
     graft.lake.SnapshotTable.deleteWhere(spark, root,
-      col("k") === 0 || col("k") === 1, Seq("endpoint"))
+      col("k") === 0 || col("k") === 1)
     val feed = graft.lake.ChangeFeed.between(spark, root, 0)
     val secured = Rbac.secureFeed(feed, role)
     assert(secured.columns.toSeq ==

@@ -51,7 +51,7 @@ class ChangeFeedStreamSpec extends SparkSpec {
     assert(drain(root, ckpt).isEmpty)
 
     // one more commit: only ITS changes arrive
-    SnapshotTable.deleteWhere(spark, root, $"k" === 7, Seq("src"))
+    SnapshotTable.deleteWhere(spark, root, $"k" === 7)
     val third = drain(root, ckpt)
     assert(third.size == 1 &&
       third.head.getAs[String](ChangeFeed.ChangeTypeCol) == "delete" &&
