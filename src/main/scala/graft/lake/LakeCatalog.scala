@@ -167,20 +167,26 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces {
           s"(${versionOverride.map(v => s"VERSION AS OF $v")
             .getOrElse(s"binding @v${pinned.get}")}) — mixing the " +
           "two is ambiguous; unset one")
-    // a root with no committed version is no table at all, whatever
-    // version the statement or the binding names
-    val version = versionOverride.orElse(pinned).orElse(lanePin)
-      .getOrElse(SnapshotTable.latest(s, root).getOrElse(
-        throw new NoSuchTableException(ident)))
-    if (!SnapshotTable.hasVersion(s, root, version)) {
-      if (SnapshotTable.latest(s, root).isEmpty)
-        throw new NoSuchTableException(ident)
-      throw new IllegalArgumentException(
-        s"unknown version v$version of $display (root $root)")
-    }
     // ONE fold of the version serves the table's every derived field
-    // and, through the second parameter list, its planner-time reads
-    val m = SnapshotTable.manifestAt(s, root, version)
+    // and, through the second parameter list, its planner-time reads.
+    // Its manifest is probed once: latest's resolution checks the one
+    // it names, and a pinned version's read is its own probe. A root
+    // with no committed version is no table at all, whatever version
+    // the statement or the binding names.
+    val (version, m) = versionOverride.orElse(pinned).orElse(lanePin) match {
+      case None => SnapshotTable.latestState(s, root)
+        .getOrElse(throw new NoSuchTableException(ident))
+      case Some(v) =>
+        // a negative pin names no version (manifestAt would read latest)
+        try (v, SnapshotTable.manifestAt(s, root, v max 0))
+        catch {
+          case _: SnapshotTable.UnknownVersionException =>
+            if (SnapshotTable.latest(s, root).isEmpty)
+              throw new NoSuchTableException(ident)
+            throw new IllegalArgumentException(
+              s"unknown version v$v of $display (root $root)")
+        }
+    }
     // (escaped partition key -> absolute dir) pairs power the scan's
     // manifest-dir pruning on partition filters
     val keyed = m.entries.map { case (k, rel) =>

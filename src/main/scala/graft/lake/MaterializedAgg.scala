@@ -35,18 +35,19 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *     recompute agree on NULL semantics exactly.
   *  3. MIN/MAX are NOT group-invertible (a deleted row can hold the
   *     extremum), so they are maintained by PARTIAL-AGGREGATE
-  *     DECOMPOSITION instead: a sidecar table (`<mvRoot>/_mvpartials`,
-  *     itself a SnapshotTable) holds per-(group, base-directory)
-  *     min/max partials. Directories are immutable, so a base commit
-  *     invalidates exactly the changed tuples' partials: recompute
-  *     them from the changed directories at L (data already being
-  *     read for the sum delta's insertion side), tombstone the
-  *     retired directories' rows, and re-derive each AFFECTED group's
-  *     extremum as `min/max over its partials` — a scan of the
-  *     metadata-sized sidecar, never of unchanged base data. Deleting
-  *     the current minimum of a group therefore never rescans the
-  *     table; it rescans one partition (already rewritten by the
-  *     delete itself) plus the sidecar.
+  *     DECOMPOSITION instead: the view table keeps a second row kind,
+  *     one PARTIAL row per (group, base directory) holding that
+  *     directory's min/max, in its group's bucket. Directories are
+  *     immutable, so a base commit invalidates exactly the changed
+  *     tuples' partials: recompute them from the changed directories
+  *     at L (data already being read for the sum delta's insertion
+  *     side), tombstone those of the directories the diff retired or
+  *     re-read, and re-derive each affected group's extremum as
+  *     `min/max over its partials` — read with the affected buckets'
+  *     view rows, never from unchanged base data. Deleting the current
+  *     minimum of a group therefore never rescans the table; it
+  *     rescans one partition (already rewritten by the delete itself)
+  *     plus the affected view buckets.
   *  4. AVG is derived, not stored: `SUM / non-null COUNT` at read
   *     time (internally maintained as a hidden sum), NULL when the
   *     group has no non-null values — matching SQL AVG under deletes
@@ -54,10 +55,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   *  5. The delta MERGES into the view by key: the view is bucketed by
   *     `xxhash64(group key) % nBuckets` (stable per key, bounded
   *     directory count even for high-cardinality groups), only
-  *     buckets holding affected keys are read, and the merged rows
-  *     commit through [[SnapshotTable.applyChanges]] — groups whose
-  *     count reaches zero leave as tombstones, everything lands in
-  *     ONE atomic version.
+  *     buckets holding affected keys are read, and the merged view
+  *     rows and partial rows commit through ONE keyed merge — groups
+  *     whose count reaches zero leave as tombstones, everything lands
+  *     in ONE atomic version.
   *
   * Integral/decimal sums maintain EXACTLY (group inverse is exact);
   * float sums drift by reassociation, same caveat as any engine's
@@ -65,41 +66,38 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * recomputed, never inverted.
   *
   * Crash/replay protocol (single-maintainer, like
-  * [[SnapshotTable.vacuum]]): every view commit records the base
-  * version it reflects in its own manifest (`#source`), so a view
-  * version and its anchor land in one atomic publish. A crash before
-  * that publish leaves the previous view version and its anchor
-  * intact, and the next refresh recomputes from there. The partials
-  * sidecar commits BEFORE the view and is idempotent (retired-directory
-  * tombstones + same-value re-upserts), so replaying a crashed refresh
-  * converges. Vacuuming the base below the last-applied version falls
-  * back to [[fullRefresh]]; [[appliedBaseVersion]] exists to be passed
-  * to the base table's vacuum `protect` set.
+  * [[SnapshotTable.vacuum]]): every refresh is one view commit — view
+  * rows, partial rows and the base version they reflect (`#source`)
+  * land in one atomic publish. A crash before that publish leaves the
+  * previous view version, its partials and its anchor intact, and the
+  * next refresh recomputes from there. Vacuuming the base below the
+  * last-applied version falls back to [[fullRefresh]];
+  * [[appliedBaseVersion]] exists to be passed to the base table's
+  * vacuum `protect` set.
   */
 object MaterializedAgg {
 
   /** The maintained aggregate: `GROUP BY groupBy` with one output
     * column per (name, sql-expression) in `sums` (each `SUM(expr)`),
     * `avgs` (each `AVG(expr)`, derived at read time), `mins`/`maxs`
-    * (each `MIN(expr)`/`MAX(expr)`, maintained via the partials
-    * sidecar), `kmvs` (each an approximate `COUNT(DISTINCT expr)` —
-    * exact below `kmvK` — maintained as per-(group, directory)
-    * K-minimum-values sketches in the same sidecar), plus a `COUNT(*)`
-    * as `countName`.
+    * (each `MIN(expr)`/`MAX(expr)`, maintained via partial rows),
+    * `kmvs` (each an approximate `COUNT(DISTINCT expr)` — exact below
+    * `kmvK` — maintained as per-(group, directory) K-minimum-values
+    * sketches in the same partial rows), plus a `COUNT(*)` as
+    * `countName`.
     *
     * KMV maintenance (round-12 verdict item 6): COUNT(DISTINCT) is not
     * group-invertible (deleting a row may or may not remove a distinct
-    * value), so it rides the min/max partials machinery: each sidecar
+    * value), so it rides the min/max partials machinery: each partial
     * row stores the k smallest distinct `md5`-hashes of the expression
     * within one (group, base-directory); a refresh recomputes exactly
-    * the changed directories' sketches, tombstones retired ones, and
+    * the changed directories' sketches, tombstones stale ones, and
     * re-derives each affected group's estimate by merging its partial
-    * sketches (k smallest of the union — KMV's mergeability) from the
-    * metadata-sized sidecar, never rescanning unchanged base data. The
-    * hash is the q60 rule (first 15 hex digits of md5 as a 60-bit
-    * integer), bit-identical in DuckDB, so estimates are oracle-
-    * checkable; below k the sketch IS the distinct set and the
-    * "estimate" is exact. */
+    * sketches (k smallest of the union — KMV's mergeability), never
+    * rescanning unchanged base data. The hash is the q60 rule (first
+    * 15 hex digits of md5 as a 60-bit integer), bit-identical in
+    * DuckDB, so estimates are oracle-checkable; below k the sketch IS
+    * the distinct set and the "estimate" is exact. */
   final case class MvSpec(
       groupBy: Seq[String],
       sums: Seq[(String, String)],
@@ -119,8 +117,8 @@ object MaterializedAgg {
       sums ++ avgs.map { case (n, e) => (s"_mv_avg_$n", e) }
     private[lake] def mmNames: Seq[String] =
       mins.map(_._1) ++ maxs.map(_._1)
-    /** Every column maintained through the partials sidecar. */
-    private[lake] def auxNames: Seq[String] =
+    /** Every column maintained through partial rows. */
+    private[lake] def partialNames: Seq[String] =
       mmNames ++ kmvs.map(_._1)
     val outNames: Seq[String] =
       sums.map(_._1) ++ avgs.map(_._1) ++ mins.map(_._1) ++
@@ -134,20 +132,21 @@ object MaterializedAgg {
 
   private[lake] val KeyCol = "_mv_key"
   private[lake] val BucketCol = "_mv_bucket"
-  // partials sidecar columns
+  /** A partial row's base directory; NULL on view rows, so it tells
+    * the two row kinds apart. A spec without MIN/MAX/KMV columns
+    * writes no partial rows and has no partial columns. */
   private[lake] val DirCol = "_mv_dir"
-  private[lake] val AKeyCol = "_mv_akey"
-  private[lake] val ABucketCol = "_mv_abucket"
 
   private[lake] def nnName(sumName: String) = s"_mv_nn_$sumName"
+  /** The partial rows' column for aggregate `n`: a KMV partial is a
+    * sketch (`array<long>`) where the view's `n` is an estimate. */
+  private def partName(n: String) = s"_mv_p_$n"
 
   private def fs(spark: SparkSession, root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def mvMeta(root: String) = new Path(root, "_mv")
   private def specPath(root: String) = new Path(mvMeta(root), "spec")
-  private[lake] def auxRoot(mvRoot: String): String =
-    new Path(mvRoot, "_mvpartials").toString
 
   /** Composite group key, INJECTIVE by construction: each group value
     * renders as `<charlen>:<value>` (NULL as `n`), components joined
@@ -226,14 +225,17 @@ object MaterializedAgg {
     when(ka < k, ka.cast("double"))
       .otherwise((ka.cast("double") - lit(1.0)) * lit(KmvDomain) / kth)
 
-  /** Per-(group, base-directory) partials over `rows` — the sidecar's
-    * content for the directories `rows` spans: min/max values plus one
-    * KMV sketch array (k smallest distinct hashes) per `kmvs` entry.
-    * Sketches build shuffle/sort-bounded — distinct (group, dir, hash)
-    * triples rank through a window, never an unbounded in-memory set —
-    * so a directory with millions of distinct values costs a spillable
+  /** Partial rows over `rows`, one per (group, base directory) it
+    * spans: min/max values plus one KMV sketch array (k smallest
+    * distinct hashes) per `kmvs` entry. A partial row carries its
+    * group's columns, sits in its group's bucket and is keyed
+    * `<group key>|<dir>` — the length-prefixed group encoding keeps
+    * that distinct from every group key. Sketches build
+    * shuffle/sort-bounded — distinct (group, dir, hash) triples rank
+    * through a window, never an unbounded in-memory set — so a
+    * directory with millions of distinct values costs a spillable
     * sort, not an aggregation buffer. Every (group, dir) present in
-    * `rows` gets a sidecar row even when all sketch inputs are NULL
+    * `rows` gets a partial row even when all sketch inputs are NULL
     * (empty array), so group-level re-derivation can never mistake
     * "all values deleted" for "no information". */
   private[lake] def partialsFrame(
@@ -242,20 +244,17 @@ object MaterializedAgg {
     val mmAggs = (spec.mins.map { case (n, e) => (n, e, true) } ++
       spec.maxs.map { case (n, e) => (n, e, false) })
       .zip(mmTypes).map { case ((n, e, isMin), t) =>
-        (if (isMin) min(expr(e)) else max(expr(e))).cast(t).as(n)
+        (if (isMin) min(expr(e)) else max(expr(e))).cast(t).as(partName(n))
       }
-    // a kmv-only spec still needs one agg to anchor the (group, dir)
-    // row universe; the partial row count is harmless and only exists
-    // on sidecars of such specs (legacy min/max sidecars keep their
-    // schema exactly)
-    val aggs =
-      if (mmAggs.nonEmpty) mmAggs
-      else Seq(count(lit(1)).cast(LongType).as("_mv_pn"))
     val keyed = rows.withColumn(KeyCol, keyExpr(spec))
       .withColumn(DirCol, dirExpr)
-    val anchored = keyed.groupBy(col(KeyCol), col(DirCol))
-      .agg(aggs.head, aggs.tail: _*)
-    val withSketches = spec.kmvs.foldLeft(anchored) { case (acc, (n, e)) =>
+    // the group columns are a function of the key: grouping by them
+    // too carries them onto the partial row
+    val grp = (Seq(KeyCol, DirCol) ++ spec.groupBy).map(col)
+    val anchored =
+      if (mmAggs.isEmpty) keyed.select(grp: _*).distinct()
+      else keyed.groupBy(grp: _*).agg(mmAggs.head, mmAggs.tail: _*)
+    spec.kmvs.foldLeft(anchored) { case (acc, (n, e)) =>
       val hv = keyed.select(col(KeyCol), col(DirCol),
           hvExpr(e).as("_mv_hv"))
         .where(col("_mv_hv").isNotNull).distinct()
@@ -264,31 +263,29 @@ object MaterializedAgg {
       val sk = hv.withColumn("_mv_rn", row_number().over(w))
         .where(col("_mv_rn") <= spec.kmvK)
         .groupBy(col(KeyCol), col(DirCol))
-        .agg(sort_array(collect_list(col("_mv_hv"))).as(n))
+        .agg(sort_array(collect_list(col("_mv_hv"))).as(partName(n)))
       acc.join(sk, Seq(KeyCol, DirCol), "left")
-        .withColumn(n, coalesce(col(n), array().cast("array<long>")))
-    }
-    withSketches
-      .withColumn(AKeyCol, concat(col(KeyCol), lit("|"), col(DirCol)))
-      .withColumn(ABucketCol, pmod(xxhash64(col(DirCol)),
-        lit(nBuckets.toLong)))
+        .withColumn(partName(n),
+          coalesce(col(partName(n)), array().cast("array<long>")))
+    }.withColumn(BucketCol, bucketExpr(nBuckets))
+      .withColumn(KeyCol, concat(col(KeyCol), lit("|"), col(DirCol)))
   }
 
-  /** min/max/KMV per group over the sidecar's partials, restricted to
-    * `keys` — the re-derivation step. min/max fold directly; KMV
-    * merges by keeping the k smallest of the union of the group's
-    * partial sketches (the sketch's mergeability), then derives the
-    * estimate. The sidecar is metadata-sized (|groups × directories
-    * they span| rows, sketch arrays ≤ k longs), so this scan is the
-    * incremental analog of reading the manifest, not the table. */
-  private[lake] def rollup(
-      aux: DataFrame, spec: MvSpec, keys: DataFrame): DataFrame = {
-    val aggs = spec.mins.map { case (n, _) => min(col(n)).as(n) } ++
-      spec.maxs.map { case (n, _) => max(col(n)).as(n) } ++
+  /** min/max/KMV per group over partial rows — the re-derivation
+    * step. min/max fold directly; KMV merges by keeping the k smallest
+    * of the union of the group's partial sketches (the sketch's
+    * mergeability), then derives the estimate. Partials are
+    * metadata-sized (|groups × directories they span| rows, sketch
+    * arrays ≤ k longs), so this is the incremental analog of reading
+    * the manifest, not the table. Keyed by group key. */
+  private[lake] def rollup(parts: DataFrame, spec: MvSpec): DataFrame = {
+    val aggs =
+      spec.mins.map { case (n, _) => min(col(partName(n))).as(n) } ++
+      spec.maxs.map { case (n, _) => max(col(partName(n))).as(n) } ++
       spec.kmvs.map { case (n, _) =>
-        flatten(collect_list(col(n))).as(s"_mv_sk_$n") }
-    val g = aux.join(keys, Seq(KeyCol), "left_semi")
-      .groupBy(col(KeyCol)).agg(aggs.head, aggs.tail: _*)
+        flatten(collect_list(col(partName(n)))).as(s"_mv_sk_$n") }
+    val g = parts.groupBy(keyExpr(spec).as(KeyCol))
+      .agg(aggs.head, aggs.tail: _*)
     spec.kmvs.foldLeft(g) { case (df, (n, _)) =>
       val merged = slice(
         array_sort(array_distinct(col(s"_mv_sk_$n"))), 1, spec.kmvK)
@@ -304,9 +301,9 @@ object MaterializedAgg {
   /** The view-merge change batch of one refresh: the bucket-pruned
     * current view full-outer-joined with the signed delta (ring columns
     * added groupwise, group columns picked from whichever side has the
-    * key), sidecar-maintained columns overwritten from the rollup for
-    * affected groups, and the `_mv_op` tombstone derivation — the batch
-    * [[refresh]] commits through `applyChanges`. */
+    * key), partial-maintained columns overwritten from the rollup,
+    * and the `_mv_op` tombstone derivation — the view half of the
+    * batch [[refresh]] commits. */
   private[lake] def mergedViewChanges(
       current: DataFrame, delta: DataFrame, roll: Option[DataFrame],
       spec: MvSpec, types: Seq[DataType]): DataFrame = {
@@ -333,9 +330,9 @@ object MaterializedAgg {
         coalesce(col(s"c.$BucketCol"), col(s"d.$BucketCol"))
           .as(BucketCol)) ++
       spec.groupBy.map(pick) ++ ringCols ++
-      // sidecar-column placeholders (min/max + kmv): current values
-      // carry, affected groups overwritten from the rollup below
-      spec.auxNames.map(n => col(s"c.$n").as(n))
+      // partial-maintained placeholders (min/max + kmv): current
+      // values carry, rolled-up groups overwritten below
+      spec.partialNames.map(n => col(s"c.$n").as(n))
     val merged = c.join(d, col(s"c.$KeyCol") === col(s"d.$KeyCol"),
         "full_outer")
       .select(mergedCols: _*)
@@ -344,9 +341,9 @@ object MaterializedAgg {
       case Some(rl) =>
         val r = rl.withColumn("_mv_hit", lit(1)).as("r")
         val mAlias = merged.as("m")
-        val keep = merged.columns.filterNot(spec.auxNames.contains)
+        val keep = merged.columns.filterNot(spec.partialNames.contains)
           .map(n => col(s"m.$n").as(n)).toSeq
-        val mm = spec.auxNames.map(n =>
+        val mm = spec.partialNames.map(n =>
           when(col("r._mv_hit").isNotNull, col(s"r.$n"))
             .otherwise(col(s"m.$n")).as(n))
         mAlias.join(r, col(s"m.$KeyCol") === col(s"r.$KeyCol"), "left")
@@ -436,9 +433,9 @@ object MaterializedAgg {
   }
 
   /** Full recompute against the base's latest version, committed as
-    * one new view version (replace-all; the partials sidecar rebuilds
-    * replace-all alongside). The fallback when the base was vacuumed
-    * below the last-applied version. */
+    * one new view version (replace-all, partial rows included). The
+    * fallback when the base was vacuumed below the last-applied
+    * version. */
   def fullRefresh(
       spark: SparkSession, baseRoot: String, mvRoot: String,
       spec: MvSpec, nBuckets: Int): Int = {
@@ -461,7 +458,7 @@ object MaterializedAgg {
       .agg((aggs ++ mmAggs).head, (aggs ++ mmAggs).tail: _*)
       .withColumn(KeyCol, keyExpr(spec))
     // KMV estimates join in per group (same window-ranked k-minima
-    // build as the sidecar, at group granularity): the full recompute
+    // build as the partials, at group granularity): the full recompute
     // and the incremental rollup reduce to the same "k smallest
     // distinct hashes per group", so they agree exactly
     val full = spec.kmvs.foldLeft(grouped) { case (acc, (n, e)) =>
@@ -479,10 +476,11 @@ object MaterializedAgg {
         // a group whose inputs are all NULL has distinct count 0
         .withColumn(n, coalesce(col(n), lit(0.0)))
     }.withColumn(BucketCol, bucketExpr(nBuckets))
-    if (spec.auxNames.nonEmpty)
-      SnapshotTable.write(spark, auxRoot(mvRoot),
-        partialsFrame(base, spec, mmTypes, nBuckets), Seq(ABucketCol))
-    SnapshotTable.writeDerived(spark, mvRoot, full, Seq(BucketCol), baseV)
+    val rows =
+      if (spec.partialNames.isEmpty) full
+      else full.unionByName(partialsFrame(base, spec, mmTypes, nBuckets),
+        allowMissingColumns = true)
+    SnapshotTable.writeDerived(spark, mvRoot, rows, Seq(BucketCol), baseV)
   }
 
   /** Incremental refresh: fold every base commit since the last
@@ -502,24 +500,23 @@ object MaterializedAgg {
       s"spec drift under $mvRoot: the view was initialized with a " +
         "different aggregate/bucketing — rebuild under a fresh root " +
         s"(stored:\n${stored.get}\npassed:\n${specToText(spec, nBuckets)})")
-    val m = SnapshotTable.latest(spark, mvRoot) match {
-      case Some(v) => v
+    // one fold of the view serves its recorded source, the schema that
+    // pins the delta's output types, the bucket read and the merge base
+    val (m, viewM) = SnapshotTable.latestState(spark, mvRoot) match {
+      case Some(state) => state
       case None => return init(spark, baseRoot, mvRoot, spec, nBuckets)
     }
     val latestB = SnapshotTable.latest(spark, baseRoot).getOrElse(
       throw new IllegalArgumentException(
         s"no snapshot-table version committed under $baseRoot"))
-    // one fold of the view serves its recorded source and the schema
-    // that pins the delta's output types
-    val viewM = SnapshotTable.manifestAt(spark, mvRoot, m)
     val applied = viewM.source.getOrElse(throw new IllegalStateException(
       notAView(mvRoot, m) + "; fullRefresh to re-anchor"))
     if (applied == latestB) return m
     if (!SnapshotTable.hasVersion(spark, baseRoot, applied))
       return fullRefresh(spark, baseRoot, mvRoot, spec, nBuckets)
-    // any sidecar-maintained column (min/max OR kmv) needs the
+    // any partial-maintained column (min/max OR kmv) needs the
     // zero-delta multiset rule and the rollup overwrite below
-    val trackAux = spec.auxNames.nonEmpty
+    val hasPartials = spec.partialNames.nonEmpty
 
     // 1. changed partition tuples, straight off the two manifests —
     // via the dv-aware diff (round 18): a deletion-vector commit
@@ -564,186 +561,91 @@ object MaterializedAgg {
       .agg(deltaAggs.head, deltaAggs.tail: _*)
       .withColumn(KeyCol, keyExpr(spec))
       .withColumn(BucketCol, bucketExpr(nBuckets))
-      // barrier: the delta feeds the bucket probe, the sidecar rollup's
-      // key set, and the merge — without it each action re-reads the
-      // changed directories at both versions
+      // barrier: the delta feeds the bucket probe and the merge —
+      // without it each action re-reads the changed directories at
+      // both versions
       .cache()
-    // Without sidecar columns, groups whose ring deltas are ALL zero
-    // (e.g. a compaction's identical rewrite) drop out of the merge
-    // entirely. WITH them they must stay: a multiset can change under
-    // zero sum/count/nn deltas (drop a 1 and a 3, add a 0 and a 4) and
-    // the sidecar re-derivation below — extrema AND distinct sketches —
-    // is what catches it.
-    val delta =
-      if (trackAux) deltaAll
-      else deltaAll.filter(deltaNames
-        .map(n => coalesce(col(n) =!= lit(0), lit(false)))
-        .reduce(_ || _))
-    // the affected view buckets (<= nBuckets values). Without sidecar
-    // columns their collect doubles as the no-op probe — one action
-    // fewer than a separate emptiness check; with them it runs after
-    // the sidecar thread starts (step 4), so it overlaps that commit
-    def bucketsOf(d: DataFrame): Seq[String] =
-      d.select(col(BucketCol)).distinct()
-        .collect().map(_.getLong(0).toString).toSeq
-    val plainBuckets = if (trackAux) None else Some(bucketsOf(delta))
-    if (plainBuckets.exists(_.isEmpty)) {
-      // row-preserving rewrites only (OPTIMIZE, re-clustering): the
-      // view already equals base@latest — re-anchor in a metadata-only
-      // commit, no content-identical data
-      deltaAll.unpersist(false)
-      return SnapshotTable.commitSource(spark, mvRoot, latestB)
-    }
-
-    // 3. min/max partials sidecar: dead directories tombstone, the
-    // changed tuples' new directories get fresh partials, and affected
-    // groups re-derive their extrema from the sidecar alone. Lands
-    // BEFORE the view: idempotent on replay (same tombstones, same
-    // values), so a crash anywhere re-converges. Tombstones are "every
-    // sidecar row whose directory is not live at latest" — NOT just
-    // the applied-to-latest diff's old dirs: a refresh that crashed
-    // after its sidecar commit but before its view commit left
-    // partials keyed to a directory generation BETWEEN applied and
-    // latest, and once the base advances that generation appears in no
-    // later diff — diff-only tombstoning would let a deleted extremum
-    // resurface forever. The sidecar scan this needs is already paid
-    // by the rollup below.
-    // Round 20 (guide §2.6 — overlap independent jobs): the sidecar
-    // commit and the view-side preparation are independent Spark work —
-    // the rollup needs the sidecar's POST-commit content, which is a
-    // pure function of frames already in hand (aux0 minus ALL change
-    // keys, plus the upsert rows — exactly the merge applyChanges
-    // commits), not of the commit having LANDED. So the sidecar commit
-    // runs on a background thread while the main thread derives the
-    // rollup and builds + materializes the view-merge batch; the view
-    // PUBLISH still waits for the sidecar commit, so a failure anywhere
-    // leaves "sidecar committed, view not" at worst — the documented
-    // idempotent-replay window. Warm refresh = max(sidecar commit,
-    // view prep) + view commit instead of their sum.
-    var auxTask: Option[java.util.concurrent.FutureTask[Int]] = None
-    var auxChangesHeld: Option[DataFrame] = None
-    val v = try {
-    val mmByKey: Option[DataFrame] = if (!trackAux) None else {
-      import org.apache.spark.sql.Row
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val aRoot = auxRoot(mvRoot)
-      val aux0 = SnapshotTable.read(spark, aRoot)
-      val liveDirs = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          newMap.values.toSeq.map(Row(_)), 1),
-        StructType(Seq(StructField("_live_dir", StringType))))
-      val tombs = aux0.join(broadcast(liveDirs),
-          col(DirCol) === col("_live_dir"), "left_anti")
-        .withColumn("_mv_op", lit("d"))
-      val fresh = changedRows(newKeys, mNew)
-        .map(partialsFrame(_, spec, mmTypes, nBuckets)
-          .withColumn("_mv_op", lit("u")))
-      // cached for the duration: the isEmpty probe, the sidecar
-      // commit and the rollup's logical post-commit view would
-      // otherwise each re-execute the tombstone anti-join +
-      // fresh-partials build (round-19; applyChanges sees the cache
-      // and skips its own). Released after the commit await below.
-      val auxChanges = (fresh.toSeq :+ tombs).reduce(_.unionByName(_))
-        .cache()
-      auxChangesHeld = Some(auxChanges)
-      // the emptiness probe rides the background thread too: the main
-      // thread never needs its answer, and running it here would be
-      // one more serial action before any overlap starts
-      val task = new java.util.concurrent.FutureTask[Int](() =>
-        if (auxChanges.isEmpty) SnapshotTable.latest(spark, aRoot).getOrElse(0)
-        else SnapshotTable.applyChanges(spark, aRoot, auxChanges,
-          key = AKeyCol, partitionBy = Seq(ABucketCol),
-          opCol = "_mv_op"))
-      val th = new Thread(task, "graft-mv-aux-commit")
-      th.setDaemon(true)
-      th.start()
-      auxTask = Some(task)
-      // LOGICAL post-commit sidecar for the rollup — value-identical
-      // to re-reading the committed table (applyChanges' merge is:
-      // every change key leaves the live set, upsert rows come back;
-      // aux0's file list is pinned at plan time, and directories are
-      // immutable, so the concurrent commit cannot disturb this read)
-      val upserts = auxChanges.filter(col("_mv_op") =!= "d")
-        .drop("_mv_op")
-        .select(aux0.columns.map(col).toSeq: _*)
-      val auxAfter = aux0.join(
-          auxChanges.select(col(AKeyCol).as("_mv_gk")),
-          col(AKeyCol) === col("_mv_gk"), "left_anti")
-        .unionByName(upserts)
-      Some(rollup(auxAfter, spec, deltaAll.select(col(KeyCol))))
-    }
-
-    // 4. merge into the view: only buckets holding affected keys
-    val buckets = plainBuckets.getOrElse(bucketsOf(delta))
-    val current = SnapshotTable.selectDirs(spark, mvRoot, viewM,
-      buckets.map(SnapshotTable.escapeKey).toSet)
-    // cached for the duration (round 19): the view commit executes the
-    // batch twice (one-pass validation probe + staging write), and the
-    // batch is a multi-join over the bucket reads, the cached delta and
-    // the sidecar rollup. Bounded by construction — affected view
-    // buckets × groups plus the rollup's group rows, dimension-sized —
-    // so holding it is safe where a generic applyChanges batch is not
-    // (which is why the caching lives HERE, not inside applyChanges).
-    val viewChanges = mergedViewChanges(current, delta, mmByKey, spec,
-      types).cache()
     try {
-    // 5. the view commit's Spark work (validation probe + staging
-    // write) runs NOW, overlapping the background sidecar commit; the
-    // publish gate holds only the manifest publish until the sidecar
-    // has landed (aux commit → view publication, with the expensive
-    // stages concurrent instead of serial). The publish records
-    // latestB as the view's source, atomically with its rows.
-    SnapshotTable.mergeKeyed(spark, mvRoot, viewChanges, KeyCol,
-      Seq(BucketCol), Some("_mv_op"), filesPerPartition = 1,
-      mergeSchema = false,
-      // surfaces a sidecar failure before the view publishes
-      publishGate = () => auxTask.foreach(_.get()),
-      source = Some(latestB))
-    } finally viewChanges.unpersist(false)
-    // the try covers steps 3-5: a failure ANYWHERE after the cache
-    // (sidecar commit, rollup, view commit) must still release
-    // the cached delta — a long-lived CDC maintainer would otherwise
-    // pin one dataset per failed refresh
-    } finally {
-      // single-maintainer hygiene: never return (or rethrow) with the
-      // background commit still in flight — a caller's retry would
-      // otherwise race it. Its own failure is surfaced by the get()
-      // above on the success path; here it only needs to be DONE.
-      auxTask.foreach(t =>
-        try { t.get(); () } catch { case _: Throwable => () })
-      auxChangesHeld.foreach(_.unpersist(false))
-      deltaAll.unpersist(false)
-    }
-    v
-  }
+      // Without partial columns, groups whose ring deltas are ALL zero
+      // (e.g. a compaction's identical rewrite) drop out of the merge
+      // entirely. WITH them they must stay: a multiset can change under
+      // zero sum/count/nn deltas (drop a 1 and a 3, add a 0 and a 4)
+      // and the partials' re-derivation below — extrema AND distinct
+      // sketches — is what catches it.
+      val delta =
+        if (hasPartials) deltaAll
+        else deltaAll.filter(deltaNames
+          .map(n => coalesce(col(n) =!= lit(0), lit(false)))
+          .reduce(_ || _))
+      // the affected view buckets (<= nBuckets values)
+      val buckets = delta.select(col(BucketCol)).distinct()
+        .collect().map(_.getLong(0).toString).toSeq
+      if (buckets.isEmpty)
+        // row-preserving rewrites only (OPTIMIZE, re-clustering): the
+        // view already equals base@latest — re-anchor in a
+        // metadata-only commit, no content-identical data
+        return SnapshotTable.commitSource(spark, mvRoot, latestB)
 
-  /** Retention for the view AND its partials sidecar: old view
-    * versions serve only time travel (refresh reads only the latest),
-    * so both tables vacuum to `keepVersions`. The BASE table's vacuum
-    * is the caller's (protect [[appliedBaseVersion]] there — see
-    * [[graft.streaming.CdcStream.TableMaintenance]]). */
-  def vacuum(
-      spark: SparkSession, mvRoot: String, keepVersions: Int): (Int, Int) = {
-    val (d1, f1) = SnapshotTable.vacuum(spark, mvRoot, keepVersions)
-    val aRoot = auxRoot(mvRoot)
-    val (d2, f2) =
-      if (SnapshotTable.isTableRoot(spark, aRoot))
-        SnapshotTable.vacuum(spark, aRoot, keepVersions)
-      else (0, 0)
-    (d1 + d2, f1 + f2)
+      // 3. the affected buckets' view AND partial rows, one
+      // census-planned read. Partials are exact for `applied`, so the
+      // stale ones are exactly those of the directories the diff
+      // retired or re-read (a deletion-vector commit re-reads a
+      // directory it keeps): every group holding one is in the delta,
+      // so its bucket is read here. The changed directories' fresh
+      // partials replace them; a stale partial no fresh one overwrites
+      // leaves as a tombstone.
+      val current = SnapshotTable.selectDirs(spark, mvRoot, viewM,
+        buckets.map(SnapshotTable.escapeKey).toSet)
+      def plus(a: DataFrame, b: DataFrame) =
+        a.unionByName(b, allowMissingColumns = true)
+      val changes =
+        if (!hasPartials) mergedViewChanges(current, delta, None, spec, types)
+        else {
+          val parts = current.filter(col(DirCol).isNotNull)
+          val isStale = col(DirCol).isin(oldKeys.toSeq.map(oldMap): _*)
+          val (stale, kept) = (parts.filter(isStale), parts.filter(!isStale))
+          val fresh = changedRows(newKeys, mNew)
+            .map(partialsFrame(_, spec, mmTypes, nBuckets))
+          val tombs = fresh.fold(stale)(f =>
+            stale.join(f.select(KeyCol), Seq(KeyCol), "left_anti"))
+          val view = mergedViewChanges(current.filter(col(DirCol).isNull),
+            delta, Some(rollup(fresh.fold(kept)(plus(kept, _)), spec)),
+            spec, types)
+          (Seq(view, tombs.withColumn("_mv_op", lit("d"))) ++
+            fresh.map(_.withColumn("_mv_op", lit("u")))).reduce(plus)
+        }
+
+      // 4. merge into the view. Cached for the duration (round 19): the
+      // commit executes the batch twice (one-pass validation probe +
+      // staging write), and the batch is a multi-join over the bucket
+      // read, the cached delta and the rollup. Bounded by construction
+      // — affected view buckets' rows — so holding it is safe where a
+      // generic keyed-merge batch is not (which is why the caching
+      // lives HERE). The one publish records latestB as the view's
+      // source, atomically with its rows.
+      val batch = changes.cache()
+      try SnapshotTable.mergeKeyed(spark, mvRoot, batch, KeyCol,
+        Seq(BucketCol), Some("_mv_op"), filesPerPartition = 1,
+        mergeSchema = false, source = Some(latestB),
+        base = Some((m, viewM)))
+      finally batch.unpersist(false)
+    } finally deltaAll.unpersist(false)
   }
 
   /** The view as a user-facing frame: group columns, sums (NULL when
     * the group has no non-null inputs — SQL semantics, not 0), derived
-    * AVGs, MIN/MAX, count; internal key/bucket/non-null-count columns
-    * dropped. `version` as in [[SnapshotTable.read]]. */
+    * AVGs, MIN/MAX, count; partial rows and the internal key, bucket,
+    * non-null-count and partial columns dropped. `version` as in
+    * [[SnapshotTable.read]]. */
   def read(
       spark: SparkSession, mvRoot: String, version: Int = -1): DataFrame = {
-    val raw = SnapshotTable.read(spark, mvRoot, version)
-    val names = raw.schema.fieldNames.toSeq
+    val all = SnapshotTable.read(spark, mvRoot, version)
+    val names = all.schema.fieldNames.toSeq
+    val raw =
+      if (names.contains(DirCol)) all.filter(col(DirCol).isNull) else all
     val out: Seq[Column] = names.flatMap {
-      case KeyCol | BucketCol => None
-      case n if n.startsWith("_mv_nn_") => None
+      case KeyCol | BucketCol | DirCol => None
+      case n if n.startsWith("_mv_nn_") || n.startsWith("_mv_p_") => None
       case n if n.startsWith("_mv_avg_") =>
         val a = n.stripPrefix("_mv_avg_")
         Some(when(col(nnName(n)) === 0L, lit(null))

@@ -91,6 +91,11 @@ object SnapshotTable {
   final class ConcurrentWriteException(msg: String)
     extends java.io.IOException(msg)
 
+  /** A read named a version whose manifest is not committed (never
+    * was, or vacuumed away). */
+  final class UnknownVersionException(msg: String)
+    extends IllegalArgumentException(msg)
+
   /** Full re-merge attempts per mutation on touched-set conflicts. */
   val MaxMergeRetries = 3
 
@@ -592,7 +597,13 @@ object SnapshotTable {
       readCheckpoint(spark, root, cur) match {
         case Some(cp) => base = Some(cp)
         case None =>
-          val raw = parseManifestFile(spark, root, manifestPath(root, cur))
+          val raw =
+            try parseManifestFile(spark, root, manifestPath(root, cur))
+            catch {
+              case _: java.io.FileNotFoundException if cur == v =>
+                throw new UnknownVersionException(
+                  s"unknown version v$v under $root")
+            }
           raw.deltaBase match {
             case None => base = Some(raw.m)
             case Some(b) =>
@@ -805,19 +816,15 @@ object SnapshotTable {
   /** A version's number and folded state as ONE pair (latest when
     * `version` < 0), so a mutator's no-op returns the version it
     * examined. No `_versions` listing: latest via the hint pointer,
-    * explicit versions via one existence check. */
+    * an explicit version probed by its own manifest read (a missing one
+    * is an [[UnknownVersionException]]). */
   private def versionedManifest(
       spark: SparkSession, root: String, version: Int): (Int, Manifest) = {
     val v =
-      if (version < 0)
-        latestVersion(spark, root).getOrElse(throw new
-          IllegalArgumentException(
-            s"no snapshot-table version committed under $root"))
-      else {
-        require(hasVersion(spark, root, version),
-          s"unknown version v$version under $root")
-        version
-      }
+      if (version >= 0) version
+      else latestVersion(spark, root).getOrElse(throw new
+        IllegalArgumentException(
+          s"no snapshot-table version committed under $root"))
     (v, readManifest(spark, root, v))
   }
 
@@ -2403,32 +2410,31 @@ object SnapshotTable {
     * top of the staging write is a disk-pressure failure mode
     * streaming re-execution cannot produce. A caller whose batch is a
     * multi-join worth holding (the incremental-MV refresh — its
-    * batches are view-slice- and sidecar-sized by construction) caches
-    * BEFORE calling and keeps the lifecycle.
+    * batches are view-slice-sized by construction) caches BEFORE
+    * calling and keeps the lifecycle.
     *
-    * `publishGate` runs AFTER an attempt's staging write/census/stats
-    * and immediately BEFORE its manifest publish — the seam that lets
-    * the incremental-MV refresh stage its view commit while its
-    * sidecar commit runs, and still publish only after the sidecar
-    * landed. Must be idempotent: a conflict retry re-runs the whole
-    * attempt, gate included. `source` records the base version a
-    * derived table's merged rows reflect. */
+    * `source` records the base version a derived table's merged rows
+    * reflect. `base` is the caller's (version, fold) of the latest
+    * state, when it holds one: the first attempt merges against it
+    * instead of re-folding the log (a conflict retry re-folds). */
   private[graft] def mergeKeyed(
       spark: SparkSession, root: String, batch: DataFrame, key: String,
       partitionBy: Seq[String], opCol: Option[String],
       filesPerPartition: Int, mergeSchema: Boolean,
-      publishGate: () => Unit = () => (),
-      source: Option[Int] = None): Int = {
+      source: Option[Int] = None,
+      base: Option[(Int, Manifest)] = None): Int = {
     val touchedKeys = validateAndProbe(batch, key, opCol, partitionBy)
     val upserts = opCol.fold(batch)(c => batch.filter(col(c) =!= "d").drop(c))
+    var known = base
     withConflictRetry {
-      val latest = latestState(spark, root)
-      val base = latest.map(_._2)
-      base.foreach(requireLayout(root, _, partitionBy))
-      base.flatMap(_.rowKey.headOption).foreach(k0 => require(k0 == key,
+      val latest = known.orElse(latestState(spark, root))
+      known = None
+      val latestM = latest.map(_._2)
+      latestM.foreach(requireLayout(root, _, partitionBy))
+      latestM.flatMap(_.rowKey.headOption).foreach(k0 => require(k0 == key,
         s"table $root records row key '$k0'; a batch keyed by '$key' " +
           "would split the table's identity — one key per table"))
-      val merged = base match {
+      val merged = latestM match {
         case Some(m) =>
           val tableCols = m.schema.fieldNames.toSeq
             .filterNot(opCol.contains)
@@ -2451,8 +2457,7 @@ object SnapshotTable {
         case None => upserts // bootstrap
       }
       commitRewrite(spark, root, merged, Merge(partitionBy,
-        filesPerPartition, latest, touchedKeys, Some(key), publishGate,
-        source))
+        filesPerPartition, latest, touchedKeys, Some(key), source))
     }
   }
 
@@ -2657,13 +2662,11 @@ object SnapshotTable {
     * partitions as read at `base` — (version, folded state), None on a
     * never-written root; the table keeps `base`'s declarations, a
     * keyed merge records `rowKey` and a derived-table merge `source`
-    * (else the latest ones carry), and `publishGate` runs after the
-    * attempt's Spark work, right before its publish. */
+    * (else the latest ones carry). */
   private final case class Merge(
       partitionBy: Seq[String], filesPerPartition: Int,
       base: Option[(Int, Manifest)], touched: Set[String],
       rowKey: Option[String] = None,
-      publishGate: () => Unit = () => (),
       source: Option[Int] = None) extends CommitRequest
 
   /** [[optimize]]: the rows are the `touched` partitions' unchanged
@@ -2944,12 +2947,6 @@ object SnapshotTable {
       }
     }
     val newStats = footers.flatMap(_._3) ++ aggStats
-    // caller's publication gate (see [[mergeKeyed]]): every Spark
-    // job of this attempt is done; only the manifest rename follows
-    req match {
-      case m: Merge => m.publishGate()
-      case _ =>
-    }
     val newSchema = req match {
       case c: Compact => c.base._2.schema
       case _ => newRows.schema

@@ -40,8 +40,8 @@ object CdcStream {
     * `optimizeEveryBatches` drained batches the base table bin-packs
     * through [[graft.lake.SnapshotTable.optimize]] (0 = never); every
     * `vacuumEveryBatches` batches RETENTION runs — the base and every
-    * derived table (views, their partials sidecars, tokenized tables)
-    * vacuum down to `vacuumKeepVersions`, with each maintainer's
+    * derived table (views, tokenized tables) vacuum down to
+    * `vacuumKeepVersions`, with each maintainer's
     * APPLIED base version protected so the incremental paths' read-at-
     * both-versions contract survives its own garbage collection. A
     * 5-minute CDC cadence mints ~100k versions/year; without the
@@ -123,7 +123,7 @@ object CdcStream {
             TokenizedCorpus.appliedBaseVersion(spark, t))).toSet
         SnapshotTable.vacuum(spark, root, vacuumKeepVersions, protect)
         views.foreach(b =>
-          MaterializedAgg.vacuum(spark, b.mvRoot, vacuumKeepVersions))
+          SnapshotTable.vacuum(spark, b.mvRoot, vacuumKeepVersions))
         tokenizedRoots.foreach(t =>
           TokenizedCorpus.vacuum(spark, t, vacuumKeepVersions))
       }
@@ -131,10 +131,10 @@ object CdcStream {
   }
 
   /** Runs every named task — concurrently when there are several, each
-    * as a `FutureTask` on daemon thread `graft-maint-<name>` (the MV
-    * sidecar commit's idiom) — and returns only once ALL have finished
-    * and their threads are gone. Rethrows the first failed task's
-    * original exception, never an `ExecutionException` wrapper. */
+    * as a `FutureTask` on daemon thread `graft-maint-<name>` — and
+    * returns only once ALL have finished and their threads are gone.
+    * Rethrows the first failed task's original exception, never an
+    * `ExecutionException` wrapper. */
   private def runJoined(tasks: Seq[(String, () => Unit)]): Unit =
     if (tasks.size == 1) tasks.head._2()
     else {

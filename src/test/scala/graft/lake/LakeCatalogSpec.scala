@@ -67,6 +67,24 @@ class LakeCatalogSpec extends SparkSpec {
     assert(opens.count(_ == latest) == 1, opens.mkString("\n"))
   }
 
+  test("a SELECT probes its resolved version's manifest once") {
+    val (name, root) = freshTable("lakecat-probe")
+    def manifest(v: Int) = new org.apache.hadoop.fs.Path(
+      root, f"_versions/v$v%08d.manifest").toUri.getPath
+    def probes(v: Int, sql: String): Int =
+      ListRecordingFs.recorded(spark)(spark.sql(sql).collect())
+        .statuses.count(_ == manifest(v))
+    // latest: the hint resolution's probe is the only one
+    assert(probes(3, s"SELECT k FROM lake.$name") == 1)
+    // a pinned version's manifest read is its own probe
+    assert(probes(2, s"SELECT k FROM lake.$name VERSION AS OF 2") == 0)
+    // and a version with no manifest still fails by name
+    val e = intercept[Exception] {
+      spark.sql(s"SELECT k FROM lake.$name VERSION AS OF 9").collect()
+    }
+    assert(e.getMessage.contains("unknown version v9"), e.getMessage)
+  }
+
   test("recorded schema is pinned; filters push into the parquet scan") {
     val (name, _) = freshTable("lakecat-plan")
     val df = spark.sql(

@@ -207,8 +207,8 @@ class ManifestLogSpec extends SparkSpec {
     SnapshotTable.write(spark, root, base, Seq("p"))
     (2 to 20).foreach(_ => SnapshotTable.declareKey(spark, root, "k"))
     assert(SnapshotTable.versions(spark, root).size == 20)
-    // a sidecar-maintained MAX makes the refresh commit the partials
-    // sidecar too
+    // a partial-maintained MAX makes the refresh merge partial rows
+    // into the view too
     val spec = MaterializedAgg.MvSpec(groupBy = Seq("p"),
       sums = Seq("total" -> "v"), countName = "n", maxs = Seq("top" -> "v"))
     MaterializedAgg.init(spark, root, mvRoot, spec, nBuckets = 2)
@@ -243,7 +243,7 @@ class ManifestLogSpec extends SparkSpec {
       "unpinned Lane.at" -> (() => Lane.at(spark, lane)))
     val v0 = SnapshotTable.latest(spark, root).get
     ops.foreach { case (name, op) =>
-      // the base's, the view's and the view sidecar's logs alike
+      // the base's and the view's logs alike
       val hit = ListRecordingFs.recorded(spark)(op()).lists
         .filter(_.endsWith("/_versions"))
       assert(hit.isEmpty, s"$name listed ${hit.mkString(", ")}")

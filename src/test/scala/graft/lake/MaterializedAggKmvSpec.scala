@@ -8,7 +8,7 @@ import graft.lake.MaterializedAgg.MvSpec
 /** COUNT(DISTINCT) maintenance via per-(group, directory) KMV
   * sketches (round-12 verdict item 6): exact below k, the standard
   * (k-1)·domain/kth estimator at or above k, maintained through the
-  * partials sidecar — bounded reads under deletes, zero-ring-delta
+  * view's partial rows — bounded reads under deletes, zero-ring-delta
   * multiset changes caught, incremental == full recompute always. */
 class MaterializedAggKmvSpec extends SparkSpec {
   import spark.implicits._
@@ -121,7 +121,7 @@ class MaterializedAggKmvSpec extends SparkSpec {
     // mutate ONLY partition a (delete its duplicate v=5 row)
     SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     // destroy untouched partition b's directory: any read beyond the
-    // changed partitions + sidecar now crashes
+    // changed partitions + the view's partial rows now crashes
     val bDir = SnapshotTable.entriesFor(spark, baseRoot, 2)
       .collectFirst { case (k, d) if k == "b" => d }.get
     val p = new org.apache.hadoop.fs.Path(baseRoot, bDir)
@@ -131,7 +131,7 @@ class MaterializedAggKmvSpec extends SparkSpec {
     val got = viewKmv(mvRoot)
     assert(got.contains(("a", 2.0)), s"a must re-derive to 2: $got")
     assert(got.contains(("b", 1.0)),
-      s"b's sketch must survive from its sidecar partials: $got")
+      s"b's sketch must survive from its partial rows: $got")
   }
 
   test("an all-NULL group counts 0 distinct, and NULLs never count") {
@@ -145,5 +145,23 @@ class MaterializedAggKmvSpec extends SparkSpec {
     SnapshotTable.deleteWhere(spark, baseRoot, $"id" === 3L)
     MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec(64), 4)
     assert(viewKmv(mvRoot) == Set(("a", 0.0), ("b", 0.0)))
+  }
+
+  test("a deletion-vector delete drops a distinct value's stale sketch") {
+    // a's only v=7 row is dv-deleted from p1, which b keeps live: the
+    // (a, p1) sketch holding 7 must leave although its directory
+    // survives
+    val baseRoot = tmpDir("kmv-dv-base"); val mvRoot = tmpDir("kmv-dv-view")
+    SnapshotTable.write(spark, baseRoot,
+      Seq((1L, "p1", "a", 7L), (2L, "p1", "b", 50L), (3L, "p2", "a", 10L),
+        (4L, "p2", "a", 20L)).toDF("id", "part", "source", "v"),
+      Seq("part"))
+    MaterializedAgg.init(spark, baseRoot, mvRoot, spec(64), nBuckets = 4)
+    assert(viewKmv(mvRoot) == Set(("a", 3.0), ("b", 1.0)))
+    SnapshotTable.deleteRowsWhere(spark, baseRoot, $"id" === 1L)
+    assert(SnapshotTable.deletedRowCount(spark, baseRoot) == 1)
+    MaterializedAgg.refresh(spark, baseRoot, mvRoot, spec(64), 4)
+    assert(viewKmv(mvRoot) == Set(("a", 2.0), ("b", 1.0)),
+      "the dv-deleted value still counts")
   }
 }

@@ -215,7 +215,7 @@ class MaterializedAggSpec extends SparkSpec {
     assert(mvRows(mvRoot) == fullAgg(SnapshotTable.read(spark, baseRoot)))
     // the anchor lives in the view log alone: after a vacuum the
     // latest version still reads it, and _mv holds only the spec
-    MaterializedAgg.vacuum(spark, mvRoot, keepVersions = 1)
+    SnapshotTable.vacuum(spark, mvRoot, keepVersions = 1)
     assert(MaterializedAgg.appliedBaseVersion(spark, mvRoot).contains(11))
     val meta = new org.apache.hadoop.fs.Path(mvRoot, "_mv")
     assert(meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
