@@ -49,7 +49,7 @@ class MaterializedAggMinMaxSpec extends SparkSpec {
     (1L, "a", Some(5L)), (2L, "a", Some(9L)), (3L, "a", Some(2L)),
     (4L, "b", Some(7L)), (5L, "b", None), (6L, "c", Some(13L)))
 
-  test("deleting a group's current minimum re-derives from its partials") {
+  test("deleting a group's current minimum re-derives from partials") {
     val baseRoot = tmpDir("mm-base"); val mvRoot = tmpDir("mm-view")
     mkBase(baseRoot, seed)
     MaterializedAgg.init(spark, baseRoot, mvRoot, spec, nBuckets = 4)
